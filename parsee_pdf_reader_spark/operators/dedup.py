@@ -26,8 +26,8 @@ from parsee_pdf_reader_spark.plans.queries import _t, _ts, register
 _TOKS_SQL = "list_filter(string_split_regex(text, '\\s+'), x -> x <> '')"
 
 
-def _toks():
-    return F.filter(F.split("text", r"\s+"), lambda x: x != "")
+def _toks(text_col: str = "text"):
+    return F.filter(F.split(text_col, r"\s+"), lambda x: x != "")
 
 
 # ---------------------------------------------------------------------------
@@ -119,7 +119,7 @@ _SIG_SQL = f"""
 #: the ONE band-hash expression every DuckDB twin interpolates —
 #: minhash pairs, the verify pipeline, and the history band index all
 #: band the same way, so the arithmetic lives in exactly one string
-#: (its Spark twin is ``minhash_band_hashes``).
+#: (its Spark twin is ``_band_hash_col``).
 _BAND_HASH_SQL = f"""md5(b::varchar || '|' ||
                  array_to_string(list_slice(sig, b*{_BAND_R} + 1,
                                             b*{_BAND_R} + {_BAND_R}), '|'))"""
@@ -164,36 +164,43 @@ def minhash_sig_col(shingles):
     ))
 
 
-def minhash_pairs_df(docs, id_col: str = "doc_id",
-                     text_col: str = "text"):
-    """DataFrame-in/DataFrame-out core of the LSH candidate stage:
-    (id, text) -> (doc_a, doc_b, est_jaccard). Shared by the
-    registered query and the training-pipeline composition (ids may be
-    strings — urls — or longs; ``doc_a < doc_b`` orders either)."""
-    toks = F.filter(F.split(text_col, r"\s+"), lambda x: x != "")
-    shingles = F.when(
-        F.size(toks) < 3, F.array(F.concat_ws(" ", toks))
-    ).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - 3),
-                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)),
-            )
-        )
-    )
-    sigs = docs.select(F.col(id_col).alias("doc_id"),
-                       minhash_sig_col(shingles).alias("sig"))
+def text_minhash_sig(text_col: str = "text"):
+    """MinHash signature of a text column: whitespace tokens ->
+    distinct 3-gram shingles -> ``minhash_sig_col``. The one text ->
+    signature path of the batch LSH and its streaming twin."""
+    return minhash_sig_col(shingles_col(_toks(text_col), 3))
+
+
+def _band_hash_col(sig, b):
+    """md5 of band ``b`` of ``sig`` (Spark twin of ``_BAND_HASH_SQL``):
+    ``"b|" + the band's _BAND_R slots joined by "|"``. ``b`` is a
+    column or a lambda variable, so the batch explode and the
+    streaming transform hash bands with this one expression."""
+    return F.md5(F.concat(
+        b.cast("string"), F.lit("|"),
+        F.concat_ws("|", F.slice(sig, b * _BAND_R + 1, _BAND_R))))
+
+
+def minhash_signatures_df(docs, id_col: str = "doc_id",
+                          text_col: str = "text"):
+    """Signature step of the LSH candidate stage: (id, text) ->
+    (doc_id, sig). A pure projection (no shuffle)."""
+    return docs.select(F.col(id_col).alias("doc_id"),
+                       text_minhash_sig(text_col).alias("sig"))
+
+
+def minhash_pairs_df(sigs):
+    """Pairs step of the LSH candidate stage: (doc_id, sig) ->
+    (doc_a, doc_b, est_jaccard) from the band-bucket self-join. Shared
+    by the registered query, the recall evaluation and the
+    training-pipeline composition, which passes the signatures its
+    per-document table already holds (ids may be strings — urls — or
+    longs; ``doc_a < doc_b`` orders either)."""
     band_idx = F.explode(
         F.sequence(F.lit(0), F.lit(_BANDS - 1))).alias("b")
     bands = sigs.select("doc_id", "sig", band_idx).select(
         "doc_id", "sig", "b",
-        F.md5(
-            F.concat(
-                F.col("b").cast("string"), F.lit("|"),
-                F.concat_ws(
-                    "|", F.slice("sig", F.col("b") * _BAND_R + 1, _BAND_R)),
-            )
-        ).alias("band_hash"),
+        _band_hash_col(F.col("sig"), F.col("b")).alias("band_hash"),
     )
     a = bands.alias("a")
     c = bands.alias("c")
@@ -221,36 +228,17 @@ def minhash_pairs_df(docs, id_col: str = "doc_id",
 
 def minhash_band_hashes(text_col: str = "text"):
     """Array-of-structs column ``[(b, band_hash)] * _BANDS`` for a text
-    column — the SAME shingle->minhash->band arithmetic as
-    ``minhash_pairs_df`` (kept in one place so the streaming twin and
-    the batch LSH can never drift). Used by
+    column — the SAME signature and band hash as
+    ``minhash_signatures_df`` + ``minhash_pairs_df``, so the streaming
+    twin and the batch LSH can never drift. Used by
     ``streaming.incremental.stream_dedup_neardup``."""
-    toks = F.filter(F.split(text_col, r"\s+"), lambda x: x != "")
-    shingles = F.when(
-        F.size(toks) < 3, F.array(F.concat_ws(" ", toks))
-    ).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - 3),
-                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)),
-            )
-        )
-    )
     # sig bound once: the r4 shape re-evaluated the signature (and its
     # 12x shingle recompute) inside every band's lambda — 36 shingle
     # evaluations per row on the streaming path
-    return bind1(minhash_sig_col(shingles), lambda sig: F.transform(
+    return bind1(text_minhash_sig(text_col), lambda sig: F.transform(
         F.sequence(F.lit(0), F.lit(_BANDS - 1)),
-        lambda b: F.struct(
-            b.cast("int").alias("b"),
-            F.md5(
-                F.concat(
-                    b.cast("string"), F.lit("|"),
-                    F.concat_ws(
-                        "|", F.slice(sig, b * _BAND_R + 1, _BAND_R)),
-                )
-            ).alias("band_hash"),
-        ),
+        lambda b: F.struct(b.cast("int").alias("b"),
+                           _band_hash_col(sig, b).alias("band_hash")),
     ))
 
 
@@ -259,7 +247,8 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     """Shingle -> minhash -> band -> bucket-join near-dup candidates.
     Signature stage is a pure projection (no shuffle); candidate pairs
     come from the band-bucket equi-join only."""
-    return minhash_pairs_df(_ts(spark, sf_dir, "documents"))
+    return minhash_pairs_df(
+        minhash_signatures_df(_ts(spark, sf_dir, "documents")))
 
 
 # ---------------------------------------------------------------------------
@@ -814,18 +803,7 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
     shuffles of the exploded stream — with a per-shingle ordered-pair
     expansion, safe because df is capped)."""
     docs = _ts(spark, sf_dir, "documents")
-    toks = _toks()
-    shingles = F.when(
-        F.size(toks) < 3, F.array(F.concat_ws(" ", toks))
-    ).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - 3),
-                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)),
-            )
-        )
-    )
-    sh = docs.select("doc_id", shingles.alias("sh"))
+    sh = docs.select("doc_id", shingles_col(_toks(), 3).alias("sh"))
     exploded = sh.select("doc_id", F.explode("sh").alias("shingle"))
     freq = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     # 3 consumers (sizes + both self-join sides); persisted so the
@@ -916,17 +894,7 @@ def q_dedup_verify_pipeline(spark, sf_dir):
     expensive set-intersection runs on ~O(dups) pairs, never O(n^2).
     This is the production dedup shape at 10^12 docs."""
     docs = _ts(spark, sf_dir, "documents")
-    toks = _toks()
-    shingles = F.when(
-        F.size(toks) < 3, F.array(F.concat_ws(" ", toks))
-    ).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - 3),
-                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)),
-            )
-        )
-    )
+    shingles = shingles_col(_toks(), 3)
     # minhash_sig_col binds its input once; referencing the carried
     # "sh" column costs one more shingle evaluation (2 total per row
     # vs 13 in the r4 shape, which inlined shingles per slot)
@@ -943,28 +911,8 @@ def q_dedup_verify_pipeline(spark, sf_dir):
     # the production pipeline too (guide §5: reuse > recompute when the
     # subtree is expensive).
     sigs = sigs.localCheckpoint(eager=True)
-    bands = sigs.select(
-        "doc_id", "sig",
-        F.explode(F.sequence(F.lit(0), F.lit(_BANDS - 1))).alias("b"),
-    ).select(
-        "doc_id", "b",
-        F.md5(
-            F.concat(
-                F.col("b").cast("string"), F.lit("|"),
-                F.concat_ws(
-                    "|", F.slice("sig", F.col("b") * _BAND_R + 1, _BAND_R)),
-            )
-        ).alias("band_hash"),
-    )
-    a = bands.alias("a")
-    c = bands.alias("c")
-    cands = a.join(
-        c,
-        (F.col("a.b") == F.col("c.b"))
-        & (F.col("a.band_hash") == F.col("c.band_hash"))
-        & (F.col("a.doc_id") < F.col("c.doc_id")),
-    ).select(F.col("a.doc_id").alias("doc_a"),
-             F.col("c.doc_id").alias("doc_b")).distinct()
+    cands = minhash_pairs_df(sigs.select("doc_id", "sig")) \
+        .select("doc_a", "doc_b")
     sa = sigs.select(F.col("doc_id").alias("doc_a"),
                      F.col("sh").alias("sh_a"))
     sb = sigs.select(F.col("doc_id").alias("doc_b"),

@@ -209,7 +209,7 @@ def q_dedup_recall_exact_dups(spark, sf_dir):
     pair set against its candidate pairs plus two 1-row aggregates.
     The per-method generators carry their own already-audited plans."""
     from parsee_pdf_reader_spark.operators.dedup import (
-        minhash_pairs_df, simhash_near_pairs,
+        minhash_pairs_df, minhash_signatures_df, simhash_near_pairs,
     )
 
     docs = _ts(spark, sf_dir, "documents").select("doc_id", "text")
@@ -220,7 +220,8 @@ def q_dedup_recall_exact_dups(spark, sf_dir):
         F.col("doc_id").alias("doc_a"),
         (F.col("doc_id") + _PLANT_OFFSET).alias("doc_b"))
     methods = [
-        ("minhash_lsh", lambda: minhash_pairs_df(aug)),
+        ("minhash_lsh",
+         lambda: minhash_pairs_df(minhash_signatures_df(aug))),
         ("simhash_wide_bands",
          lambda: simhash_near_pairs(aug, nbits=63, band_bits=16,
                                     max_ham=3)),

@@ -18,7 +18,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from parsee_pdf_reader_spark.plans.queries import _t, _ts, register
+from parsee_pdf_reader_spark.plans.queries import (
+    _t, _ts, materialize, register,
+)
 
 _TOPK = 10
 #: FIXED-size query set (constant count, not a modulus of the corpus):
@@ -500,9 +502,9 @@ def kmeans_assign_df(emb, k=_KM_K, rounds=1):
     The gate query pins rounds=1 (the unrolled oracle); production
     loops until centroid movement converges — each extra round adds
     the same broadcast-join + groupBy(cluster, dim) stage. Past a few
-    rounds, eagerly localCheckpoint the centroid frame per round (K
-    tiny rows) so the iteration lineage stays flat — same pattern and
-    rationale as `connected_components_df`."""
+    rounds, the centroid frame (K tiny rows) is ``materialize``d per
+    round so the iteration lineage stays flat — same rationale as
+    `connected_components_df`."""
     from pyspark.sql import Window
 
     xq = F.transform(
@@ -539,7 +541,7 @@ def kmeans_assign_df(emb, k=_KM_K, rounds=1):
     for r in range(rounds):
         cs = update(assign(cs))
         if rounds > 2:
-            cs = cs.localCheckpoint(eager=False)
+            cs = materialize(cs)
     return assign(cs).select(
         "vec_id", "cluster", F.round("dist", 6).alias("dist"))
 

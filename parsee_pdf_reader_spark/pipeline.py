@@ -328,9 +328,13 @@ def run_extraction(spark, input_path: str, output_path: str,
     out = extract_pages(df, min_rows, min_cols)
     sink_df = out.withColumn("ds", F.to_date("warc_ts"))
     if stats is not None:
+        import uuid
+
         from pyspark.sql import Observation
 
-        obs = Observation("run_extraction_rows")
+        # one name per call: two concurrent calls on one session must
+        # not collide on a shared metric name
+        obs = Observation(f"run_extraction_rows_{uuid.uuid4().hex}")
         sink_df = sink_df.observe(obs, F.count(F.lit(1)).alias("rows"))
     write_partitioned(sink_df, spark, output_path)
     if stats is not None:

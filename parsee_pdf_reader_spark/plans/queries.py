@@ -39,25 +39,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _spread(df: DataFrame, spark: SparkSession) -> DataFrame:
-    """Scale-adaptive scan parallelization for compute-heavy per-row
-    stages (guide §2: partitioning must not be tuned to one scale).
-
-    The sf test tables are single-row-group parquet files, so their
-    scans are ONE task no matter the split size — a per-row md5/HOF
-    projection then runs on one core of 32. A 100 TB table arrives in
-    thousands of row groups, so this helper is a no-op there: it only
-    round-robins when the scan's native parallelism is BELOW the
-    cluster's (the repartition then moves a sub-MB table, which is
-    noise). Round-robin repartition is deterministic under retries
-    (sort-before-repartition is on by default, SPARK-23207) and every
-    consumer below is order-insensitive (min/max/count/md5 keys)."""
-    p = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= p:
-        return df
-    return df.repartition(p)
-
-
 #: (applicationId, sf_dir, table, parallelism) -> bool(needs spread).
 #: Memoizes the PARTITION-COUNT PROBE of `_ts` only — `df.rdd` costs
 #: ~140 ms of physical planning per call, and a composed query like
@@ -69,7 +50,20 @@ _SPREAD_MEMO: dict = {}
 
 
 def _ts(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """`_spread(_t(...))` with the probe memoized per (app, table)."""
+    """Scale-adaptive scan parallelization for compute-heavy per-row
+    stages (guide §2: partitioning must not be tuned to one scale):
+    ``_t(...)`` round-robined to ``defaultParallelism`` partitions, with
+    the partition-count probe memoized per (app, table).
+
+    The sf test tables are single-row-group parquet files, so their
+    scans are ONE task no matter the split size — a per-row md5/HOF
+    projection then runs on one core of 32. A 100 TB table arrives in
+    thousands of row groups, so this helper is a no-op there: it only
+    round-robins when the scan's native parallelism is BELOW the
+    cluster's (the repartition then moves a sub-MB table, which is
+    noise). Round-robin repartition is deterministic under retries
+    (sort-before-repartition is on by default, SPARK-23207) and every
+    consumer below is order-insensitive (min/max/count/md5 keys)."""
     df = _t(spark, sf_dir, name)
     p = spark.sparkContext.defaultParallelism
     key = (spark.sparkContext.applicationId, sf_dir, name, p)
@@ -77,6 +71,29 @@ def _ts(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if need is None:
         need = _SPREAD_MEMO[key] = df.rdd.getNumPartitions() < p
     return df.repartition(p) if need else df
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """``df`` stored by the first job that reads it; every later read
+    of the returned frame, or of a frame derived from it, reads the
+    stored rows instead of re-running ``df``'s plan. A lazy
+    ``localCheckpoint``:
+
+    - it adds no job: the first consumer's job writes the blocks
+      (under AQE the shuffle stages below ``df`` run when this is
+      called, as the jobs that consumer would otherwise start with);
+    - it never serves one call's rows to another: every call
+      checkpoints a fresh RDD, where ``persist()`` would hand a second
+      plan over a rewritten input path the first plan's cached rows
+      (the cache manager matches plans, not file contents);
+    - it truncates the lineage, so iterative callers keep flat plans;
+    - Spark's ContextCleaner releases the blocks once the returned
+      frame and every frame derived from it are dropped.
+
+    The blocks are executor-local and not replicated: losing an
+    executor loses them, and a later read fails rather than
+    recomputes."""
+    return df.localCheckpoint(eager=False)
 
 
 # ---------------------------------------------------------------------------

@@ -6,11 +6,19 @@ corpus build actually runs.
          wins, BEFORE the extraction kernel pays for stale bytes)
       -> content dispatch (layout / html / unknown)
       -> extraction (layout kernel | DOM boilerplate strip)
-      -> document quality filter (length / stopword signals)
+      -> one tokenization: token counts and the MinHash signature
       -> exact dedup on the EXTRACTED text (canonical url wins)
+      -> document length filter
+      == the per-document table, materialized here
       -> near-dup clustering (MinHash LSH pairs -> connected
          components) with a longest-doc-wins keep verdict
-      -> token accounting
+
+The per-document table (doc_text, n_tokens, bpe_tokens, is_canonical,
+and the signature of canonical rows) is the single materialization
+point (``plans.queries.materialize``). The first connected-components
+round fills it and the caller's sink reads it back, so per build each
+document goes through the layout kernel or the HTML extractor once,
+is tokenized once and is signed once.
 
 Every stage is the operator already tested in isolation; this module
 is the composition, demonstrating that the pieces share one schema and
@@ -51,6 +59,14 @@ def latest_snapshot_per_url(pages_df: DataFrame) -> DataFrame:
             .where(F.col("_rn") == 1).drop("_rn"))
 
 
+def _bpe_count(toks):
+    """BPE-style token count of a whitespace token array: no ``_BPE``
+    alternative matches whitespace, so the text's matches are exactly
+    the per-token matches and the count is their sum."""
+    return F.aggregate(toks, F.lit(0), lambda n, t: n + F.size(
+        F.regexp_extract_all(t, F.lit(_BPE), 0)))
+
+
 def build_training_corpus(pages_df: DataFrame,
                           min_tokens: int = 30) -> DataFrame:
     """pages -> deduplicated, quality-filtered training rows:
@@ -58,6 +74,11 @@ def build_training_corpus(pages_df: DataFrame,
     is_canonical, near_dup_cluster, keep). The training set is
     ``where keep``: exact-canonical AND the longest doc of its
     near-dup component."""
+    from pyspark.sql import Window
+
+    from parsee_pdf_reader_spark.operators import dedup
+    from parsee_pdf_reader_spark.plans.queries import materialize
+
     # mandatory, not optional: url is the document identity of every
     # downstream stage (canonical window, cluster join, keep rank), so
     # multiple snapshots of one url MUST be resolved first — and doing
@@ -85,42 +106,48 @@ def build_training_corpus(pages_df: DataFrame,
     )
     docs = layout_rows.unionByName(web_rows)
 
-    toks = F.filter(F.split("doc_text", r"\s+"), lambda x: x != "")
-    docs = docs.withColumn("n_tokens", F.size(toks)).withColumn(
-        "bpe_tokens",
-        F.size(F.regexp_extract_all("doc_text", F.lit(_BPE), 0)))
-    docs = docs.where(F.col("n_tokens") >= min_tokens)
+    # one tokenization: both counts and the MinHash shingles read this
+    # token array (an exact duplicate's signature is dropped below;
+    # carrying the tokens through the window shuffle instead would
+    # double its bytes)
+    docs = docs.withColumn("_toks", dedup._toks("doc_text"))
+    sig = dedup.minhash_sig_col(dedup.shingles_col(F.col("_toks"), 3))
+    docs = docs.select("url", "warc_ts", "lang", "doc_text", "source_kind",
+                       F.size("_toks").alias("n_tokens"),
+                       _bpe_count(F.col("_toks")).alias("bpe_tokens"),
+                       sig.alias("sig"))
 
-    # exact dedup on extracted text; first url (lexicographic) canonical
-    from pyspark.sql import Window
-
+    # exact dedup on extracted text; first url (lexicographic)
+    # canonical. The length filter sits above the window, where the
+    # optimizer cannot push it into the tokenizing projection (that
+    # would tokenize every row twice); rows of one md5 group share
+    # their text, so it keeps or drops whole groups either way
     w = Window.partitionBy(F.md5("doc_text"))
-    docs = docs.withColumn(
-        "is_canonical", F.col("url") == F.min("url").over(w))
+    docs = (docs.withColumn("is_canonical",
+                            F.col("url") == F.min("url").over(w))
+            .where(F.col("n_tokens") >= min_tokens))
+    # the per-document table every later stage reads: the near-dup
+    # stage fills it, the caller's job reads it back
+    table = materialize(docs.withColumn(
+        "sig", F.when(F.col("is_canonical"), F.col("sig"))))
 
     # near-dup closure over the exact-canonical survivors: LSH pairs
     # -> connected components -> keep the longest doc per component
-    # (composition of dedup.minhash_pairs_df + connected_components_df,
-    # each oracle-verified in isolation)
-    from parsee_pdf_reader_spark.operators.dedup import (
-        connected_components_df,
-        minhash_pairs_df,
-    )
-
-    canon = docs.where("is_canonical")
-    pairs = minhash_pairs_df(canon, id_col="url", text_col="doc_text") \
-        .select("doc_a", "doc_b")
-    clusters = connected_components_df(pairs).select(
+    # (each stage oracle-verified in isolation)
+    pairs = dedup.minhash_pairs_df(
+        table.where("is_canonical")
+        .select(F.col("url").alias("doc_id"), "sig"))
+    clusters = dedup.connected_components_df(
+        pairs.select("doc_a", "doc_b")).select(
         F.col("doc_id").alias("url"), "cluster_id")
-    out = docs.join(clusters, "url", "left").withColumn(
+    out = table.drop("sig").join(clusters, "url", "left").withColumn(
         "near_dup_cluster", F.coalesce("cluster_id", "url")).drop(
         "cluster_id")
-    # rank only among exact-canonical rows — a non-canonical twin must
-    # not steal rank 1 and sink its whole cluster
+    # rank canonical rows first — a non-canonical twin must not steal
+    # rank 1 and sink its whole cluster; a non-canonical row is never
+    # kept (its cluster is its own url: only canonical rows are
+    # clustered)
     wk = Window.partitionBy("near_dup_cluster").orderBy(
-        F.desc("n_tokens"), F.asc("url"))
-    keeps = (out.where("is_canonical")
-             .withColumn("keep", F.row_number().over(wk) == 1)
-             .select("url", "keep"))
-    return out.join(keeps, "url", "left").withColumn(
-        "keep", F.coalesce("keep", F.lit(False)))
+        F.desc("is_canonical"), F.desc("n_tokens"), F.asc("url"))
+    return out.withColumn(
+        "keep", F.col("is_canonical") & (F.row_number().over(wk) == 1))

@@ -146,7 +146,7 @@ def _one_page_pdf(content: str) -> bytes:
     return bytes(out)
 
 
-def test_grouped_vs_raw_paths_genuinely_differ():
+def test_grouped_vs_raw_paths_genuinely_differ(reference):
     """A 30pt-font pair with a 2pt kerning gap: the raw-char path
     breaks on char_dist_max=1 (custom_dataclasses.py:22) while the
     grouped path keeps one element (gap < word_margin*30 = 3, so not

@@ -460,6 +460,118 @@ def test_training_corpus_composition(spark):
     assert by_url["https://w.example/1"].keep
 
 
+def _web_rows(word, n=3):
+    """(url, warc_ts, html, text, lang) rows of ``n`` HTML pages whose
+    main text is 60 tokens built on ``word``."""
+    from parsee_pdf_reader_spark.sources.synth import build_html_document
+
+    rows = []
+    for i in range(n):
+        txt = " ".join(f"{word}{i}x{j}" for j in range(60))
+        blob, _ = build_html_document(f"page{i}", 42, txt)
+        rows.append((f"https://s.example/{i}", None, blob, txt, "en"))
+    return rows
+
+
+def test_training_corpus_sink_reads_the_materialized_table(spark):
+    """Each document is extracted once per build: the near-dup stage
+    fills the per-document table and the returned frame reads it back,
+    so its physical plan holds no extraction map (the layout kernel's
+    MapInArrow, the HTML extractor's MapInPandas) outside that
+    relation."""
+    from parsee_pdf_reader_spark.training_pipeline import (
+        build_training_corpus,
+    )
+
+    web = spark.createDataFrame(
+        _web_rows("plan"), "url string, warc_ts timestamp, html binary, "
+                           "text string, lang string")
+    corpus = build_training_corpus(_pages(spark, 6).unionByName(web))
+    plan = corpus._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan, plan
+    assert "MapInArrow" not in plan and "MapInPandas" not in plan, plan
+    kinds = {r.source_kind for r in corpus.collect()}
+    assert kinds == {"layout", "html"}
+
+
+def test_training_corpus_rebuild_sees_rewritten_pages(spark, tmp_path):
+    """No stale reuse across calls: a second build over a pages path
+    rewritten outside Spark returns the new content while the first
+    build's frame is still alive. A plan-matching cache (``persist()``)
+    would serve the second call the first call's rows: same plan, same
+    path, and no Spark write to invalidate it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parsee_pdf_reader_spark.training_pipeline import (
+        build_training_corpus,
+    )
+
+    schema = pa.schema([("url", pa.string()),
+                        ("warc_ts", pa.timestamp("us", tz="UTC")),
+                        ("html", pa.binary()), ("text", pa.string()),
+                        ("lang", pa.string())])
+    path = str(tmp_path / "pages")
+    os.makedirs(path)
+
+    def write(word):
+        rows = _web_rows(word)
+        pq.write_table(pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema),
+            os.path.join(path, "part-0.parquet"))
+
+    write("old")
+    first = build_training_corpus(spark.read.parquet(path))
+    old = sorted(r.doc_text for r in first.collect())
+    assert len(old) == 3 and all("old" in t for t in old), old
+    write("new")
+    second = build_training_corpus(spark.read.parquet(path))
+    new = sorted(r.doc_text for r in second.collect())
+    assert len(new) == 3
+    assert all("new" in t and "old" not in t for t in new), new
+    # the first frame still reads its own rows
+    assert sorted(r.doc_text for r in first.collect()) == old
+
+
+def test_training_corpus_blocks_released_when_frames_dropped(spark):
+    """The materialized relations behind the returned frame hold their
+    blocks while the frame, or a frame derived from it, is alive, and
+    Spark's cleaner releases them once all of those are dropped."""
+    import gc
+    import time
+
+    from parsee_pdf_reader_spark.training_pipeline import (
+        build_training_corpus,
+    )
+
+    web = spark.createDataFrame(
+        _web_rows("drop"), "url string, warc_ts timestamp, html binary, "
+                           "text string, lang string")
+    corpus = build_training_corpus(web)
+    leaves = corpus._jdf.queryExecution().optimizedPlan().collectLeaves()
+    ids = [leaves.apply(i).rdd().id() for i in range(leaves.size())
+           if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"]
+    del leaves
+    assert ids
+    held = spark.sparkContext._jsc.sc().persistentRdds()
+
+    def alive():
+        spark._jvm.System.gc()
+        return [i for i in ids if held.contains(i)]
+
+    kept = corpus.where("keep")
+    del corpus
+    gc.collect()
+    assert alive() == ids
+    assert kept.count() == 3
+    del kept
+    gc.collect()
+    deadline = time.monotonic() + 60
+    while alive() and time.monotonic() < deadline:
+        time.sleep(0.2)
+    assert alive() == []
+
+
 def test_checkpoint_discovery_is_metadata_only(spark, tmp_path):
     """VERDICT r2 item 8: partition discovery over a hive-partitioned
     staging dir must come from the FILE INDEX (driver-side listing),

@@ -232,7 +232,7 @@ def test_gopher_rules_zero_exchange_single_evaluation(spark):
     physical plan has exactly one Generate from the inline boundary
     and no shuffle beyond the r7 scan spread (a single round-robin
     repartition that parallelizes the single-row-group test scan; at
-    scale `_spread` is a no-op, so the rule set itself stays
+    scale `_ts` is a no-op, so the rule set itself stays
     shuffle-free)."""
     from parsee_pdf_reader_spark.operators.textstats import (
         q_gopher_quality_rules,
