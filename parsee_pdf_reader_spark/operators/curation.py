@@ -9,10 +9,15 @@ The composition REUSES the registered operators — the Spark side calls
 embeds their registered SQL as subqueries — so the curation verdict
 can never drift from the operators it is built on.
 
-Scale: quality/lang/length are pure projections over the documents
-scan; the only shuffles are the ones `dedup_canonical` already pays
-(LSH band join + cluster window) plus two doc_id equi-joins that share
-partitioning with it. No new hot keys.
+Scale: the documents table is read once per call into ONE stored
+DataFrame that every component receives (each ``q_*`` wrapper takes
+it as ``docs``), and per-document work runs once per call — the
+MinHash signatures, the LSH pair table and the LM bigram and score
+tables are each stored once and read by all their consumers.
+quality/lang/length/sample are pure projections; the shuffles are the
+components' own (band join, connected-components rounds,
+sentence/gram/bigram counts) plus doc_id equi-joins that share
+partitioning. No new hot keys.
 """
 
 from __future__ import annotations
@@ -30,8 +35,9 @@ from parsee_pdf_reader_spark.operators.textstats import (
 )
 from parsee_pdf_reader_spark.plans.queries import (
     REGISTRY,
-    _t,
     _ts,
+    documents,
+    materialize,
     register,
 )
 
@@ -80,35 +86,43 @@ def q_corpus_keep_filter(spark, sf_dir):
       so its missing row coalesces to False.
     - ``sampled``: the deterministic per-language downsampling draw.
 
-    Scale: five more doc_id equi-joins over operators whose shapes
-    are already scale-audited (boilerplate: agg + shuffle_hash
-    join-back; span coverage: one gram-hash count window; LM bucket:
-    the shared-checkpoint score table + histogram window; decontam:
-    broadcast bench + combinable agg; sample: zero-shuffle
-    projection); all joins share the doc_id partitioning the existing
-    composition pays. No new hot keys."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "n_chars")
-    canon = q_dedup_canonical(spark, sf_dir).select(
+    Scale: doc_id equi-joins over operators whose shapes are already
+    scale-audited (boilerplate: agg + shuffle_hash join-back; span
+    coverage: one gram-hash count window; LM bucket: the per-call
+    stored score table + histogram window; decontam: broadcast bench
+    + combinable agg; sample: zero-shuffle projection); all joins
+    share the doc_id partitioning. No new hot keys.
+
+    Building the frame runs Spark jobs: the connected-components
+    rounds checkpoint eagerly, and under AQE each stored relation
+    runs the shuffle stages beneath it when it is stored (26 jobs on
+    the sf0.001 table, pinned by
+    ``test_corpus_keep_filter_build_time_jobs``)."""
+    # read once: every component's scan reads these stored rows
+    docs = materialize(documents(spark, sf_dir).select(
+        "doc_id", "text", "lang", "n_chars"))
+    canon = q_dedup_canonical(spark, sf_dir, docs).select(
         "doc_id", F.col("keep").alias("dedup_keep"))
-    qual = q_doc_quality_scores(spark, sf_dir).select(
+    qual = q_doc_quality_scores(spark, sf_dir, docs).select(
         "doc_id", (F.col("quality_bucket") != "low").alias("quality_ok"))
-    boiler = q_sentence_boilerplate(spark, sf_dir).select(
+    boiler = q_sentence_boilerplate(spark, sf_dir, docs).select(
         "doc_id", "boiler_frac")
-    spans = q_dup_span_stats(spark, sf_dir).select(
+    spans = q_dup_span_stats(spark, sf_dir, docs).select(
         "doc_id", "dup_frac")
-    lm = q_lm_ppl_buckets(spark, sf_dir).select(
+    lm = q_lm_ppl_buckets(spark, sf_dir, docs).select(
         "doc_id", (F.col("ppl_bucket") != "tail").alias("lm_ok"))
-    contam = q_decontam_ngram_overlap(spark, sf_dir).select(
+    contam = q_decontam_ngram_overlap(spark, sf_dir, docs).select(
         "doc_id", "contaminated")
-    samp = q_corpus_sample(spark, sf_dir).select("doc_id", "sampled")
+    samp = q_corpus_sample(spark, sf_dir, docs).select(
+        "doc_id", "sampled")
     lang_ok = F.col("lang").isin(*_LANGS)
     len_ok = (F.col("n_chars") >= _LEN_LO) & (F.col("n_chars") <= _LEN_HI)
     boiler_ok = (F.coalesce(F.col("boiler_frac"), F.lit(0.0))
                  <= _BOILER_MAX_FRAC)
     dup_ok = F.col("dup_frac") <= _DUPSPAN_MAX_FRAC
     contam_ok = F.coalesce(~F.col("contaminated"), F.lit(False))
-    return (docs.join(canon, "doc_id").join(qual, "doc_id")
+    return (docs.select("doc_id", "lang", "n_chars")
+            .join(canon, "doc_id").join(qual, "doc_id")
             .join(boiler, "doc_id", "left")
             .join(spans, "doc_id")
             .join(lm, "doc_id")
@@ -198,7 +212,12 @@ _U32_SQL = f"""
     from documents
     """,
 )
-def q_corpus_sample(spark, sf_dir):
+def q_corpus_sample(spark, sf_dir, docs=None):
+    """Gate row of :func:`corpus_sample_df`."""
+    return corpus_sample_df(documents(spark, sf_dir, docs))
+
+
+def corpus_sample_df(docs):
     """Deterministic per-language sampling plan: every doc gets a
     uniform u32 draw derived from md5(doc_id) and a per-language keep
     rate; ``sampled`` marks the survivors. Emitting the PLAN (flag,
@@ -208,7 +227,6 @@ def q_corpus_sample(spark, sf_dir):
     Scale: pure projection — zero shuffles at any corpus size; the
     hash draw is reproducible under retries/repartitioning, unlike
     ``rand()`` whose per-task seeds change with the physical plan."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     u = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
         16, 10).cast("long")
@@ -277,12 +295,12 @@ def decontam_against(train_df, bench_df, n: int = _DECON_N,
     "decontam_ngram_overlap",
     None,  # replaced below — needs dedup's shingle SQL
 )
-def q_decontam_ngram_overlap(spark, sf_dir):
+def q_decontam_ngram_overlap(spark, sf_dir, docs=None):
     """Gate instantiation of :func:`decontam_against`: the held-out
     suite is the deterministic ``doc_id < {B}`` slice of the documents
     table (the driver needs a self-contained oracle); production
     passes the real benchmark table as ``bench_df``."""
-    docs = _ts(spark, sf_dir, "documents")
+    docs = documents(spark, sf_dir, docs)
     bench = docs.where(F.col("doc_id") < _BENCH_MAX_ID)
     train = docs.where(F.col("doc_id") >= _BENCH_MAX_ID)
     return decontam_against(train, bench)

@@ -20,7 +20,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from parsee_pdf_reader_spark.plans.queries import _t, _ts, register
+from parsee_pdf_reader_spark.plans.queries import (
+    _t,
+    _ts,
+    documents,
+    materialize,
+    register,
+)
 
 # whitespace tokens, both engines
 _TOKS_SQL = "list_filter(string_split_regex(text, '\\s+'), x -> x <> '')"
@@ -97,17 +103,19 @@ def shingles_col(toks, n: int = 3):
     """Distinct n-gram word shingles (Spark twin of
     ``_shingles_sql``) — n=3 is the canonical unit for MinHash
     signatures and the verify pipeline; decontamination uses n=8
-    (short shingles trip on templated boilerplate)."""
-    return F.when(
-        F.size(toks) < n, F.array(F.concat_ws(" ", toks))
+    (short shingles trip on templated boilerplate). ``toks`` is bound
+    once: inlined, every shingle's ``slice`` re-split the whole text
+    (O(tokens^2) per document)."""
+    return bind1(toks, lambda tk: F.when(
+        F.size(tk) < n, F.array(F.concat_ws(" ", tk))
     ).otherwise(
         F.array_distinct(
             F.transform(
-                F.sequence(F.lit(0), F.size(toks) - n),
-                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+                F.sequence(F.lit(0), F.size(tk) - n),
+                lambda i: F.concat_ws(" ", F.slice(tk, i + 1, n)),
             )
         )
-    )
+    ))
 
 
 _SIG_SQL = f"""
@@ -184,9 +192,12 @@ def _band_hash_col(sig, b):
 def minhash_signatures_df(docs, id_col: str = "doc_id",
                           text_col: str = "text"):
     """Signature step of the LSH candidate stage: (id, text) ->
-    (doc_id, sig). A pure projection (no shuffle)."""
-    return docs.select(F.col(id_col).alias("doc_id"),
-                       text_minhash_sig(text_col).alias("sig"))
+    (doc_id, sig), a pure projection (no shuffle), stored: both sides
+    of the band self-join read it (one is broadcast, so they share no
+    exchange), and the signature would otherwise be evaluated once
+    per side."""
+    return materialize(docs.select(F.col(id_col).alias("doc_id"),
+                                   text_minhash_sig(text_col).alias("sig")))
 
 
 def minhash_pairs_df(sigs):
@@ -195,7 +206,9 @@ def minhash_pairs_df(sigs):
     by the registered query, the recall evaluation and the
     training-pipeline composition, which passes the signatures its
     per-document table already holds (ids may be strings — urls — or
-    longs; ``doc_a < doc_b`` orders either)."""
+    longs; ``doc_a < doc_b`` orders either). Both join sides read
+    ``sigs``, so pass a stored table, as ``minhash_signatures_df``
+    returns."""
     band_idx = F.explode(
         F.sequence(F.lit(0), F.lit(_BANDS - 1))).alias("b")
     bands = sigs.select("doc_id", "sig", band_idx).select(
@@ -292,18 +305,20 @@ def q_dedup_clusters(spark, sf_dir):
     symmetric candidate-pair graph: each round is one equi-join +
     map-side-combinable min aggregation (both shuffles on doc_id), and
     the loop stops at the fixpoint — the changed-label counter rides
-    an Observation on the round's own cache-materializing count, ONE
-    Spark job per round (VERDICT r3 item 6). Rounds needed = graph
-    diameter; near-dup components are tiny/star-shaped in practice,
-    so this converges in a few rounds at any corpus size. For
+    an Observation on the round's own checkpointing action, so no
+    extra pass reads it (VERDICT r3 item 6). Under AQE that action
+    runs one Spark job per shuffle stage (six per round on the
+    sf0.001 table). Rounds needed = graph diameter; near-dup
+    components are tiny/star-shaped in practice, so this converges in
+    a few rounds at any corpus size. For
     adversarial long-chain graphs, `connected_components_df(pairs,
     algorithm="star")` runs the alternating large-star/small-star
     contraction (O(log^2 n) rounds, identical labels).
 
     Output: (doc_id, cluster_id = min doc_id in component,
     cluster_size), for every doc that appears in at least one pair."""
-    pairs = q_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    return connected_components_df(pairs)
+    return minhash_clusters_df(
+        minhash_signatures_df(_ts(spark, sf_dir, "documents")))
 
 
 @register("dedup_clusters_star", _CC_SQL)
@@ -314,8 +329,20 @@ def q_dedup_clusters_star(spark, sf_dir):
     contraction end-to-end on real candidate pairs, not just the
     crafted chain test. See `connected_components_df` for the
     O(log^2 n)-rounds scale rationale."""
-    pairs = q_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    return connected_components_df(pairs, algorithm="star")
+    return minhash_clusters_df(
+        minhash_signatures_df(_ts(spark, sf_dir, "documents")),
+        algorithm="star")
+
+
+def minhash_clusters_df(sigs, algorithm="label_prop"):
+    """(doc_id, sig) -> connected components of the LSH candidate-pair
+    graph, (doc_id, cluster_id, cluster_size). The pair table is
+    stored before the rounds: every round reads it, and round 0 would
+    otherwise re-run the signature and band-join plan. The one
+    LSH -> closure composition of the gate rows, the curation verdict
+    and the training pipeline."""
+    pairs = materialize(minhash_pairs_df(sigs).select("doc_a", "doc_b"))
+    return connected_components_df(pairs, algorithm)
 
 
 def connected_components_df(pairs, algorithm="label_prop", stats=None):
@@ -340,10 +367,15 @@ def connected_components_df(pairs, algorithm="label_prop", stats=None):
 
     Convergence probes cost no extra pass (VERDICT r3 item 6):
     label_prop folds an ``Observation`` changed-label counter into the
-    round's own eager-localCheckpoint materialization — ONE Spark job
-    per round, no labels-vs-labels rejoin; star compares a (count,
-    xor-of-hash, sum-of-hash, min, max) edge-set signature computed by
-    the round's single agg action.
+    round's own eager-localCheckpoint action, no labels-vs-labels
+    rejoin; star compares a (count, xor-of-hash, sum-of-hash, min,
+    max) edge-set signature computed by the round's single agg
+    action. Under AQE an action runs one Spark job per shuffle stage,
+    so a round is several jobs, not one.
+
+    Every round reads ``pairs``: pass a stored table
+    (:func:`minhash_clusters_df` does for the LSH pairs), or round 0
+    re-runs the whole plan that produced it.
 
     If label_prop exhausts its round budget (component diameter >
     ``_CC_MAX_ITERS`` — an adversarial chain), it AUTO-ESCALATES to
@@ -396,10 +428,9 @@ def _cc_label_prop_labels(pairs, stats=None):
                        F.col("doc_b").alias("dst"))
     rev = pairs.select(F.col("doc_b").alias("src"),
                        F.col("doc_a").alias("dst"))
-    edges = fwd.union(rev).persist()
+    edges = fwd.union(rev)
     labels = (edges.select(F.col("src").alias("doc_id")).distinct()
-              .select("doc_id", F.col("doc_id").alias("cluster_id"))
-              .persist())
+              .select("doc_id", F.col("doc_id").alias("cluster_id")))
     converged = False
     rounds = 0
     for it in range(_CC_MAX_ITERS):
@@ -416,8 +447,8 @@ def _cc_label_prop_labels(pairs, stats=None):
                 F.coalesce(F.col("nbr_min"), F.col("cluster_id")),
             ).alias("cluster_id"),
         )
-        # ONE job per round: the eager localCheckpoint materializes
-        # the new labels, truncates the iteration lineage (the labels
+        # one action per round: the eager localCheckpoint stores the
+        # new labels, truncates the iteration lineage (the labels
         # relation feeds two joins per round, so an un-truncated plan
         # DOUBLES every round — 2^rounds nodes would OOM the driver on
         # long-diameter graphs), and fires the CollectMetrics probe.
@@ -438,7 +469,6 @@ def _cc_label_prop_labels(pairs, stats=None):
             break
     if stats is not None:
         stats.update(rounds=rounds, algorithm="label_prop")
-    edges.unpersist()
     if not converged:
         return None  # caller escalates to the star variant
     return labels
@@ -576,20 +606,26 @@ def _cc_star_labels(pairs, stats=None):
     from documents d left join lbl l on l.doc_id = d.doc_id
     """,
 )
-def q_dedup_canonical(spark, sf_dir):
-    """The corpus-compaction decision: every document gets a
-    cluster_id (its transitive near-dup component, or itself when it
-    has no candidate pair) and a keep/drop verdict — keep the longest
-    document per cluster, min doc_id on ties. The output drives the
-    actual training-set filter (`where keep`); left-joining the full
-    documents table keeps singletons without ever materializing them
-    in the (small) cluster graph."""
+def q_dedup_canonical(spark, sf_dir, docs=None):
+    """Gate row of :func:`dedup_canonical_df`."""
+    return dedup_canonical_df(documents(spark, sf_dir, docs))
+
+
+def dedup_canonical_df(docs):
+    """The corpus-compaction decision over (doc_id, text, n_chars):
+    every document gets a cluster_id (its transitive near-dup
+    component, or itself when it has no candidate pair) and a
+    keep/drop verdict — keep the longest document per cluster, min
+    doc_id on ties. The output drives the actual training-set filter
+    (`where keep`); left-joining the full documents table keeps
+    singletons without ever materializing them in the (small) cluster
+    graph."""
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    clusters = q_dedup_clusters(spark, sf_dir) \
-        .select("doc_id", "cluster_id")
-    joined = docs.join(clusters, "doc_id", "left").select(
+    clusters = minhash_clusters_df(minhash_signatures_df(docs)).select(
+        "doc_id", "cluster_id")
+    joined = docs.select("doc_id", "n_chars").join(
+        clusters, "doc_id", "left").select(
         "doc_id", "n_chars",
         F.coalesce("cluster_id", "doc_id").alias("cluster_id"))
     w = Window.partitionBy("cluster_id").orderBy(
@@ -1189,11 +1225,11 @@ def dup_span_stats_df(docs, n: int = _SPAN_N, id_col: str = "doc_id",
 
 
 @register("dup_span_stats", _dup_span_sql())
-def q_dup_span_stats(spark, sf_dir):
+def q_dup_span_stats(spark, sf_dir, docs=None):
     """Corpus-wide duplicated 16-gram span coverage per document —
     the within-corpus companion of ``decontam_ngram_overlap`` (which
     runs the same gram machinery against a held-out slice)."""
-    return dup_span_stats_df(_ts(spark, sf_dir, "documents"))
+    return dup_span_stats_df(documents(spark, sf_dir, docs))
 
 
 # ---------------------------------------------------------------------------

@@ -10,7 +10,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from parsee_pdf_reader_spark.plans.queries import _t, _ts, register
+from parsee_pdf_reader_spark.plans.queries import (
+    _t,
+    _ts,
+    documents,
+    materialize,
+    register,
+)
 
 _TOKS_SQL = "list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')"
 
@@ -119,10 +125,14 @@ def q_lang_id_heuristic(spark, sf_dir):
     from documents
     """,
 )
-def q_doc_quality_scores(spark, sf_dir):
+def q_doc_quality_scores(spark, sf_dir, docs=None):
+    """Gate row of :func:`doc_quality_scores_df`."""
+    return doc_quality_scores_df(documents(spark, sf_dir, docs))
+
+
+def doc_quality_scores_df(docs):
     """Length/punctuation/stopword quality features (the usual pretrain
     filtering signals) as one pure projection."""
-    docs = _ts(spark, sf_dir, "documents")
     toks = _toks_lower()
     # r7: one tokenization per row — (n_tokens, stopword hits) emitted
     # through an inline(array(struct)) boundary; the old shape
@@ -630,12 +640,16 @@ _SENT_SPLIT = r"[.!?]+\s+"
     """,
 )
 def q_doc_sentences(spark, sf_dir):
+    """Gate row of :func:`doc_sentences_df`."""
+    return doc_sentences_df(_ts(spark, sf_dir, "documents"))
+
+
+def doc_sentences_df(docs):
     """Exploded sentence table with stable per-doc ordinals.
 
     Scale: one generate (posexplode) over a projection — no shuffle;
     the ordinal comes from the split position, not a window, so the
     operation is embarrassingly parallel at any corpus size."""
-    docs = _ts(spark, sf_dir, "documents")
     sents = F.split("text", _SENT_SPLIT)
     return (docs.select(
         "doc_id", F.posexplode(sents).alias("sent_idx", "raw"))
@@ -680,7 +694,12 @@ _BOILER_MIN_DOCS = 3  # a sentence seen in >= N distinct docs is boilerplate
     group by s.doc_id
     """,
 )
-def q_sentence_boilerplate(spark, sf_dir):
+def q_sentence_boilerplate(spark, sf_dir, docs=None):
+    """Gate row of :func:`sentence_boilerplate_df`."""
+    return sentence_boilerplate_df(documents(spark, sf_dir, docs))
+
+
+def sentence_boilerplate_df(docs):
     """Corpus-level duplicated-sentence (boilerplate) detection — the
     C4 line-dedup signal: a sentence occurring in >= {N} distinct
     documents is boilerplate (nav text, disclaimers, templates); each
@@ -697,7 +716,7 @@ def q_sentence_boilerplate(spark, sf_dir):
     ~distinct-sentences rows; joining THROUGH the shuffle (not a
     broadcast) is deliberate — corpus-wide distinct sentences do not
     fit a driver."""
-    sents = q_doc_sentences(spark, sf_dir).select("doc_id", "sentence")
+    sents = doc_sentences_df(docs).select("doc_id", "sentence")
     freq = sents.groupBy("sentence").agg(
         F.countDistinct("doc_id").alias("n_docs"))
     is_boiler = (F.col("n_docs") >= _BOILER_MIN_DOCS).cast("int")
@@ -1168,10 +1187,15 @@ def ngram_lm_score_df(docs, id_col: str = "doc_id", train_df=None):
 
     Scale story:
 
-    - bigram instances come from ONE bound projection + explode;
-    - the count tables (c1, c12) are combinable groupBys — a stop-word
-      head like "the" partial-aggregates to one row per map task, so
-      counting is skew-free;
+    - bigram instances come from ONE bound projection + explode,
+      materialized once per call: the pair counts and the join-back
+      both read the stored stream, so the explode runs once (the
+      instance rows are the ones the join-back shuffles anyway);
+    - the count tables are combinable groupBys — a stop-word head
+      like "the" partial-aggregates to one row per map task, so
+      counting is skew-free; the head counts (c1) are the pair counts
+      (c12) summed over w2, aggregated from the pair-count table
+      rather than from the instances;
     - the join back to the instance stream is shuffle-hash pinned
       (a web-scale bigram vocabulary is billions of rows — never a
       driver broadcast; the tfidf r3 lesson), and AQE's skew-join
@@ -1214,10 +1238,12 @@ def ngram_lm_score_df(docs, id_col: str = "doc_id", train_df=None):
                 .select("doc_id", "g.w1", "g.w2"))
 
     train = train_df if train_df is not None else docs
-    big = bigrams(docs)
-    tbig = bigrams(train) if train_df is not None else big
+    if train_df is None:
+        big = tbig = materialize(bigrams(docs))
+    else:
+        big, tbig = bigrams(docs), bigrams(train)
     c12 = tbig.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    c1 = tbig.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
+    c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
     vocab = (train.select(F.explode(toks).alias("t"))
              .agg(F.count_distinct("t").alias("v")))
     lp = F.round(
@@ -1248,25 +1274,6 @@ def q_ngram_lm_score(spark, sf_dir):
     return ngram_lm_score_df(_ts(spark, sf_dir, "documents"))
 
 
-#: shared LM score table per (session, sf): the bucket query reads the
-#: scores TWICE (histogram branch + join-back branch) and
-#: corpus_keep_filter embeds the bucket query — without sharing, the
-#: most expensive new subplan (bigram explode + two shuffled count
-#: joins + per-doc agg) would execute twice per invocation. Same
-#: pattern as the table-gate cells cache (VERDICT r5 item 7).
-_LM_CACHE: dict = {}
-
-
-def _lm_scores_once(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LM_CACHE.get(key)
-    if cached is None:
-        cached = q_ngram_lm_score(spark, sf_dir).localCheckpoint(
-            eager=True)
-        _LM_CACHE[key] = cached
-    return cached
-
-
 def _lm_buckets_sql() -> str:
     return f"""
     with s as ({_lm_score_sql()}),
@@ -1290,7 +1297,12 @@ def _lm_buckets_sql() -> str:
 
 
 @register("lm_ppl_buckets", _lm_buckets_sql())
-def q_lm_ppl_buckets(spark, sf_dir):
+def q_lm_ppl_buckets(spark, sf_dir, docs=None):
+    """Gate row of :func:`lm_ppl_buckets_df`."""
+    return lm_ppl_buckets_df(documents(spark, sf_dir, docs))
+
+
+def lm_ppl_buckets_df(docs):
     """CCNet's actual selection mechanism over the LM statistic:
     head/middle/tail thirds by corpus-wide score rank (Wenzek et al.
     2020 §4.3 — CCNet keeps head+middle and drops the tail rather
@@ -1312,16 +1324,20 @@ def q_lm_ppl_buckets(spark, sf_dir):
     log-probabilities) — so without the override a single-token spam
     doc would outrank every genuine document. No bigrams = no
     evidence of quality: forced to 'tail' (and thus rejected by
-    ``corpus_keep_filter``'s lm_ok)."""
+    ``corpus_keep_filter``'s lm_ok).
+
+    The score table is read three times (histogram, corpus count and
+    join-back; it has one row per document), so it is materialized
+    once per call: a fresh store each call, never one shared across
+    calls, so a rewritten documents table is re-scored."""
     from pyspark.sql import Window
 
-    s = _lm_scores_once(spark, sf_dir)
+    s = materialize(ngram_lm_score_df(docs))
     hist = s.groupBy("avg_logprob").agg(F.count(F.lit(1)).alias("c"))
     w = (Window.orderBy(F.desc("avg_logprob"))
          .rowsBetween(Window.unboundedPreceding, 0))
     cum = hist.select("avg_logprob", F.sum("c").over(w).alias("cum"))
-    tot = (_t(spark, sf_dir, "documents")
-           .agg(F.count(F.lit(1)).alias("n")))
+    tot = s.agg(F.count(F.lit(1)).alias("n"))
     bucket = (
         F.when(F.col("n_bigrams") == 0, "tail")
         .when(F.col("cum") <= F.ceil(F.col("n") / 3.0), "head")

@@ -73,6 +73,15 @@ def _ts(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df.repartition(p) if need else df
 
 
+def documents(spark: SparkSession, sf_dir: str,
+              docs: DataFrame | None = None) -> DataFrame:
+    """``docs`` if given, else the spread ``documents`` scan. A
+    component's ``q_*`` wrapper takes an optional pre-read frame, so a
+    composed query reads the table once and hands that one frame to
+    every component it joins."""
+    return _ts(spark, sf_dir, "documents") if docs is None else docs
+
+
 def materialize(df: DataFrame) -> DataFrame:
     """``df`` stored by the first job that reads it; every later read
     of the returned frame, or of a frame derived from it, reads the

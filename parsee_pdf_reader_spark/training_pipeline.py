@@ -134,11 +134,9 @@ def build_training_corpus(pages_df: DataFrame,
     # near-dup closure over the exact-canonical survivors: LSH pairs
     # -> connected components -> keep the longest doc per component
     # (each stage oracle-verified in isolation)
-    pairs = dedup.minhash_pairs_df(
+    clusters = dedup.minhash_clusters_df(
         table.where("is_canonical")
-        .select(F.col("url").alias("doc_id"), "sig"))
-    clusters = dedup.connected_components_df(
-        pairs.select("doc_a", "doc_b")).select(
+        .select(F.col("url").alias("doc_id"), "sig")).select(
         F.col("doc_id").alias("url"), "cluster_id")
     out = table.drop("sig").join(clusters, "url", "left").withColumn(
         "near_dup_cluster", F.coalesce("cluster_id", "url")).drop(

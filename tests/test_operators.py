@@ -302,3 +302,51 @@ def test_tfidf_top_terms_ranks_discriminative_tokens(spark, tmp_path):
     assert top[1][0][0] == "uniqueone"
     # common words score 0 (ln(3/3)): every doc-2 term ties at 0
     assert all(abs(s) < 1e-9 for _t, s in top[2])
+
+
+def test_lm_buckets_rescore_rewritten_documents(spark, tmp_path):
+    """No stale reuse across calls: a second ``lm_ppl_buckets`` call
+    over a documents path rewritten outside Spark returns the DuckDB
+    twin's buckets for the new rows. A score table shared across calls
+    by (session, path) served the first call's scores."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parsee_pdf_reader_spark.operators.textstats import (
+        q_lm_ppl_buckets,
+    )
+    from parsee_pdf_reader_spark.plans.queries import REGISTRY
+
+    path = tmp_path / "documents.parquet"
+    os.makedirs(path)
+
+    def write(phrase, n):
+        texts = [" ".join([phrase] * (i + 1)) + f" tail{i % 3}"
+                 for i in range(n)]
+        pq.write_table(pa.table({"doc_id": pa.array(range(n), pa.int64()),
+                                 "text": texts}),
+                       str(path / "part-0.parquet"))
+
+    def twin():
+        con = duckdb.connect()
+        try:
+            con.execute("create view documents as select * from "
+                        f"read_parquet('{path}/*.parquet')")
+            return sorted(con.execute(
+                "select doc_id, avg_logprob, ppl_bucket from "
+                f"({REGISTRY['lm_ppl_buckets'][1]})").fetchall())
+        finally:
+            con.close()
+
+    def spark_rows():
+        return sorted(tuple(r) for r in
+                      q_lm_ppl_buckets(spark, str(tmp_path)).collect())
+
+    write("the quick brown fox jumps over the lazy dog", 6)
+    first = spark_rows()
+    assert first == twin()
+    write("a stale score table would answer for these rows", 9)
+    second = spark_rows()
+    assert len(second) == 9
+    assert second == twin()

@@ -100,7 +100,7 @@ def test_tfidf_does_not_broadcast_vocabulary(spark):
                              if n_bcast else True), plan
 
 
-def test_hof_expressions_evaluated_once_per_row(spark):
+def test_hof_expressions_evaluated_once_per_row(spark, monkeypatch):
     """r5 perf-wave pin: large interpreted higher-order-function
     expressions must appear in the optimized plan exactly once per
     scan side — project collapse re-inlining them per reference (or a
@@ -108,6 +108,7 @@ def test_hof_expressions_evaluated_once_per_row(spark):
     operator cost 5-60x before the bind1 fixes (BENCH/BASELINE.md
     'operator-perf wave'). Occurrence counts of expression-unique
     markers are a stable structural proxy."""
+    from parsee_pdf_reader_spark.operators import dedup, textstats
     from parsee_pdf_reader_spark.operators.dedup import (
         q_dedup_minhash_lsh, q_simhash_near_pairs_wide,
     )
@@ -122,12 +123,59 @@ def test_hof_expressions_evaluated_once_per_row(spark):
     # unique to the hash arithmetic)
     p = opt(q_simhash_near_pairs_wide(spark, SF))
     assert p.count("0123456789abcdef") == 2, p.count("0123456789abcdef")
-    # one minhash signature (array_min over per-slot md5s) per side
-    p = opt(q_dedup_minhash_lsh(spark, SF))
-    assert p.count("array_min") == 2, p.count("array_min")
+    # per call, counted over the returned plan and the plans of the
+    # relations the call stores (a stored relation's plan is not in
+    # the returned one)
+    stored = []
+    store = dedup.materialize
+    for mod in (dedup, textstats):
+        monkeypatch.setattr(mod, "materialize",
+                            lambda df: stored.append(opt(df)) or store(df))
+
+    def call_plans(df):
+        plans = [opt(df)] + stored
+        stored.clear()
+        return plans
+
+    # one minhash signature (array_min over per-slot md5s): both
+    # self-join sides read the stored signatures, whose projection
+    # splits the text once
+    plans = call_plans(q_dedup_minhash_lsh(spark, SF))
+    sig = [p for p in plans if "array_min" in p]
+    assert sum(p.count("array_min") for p in plans) == 1, sig
+    assert sig[0].count("split(") == 1, sig[0]
+    # one bigram explode: the pair counts and the join-back read the
+    # stored bigram stream
+    plans = call_plans(textstats.q_ngram_lm_score(spark, SF))
+    assert sum(p.count("struct(w1") for p in plans) == 1, plans
     # the byte-feature chain sorts the byte array exactly once
     p = opt(q_media_byte_features(spark, SF))
     assert p.count("array_sort") == 1, p.count("array_sort")
+
+
+def test_corpus_keep_filter_build_time_jobs(spark):
+    """Building the keep filter runs Spark jobs before any action: the
+    connected-components rounds checkpoint eagerly, and under AQE a
+    stored relation runs the shuffle stages beneath it when it is
+    stored. The count is pinned so a change that re-runs a subplan at
+    build time shows up here. (The earlier composition, which scanned,
+    tokenized and signed per component, ran 39 on a cold call.)"""
+    from parsee_pdf_reader_spark.operators.curation import (
+        q_corpus_keep_filter,
+    )
+
+    sc = spark.sparkContext
+    group = "corpus_keep_filter_build"
+    sc.setJobGroup(group, group)
+    try:
+        q_corpus_keep_filter(spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed by the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 26, len(jobs)
 
 
 def test_topk_prereduces_before_priority_window(spark):

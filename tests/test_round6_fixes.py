@@ -646,7 +646,7 @@ def test_lm_zero_bigram_docs_forced_to_tail(spark, tmp_path):
     through corpus_keep_filter's lm_ok): no bigrams = no evidence =
     tail."""
     from parsee_pdf_reader_spark.operators.textstats import (
-        _LM_CACHE, q_lm_ppl_buckets,
+        q_lm_ppl_buckets,
     )
 
     phrase = "the quick brown fox jumps over the lazy dog again"
@@ -657,7 +657,6 @@ def test_lm_zero_bigram_docs_forced_to_tail(spark, tmp_path):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     sf = str(tmp_path)
     docs.write.parquet(f"{sf}/documents.parquet")
-    _LM_CACHE.clear()
     out = {r.doc_id: r for r in q_lm_ppl_buckets(spark, sf).collect()}
     assert out[90].avg_logprob == 0.0  # sentinel, max of all scores
     assert out[90].ppl_bucket == "tail"  # ...but never 'head'
@@ -665,23 +664,30 @@ def test_lm_zero_bigram_docs_forced_to_tail(spark, tmp_path):
 
 
 def test_lm_buckets_share_one_checkpointed_score_table(spark):
-    """Review fix: the bucket query reads the scores twice (histogram
-    + join-back) and the keep filter embeds it — the score table is
-    computed once per (session, sf) and localCheckpoint'ed, so the
-    executed plan contains no second copy of the bigram join tree."""
+    """Review fix: the bucket query reads the scores three times
+    (histogram, corpus count and join-back) and the keep filter embeds
+    it. Each call stores ONE score table that all three reads share,
+    so the executed plan holds no second copy of the bigram join tree;
+    the next call stores a table of its own instead of reusing it."""
     from parsee_pdf_reader_spark.operators.textstats import (
-        _LM_CACHE, q_lm_ppl_buckets,
+        q_lm_ppl_buckets,
     )
 
-    _LM_CACHE.clear()
+    def stored_tables(df):
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        return {leaves.apply(i).rdd().id() for i in range(leaves.size())
+                if leaves.apply(i).getClass().getSimpleName()
+                == "LogicalRDD"}
+
     df = q_lm_ppl_buckets(spark, SF)
-    assert len(_LM_CACHE) == 1
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # the checkpointed scan replaces the bigram pipeline: no shuffled
-    # count joins (w1/w2 keys) may appear in the bucket plan itself
+    # the stored scan replaces the bigram pipeline: no bigram explode
+    # and no shuffled count joins (w1/w2 keys) in the bucket plan
     assert "ShuffledHashJoin" not in plan, plan
-    q_lm_ppl_buckets(spark, SF)
-    assert len(_LM_CACHE) == 1  # reused, not rebuilt
+    assert "explode" not in plan, plan
+    first = stored_tables(df)
+    assert len(first) == 1, first
+    assert stored_tables(q_lm_ppl_buckets(spark, SF)).isdisjoint(first)
 
 
 def test_latest_snapshot_tiebreak_total_order(spark):

@@ -1,5 +1,9 @@
 """Dump formatted physical plans of the headline queries -> PLANS.md.
 
+    python tools/explain_plans.py [query ...]
+
+With query names, only their sections and summary rows are rewritten.
+
 Judge-facing evidence that the declared plans are the plans we want:
 filters reach scans (PushedFilters), dims broadcast, aggregations are
 partial before exchanges, extraction has no exchange at all, and scalar
@@ -54,8 +58,14 @@ CHECKS = {
                             "localCheckpoint-truncated each round"],
     "kmeans_assign": ["broadcast-K distance folds; per-vec argmin "
                       "windows; map-side-combinable centroid update"],
-    "corpus_keep_filter": ["projections + doc_id equi-joins on top of "
-                           "dedup_canonical's exchanges"],
+    "corpus_keep_filter": ["documents read once into one stored "
+                           "frame handed to every component; one "
+                           "signature projection and one bigram "
+                           "explode per call, each stored once and "
+                           "read by all its consumers (counts below "
+                           "include the plans of the stored "
+                           "relations); projections + doc_id "
+                           "equi-joins on top"],
     "corpus_token_budget": ["windows over the #langs-row aggregate, "
                             "never documents"],
     "doc_repetition_stats": ["bigram fraction array-native (no "
@@ -121,8 +131,56 @@ CHECKS = {
                        "per-doc arrays after a doc_id groupBy"],
 }
 
+#: shape claims counted as marker occurrences over the returned plan
+#: plus the optimized plans of the relations the call stores through
+#: ``materialize`` (a stored relation's plan is not in the returned one)
+MARKERS = {
+    "corpus_keep_filter": {"signature projections": "array_min",
+                           "bigram explodes": "struct(w1"},
+}
 
-def main():
+
+def _stored_plans(build):
+    """(frame, [optimized plans of the relations ``build()`` stores])."""
+    from parsee_pdf_reader_spark.plans import queries
+
+    stored, patched = [], []
+
+    def spy(df):
+        stored.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return queries.materialize(df)
+
+    for mod in list(sys.modules.values()):
+        if (getattr(mod, "__name__", "").startswith("parsee_pdf_reader_spark")
+                and getattr(mod, "materialize", None)
+                is queries.materialize and mod is not queries):
+            patched.append(mod)
+            mod.materialize = spy
+    try:
+        df = build()
+    finally:
+        for mod in patched:
+            mod.materialize = queries.materialize
+    return df, stored
+
+
+def _splice(old, new):
+    """``old`` PLANS.md with the sections and summary rows of ``new``
+    (a PLANS.md holding only some queries) put in their place."""
+    def sections(text):
+        parts = re.split(r"(?m)^(?=## )", text)
+        return parts[0], {p.split("\n", 1)[0][3:]: p for p in parts[1:]}
+
+    head, secs = sections(old)
+    _, fresh = sections(new)
+    rows = {m.group(1): m.group(0) for m in re.finditer(
+        r"(?m)^\| (\S+) \|.*$", fresh.pop("Summary", ""))}
+    out = head + "".join(fresh.get(k, v) for k, v in secs.items())
+    return re.sub(r"(?m)^\| (\S+) \|.*$",
+                  lambda m: rows.get(m.group(1), m.group(0)), out)
+
+
+def main(names=()):
     import __spark_entry__ as em
     from parsee_pdf_reader_spark.session import get_spark
 
@@ -136,7 +194,9 @@ def main():
               "(plan shapes are scale-invariant modulo AQE sizing).\n")
     summary = []
     for name, notes in CHECKS.items():
-        df = qs[name](spark, SF)
+        if names and name not in names:
+            continue
+        df, stored = _stored_plans(lambda: qs[name](spark, SF))
         # structural counts (exchanges/joins) come from the
         # pre-execution plan — AQE's final toString reprints every
         # materialized query stage, double-counting nodes
@@ -162,7 +222,13 @@ def main():
             out.write("Intent: " + "; ".join(notes) + ".\n")
         out.write(f"Exchanges: {n_exchange} · BroadcastHashJoin: {n_bcast}"
                   f" · SortMergeJoin: {n_smj}"
-                  f" · WholeStageCodegen spans: {n_wsc}\n\n")
+                  f" · WholeStageCodegen spans: {n_wsc}\n")
+        if name in MARKERS:
+            opt = df._jdf.queryExecution().optimizedPlan().toString()
+            out.write(f"Stored relations: {len(stored)} · " + " · ".join(
+                f"{label}: {sum(p.count(m) for p in [opt] + stored)}"
+                for label, m in MARKERS[name].items()) + "\n")
+        out.write("\n")
         out.write("```\n")
         out.write(simple[:4000])
         out.write("\n```\n")
@@ -171,8 +237,12 @@ def main():
               " codegen spans |\n|---|---|---|---|---|\n")
     for name, ne, nb, ns, nw in summary:
         out.write(f"| {name} | {ne} | {nb} | {ns} | {nw} |\n")
+    text = out.getvalue()
+    if names:
+        with open("PLANS.md") as f:
+            text = _splice(f.read(), text)
     with open("PLANS.md", "w") as f:
-        f.write(out.getvalue())
+        f.write(text)
     print("wrote PLANS.md")
     for row in summary:
         print(row)
@@ -180,4 +250,5 @@ def main():
 
 
 if __name__ == "__main__":
-    main()
+    # optional query names: regenerate only their sections in place
+    main(sys.argv[1:])
