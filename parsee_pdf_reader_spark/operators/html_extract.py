@@ -7,9 +7,9 @@ no native deps), drop chrome subtrees (nav/header/footer/aside/script/
 style/form), segment into block elements, and keep blocks by text
 length and link density. Deterministic: same bytes -> same text.
 
-Spark surface: an Arrow-batched pure map (``extract_web_pages``), and a
-content-sniffing dispatcher (`sniff_kind`) so one pipeline handles both
-layout documents (PLD1/PDF) and web pages.
+Spark surface: an Arrow-batched pure map (``extract_web_pages``), and
+``sniff_kind``, the one content-dispatch rule (layout / pdf / html /
+unknown) the training pipeline's document map applies per payload.
 """
 
 from __future__ import annotations
@@ -163,25 +163,17 @@ def extract_web_pages(pages_df):
     return cols.mapInPandas(run, schema=WEB_EXTRACT_SCHEMA)
 
 
-def sniff_kind_col():
-    """Content-based dispatch column (upgrades the reference's
+def sniff_kind(payload: bytes) -> str:
+    """Content-based dispatch of one payload (upgrades the reference's
     extension-based ``is_image``, converter.py:31-38, which is wrong
-    for Common-Crawl payloads): PLD1/PDF magic vs HTML prefix."""
-    from pyspark.sql import functions as F
-
-    head4 = F.hex(F.substring(F.col("html"), 1, 4))
-    head_txt = F.lower(F.trim(F.decode(F.substring(F.col("html"), 1, 16),
-                                       "utf-8")))
-    return (
-        F.when(head4 == "504C4431", "layout")        # b"PLD1"
-        .when(head4 == "504C4432", "layout")         # b"PLD2"
-        .when(head4 == "25504446", "pdf")            # b"%PDF"
-        .when(head_txt.startswith("<!doctype")
-              | head_txt.startswith("<html")
-              | head_txt.startswith("<head")
-              | head_txt.startswith("<body"), "html")
-        .otherwise("unknown")
-    )
+    for Common-Crawl payloads): ``layout`` for PLD1/PLD2 bytes, ``pdf``
+    for ``%PDF-``, ``html`` where :func:`looks_like_html` accepts it
+    (leading ASCII whitespace allowed), else ``unknown``."""
+    if payload[:4] in (b"PLD1", b"PLD2"):
+        return "layout"
+    if payload[:5] == b"%PDF-":
+        return "pdf"
+    return "html" if looks_like_html(payload) else "unknown"
 
 
 # --- oracle-checkable HTML scalar surface ---

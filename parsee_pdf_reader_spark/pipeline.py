@@ -3,7 +3,7 @@
 Scale design (100 TB / 10^12 rows):
 
 - Extraction is a *pure map*: one input row (document) -> N output rows
-  (pages). It is expressed as a single ``mapInPandas`` stage so the plan
+  (pages). It is expressed as a single ``mapInArrow`` stage so the plan
   contains NO shuffle between scan and sink — Catalyst keeps column
   pruning (only ``url``/``html``/carried metadata are read) and any
   partition filters the caller applied (``lang``, ``days(warc_ts)``)
@@ -44,21 +44,25 @@ AREAS_DDL = ("array<struct<page int, class_name string, x0 float, "
              "x1 float, y0 float, y1 float, prob float>>")
 
 
-def _doc_to_rows(url, warc_ts, lang, blob, min_rows, min_cols,
-                 areas=None, ocr_engine=None, force_ocr=False):
+def areas_by_page(areas):
+    """An ``areas`` cell (AREAS_DDL) -> the kernel's ``areas_by_page``."""
+    by_page = {}
+    for a in areas or ():
+        by_page.setdefault(int(a["page"]), []).append(
+            (a["class_name"], a["x0"], a["x1"], a["y0"], a["y1"],
+             a["prob"]))
+    return by_page or None
+
+
+def _doc_to_rows(url, warc_ts, lang, blob, areas=None, min_rows=2,
+                 min_cols=1, ocr_engine=None, force_ocr=False):
     from parsee_pdf_reader_spark.kernel.engine import extract_document
 
     base = {"url": url, "warc_ts": warc_ts, "lang": lang}
-    areas_by_page = None
-    if areas is not None:
-        areas_by_page = {}
-        for a in areas:
-            areas_by_page.setdefault(int(a["page"]), []).append(
-                (a["class_name"], a["x0"], a["x1"], a["y0"], a["y1"],
-                 a["prob"]))
+    by_page = areas_by_page(areas)
     try:
         pages = extract_document(bytes(blob), min_rows, min_cols,
-                                 areas_by_page, ocr_engine=ocr_engine,
+                                 by_page, ocr_engine=ocr_engine,
                                  force_ocr=force_ocr)
     except Exception as e:  # corrupt/unsupported member
         return [dict(base, page_index=-1, extracted_text=None,
@@ -104,8 +108,7 @@ def _doc_to_rows(url, warc_ts, lang, blob, min_rows, min_cols,
 
 
 def extract_pages(pages_df: DataFrame, min_rows: int = 2, min_cols: int = 1,
-                  use_arrow: bool = True, ocr_engine=None,
-                  force_ocr: bool = False) -> DataFrame:
+                  ocr_engine=None, force_ocr: bool = False) -> DataFrame:
     """pages(url, warc_ts, html, text, lang[, areas]) -> one row per
     extracted page. An optional ``areas`` column (AREAS_DDL) carries
     layout-model predictions (figure routing etc.).
@@ -116,64 +119,45 @@ def extract_pages(pages_df: DataFrame, min_rows: int = 2, min_cols: int = 1,
     ships to executors inside the kernel closure); ``force_ocr`` runs
     it on every page, otherwise only where ``needs_ocr`` fires.
 
-    A shuffle-free Arrow-batched map; the kernel is the only Python
-    stage in the plan. ``use_arrow=True`` emits pyarrow RecordBatches
-    directly (``mapInArrow``), skipping the pandas round-trip on the
-    deeply nested output structs (~20% faster end-to-end)."""
-    import pandas as pd
+    A shuffle-free Arrow-batched map (:func:`map_documents`); the
+    kernel is the only Python stage in the plan."""
+    from functools import partial
 
-    has_areas = "areas" in pages_df.columns
-    sel = ["url", "warc_ts", "lang", "html"] + (
-        ["areas"] if has_areas else [])
-    src = pages_df.select(*sel)
+    return map_documents(pages_df, EXTRACT_SCHEMA, partial(
+        _doc_to_rows, min_rows=min_rows, min_cols=min_cols,
+        ocr_engine=ocr_engine, force_ocr=force_ocr))
 
-    if use_arrow:
-        import pyarrow as pa
 
-        from pyspark.sql.types import _parse_datatype_string
-        from pyspark.sql.pandas.types import to_arrow_schema
+def map_documents(pages_df: DataFrame, ddl: str, doc_rows) -> DataFrame:
+    """pages(url, warc_ts, lang, html[, areas]) -> ``ddl`` rows through
+    one shuffle-free Arrow map. ``doc_rows(url, warc_ts, lang, html[,
+    areas])`` returns one document's output rows as dicts keyed by the
+    ``ddl`` field names. The map emits pyarrow RecordBatches directly,
+    skipping a pandas round-trip on deeply nested output structs."""
+    import pyarrow as pa
 
-        arrow_schema = to_arrow_schema(
-            _parse_datatype_string(EXTRACT_SCHEMA))
+    from pyspark.sql.types import _parse_datatype_string
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-        def run_arrow(batches: Iterator["pa.RecordBatch"]
-                      ) -> Iterator["pa.RecordBatch"]:
-            for batch in batches:
-                cols = {c: batch.column(c).to_pylist()
-                        for c in ("url", "warc_ts", "lang", "html")}
-                areas_col = (batch.column("areas").to_pylist()
-                             if has_areas else [None] * batch.num_rows)
-                rows = []
-                for url, ts, lang, blob, areas in zip(
-                        cols["url"], cols["warc_ts"], cols["lang"],
-                        cols["html"], areas_col):
-                    rows.extend(_doc_to_rows(url, ts, lang, blob,
-                                             min_rows, min_cols, areas,
-                                             ocr_engine, force_ocr))
-                if rows:
-                    arrays = [
-                        pa.array([r[f.name] for r in rows], type=f.type)
-                        for f in arrow_schema
-                    ]
-                    yield pa.RecordBatch.from_arrays(
-                        arrays, schema=arrow_schema)
+    cols = ["url", "warc_ts", "lang", "html"] + (
+        ["areas"] if "areas" in pages_df.columns else [])
+    arrow_schema = to_arrow_schema(_parse_datatype_string(ddl))
 
-        return src.mapInArrow(run_arrow, schema=EXTRACT_SCHEMA)
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            areas_col = pdf["areas"] if has_areas else [None] * len(pdf)
-            for url, ts, lang, blob, areas in zip(
-                    pdf["url"], pdf["warc_ts"], pdf["lang"], pdf["html"],
-                    areas_col):
-                rows.extend(_doc_to_rows(url, ts, lang, blob,
-                                         min_rows, min_cols, areas,
-                                         ocr_engine, force_ocr))
+    def run_arrow(batches: Iterator["pa.RecordBatch"]
+                  ) -> Iterator["pa.RecordBatch"]:
+        for batch in batches:
+            rows = [row for doc in zip(*(batch.column(c).to_pylist()
+                                         for c in cols))
+                    for row in doc_rows(*doc)]
             if rows:
-                yield pd.DataFrame(rows)
+                arrays = [
+                    pa.array([r[f.name] for r in rows], type=f.type)
+                    for f in arrow_schema
+                ]
+                yield pa.RecordBatch.from_arrays(
+                    arrays, schema=arrow_schema)
 
-    return src.mapInPandas(run, schema=EXTRACT_SCHEMA)
+    return pages_df.select(*cols).mapInArrow(run_arrow, schema=ddl)
 
 
 def tables_df_format(extracted_df: DataFrame) -> DataFrame:

@@ -4,8 +4,8 @@ corpus build actually runs.
     pages (url, warc_ts, html, text, lang)
       -> latest-snapshot-per-url prune (re-crawls: newest warc_ts
          wins, BEFORE the extraction kernel pays for stale bytes)
-      -> content dispatch (layout / html / unknown)
-      -> extraction (layout kernel | DOM boilerplate strip)
+      -> one Arrow map: content dispatch (``sniff_kind``), then the
+         layout kernel (layout, %PDF) or the DOM boilerplate strip
       -> one tokenization: token counts and the MinHash signature
       -> exact dedup on the EXTRACTED text (canonical url wins)
       -> document length filter
@@ -22,8 +22,9 @@ is tokenized once and is signed once.
 
 Every stage is the operator already tested in isolation; this module
 is the composition, demonstrating that the pieces share one schema and
-one partitioning story (dispatch + extraction are maps; dedup is the
-single hash-exchange; the filter is a codegen'd projection).
+one partitioning story (dispatch + extraction are one map emitting a
+row per document; dedup is the single hash-exchange; the filter is a
+codegen'd projection).
 """
 
 from __future__ import annotations
@@ -31,12 +32,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from parsee_pdf_reader_spark.operators.html_extract import (
-    extract_web_pages,
-    sniff_kind_col,
+    extract_html_document,
+    sniff_kind,
 )
-from parsee_pdf_reader_spark.pipeline import extract_pages
+from parsee_pdf_reader_spark.pipeline import areas_by_page, map_documents
 
 _BPE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"
+
+DOC_TEXT_SCHEMA = ("url string, warc_ts timestamp, lang string, "
+                   "doc_text string, source_kind string")
 
 
 def latest_snapshot_per_url(pages_df: DataFrame) -> DataFrame:
@@ -57,6 +61,32 @@ def latest_snapshot_per_url(pages_df: DataFrame) -> DataFrame:
         F.desc(F.coalesce(F.md5("html"), F.lit(""))))
     return (pages_df.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1).drop("_rn"))
+
+
+def _doc_text_rows(url, warc_ts, lang, blob, areas=None):
+    """The DOC_TEXT_SCHEMA row of one payload, or none when its kind is
+    unknown, it fails to extract or it has no pages. A layout or %PDF
+    document's text is its page texts in page order joined by a blank
+    line, null texts skipped as ``concat_ws`` does."""
+    from parsee_pdf_reader_spark.kernel.engine import extract_document
+
+    kind = sniff_kind(blob or b"")
+    if kind == "unknown":
+        return []
+    by_page = areas_by_page(areas)
+    try:
+        if kind == "html":
+            text = extract_html_document(blob)["main_text"]
+        else:
+            pages = extract_document(blob, areas_by_page=by_page)
+            if not pages:
+                return []
+            text = "\n\n".join(p["extracted_text"] for p in pages
+                               if p["extracted_text"] is not None)
+    except Exception:  # a corrupt member is dropped, never fatal
+        return []
+    return [{"url": url, "warc_ts": warc_ts, "lang": lang,
+             "doc_text": text, "source_kind": kind}]
 
 
 def _bpe_count(toks):
@@ -83,28 +113,8 @@ def build_training_corpus(pages_df: DataFrame,
     # downstream stage (canonical window, cluster join, keep rank), so
     # multiple snapshots of one url MUST be resolved first — and doing
     # it here means the extraction kernel never pays for stale bytes
-    pages_df = latest_snapshot_per_url(pages_df)
-    kind = sniff_kind_col()
-    layout_rows = (
-        extract_pages(pages_df.where(kind == "layout"))
-        .where(F.col("error").isNull())
-        .groupBy("url", "warc_ts", "lang")
-        .agg(F.concat_ws(
-            "\n\n",
-            F.array_sort(
-                F.collect_list(F.struct("page_index", "extracted_text"))
-            ).getField("extracted_text"),
-        ).alias("doc_text"))
-        .withColumn("source_kind", F.lit("layout"))
-    )
-    web_rows = (
-        extract_web_pages(pages_df.where(kind == "html"))
-        .where(F.col("error").isNull())
-        .select("url", "warc_ts", "lang",
-                F.col("main_text").alias("doc_text"))
-        .withColumn("source_kind", F.lit("html"))
-    )
-    docs = layout_rows.unionByName(web_rows)
+    docs = map_documents(latest_snapshot_per_url(pages_df),
+                         DOC_TEXT_SCHEMA, _doc_text_rows)
 
     # one tokenization: both counts and the MinHash shingles read this
     # token array (an exact duplicate's signature is dropped below;

@@ -1,16 +1,15 @@
 """HTML main-content extraction: boilerplate strip, dispatch, Spark map."""
 
-from pyspark.sql import functions as F
-
 from parsee_pdf_reader_spark.operators.html_extract import (
     extract_html_document,
     extract_web_pages,
     looks_like_html,
-    sniff_kind_col,
+    sniff_kind,
 )
 from parsee_pdf_reader_spark.sources.synth import (
     build_document,
     build_html_document,
+    build_pdf_document,
 )
 
 
@@ -53,24 +52,30 @@ def test_dispatch_and_web_extraction(spark):
     for i in range(5):
         blob, text = build_document(f"doc{i}", 42)
         rows.append((f"l{i}", None, blob, text, "en"))
+    rows.append(("p0", None, build_pdf_document("pdf0", 42), "", "en"))
     rows.append(("junk", None, b"\x00\x01garbage", "", "en"))
-    df = spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, html binary, text string, "
-              "lang string")
-    kinds = {r.url: r.kind
-             for r in df.select("url", sniff_kind_col().alias("kind"))
-             .collect()}
+    kinds = {r[0]: sniff_kind(r[2]) for r in rows}
     assert all(kinds[f"h{i}"] == "html" for i in range(10))
     assert all(kinds[f"l{i}"] == "layout" for i in range(5))
+    assert kinds["p0"] == "pdf"
     assert kinds["junk"] == "unknown"
+    # the same whitespace rule as looks_like_html; a bare %PDF without
+    # the version dash is not a PDF header
+    assert sniff_kind(b"\r\n\t <HTML>") == "html"
+    assert sniff_kind(b"%PDF") == "unknown"
+    assert sniff_kind(b"") == "unknown"
 
-    web = extract_web_pages(df.where(sniff_kind_col() == "html")).collect()
+    df = spark.createDataFrame(
+        [r for r in rows if kinds[r[0]] == "html"],
+        "url string, warc_ts timestamp, html binary, text string, "
+        "lang string")
+    web = extract_web_pages(df).collect()
     assert len(web) == 10
     for r in web:
         assert r.error is None
         assert r.main_text == golden[r.url]
 
-    # plan: dispatch filter + map, no shuffle
-    plan = extract_web_pages(df.where(sniff_kind_col() == "html")) \
-        ._jdf.queryExecution().executedPlan().toString()
+    # plan: one map, no shuffle
+    plan = extract_web_pages(df)._jdf.queryExecution().executedPlan() \
+        .toString()
     assert "Exchange" not in plan

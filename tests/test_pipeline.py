@@ -476,9 +476,8 @@ def _web_rows(word, n=3):
 def test_training_corpus_sink_reads_the_materialized_table(spark):
     """Each document is extracted once per build: the near-dup stage
     fills the per-document table and the returned frame reads it back,
-    so its physical plan holds no extraction map (the layout kernel's
-    MapInArrow, the HTML extractor's MapInPandas) outside that
-    relation."""
+    so its physical plan holds no extraction map (the per-document
+    MapInArrow that dispatches and extracts) outside that relation."""
     from parsee_pdf_reader_spark.training_pipeline import (
         build_training_corpus,
     )
@@ -492,6 +491,87 @@ def test_training_corpus_sink_reads_the_materialized_table(spark):
     assert "MapInArrow" not in plan and "MapInPandas" not in plan, plan
     kinds = {r.source_kind for r in corpus.collect()}
     assert kinds == {"layout", "html"}
+
+
+def test_training_document_table_is_one_arrow_map(spark, monkeypatch):
+    """Dispatch and extraction of every kind run in one Arrow map per
+    document: the per-document table's plan holds one MapInArrow and no
+    MapInPandas, no page-join collect_list and no Spark-side dispatch
+    column (whose lower() costs a cold JVM seconds of ICU set-up)."""
+    from parsee_pdf_reader_spark.plans import queries
+    from parsee_pdf_reader_spark.training_pipeline import (
+        build_training_corpus,
+    )
+
+    plans = []
+    store = queries.materialize
+    monkeypatch.setattr(queries, "materialize", lambda df: plans.append(
+        df._jdf.queryExecution().executedPlan().toString()) or store(df))
+    layout = [(f"https://l.example/{i}", None, build_document(f"doc{i}",
+                                                              42)[0],
+               "t", "en") for i in range(3)]
+    pages = spark.createDataFrame(
+        layout + _web_rows("one"), "url string, warc_ts timestamp, "
+                                   "html binary, text string, lang string")
+    build_training_corpus(pages)
+    assert len(plans) == 1, plans
+    plan = plans[0]
+    assert plan.count("MapInArrow") == 1, plan
+    for absent in ("MapInPandas", "collect_list", "lower("):
+        assert absent not in plan, (absent, plan)
+
+
+def _corpus_by_url(spark, rows):
+    from parsee_pdf_reader_spark.training_pipeline import (
+        build_training_corpus,
+    )
+
+    pages = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, html binary, text string, "
+              "lang string")
+    return {r.url: r for r in build_training_corpus(pages).collect()}
+
+
+def test_training_corpus_keeps_whitespace_led_html(spark):
+    """HTML led by a newline, CRLF or tab reaches the corpus, as
+    ``looks_like_html`` accepts it (a Spark ``trim`` strips only
+    spaces, so a column dispatch built on it drops these pages)."""
+    from parsee_pdf_reader_spark.operators.html_extract import (
+        extract_html_document,
+    )
+    from parsee_pdf_reader_spark.sources.synth import build_html_document
+
+    rows = []
+    for i, lead in enumerate((b"\n", b"\r\n", b"\t")):
+        txt = " ".join(f"lead{i}x{j}" for j in range(60))
+        blob, _ = build_html_document(f"lead{i}", 42, txt)
+        if lead == b"\t":
+            assert blob.startswith(b"<!DOCTYPE html><html>")
+            blob = blob.replace(b"<!DOCTYPE html><html>", b"<HTML>", 1)
+        rows.append((f"https://ws.example/{i}", None, lead + blob, txt,
+                     "en"))
+    got = _corpus_by_url(spark, rows)
+    assert set(got) == {r[0] for r in rows}
+    for url, _ts, blob, _txt, _lang in rows:
+        assert got[url].source_kind == "html", url
+        assert got[url].doc_text == extract_html_document(blob)[
+            "main_text"], url
+
+
+def test_training_corpus_extracts_pdf_members(spark):
+    """Raw ``%PDF-`` members go through the layout kernel; their page
+    texts join in page order like a layout document's."""
+    from parsee_pdf_reader_spark.kernel.engine import extract_document
+    from parsee_pdf_reader_spark.sources.synth import build_pdf_document
+
+    pdf = build_pdf_document("pdf1", 42)
+    texts = [p["extracted_text"] for p in extract_document(pdf)]
+    assert len(texts) == 2
+    got = _corpus_by_url(spark, [("https://p.example/1.pdf", None, pdf,
+                                  None, "en")])
+    row = got["https://p.example/1.pdf"]
+    assert row.source_kind == "pdf"
+    assert row.doc_text == "\n\n".join(texts)
 
 
 def test_training_corpus_rebuild_sees_rewritten_pages(spark, tmp_path):

@@ -164,18 +164,52 @@ def test_corpus_keep_filter_build_time_jobs(spark):
         q_corpus_keep_filter,
     )
 
+    jobs = _build_time_jobs(spark, "corpus_keep_filter_build",
+                            lambda: q_corpus_keep_filter(spark, SF))
+    assert jobs == 26, jobs
+
+
+def test_training_corpus_build_time_jobs(spark):
+    """Building the training corpus runs Spark jobs before any action,
+    for the same reasons as the keep filter: the connected-components
+    rounds and the shuffle stages beneath each stored relation. The
+    count is pinned. (The composition that dispatched in Spark and
+    joined layout pages through a collect_list shuffle ran 6.)"""
+    from parsee_pdf_reader_spark.sources.synth import (
+        build_document,
+        build_html_document,
+    )
+    from parsee_pdf_reader_spark.training_pipeline import (
+        build_training_corpus,
+    )
+
+    rows = [(f"https://l.example/{i}", None,
+             build_document(f"doc{i}", 42)[0], "t", "en")
+            for i in range(4)]
+    rows += [(f"https://w.example/{i}", None,
+              build_html_document(f"web{i}", 42)[0], "t", "en")
+             for i in range(4)]
+    pages = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, html binary, text string, "
+              "lang string")
+    jobs = _build_time_jobs(spark, "training_corpus_build",
+                            lambda: build_training_corpus(pages))
+    assert jobs == 5, jobs
+
+
+def _build_time_jobs(spark, group, build):
+    """Number of Spark jobs ``build()`` runs, counted over a job
+    group through the status tracker."""
     sc = spark.sparkContext
-    group = "corpus_keep_filter_build"
     sc.setJobGroup(group, group)
     try:
-        q_corpus_keep_filter(spark, SF)
+        build()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     # the status tracker is fed by the listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) == 26, len(jobs)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_topk_prereduces_before_priority_window(spark):
