@@ -17,7 +17,7 @@ behaviour only):
 
 Design notes (100 TB target):
 - extraction is embarrassingly parallel per document -> it is a *map*
-  (``mapInPandas``), never a shuffle;
+  (``mapInArrow``), never a shuffle;
 - every cross-document operator is declared via the DataFrame API so
   Catalyst keeps pushdown/pruning; Python appears only inside
   Arrow-batched kernels.

@@ -24,7 +24,7 @@ of whole pages) and is ~10x faster than the reference single-threaded.
 
 Everything here is per-page pure computation on small collections
 (10^2-10^3 tokens); document-level parallelism is supplied by Spark via
-``mapInPandas`` (see pipeline.py) — this module has no Spark imports.
+``mapInArrow`` (see pipeline.py) — this module has no Spark imports.
 """
 
 from __future__ import annotations

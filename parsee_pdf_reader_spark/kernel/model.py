@@ -56,43 +56,6 @@ def x_distance(a, b) -> float:
     return abs(a.x0 - b.x1)
 
 
-def h_overlap_fraction(a, b, use_el: bool = False) -> float:
-    """One-element variant of h_overlap_percent
-    (custom_dataclasses.py:170-192)."""
-    ax0 = a.ex0 if use_el else a.x0
-    ax1 = a.ex1 if use_el else a.x1
-    bx0 = b.ex0 if use_el else b.x0
-    bx1 = b.ex1 if use_el else b.x1
-    if not h_overlap(ax0, ax1, bx0, bx1, 0):
-        return 0.0
-    width = ax1 - ax0
-    if ax0 <= bx0 and ax1 >= bx1:
-        return (bx1 - bx0) / width
-    if bx0 <= ax0 and bx1 >= ax1:
-        return 1.0
-    if ax0 <= bx0:
-        return min(1.0, (ax1 - bx0) / width)
-    return min(1.0, (bx1 - ax0) / width)
-
-
-def overlap_fraction_mean(a, b) -> float:
-    """(h% + v%) / 2 (custom_dataclasses.py:163-168)."""
-    h = h_overlap_fraction(a, b)
-    if not v_overlap(a.y0, a.y1, b.y0, b.y1, 0):
-        v = 0.0
-    else:
-        height = a.y1 - a.y0
-        if a.y0 <= b.y0 and a.y1 >= b.y1:
-            v = (b.y1 - b.y0) / height
-        elif b.y0 <= a.y0 and b.y1 >= a.y1:
-            v = 1.0
-        elif a.y0 <= b.y0:
-            v = min(1.0, (a.y1 - b.y0) / height)
-        else:
-            v = min(1.0, (b.y1 - a.y0) / height)
-    return (h + v) / 2
-
-
 class Tok:
     """A word token in scaled page space (int coords).
 
@@ -323,19 +286,3 @@ class Zone:
         return (f"Zone([{self.x0},{self.x1},{self.y0},{self.y1}],"
                 f" el=[{self.ex0},{self.ex1},{self.ey0},{self.ey1}],"
                 f" n={len(self.members)})")
-
-
-class ElView:
-    """A read-only (x0,x1,y0,y1) view usable by the box predicates."""
-
-    __slots__ = ("x0", "x1", "y0", "y1")
-
-    def __init__(self, x0, x1, y0, y1):
-        self.x0 = x0
-        self.x1 = x1
-        self.y0 = y0
-        self.y1 = y1
-
-
-def el_view(z: Zone) -> ElView:
-    return ElView(z.ex0, z.ex1, z.ey0, z.ey1)

@@ -766,7 +766,7 @@ def q_dedup_simhash(spark, sf_dir):
     # the join-back — materialize it once per invocation (the
     # interpreted 16-bit fold was the whole cost of this row, and it
     # ran twice).
-    base = base.localCheckpoint(eager=True)
+    base = materialize(base)
     sizes = base.groupBy("simhash16").agg(
         F.count(F.lit(1)).alias("cluster_size"))
     return base.join(sizes, "simhash16").select(
@@ -833,8 +833,8 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
     shingles — ~O(dups), never O(n^2) and never a hot-key k^2 bucket.
 
     ``kept`` feeds two consumers (sizes + the pair-expansion input), so
-    it is persisted after the df join: the explode+groupBy+join
-    pipeline runs once and both consumers read the materialized result
+    it is materialized after the df join: the explode+groupBy+join
+    pipeline runs once and both consumers read the stored result
     (VERDICT r2 item 3; r7 replaced the shingle self-join — two
     shuffles of the exploded stream — with a per-shingle ordered-pair
     expansion, safe because df is capped)."""
@@ -842,16 +842,11 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
     sh = docs.select("doc_id", shingles_col(_toks(), 3).alias("sh"))
     exploded = sh.select("doc_id", F.explode("sh").alias("shingle"))
     freq = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    # 3 consumers (sizes + both self-join sides); persisted so the
-    # explode+groupBy+join pipeline runs once. DELIBERATE LEAK in a
-    # long-lived session (ADVICE r3): the function returns a lazy
-    # DataFrame, so there is no safe point here to unpersist before
-    # the caller materializes it. The blocks are LRU-evictable (never
-    # pinned), and batch callers should
-    # ``spark.catalog.clearCache()`` between corpus runs.
-    kept = (exploded.join(freq, "shingle")
-            .where(F.col("df") <= _DF_CAP)
-            .persist())
+    # 2 consumers (sizes + the pair expansion); stored per call so the
+    # explode+groupBy+join pipeline runs once and a rewritten
+    # documents path is never answered from another call's rows
+    kept = materialize(exploded.join(freq, "shingle")
+                       .where(F.col("df") <= _DF_CAP))
     sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     joinable = kept.where(F.col("df") >= 2).select("doc_id", "shingle")
     # r7: the pair space per shingle is df-capped (<= C(_DF_CAP, 2)
@@ -946,7 +941,7 @@ def q_dedup_verify_pipeline(spark, sf_dir):
     # invocation); at 10^12 docs this is the natural persist point of
     # the production pipeline too (guide §5: reuse > recompute when the
     # subtree is expensive).
-    sigs = sigs.localCheckpoint(eager=True)
+    sigs = materialize(sigs)
     cands = minhash_pairs_df(sigs.select("doc_id", "sig")) \
         .select("doc_a", "doc_b")
     sa = sigs.select(F.col("doc_id").alias("doc_a"),

@@ -15,7 +15,9 @@ unknown) the training pipeline's document map applies per payload.
 from __future__ import annotations
 
 from html.parser import HTMLParser
-from typing import Iterator, List, Optional
+from typing import List, Optional
+
+from parsee_pdf_reader_spark.pipeline import map_documents
 
 _SKIP_SUBTREES = {"script", "style", "nav", "footer", "header", "aside",
                   "form", "noscript", "svg", "iframe", "button"}
@@ -135,32 +137,22 @@ WEB_EXTRACT_SCHEMA = ("url string, warc_ts timestamp, lang string, "
                       "n_kept int, error string")
 
 
+def _web_rows(url, warc_ts, lang, blob):
+    base = {"url": url, "warc_ts": warc_ts, "lang": lang}
+    try:
+        d = extract_html_document(bytes(blob))
+    except Exception as e:
+        return [dict(base, title=None, main_text=None, n_blocks=None,
+                     n_kept=None, error=f"{type(e).__name__}: {e}")]
+    return [dict(base, title=d["title"], main_text=d["main_text"],
+                 n_blocks=d["n_blocks"], n_kept=d["n_kept"], error=None)]
+
+
 def extract_web_pages(pages_df):
     """pages(url, warc_ts, html, text, lang) -> main-content rows.
-    Pure Arrow map, no shuffle (mirrors pipeline.extract_pages)."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]):
-        for pdf in batches:
-            rows = []
-            for url, ts, lang, blob in zip(pdf["url"], pdf["warc_ts"],
-                                           pdf["lang"], pdf["html"]):
-                base = {"url": url, "warc_ts": ts, "lang": lang}
-                try:
-                    d = extract_html_document(bytes(blob))
-                    rows.append(dict(base, title=d["title"],
-                                     main_text=d["main_text"],
-                                     n_blocks=d["n_blocks"],
-                                     n_kept=d["n_kept"], error=None))
-                except Exception as e:
-                    rows.append(dict(base, title=None, main_text=None,
-                                     n_blocks=None, n_kept=None,
-                                     error=f"{type(e).__name__}: {e}"))
-            if rows:
-                yield pd.DataFrame(rows)
-
-    cols = pages_df.select("url", "warc_ts", "lang", "html")
-    return cols.mapInPandas(run, schema=WEB_EXTRACT_SCHEMA)
+    Pure Arrow map, no shuffle (``pipeline.map_documents``)."""
+    return map_documents(pages_df.select("url", "warc_ts", "lang", "html"),
+                         WEB_EXTRACT_SCHEMA, _web_rows)
 
 
 def sniff_kind(payload: bytes) -> str:

@@ -1,14 +1,15 @@
 """Multimodal column plumbing: opaque binary media + typed metadata.
 
-Real image/audio decode libraries are not in this container, so the
-decode step is STUBBED: ``decode_media`` parses the deterministic
-PIMG1/PAUD1 synthetic headers (schema, partitioning, Arrow batch shape
-and UDF signatures are all real); ``use_real_decoder=True`` raises
-``NotImplementedError`` exactly where PIL/ffmpeg would plug in.
+Real image/audio decode libraries are not dependencies of this
+package, so the decode step is STUBBED: ``decode_media`` parses the
+deterministic PIMG1/PAUD1/PVID1 synthetic headers (schema,
+partitioning, Arrow batch shape and row function signature are all
+real); PIL/ffmpeg would plug in as another row function.
 
 Scale notes: media rows are large and heavy-tailed — the same
-``rebalance_by_size`` used for documents applies; decode is a pure
-``mapInPandas`` stage (no shuffle), and metadata-only queries never
+``rebalance_by_size`` used for documents applies; generation and
+decode are each one shuffle-free Arrow map
+(``pipeline.map_documents``), and metadata-only queries never
 touch the payload column thanks to parquet column pruning.
 """
 
@@ -16,10 +17,10 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from typing import Iterator
 
 from pyspark.sql import DataFrame, functions as F
 
+from parsee_pdf_reader_spark.pipeline import map_documents
 from parsee_pdf_reader_spark.plans.queries import _t, _ts, register
 
 MEDIA_SCHEMA = ("doc_id long, kind string, media binary, "
@@ -49,73 +50,52 @@ def build_media_blob(doc_id: int) -> tuple:
     return kind, w, h, ch, frames, head + payload
 
 
+def _media_rows(doc_id):
+    kind, w, h, ch, _fr, blob = build_media_blob(doc_id)
+    return [{"doc_id": doc_id, "kind": kind, "media": blob,
+             "meta": {"declared_w": w, "declared_h": h, "channels": ch}}]
+
+
 def make_media_df(spark, docs_df: DataFrame) -> DataFrame:
     """documents -> media table (executor-side generation, pure map)."""
-    import pandas as pd
-
-    def gen(batches: Iterator["pd.DataFrame"]):
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                kind, w, h, ch, _fr, blob = build_media_blob(int(doc_id))
-                rows.append({"doc_id": int(doc_id), "kind": kind,
-                             "media": blob,
-                             "meta": {"declared_w": w, "declared_h": h,
-                                      "channels": ch}})
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return docs_df.select("doc_id").mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return map_documents(docs_df.select("doc_id"), MEDIA_SCHEMA,
+                         _media_rows)
 
 
-def decode_media(media_df: DataFrame,
-                 use_real_decoder: bool = False) -> DataFrame:
+def _decoded_rows(doc_id, kind, blob):
+    """One DECODED_SCHEMA row parsed from a stub container header; an
+    unknown or truncated container yields an error row."""
+    b = bytes(blob)
+    rec = {"doc_id": doc_id, "kind": kind, "n_bytes": len(b),
+           "width": None, "height": None, "channels": None,
+           "n_frames": None, "payload_sha": None, "error": None}
+    try:
+        if b[:5] == b"PIMG1":
+            w, h, ch = struct.unpack_from("<HHB", b, 5)
+            rec.update(width=w, height=h, channels=ch, n_frames=1)
+            payload = b[10:]
+        elif b[:5] == b"PAUD1":
+            n, nch, bits = struct.unpack_from("<IHB", b, 5)
+            rec.update(width=n, height=bits, channels=nch, n_frames=1)
+            payload = b[12:]
+        elif b[:5] == b"PVID1":
+            w, h, ch, fr = struct.unpack_from("<HHBB", b, 5)
+            rec.update(width=w, height=h, channels=ch, n_frames=fr)
+            payload = b[11:]
+        else:
+            raise ValueError("unknown media container")
+        rec["payload_sha"] = hashlib.sha256(payload).hexdigest()
+    except Exception as e:
+        rec["error"] = f"{type(e).__name__}: {e}"
+    return [rec]
+
+
+def decode_media(media_df: DataFrame) -> DataFrame:
     """Arrow-batched decode/feature-extract stage. The stub parses the
-    deterministic headers; a real decoder plugs in at the marked point
-    with identical schema/batching."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]):
-        for pdf in batches:
-            rows = []
-            for doc_id, kind, blob in zip(pdf["doc_id"], pdf["kind"],
-                                          pdf["media"]):
-                b = bytes(blob)
-                rec = {"doc_id": int(doc_id), "kind": kind,
-                       "n_bytes": len(b), "width": None, "height": None,
-                       "channels": None, "n_frames": None,
-                       "payload_sha": None, "error": None}
-                try:
-                    if use_real_decoder:
-                        raise NotImplementedError(
-                            "real decoder (PIL/ffmpeg) not available in "
-                            "this container")
-                    if b[:5] == b"PIMG1":
-                        w, h, ch = struct.unpack_from("<HHB", b, 5)
-                        rec.update(width=w, height=h, channels=ch,
-                                   n_frames=1)
-                        payload = b[10:]
-                    elif b[:5] == b"PAUD1":
-                        n, nch, bits = struct.unpack_from("<IHB", b, 5)
-                        rec.update(width=n, height=bits, channels=nch,
-                                   n_frames=1)
-                        payload = b[12:]
-                    elif b[:5] == b"PVID1":
-                        w, h, ch, fr = struct.unpack_from("<HHBB", b, 5)
-                        rec.update(width=w, height=h, channels=ch,
-                                   n_frames=fr)
-                        payload = b[11:]
-                    else:
-                        raise ValueError("unknown media container")
-                    rec["payload_sha"] = hashlib.sha256(payload).hexdigest()
-                except Exception as e:
-                    rec["error"] = f"{type(e).__name__}: {e}"
-                rows.append(rec)
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return media_df.select("doc_id", "kind", "media").mapInPandas(
-        run, schema=DECODED_SCHEMA)
+    deterministic headers; a real decoder replaces ``_decoded_rows``
+    with identical schema and batching."""
+    return map_documents(media_df.select("doc_id", "kind", "media"),
+                         DECODED_SCHEMA, _decoded_rows)
 
 
 def frame_sample(media_df: DataFrame, every_n: int = 4) -> DataFrame:

@@ -123,32 +123,39 @@ def extract_pages(pages_df: DataFrame, min_rows: int = 2, min_cols: int = 1,
     kernel is the only Python stage in the plan."""
     from functools import partial
 
-    return map_documents(pages_df, EXTRACT_SCHEMA, partial(
+    return map_documents(page_columns(pages_df), EXTRACT_SCHEMA, partial(
         _doc_to_rows, min_rows=min_rows, min_cols=min_cols,
         ocr_engine=ocr_engine, force_ocr=force_ocr))
 
 
-def map_documents(pages_df: DataFrame, ddl: str, doc_rows) -> DataFrame:
-    """pages(url, warc_ts, lang, html[, areas]) -> ``ddl`` rows through
-    one shuffle-free Arrow map. ``doc_rows(url, warc_ts, lang, html[,
-    areas])`` returns one document's output rows as dicts keyed by the
-    ``ddl`` field names. The map emits pyarrow RecordBatches directly,
-    skipping a pandas round-trip on deeply nested output structs."""
+def page_columns(pages_df: DataFrame) -> DataFrame:
+    """pages -> (url, warc_ts, lang, html[, areas]): the cells, in
+    order, that a document row function of :func:`map_documents`
+    takes."""
+    return pages_df.select("url", "warc_ts", "lang", "html", *(
+        ["areas"] if "areas" in pages_df.columns else []))
+
+
+def map_documents(df: DataFrame, ddl: str, row_fn) -> DataFrame:
+    """``df`` -> ``ddl`` rows through one shuffle-free Arrow map, the
+    package's one per-row Python map. ``row_fn`` takes one input row's
+    cells in ``df.columns`` order and returns that row's output rows
+    as dicts keyed by the ``ddl`` field names. The map emits pyarrow
+    RecordBatches directly, skipping a pandas round-trip on deeply
+    nested output structs."""
     import pyarrow as pa
 
     from pyspark.sql.types import _parse_datatype_string
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    cols = ["url", "warc_ts", "lang", "html"] + (
-        ["areas"] if "areas" in pages_df.columns else [])
     arrow_schema = to_arrow_schema(_parse_datatype_string(ddl))
 
     def run_arrow(batches: Iterator["pa.RecordBatch"]
                   ) -> Iterator["pa.RecordBatch"]:
         for batch in batches:
-            rows = [row for doc in zip(*(batch.column(c).to_pylist()
-                                         for c in cols))
-                    for row in doc_rows(*doc)]
+            rows = [row for cells in zip(*(col.to_pylist()
+                                           for col in batch.columns))
+                    for row in row_fn(*cells)]
             if rows:
                 arrays = [
                     pa.array([r[f.name] for r in rows], type=f.type)
@@ -157,7 +164,7 @@ def map_documents(pages_df: DataFrame, ddl: str, doc_rows) -> DataFrame:
                 yield pa.RecordBatch.from_arrays(
                     arrays, schema=arrow_schema)
 
-    return pages_df.select(*cols).mapInArrow(run_arrow, schema=ddl)
+    return df.mapInArrow(run_arrow, schema=ddl)
 
 
 def tables_df_format(extracted_df: DataFrame) -> DataFrame:

@@ -52,31 +52,6 @@ _INF = float("inf")
 
 
 # ---------------------------------------------------------------------------
-# geometry helpers (pdfminer LTComponent semantics)
-# ---------------------------------------------------------------------------
-
-
-def _is_voverlap(a, b) -> bool:
-    return b.y0 <= a.y1 and a.y0 <= b.y1
-
-
-def _voverlap(a, b) -> float:
-    if _is_voverlap(a, b):
-        return min(abs(a.y0 - b.y1), abs(a.y1 - b.y0))
-    return 0.0
-
-
-def _is_hoverlap(a, b) -> bool:
-    return b.x0 <= a.x1 and a.x0 <= b.x1
-
-
-def _hdistance(a, b) -> float:
-    if _is_hoverlap(a, b):
-        return 0.0
-    return min(abs(a.x0 - b.x1), abs(a.x1 - b.x0))
-
-
-# ---------------------------------------------------------------------------
 # line / box / group models
 # ---------------------------------------------------------------------------
 

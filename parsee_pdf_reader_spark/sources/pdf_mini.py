@@ -1522,10 +1522,6 @@ def _mat_mul(a, b):
             a4 * b0 + a5 * b2 + b4, a4 * b1 + a5 * b3 + b5)
 
 
-def _apply(m, x, y):
-    return (m[0] * x + m[2] * y + m[4], m[1] * x + m[3] * y + m[5])
-
-
 _ID = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
 
 

@@ -35,7 +35,11 @@ from parsee_pdf_reader_spark.operators.html_extract import (
     extract_html_document,
     sniff_kind,
 )
-from parsee_pdf_reader_spark.pipeline import areas_by_page, map_documents
+from parsee_pdf_reader_spark.pipeline import (
+    areas_by_page,
+    map_documents,
+    page_columns,
+)
 
 _BPE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"
 
@@ -113,7 +117,7 @@ def build_training_corpus(pages_df: DataFrame,
     # downstream stage (canonical window, cluster join, keep rank), so
     # multiple snapshots of one url MUST be resolved first — and doing
     # it here means the extraction kernel never pays for stale bytes
-    docs = map_documents(latest_snapshot_per_url(pages_df),
+    docs = map_documents(page_columns(latest_snapshot_per_url(pages_df)),
                          DOC_TEXT_SCHEMA, _doc_text_rows)
 
     # one tokenization: both counts and the MinHash shingles read this

@@ -75,7 +75,9 @@ def test_dispatch_and_web_extraction(spark):
         assert r.error is None
         assert r.main_text == golden[r.url]
 
-    # plan: one map, no shuffle
+    # plan: one Arrow map, no pandas map, no shuffle
     plan = extract_web_pages(df)._jdf.queryExecution().executedPlan() \
         .toString()
-    assert "Exchange" not in plan
+    assert plan.count("MapInArrow") == 1, plan
+    for absent in ("MapInPandas", "Exchange"):
+        assert absent not in plan, plan

@@ -160,7 +160,14 @@ def test_fingerprint_edit_robustness(spark, tmp_path):
 def test_media_roundtrip(spark):
     docs = spark.range(0, 12).select(F.col("id").alias("doc_id"))
     media = make_media_df(spark, docs)
-    decoded = {r.doc_id: r for r in decode_media(media).collect()}
+    decoded_df = decode_media(media)
+    # generation and decode are one Arrow map each: no pandas map, no
+    # shuffle
+    plan = decoded_df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 2, plan
+    for absent in ("MapInPandas", "Exchange"):
+        assert absent not in plan, plan
+    decoded = {r.doc_id: r for r in decoded_df.collect()}
     assert len(decoded) == 12
     for doc_id, r in decoded.items():
         kind, w, h, ch, fr, blob = build_media_blob(doc_id)
@@ -170,13 +177,6 @@ def test_media_roundtrip(spark):
             assert (r.width, r.height, r.channels) == (w, h, ch)
         if kind == "video":
             assert r.n_frames == fr
-
-
-def test_media_real_decoder_is_stubbed(spark):
-    docs = spark.range(0, 3).select(F.col("id").alias("doc_id"))
-    rows = decode_media(make_media_df(spark, docs),
-                        use_real_decoder=True).collect()
-    assert all(r.error and "NotImplementedError" in r.error for r in rows)
 
 
 def test_media_corrupt_blob_yields_error_row(spark):
@@ -210,11 +210,10 @@ def test_ngram_jaccard_kept_is_persisted(spark, tmp_path):
     """VERDICT r2 item 3: the df-capped shingle table `kept` feeds
     two consumers (sizes + the r7 per-shingle pair expansion, which
     replaced the self-join's two cached-side reads); it must be
-    persisted so the explode+groupBy+join pipeline executes ONCE and
-    every consumer reads the cache. The physical plan shows one
-    InMemoryTableScan per consumer path (>= 2). (Plan-string Exchange
-    counts are unchanged because toString() reprints the cached
-    subplan under every scan — the point is the scans themselves.)"""
+    stored so the explode+groupBy+join pipeline executes ONCE and
+    every consumer reads the stored rows. The physical plan holds one
+    stored relation (a single checkpointed RDD) read by at least two
+    ``Scan ExistingRDD`` leaves, and no cache scan."""
     import os
 
     from parsee_pdf_reader_spark.operators.dedup import (
@@ -229,9 +228,70 @@ def test_ngram_jaccard_kept_is_persisted(spark, tmp_path):
               "n_chars long"
     ).write.parquet(os.path.join(d, "documents.parquet"))
 
-    df = q_ngram_jaccard_pairs(spark, d)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("InMemoryTableScan") >= 2, plan
+    qe = q_ngram_jaccard_pairs(spark, d)._jdf.queryExecution()
+    leaves = qe.sparkPlan().collectLeaves()
+    stored = [leaves.apply(i) for i in range(leaves.length())
+              if leaves.apply(i).nodeName() == "Scan ExistingRDD"]
+    assert len(stored) >= 2, qe.sparkPlan().toString()
+    assert len({leaf.rdd().id() for leaf in stored}) == 1
+    assert "InMemoryTableScan" not in qe.executedPlan().toString()
+
+
+def test_ngram_jaccard_rescores_rewritten_documents(spark, tmp_path):
+    """No stale reuse across calls: a second ``ngram_jaccard_pairs``
+    call over a documents path rewritten outside Spark returns the
+    DuckDB twin's pairs for the new rows. A ``persist()``ed shingle
+    table answered the second call from the first call's cache (the
+    cache manager matches plans, not file contents)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parsee_pdf_reader_spark.operators.dedup import (
+        q_ngram_jaccard_pairs,
+    )
+    from parsee_pdf_reader_spark.plans.queries import REGISTRY
+
+    path = tmp_path / "documents.parquet"
+    os.makedirs(path)
+    base = ("the quick brown fox jumps over the lazy dog while the "
+            "cat sleeps on the warm mat near the door")
+
+    def write(texts):
+        pq.write_table(pa.table({
+            "doc_id": pa.array(range(len(texts)), pa.int64()),
+            "text": texts}), str(path / "part-0.parquet"))
+
+    def twin():
+        con = duckdb.connect()
+        try:
+            con.execute("create view documents as select * from "
+                        f"read_parquet('{path}/*.parquet')")
+            return sorted(con.execute(
+                "select doc_a, doc_b, jaccard from "
+                f"({REGISTRY['ngram_jaccard_pairs'][1]})").fetchall())
+        finally:
+            con.close()
+
+    def spark_rows():
+        return sorted(tuple(r) for r in
+                      q_ngram_jaccard_pairs(spark, str(tmp_path))
+                      .collect())
+
+    def same(got, want):
+        assert [r[:2] for r in got] == [r[:2] for r in want]
+        assert [r[2] for r in got] == pytest.approx([r[2] for r in want])
+
+    texts = [base, base.replace("lazy", "sleepy"),
+             "an unrelated sentence about weather and rivers today"]
+    write(texts)
+    first = spark_rows()
+    assert [r[:2] for r in first] == [(0, 1)]
+    same(first, twin())
+    write(texts + [base.replace("warm", "cold")])
+    second = spark_rows()
+    assert [r[:2] for r in second] == [(0, 1), (0, 3), (1, 3)]
+    same(second, twin())
 
 
 def test_dedup_clusters_transitive_closure(spark, crafted_dir):

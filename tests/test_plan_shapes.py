@@ -169,6 +169,22 @@ def test_corpus_keep_filter_build_time_jobs(spark):
     assert jobs == 26, jobs
 
 
+def test_dedup_signature_tables_build_time_jobs(spark):
+    """The simhash and verify signature projections are stored through
+    ``materialize``, so building either query runs only the scan-spread
+    shuffle beneath it. An eager ``localCheckpoint`` ran one more job
+    per query at build time (3 each)."""
+    from parsee_pdf_reader_spark.operators.dedup import (
+        q_dedup_simhash,
+        q_dedup_verify_pipeline,
+    )
+
+    for q in (q_dedup_simhash, q_dedup_verify_pipeline):
+        jobs = _build_time_jobs(spark, f"{q.__name__}_build",
+                                lambda: q(spark, SF))
+        assert jobs == 2, (q.__name__, jobs)
+
+
 def test_training_corpus_build_time_jobs(spark):
     """Building the training corpus runs Spark jobs before any action,
     for the same reasons as the keep filter: the connected-components
