@@ -218,11 +218,11 @@ _TAIL_TWINS = [
     #                         media_byte_features (measured)
     "html_strip_tags",      # registry twin of the extract_web_pages
     #                         golden flagship (measured, richer oracle)
-    "dedup_clusters",       # label-prop CC variant: identical cluster
+    "dedup_clusters",       # union-find CC path: identical cluster
     #                         contract as dedup_clusters_star (measured,
-    #                         the scale path label_prop itself
-    #                         auto-escalates to); chain/escalation
-    #                         behavior pytest-pinned
+    #                         the star rounds connected components run
+    #                         above the edge bound); both paths
+    #                         pytest-pinned on chains
     "ann_lsh_buckets",      # bucket table of ann_near_dup_pairs
     #                         (measured: same LSH planes + bucket
     #                         equi-join, plus the exact-cosine verify)

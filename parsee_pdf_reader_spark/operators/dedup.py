@@ -270,6 +270,13 @@ def q_dedup_minhash_lsh(spark, sf_dir):
 
 _CC_MAX_ITERS = 25
 
+#: The most edges ``connected_components_df`` labels in one union-find
+#: task. At 1,000,000 random edges (865k nodes, 10k-row Arrow batches,
+#: one core of a 4-vCPU Xeon) ``_union_find`` took 3.7-4.0 s at 237 MB
+#: peak process RSS with long ids and 6.4-7.8 s at 413 MB with url ids,
+#: both counting the input batches. LSH pairs of near-duplicates number
+#: far fewer: 25 on 500 documents, 256 on 5,000.
+_CC_LOCAL_MAX_EDGES = 1_000_000
 
 _CC_SQL = f"""
     with recursive pairs as ({_MINHASH_PAIRS_SQL}),
@@ -300,119 +307,68 @@ def q_dedup_clusters(spark, sf_dir):
     """Transitive dedup closure: A~B and B~C must land in ONE cluster
     even when A~C never surfaced as an LSH pair — the step a real
     pipeline runs between pair generation and canonical-doc selection.
-
-    Connected components by iterative min-label propagation over the
-    symmetric candidate-pair graph: each round is one equi-join +
-    map-side-combinable min aggregation (both shuffles on doc_id), and
-    the loop stops at the fixpoint — the changed-label counter rides
-    an Observation on the round's own checkpointing action, so no
-    extra pass reads it (VERDICT r3 item 6). Under AQE that action
-    runs one Spark job per shuffle stage (six per round on the
-    sf0.001 table). Rounds needed = graph diameter; near-dup
-    components are tiny/star-shaped in practice, so this converges in
-    a few rounds at any corpus size. For
-    adversarial long-chain graphs, `connected_components_df(pairs,
-    algorithm="star")` runs the alternating large-star/small-star
-    contraction (O(log^2 n) rounds, identical labels).
+    See :func:`connected_components_df`.
 
     Output: (doc_id, cluster_id = min doc_id in component,
     cluster_size), for every doc that appears in at least one pair."""
-    return minhash_clusters_df(
-        minhash_signatures_df(_ts(spark, sf_dir, "documents")))
+    return connected_components_df(minhash_pairs_df(
+        minhash_signatures_df(_ts(spark, sf_dir, "documents"))))
 
 
 @register("dedup_clusters_star", _CC_SQL)
 def q_dedup_clusters_star(spark, sf_dir):
-    """The large-star/small-star variant of `dedup_clusters`, gated
-    against the SAME recursive-CTE oracle — connected-component labels
-    are algorithm-independent, so a hash match here proves the star
-    contraction end-to-end on real candidate pairs, not just the
-    crafted chain test. See `connected_components_df` for the
-    O(log^2 n)-rounds scale rationale."""
-    return minhash_clusters_df(
-        minhash_signatures_df(_ts(spark, sf_dir, "documents")),
-        algorithm="star")
+    """The large-star/small-star rounds of `dedup_clusters`, gated
+    against the SAME recursive-CTE oracle on real candidate pairs.
+    ``connected_components_df`` runs them only above
+    ``_CC_LOCAL_MAX_EDGES`` edges, which no registered input reaches,
+    so this row calls them directly."""
+    return _with_cluster_size(_cc_star_labels(minhash_pairs_df(
+        minhash_signatures_df(_ts(spark, sf_dir, "documents")))))
 
 
-def minhash_clusters_df(sigs, algorithm="label_prop"):
-    """(doc_id, sig) -> connected components of the LSH candidate-pair
-    graph, (doc_id, cluster_id, cluster_size). The pair table is
-    stored before the rounds: every round reads it, and round 0 would
-    otherwise re-run the signature and band-join plan. The one
-    LSH -> closure composition of the gate rows, the curation verdict
-    and the training pipeline."""
-    pairs = materialize(minhash_pairs_df(sigs).select("doc_a", "doc_b"))
-    return connected_components_df(pairs, algorithm)
+def connected_components_df(pairs, stats=None):
+    """(doc_a, doc_b) pair graph -> (doc_id, cluster_id = min doc_id in
+    its component, cluster_size), for every doc in at least one pair.
+    Ids may be longs or strings (urls).
 
+    The pairs are stored by one eager ``localCheckpoint``, whose action
+    also counts them through an ``Observation``, so reading the size
+    adds no job. The count picks the path:
 
-def connected_components_df(pairs, algorithm="label_prop", stats=None):
-    """(doc_a, doc_b) pair graph -> (doc_id, cluster_id, cluster_size).
+    - at most ``_CC_LOCAL_MAX_EDGES`` edges: one union-find task, an
+      Arrow map over the stored pairs coalesced to one partition. The
+      map is lazy and needs no shuffle: the stored pairs carry no
+      upstream work for the coalesce to fold onto that task. Every
+      benchmark and gate input takes this path;
+    - above it: the large-star/small-star rounds of
+      :func:`_cc_star_labels`, for a graph too large for one task.
 
-    ``algorithm``:
+    The stored pairs are executor-local blocks, like every stored
+    relation here (see ``plans.queries.materialize``).
 
-    - ``"label_prop"`` (default, the oracle-gated path): iterative
-      min-label propagation — per round one equi-join + map-side-
-      combinable min agg, converging in O(diameter) rounds. Right for
-      near-dup components, which are star-shaped (tiny diameter).
-    - ``"star"``: alternating large-star/small-star contraction
-      (Kiveris et al. 2014, "Connected Components in MapReduce and
-      Beyond" — public algorithm, re-derived here): each round
-      rewires edges toward per-neighborhood minima, converging in
-      O(log^2 n) rounds — the adversarial-chain-safe variant (a
-      length-L path needs ~L label_prop rounds but only ~log L star
-      rounds). Same labels (min doc_id per component).
+    ``stats`` (optional dict) receives ``edges``, ``path`` (``"local"``
+    or ``"star"``) and, on the star path, ``rounds``."""
+    from pyspark.sql import Observation
 
-    ``stats`` (optional dict) receives {"rounds": k, "algorithm": a}
-    so callers/tests can assert convergence behavior.
-
-    Convergence probes cost no extra pass (VERDICT r3 item 6):
-    label_prop folds an ``Observation`` changed-label counter into the
-    round's own eager-localCheckpoint action, no labels-vs-labels
-    rejoin; star compares a (count, xor-of-hash, sum-of-hash, min,
-    max) edge-set signature computed by the round's single agg
-    action. Under AQE an action runs one Spark job per shuffle stage,
-    so a round is several jobs, not one.
-
-    Every round reads ``pairs``: pass a stored table
-    (:func:`minhash_clusters_df` does for the LSH pairs), or round 0
-    re-runs the whole plan that produced it.
-
-    If label_prop exhausts its round budget (component diameter >
-    ``_CC_MAX_ITERS`` — an adversarial chain), it AUTO-ESCALATES to
-    the star variant instead of failing (VERDICT r4 item 5); ``stats``
-    then reports ``algorithm="label_prop->star"`` with both round
-    counts.
-
-    Lineage: every round's result is eagerly ``localCheckpoint``ed and
-    the previous round's blocks released. This is load-bearing, not a
-    nicety: the labels/edges relation feeds TWO operators per round,
-    so an un-truncated logical plan doubles every round (2^rounds
-    nodes — a 16-hop chain OOMed the driver without it). localCheckpoint
-    blocks are NON-RELIABLE executor-local storage (ADVICE r3): losing
-    an executor loses blocks and fails downstream reads — a production
-    run that must survive executor loss should configure
-    ``spark.sparkContext.setCheckpointDir`` on durable storage and
-    swap in reliable ``checkpoint()``; we keep the local variant
-    because this sandbox has no durable cluster FS and the win being
-    bought is plan truncation, not fault tolerance."""
-    if algorithm == "star":
-        labels = _cc_star_labels(pairs, stats)
+    obs = Observation()
+    edges = (pairs.select("doc_a", "doc_b")
+             .observe(obs, F.count(F.lit(1)).alias("n"))
+             .localCheckpoint(eager=True))
+    n = obs.get["n"]
+    local = n <= _CC_LOCAL_MAX_EDGES
+    if stats is not None:
+        stats.update(edges=n, path="local" if local else "star")
+    if local:
+        id_type = edges.schema["doc_a"].dataType.simpleString()
+        labels = edges.coalesce(1).mapInArrow(
+            _union_find, f"doc_id {id_type}, cluster_id {id_type}")
     else:
-        labels = _cc_label_prop_labels(pairs, stats)
-        if labels is None:
-            # auto-escalation (VERDICT r4 item 5): label_prop needs
-            # ~diameter rounds, so a >_CC_MAX_ITERS-diameter component
-            # (adversarial chain) exhausts the budget. Rather than
-            # fail the job, rerun with the O(log^2 n)-round star
-            # variant — same labels (min doc_id per component), just a
-            # round complexity that cannot be driven high by graph
-            # shape. stats records both phases.
-            esc = {}
-            labels = _cc_star_labels(pairs, esc)
-            if stats is not None:
-                stats.update(
-                    algorithm="label_prop->star",
-                    star_rounds=esc.get("rounds"), escalated=True)
+        labels = _cc_star_labels(edges, stats)
+    return _with_cluster_size(labels)
+
+
+def _with_cluster_size(labels):
+    """(doc_id, cluster_id) -> (doc_id, cluster_id, cluster_size)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("cluster_id")
@@ -421,61 +377,44 @@ def connected_components_df(pairs, algorithm="label_prop", stats=None):
         F.count(F.lit(1)).over(w).alias("cluster_size"))
 
 
-def _cc_label_prop_labels(pairs, stats=None):
-    from pyspark.sql import Observation
+def _union_find(batches):
+    """Arrow batches of (doc_a, doc_b) -> one batch of (doc_id,
+    cluster_id): a union-find with path halving whose roots are the
+    component minima. Python orders ints as Spark orders longs, and str
+    by code point as Spark orders UTF-8 bytes, so the labels match."""
+    import pyarrow as pa
 
-    fwd = pairs.select(F.col("doc_a").alias("src"),
-                       F.col("doc_b").alias("dst"))
-    rev = pairs.select(F.col("doc_b").alias("src"),
-                       F.col("doc_a").alias("dst"))
-    edges = fwd.union(rev)
-    labels = (edges.select(F.col("src").alias("doc_id")).distinct()
-              .select("doc_id", F.col("doc_id").alias("cluster_id")))
-    converged = False
-    rounds = 0
-    for it in range(_CC_MAX_ITERS):
-        nbr_min = (
-            edges.join(labels, edges["dst"] == labels["doc_id"])
-            .groupBy(edges["src"].alias("doc_id"))
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        upd = labels.join(nbr_min, "doc_id", "left").select(
-            "doc_id",
-            F.col("cluster_id").alias("old_cid"),
-            F.least(
-                F.col("cluster_id"),
-                F.coalesce(F.col("nbr_min"), F.col("cluster_id")),
-            ).alias("cluster_id"),
-        )
-        # one action per round: the eager localCheckpoint stores the
-        # new labels, truncates the iteration lineage (the labels
-        # relation feeds two joins per round, so an un-truncated plan
-        # DOUBLES every round — 2^rounds nodes would OOM the driver on
-        # long-diameter graphs), and fires the CollectMetrics probe.
-        obs = Observation(f"cc_round_{it}")
-        new_labels = (
-            upd.observe(obs, F.sum(
-                (F.col("cluster_id") != F.col("old_cid")).cast("long")
-            ).alias("n_changed"))
-            .select("doc_id", "cluster_id")
-            .localCheckpoint(eager=True)
-        )
-        changed = int(obs.get["n_changed"] or 0)
-        labels.unpersist()
-        labels = new_labels
-        rounds += 1
-        if changed == 0:
-            converged = True
-            break
-    if stats is not None:
-        stats.update(rounds=rounds, algorithm="label_prop")
-    if not converged:
-        return None  # caller escalates to the star variant
-    return labels
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = x = parent[parent[x]]
+        return x
+
+    id_type = None
+    for batch in batches:
+        id_type = batch.schema.field("doc_a").type
+        for a, b in zip(batch.column("doc_a").to_pylist(),
+                        batch.column("doc_b").to_pylist()):
+            ra = find(parent.setdefault(a, a))
+            rb = find(parent.setdefault(b, b))
+            if ra < rb:
+                parent[rb] = ra
+            elif rb < ra:
+                parent[ra] = rb
+    if parent:
+        ids = list(parent)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(ids, id_type),
+             pa.array([find(x) for x in ids], id_type)],
+            names=["doc_id", "cluster_id"])
 
 
 def _cc_star_labels(pairs, stats=None):
-    """Alternating large-star/small-star edge contraction. Each round:
+    """Alternating large-star/small-star edge contraction (Kiveris et
+    al. 2014, "Connected Components in MapReduce and Beyond" — public
+    method, re-derived here), converging in O(log^2 n) rounds
+    whatever the graph's diameter. Each round:
 
     - large-star: every node u computes m = min(neighbors(u) + {u})
       and rewires each LARGER neighbor v > u to (v, m);
@@ -531,7 +470,7 @@ def _cc_star_labels(pairs, stats=None):
     for _ in range(_CC_MAX_ITERS):
         # each star output is eagerly localCheckpointed: the symmetric
         # view consumes its input twice, so an un-truncated plan would
-        # double every half-round (see _cc_label_prop_labels)
+        # double every half-round (2^rounds plan nodes)
         s = sym(edges)
         # large-star: m over ALL neighbors and self
         mins = (s.groupBy("src").agg(F.min("dst").alias("md"))
@@ -562,7 +501,7 @@ def _cc_star_labels(pairs, stats=None):
             break
         sig = new_sig
     if stats is not None:
-        stats.update(rounds=rounds, algorithm="star")
+        stats.update(rounds=rounds)
     if not converged:
         raise RuntimeError(
             f"star CC did not converge in {_CC_MAX_ITERS} rounds")
@@ -622,8 +561,8 @@ def dedup_canonical_df(docs):
     graph."""
     from pyspark.sql import Window
 
-    clusters = minhash_clusters_df(minhash_signatures_df(docs)).select(
-        "doc_id", "cluster_id")
+    clusters = connected_components_df(minhash_pairs_df(
+        minhash_signatures_df(docs))).select("doc_id", "cluster_id")
     joined = docs.select("doc_id", "n_chars").join(
         clusters, "doc_id", "left").select(
         "doc_id", "n_chars",

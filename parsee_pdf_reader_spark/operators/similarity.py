@@ -504,7 +504,7 @@ def kmeans_assign_df(emb, k=_KM_K, rounds=1):
     the same broadcast-join + groupBy(cluster, dim) stage. Past a few
     rounds, the centroid frame (K tiny rows) is ``materialize``d per
     round so the iteration lineage stays flat — same rationale as
-    `connected_components_df`."""
+    the star rounds of `dedup._cc_star_labels`."""
     from pyspark.sql import Window
 
     xq = F.transform(

@@ -184,15 +184,20 @@ _BPE_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"
 )
 def q_token_counts(spark, sf_dir):
     """Whitespace vs BPE-ish regex token counts (training-budget
-    estimation surface)."""
+    estimation surface). Each count is projected once and the ratio
+    reads the projected columns: written inline, it would split and
+    regex-scan the text a second time."""
     docs = _ts(spark, sf_dir, "documents")
-    ws = F.size(_toks_lower())
-    bpe = F.size(F.regexp_extract_all("text", F.lit(_BPE_PATTERN), 0))
-    return docs.select(
+    counts = docs.select(
         "doc_id",
-        ws.alias("ws_tokens"),
-        bpe.alias("bpe_tokens"),
-        F.round(bpe / F.greatest(ws, F.lit(1)), 4).alias("bpe_per_word"),
+        F.size(_toks_lower()).alias("ws_tokens"),
+        F.size(F.regexp_extract_all("text", F.lit(_BPE_PATTERN), 0))
+        .alias("bpe_tokens"),
+    )
+    return counts.select(
+        "*",
+        F.round(F.col("bpe_tokens") / F.greatest("ws_tokens", F.lit(1)), 4)
+        .alias("bpe_per_word"),
     )
 
 

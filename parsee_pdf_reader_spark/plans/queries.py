@@ -377,8 +377,10 @@ def q_doc_numeric_token_stats(spark, sf_dir):
 )
 def q_clean_numeric_tokens(spark, sf_dir):
     """Token-level scalar functions (reference helper.py:19-168) as
-    native column expressions over the distinct token vocabulary."""
-    docs = _ts(spark, sf_dir, "documents")
+    native column expressions over the distinct token vocabulary. The
+    scan is not spread (``_ts``): the distinct's shuffle already spreads
+    the per-token work, and a spread would add a second shuffle."""
+    docs = _t(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", r"\s+"), lambda x: x != "")
     tok = (
         docs.select(F.explode(toks).alias("tok")).distinct()

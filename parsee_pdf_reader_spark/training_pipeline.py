@@ -15,10 +15,10 @@ corpus build actually runs.
 
 The per-document table (doc_text, n_tokens, bpe_tokens, is_canonical,
 and the signature of canonical rows) is the single materialization
-point (``plans.queries.materialize``). The first connected-components
-round fills it and the caller's sink reads it back, so per build each
-document goes through the layout kernel or the HTML extractor once,
-is tokenized once and is signed once.
+point (``plans.queries.materialize``). The job that stores the LSH
+pairs for connected components fills it and the caller's sink reads it
+back, so per build each document goes through the layout kernel or the
+HTML extractor once, is tokenized once and is signed once.
 
 Every stage is the operator already tested in isolation; this module
 is the composition, demonstrating that the pieces share one schema and
@@ -148,9 +148,9 @@ def build_training_corpus(pages_df: DataFrame,
     # near-dup closure over the exact-canonical survivors: LSH pairs
     # -> connected components -> keep the longest doc per component
     # (each stage oracle-verified in isolation)
-    clusters = dedup.minhash_clusters_df(
+    clusters = dedup.connected_components_df(dedup.minhash_pairs_df(
         table.where("is_canonical")
-        .select(F.col("url").alias("doc_id"), "sig")).select(
+        .select(F.col("url").alias("doc_id"), "sig"))).select(
         F.col("doc_id").alias("url"), "cluster_id")
     out = table.drop("sig").join(clusters, "url", "left").withColumn(
         "near_dup_cluster", F.coalesce("cluster_id", "url")).drop(

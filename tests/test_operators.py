@@ -307,6 +307,77 @@ def test_dedup_clusters_transitive_closure(spark, crafted_dir):
     assert all(r.cluster_size == 3 for r in rows.values())
 
 
+def _chain_pairs(spark, n, id_type):
+    """Path graph 0-1-...-n-1, the longest diameter n nodes can have:
+    ~n rounds for label propagation, ~log n for the star rounds.
+    String ids are zero-padded so the minimum is node 0 either way."""
+    rows = [(i, i + 1) for i in range(n - 1)]
+    if id_type == "string":
+        rows = [(f"u{a:02d}", f"u{b:02d}") for a, b in rows]
+    return spark.createDataFrame(rows, f"doc_a {id_type}, doc_b {id_type}")
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+@pytest.mark.parametrize("n, max_star_rounds", [(16, 6), (30, 7)])
+def test_cc_paths_agree_on_chains(spark, monkeypatch, n, max_star_rounds,
+                                  id_type):
+    """Both sides of ``_CC_LOCAL_MAX_EDGES`` give every chain node the
+    chain's minimum id and size, and the star rounds stay logarithmic
+    in the chain's length."""
+    from parsee_pdf_reader_spark.operators import dedup
+
+    as_map = lambda df: {  # noqa: E731
+        r.doc_id: (r.cluster_id, r.cluster_size) for r in df.collect()}
+    local_stats, star_stats = {}, {}
+    local = as_map(dedup.connected_components_df(
+        _chain_pairs(spark, n, id_type), stats=local_stats))
+    monkeypatch.setattr(dedup, "_CC_LOCAL_MAX_EDGES", 0)
+    star = as_map(dedup.connected_components_df(
+        _chain_pairs(spark, n, id_type), stats=star_stats))
+    root = 0 if id_type == "long" else "u00"
+    assert local == star
+    assert len(local) == n
+    assert set(local.values()) == {(root, n)}
+    assert local_stats == {"edges": n - 1, "path": "local"}, local_stats
+    assert star_stats["path"] == "star", star_stats
+    assert star_stats["rounds"] <= max_star_rounds, star_stats
+
+
+def test_cc_local_path_one_action_one_map(spark):
+    """Under the bound, building the components runs one SQL execution
+    (the store that counts the edges), and the labels come from one
+    lazy Arrow map."""
+    from parsee_pdf_reader_spark.operators.dedup import (
+        connected_components_df,
+    )
+
+    pairs = _chain_pairs(spark, 16, "long")
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    before = store.executionsCount()
+    cc = connected_components_df(pairs)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert store.executionsCount() - before == 1
+    plan = cc._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+
+
+@pytest.mark.parametrize("path", ["local", "star"])
+def test_cc_empty_pairs(spark, monkeypatch, path):
+    """An empty pair table has no components on either path. Forcing
+    the star side takes a negative bound: 0 edges are within a bound of
+    0."""
+    from parsee_pdf_reader_spark.operators import dedup
+
+    if path == "star":
+        monkeypatch.setattr(dedup, "_CC_LOCAL_MAX_EDGES", -1)
+    pairs = spark.createDataFrame([], "doc_a long, doc_b long")
+    stats = {}
+    assert dedup.connected_components_df(pairs, stats=stats).collect() == []
+    assert stats["path"] == path, stats
+
+
 def test_text_normalize_strips_controls_and_collapses(spark, tmp_path):
     """Non-vacuous normalization check: control chars removed,
     whitespace runs collapsed, casefold variant consistent."""

@@ -477,7 +477,11 @@ def test_training_corpus_sink_reads_the_materialized_table(spark):
     """Each document is extracted once per build: the near-dup stage
     fills the per-document table and the returned frame reads it back,
     so its physical plan holds no extraction map (the per-document
-    MapInArrow that dispatches and extracts) outside that relation."""
+    MapInArrow that dispatches and extracts) outside that relation. Its
+    one Arrow map is the connected-components union-find, which reads
+    only the stored (doc_a, doc_b) pairs."""
+    import re
+
     from parsee_pdf_reader_spark.training_pipeline import (
         build_training_corpus,
     )
@@ -488,7 +492,9 @@ def test_training_corpus_sink_reads_the_materialized_table(spark):
     corpus = build_training_corpus(_pages(spark, 6).unionByName(web))
     plan = corpus._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in plan, plan
-    assert "MapInArrow" not in plan and "MapInPandas" not in plan, plan
+    maps = re.findall(r"MapInArrow \w+\((.*?)\)", plan)
+    assert [re.sub(r"#\d+L?", "", m) for m in maps] == ["doc_a, doc_b"], plan
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan, plan
     kinds = {r.source_kind for r in corpus.collect()}
     assert kinds == {"layout", "html"}
 

@@ -144,6 +144,9 @@ def test_hof_expressions_evaluated_once_per_row(spark, monkeypatch):
     sig = [p for p in plans if "array_min" in p]
     assert sum(p.count("array_min") for p in plans) == 1, sig
     assert sig[0].count("split(") == 1, sig[0]
+    # one tokenization for the whitespace count and the ratio
+    plans = call_plans(textstats.q_token_counts(spark, SF))
+    assert sum(p.count("split(") for p in plans) == 1, plans
     # one bigram explode: the pair counts and the join-back read the
     # stored bigram stream
     plans = call_plans(textstats.q_ngram_lm_score(spark, SF))
@@ -155,18 +158,19 @@ def test_hof_expressions_evaluated_once_per_row(spark, monkeypatch):
 
 def test_corpus_keep_filter_build_time_jobs(spark):
     """Building the keep filter runs Spark jobs before any action: the
-    connected-components rounds checkpoint eagerly, and under AQE a
+    connected-components pair store runs eagerly, and under AQE a
     stored relation runs the shuffle stages beneath it when it is
     stored. The count is pinned so a change that re-runs a subplan at
     build time shows up here. (The earlier composition, which scanned,
-    tokenized and signed per component, ran 39 on a cold call.)"""
+    tokenized and signed per component, ran 39 on a cold call; label
+    propagation rounds over the pairs ran 26.)"""
     from parsee_pdf_reader_spark.operators.curation import (
         q_corpus_keep_filter,
     )
 
     jobs = _build_time_jobs(spark, "corpus_keep_filter_build",
                             lambda: q_corpus_keep_filter(spark, SF))
-    assert jobs == 26, jobs
+    assert jobs == 15, jobs
 
 
 def test_dedup_signature_tables_build_time_jobs(spark):
@@ -188,7 +192,7 @@ def test_dedup_signature_tables_build_time_jobs(spark):
 def test_training_corpus_build_time_jobs(spark):
     """Building the training corpus runs Spark jobs before any action,
     for the same reasons as the keep filter: the connected-components
-    rounds and the shuffle stages beneath each stored relation. The
+    pair store and the shuffle stages beneath each stored relation. The
     count is pinned. (The composition that dispatched in Spark and
     joined layout pages through a collect_list shuffle ran 6.)"""
     from parsee_pdf_reader_spark.sources.synth import (
@@ -226,6 +230,17 @@ def _build_time_jobs(spark, group, build):
     # the status tracker is fed by the listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_clean_numeric_tokens_one_exchange(spark):
+    """The token vocabulary's distinct is the only shuffle: a spread
+    scan beneath it added a second one."""
+    from parsee_pdf_reader_spark.plans.queries import (
+        q_clean_numeric_tokens,
+    )
+
+    plan = _physical(q_clean_numeric_tokens(spark, SF))
+    assert plan.count("Exchange") == 1, plan
 
 
 def test_topk_prereduces_before_priority_window(spark):

@@ -91,62 +91,6 @@ def test_checkpoint_hive_noncanonical_partition_dirs(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# VERDICT r3 item 6: CC probe folded into the round; star variant
-# ---------------------------------------------------------------------------
-
-def _chain_pairs(spark, n=16):
-    """Path graph 0-1-...-n-1: the adversarial case for label_prop
-    (diameter = n-1 -> ~n rounds) and the motivating case for
-    large-star/small-star (~log n rounds)."""
-    return spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long")
-
-
-def test_cc_star_matches_label_prop_on_chain(spark):
-    from parsee_pdf_reader_spark.operators.dedup import (
-        connected_components_df,
-    )
-
-    lp_stats, st_stats = {}, {}
-    lp = connected_components_df(
-        _chain_pairs(spark), stats=lp_stats).collect()
-    st = connected_components_df(
-        _chain_pairs(spark), algorithm="star", stats=st_stats).collect()
-    as_map = lambda rows: {  # noqa: E731
-        r.doc_id: (r.cluster_id, r.cluster_size) for r in rows}
-    assert as_map(lp) == as_map(st)
-    assert all(r.cluster_id == 0 and r.cluster_size == 16 for r in lp)
-    # the whole point of the star variant: sublinear rounds on chains
-    assert st_stats["rounds"] < lp_stats["rounds"], (st_stats, lp_stats)
-    assert st_stats["rounds"] <= 6, st_stats
-
-
-def test_cc_label_prop_one_action_per_round(spark):
-    """VERDICT r3 item 6 'done' criterion: the convergence probe rides
-    the round's own eager localCheckpoint (an Observation fires inside
-    the materializing action), so the loop submits exactly ONE SQL
-    execution per round — no separate labels-vs-labels probe
-    join/count. (Job counts are the wrong probe under AQE, which
-    submits one job per query stage within a single action.)"""
-    import time
-
-    from parsee_pdf_reader_spark.operators.dedup import (
-        connected_components_df,
-    )
-
-    store = spark._jsparkSession.sharedState().statusStore()
-    before = store.executionsCount()
-    stats = {}
-    connected_components_df(_chain_pairs(spark, 6), stats=stats)
-    for _ in range(20):  # the status store updates asynchronously
-        if store.executionsCount() - before >= stats["rounds"]:
-            break
-        time.sleep(0.25)
-    assert store.executionsCount() - before == stats["rounds"], (
-        store.executionsCount() - before, stats)
-
-
-# ---------------------------------------------------------------------------
 # kmeans_assign (round-4 addition): Lloyd refinement is non-vacuous
 # ---------------------------------------------------------------------------
 

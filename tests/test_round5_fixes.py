@@ -181,28 +181,6 @@ def test_stream_extract_to_catalog_table(spark, tmp_path):
         spark.sql(f"drop table if exists {tbl}")
 
 
-def test_cc_label_prop_escalates_to_star_on_long_chain(spark):
-    """VERDICT r4 item 5: a component whose diameter exceeds the
-    label_prop round budget (path graph of 30 nodes > _CC_MAX_ITERS=25
-    rounds) must CONVERGE via automatic escalation to the star
-    contraction instead of raising — same labels (min doc_id), correct
-    sizes, stats recording both phases."""
-    from parsee_pdf_reader_spark.operators.dedup import (
-        _CC_MAX_ITERS, connected_components_df,
-    )
-
-    n = _CC_MAX_ITERS + 5
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long")
-    stats = {}
-    rows = connected_components_df(pairs, stats=stats).collect()
-    assert stats["algorithm"] == "label_prop->star", stats
-    assert stats["escalated"] and stats["rounds"] == _CC_MAX_ITERS
-    assert stats["star_rounds"] <= 7, stats
-    assert len(rows) == n
-    assert all(r.cluster_id == 0 and r.cluster_size == n for r in rows)
-
-
 def test_tfidf_builds_without_running_a_job(spark):
     """VERDICT r4 minor: round 4 ran an eager driver-side
     ``docs.count()`` while BUILDING the tfidf DataFrame — one extra

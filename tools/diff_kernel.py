@@ -1,10 +1,12 @@
 """Differential harness: kernel vs reference on generated corpora.
 
 Usage: python tools/diff_kernel.py [n_docs] [seed]
-Prints the first divergence per doc with stage context.
+Prints the first divergence per doc with stage context. Exits non-zero
+when any doc mismatches, or when the reference checkout is absent.
 """
 
 import json
+import os
 import sys
 
 sys.path.insert(0, ".")
@@ -13,6 +15,7 @@ sys.path.insert(0, "tests")
 from parsee_pdf_reader_spark.sources.synth import build_document  # noqa
 from parsee_pdf_reader_spark.kernel.engine import extract_document  # noqa
 import refadapter  # noqa
+import refshim  # noqa
 
 
 def diff_pages(mine, ref, doc, verbose=False):
@@ -64,6 +67,10 @@ def main():
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 50
     seed = int(sys.argv[2]) if len(sys.argv) > 2 else 42
     verbose = "-v" in sys.argv
+    if not os.path.isdir(refshim.REFERENCE_PATH):
+        print(f"reference checkout absent ({refshim.REFERENCE_PATH}): "
+              "nothing compared")
+        sys.exit(2)
     only = None
     for a in sys.argv:
         if a.startswith("--doc="):
@@ -99,6 +106,8 @@ def main():
             if verbose:
                 break
     print(f"docs={n} mismatched={bad} both_error={err_mine}")
+    if bad:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -54,7 +54,11 @@ CHECKS = {
                       "full-row window into 2^16 keys"],
     "ann_lsh_buckets": ["bucket sizes via agg + join-back, no "
                         "full-row window into 2^8 keys"],
-    "dedup_clusters_star": ["post-fixpoint plan only: iteration is "
+    "dedup_clusters": ["one union-find MapInArrow over the stored, "
+                       "counted pairs coalesced to one task; no "
+                       "Exchange beneath the cluster-size window"],
+    "dedup_clusters_star": ["the star rounds called directly; "
+                            "post-fixpoint plan only: iteration is "
                             "localCheckpoint-truncated each round"],
     "kmeans_assign": ["broadcast-K distance folds; per-vec argmin "
                       "windows; map-side-combinable centroid update"],
@@ -166,7 +170,8 @@ def _stored_plans(build):
 
 def _splice(old, new):
     """``old`` PLANS.md with the sections and summary rows of ``new``
-    (a PLANS.md holding only some queries) put in their place."""
+    (a PLANS.md holding only some queries) put in their place; a query
+    ``old`` lacks goes last, in the sections and in the summary."""
     def sections(text):
         parts = re.split(r"(?m)^(?=## )", text)
         return parts[0], {p.split("\n", 1)[0][3:]: p for p in parts[1:]}
@@ -175,7 +180,12 @@ def _splice(old, new):
     _, fresh = sections(new)
     rows = {m.group(1): m.group(0) for m in re.finditer(
         r"(?m)^\| (\S+) \|.*$", fresh.pop("Summary", ""))}
-    out = head + "".join(fresh.get(k, v) for k, v in secs.items())
+    summary = secs.pop("Summary", "")
+    added = "".join(r + "\n" for k, r in rows.items()
+                    if f"| {k} |" not in summary)
+    out = (head + "".join(fresh.get(k, v) for k, v in secs.items())
+           + "".join(v for k, v in fresh.items() if k not in secs)
+           + summary.rstrip("\n") + "\n" + added)
     return re.sub(r"(?m)^\| (\S+) \|.*$",
                   lambda m: rows.get(m.group(1), m.group(0)), out)
 
