@@ -8,6 +8,7 @@ Usage:
   python bench_extra.py <sf_dir> <name_substr> [reps]   # time matching
   python bench_extra.py <sf_dir> --sweep [reps]         # whole registry
   python bench_extra.py <sf_dir> --synth                # corpus build only
+  python bench_extra.py <sf_dir> --pytask [reps]       # fixed cost per Python task
 
 Each query is labelled via setJobDescription and timed against the
 noop sink (computes every column, discards the result).
@@ -29,6 +30,47 @@ WHAT = sys.argv[2] if len(sys.argv) > 2 else "--sweep"
 REPS = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 
 
+def _import_package(batches):
+    import parsee_pdf_reader_spark  # noqa: F401
+    yield from batches
+
+
+def _invalidate_ms(batches):
+    import importlib
+
+    import pyarrow as pa
+
+    for _ in batches:
+        pass
+    t0 = time.perf_counter()
+    importlib.invalidate_caches()
+    yield pa.RecordBatch.from_pydict(
+        {"ms": [(time.perf_counter() - t0) * 1e3]})
+
+
+def pytask(spark, cores):
+    """Fixed cost of one Python map task: warm one worker per core, then
+    time an identity ``mapInArrow`` over 32 partitions and, inside the
+    workers, one ``importlib.invalidate_caches()`` (the call PySpark's
+    worker makes before every task)."""
+    def noop(df):
+        df.write.format("noop").mode("overwrite").save()
+
+    noop(spark.range(0, cores * 64, 1, cores)
+         .mapInArrow(_import_package, "id long"))
+    n = 32
+    for _ in range(REPS):
+        t0 = time.perf_counter()
+        noop(spark.range(0, n, 1, n).mapInArrow(_import_package, "id long"))
+        wall = time.perf_counter() - t0
+        ms = sorted(r.ms for r in spark.range(0, n, 1, n)
+                    .mapInArrow(_invalidate_ms, "ms double").collect())
+        print(f"identity mapInArrow x{n}: {wall:.2f}s wall, "
+              f"{wall * cores / n * 1e3:.0f} ms/task; "
+              f"invalidate_caches p50 {statistics.median(ms):.1f} ms "
+              f"max {ms[-1]:.1f} ms")
+
+
 def main():
     from parsee_pdf_reader_spark.session import get_spark
 
@@ -37,6 +79,10 @@ def main():
                       extra_conf={"spark.ui.enabled": "false",
                                   "spark.sql.files.maxPartitionBytes": "8m"})
     spark.sparkContext.setLogLevel("ERROR")
+
+    if WHAT == "--pytask":
+        pytask(spark, int(spark.sparkContext.defaultParallelism))
+        return
 
     if WHAT == "--synth":
         from parsee_pdf_reader_spark.sources.synth import synthesize_pages_df

@@ -24,3 +24,12 @@ Design notes (100 TB target):
 """
 
 __version__ = "0.1.0"
+
+import os as _os
+
+# A PySpark worker (the JVM hands it PYTHON_WORKER_FACTORY_SECRET) calls
+# importlib.invalidate_caches() before every task; keep its zip directories.
+if "PYTHON_WORKER_FACTORY_SECRET" in _os.environ:
+    from parsee_pdf_reader_spark import _zipdirs
+
+    _zipdirs.install()

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from typing import Iterator, Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 
 EXTRACT_SCHEMA = (
@@ -333,4 +334,10 @@ def run_extraction(spark, input_path: str, output_path: str,
     # Readback mirrors the sink dispatch (ADVICE r5): a table-identifier
     # target must be read back through the catalog, not as a parquet
     # path named "cat.db.table".
-    return read_pages(spark, output_path)
+    try:
+        return read_pages(spark, output_path)
+    except AnalysisException as e:
+        # a partitioned parquet write of no rows leaves only _SUCCESS
+        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
+        return spark.createDataFrame([], sink_df.schema)

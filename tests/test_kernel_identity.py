@@ -115,6 +115,26 @@ def test_needs_ocr_predicate():
             0, 4, 700, 710, 10.0, False, " ")]])]))
 
 
+def test_fast_line_multichar_cells_fall_back():
+    """Cells ['a ', '', 'c'] join to a 3-char line over 3 cells, so the
+    old total-length guard let the regex fast path run — splitting on
+    the embedded space and mis-slicing coordinates. The reference
+    treats each layout char as an atomic unit ('a ' is not a flush
+    char, pdf_page.py:135-151), so the whole line is ONE token 'a c'
+    spanning all three cells."""
+    from parsee_pdf_reader_spark.kernel.engine import tokenize
+    from parsee_pdf_reader_spark.sources import layout_codec as codec
+
+    line = [
+        codec.Char(0, 5, 700, 710, 10.0, False, "a "),
+        codec.Char(50, 60, 700, 710, 10.0, False, ""),
+        codec.Char(100, 110, 700, 710, 10.0, False, "c"),
+    ]
+    toks, _ = tokenize([("box", [line])], 1)
+    assert [t.text for t in toks] == ["a c"]
+    assert toks[0].x0 == 0 and toks[0].x1 == 110
+
+
 def test_kernel_matches_reference_stress_layouts(reference):
     """Adversarial layouts: near-touching columns, interleaved rows,
     stacked tables, tight leading, numeric captions, duplicate tokens —

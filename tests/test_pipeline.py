@@ -1,7 +1,9 @@
 """Spark pipeline: end-to-end extraction, skew rebalance, checkpoint."""
 
 import os
+import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 from parsee_pdf_reader_spark.pipeline import extract_pages, rebalance_by_size
@@ -200,6 +202,35 @@ def test_checkpoint_prunes_partitioned_input(spark, tmp_path):
     assert done == parts
     out = spark.read.parquet(os.path.join(outp, "part=*"))
     assert out.select("url").distinct().count() == 12
+
+
+def test_checkpoint_hive_noncanonical_partition_dirs(spark, tmp_path):
+    """Dirs p=007 / p=8: Spark infers p as int, so run()'s
+    cast(p as string) filter sees '7', never the raw '007'. The file-
+    index fast path must normalize listed values through the inferred
+    type, or the 007 partition writes zero rows yet gets ledgered
+    'done'."""
+    from parsee_pdf_reader_spark.checkpoint import CheckpointedExtraction
+    from parsee_pdf_reader_spark.sources.synth import synthesize_pages_df
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(8)
+    pages = synthesize_pages_df(spark, docs)
+    inp = os.path.join(str(tmp_path), "pages")
+    outp = os.path.join(str(tmp_path), "extracted")
+    pages.limit(4).write.parquet(os.path.join(inp, "p=007"))
+    pages.orderBy(F.desc("url")).limit(4).write.parquet(
+        os.path.join(inp, "p=8"))
+
+    ck = CheckpointedExtraction(spark, inp, outp, run_id="t1",
+                                partition_expr="p")
+    parts = ck.pending_partitions()
+    assert parts == ["7", "8"], parts
+    done = ck.run()
+    assert sorted(done) == ["7", "8"]
+    prog = spark.read.parquet(os.path.join(outp, "_progress"))
+    by_part = {r.part: r for r in prog.collect()}
+    assert by_part["7"].rows_in == 4 and by_part["7"].rows_out >= 4
+    assert by_part["8"].rows_in == 4 and by_part["8"].rows_out >= 4
 
 
 def test_checkpoint_corrupt_ledger_propagates(spark, tmp_path):
@@ -734,3 +765,124 @@ def test_latest_snapshot_per_url_prunes_recrawls(spark):
     # the prune is MANDATORY (url is the document identity of every
     # downstream stage): there is no opt-out that would let duplicate
     # urls reach the url-keyed canonical/cluster/keep joins
+
+
+def test_run_extraction_empty_selection(spark, tmp_path):
+    """A language with no pages writes no parquet files; the readback is
+    an empty frame with the sink's columns, not a schema-inference
+    error."""
+    from parsee_pdf_reader_spark.pipeline import EXTRACT_SCHEMA, run_extraction
+
+    inp = os.path.join(str(tmp_path), "pages")
+    _pages(spark, 4).write.parquet(inp)
+    stats = {}
+    got = run_extraction(spark, inp, os.path.join(str(tmp_path), "out"),
+                         lang="xx", stats=stats)
+    assert stats["rows_written"] == 0
+    assert got.count() == 0
+    want = spark.createDataFrame([], EXTRACT_SCHEMA).dtypes + [("ds", "date")]
+    assert got.dtypes == want
+
+
+def _write_zip(path, members):
+    import zipfile
+
+    with zipfile.ZipFile(path, "w") as z:
+        for name, src in members.items():
+            z.writestr(name, src)
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13),
+                    reason="zipimporter.invalidate_caches is lazy from 3.13")
+def test_zip_directories_reread_only_when_archive_changes(tmp_path,
+                                                          monkeypatch):
+    import importlib
+    import zipimport
+
+    from parsee_pdf_reader_spark import _zipdirs
+
+    # undone at teardown: the test process keeps the stock method
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
+                        zipimport.zipimporter.invalidate_caches)
+    monkeypatch.setattr(_zipdirs, "_stamps", {})
+    _zipdirs.install()
+    wrapper = zipimport.zipimporter.invalidate_caches
+    _zipdirs.install()
+    assert zipimport.zipimporter.invalidate_caches is wrapper
+    assert wrapper._keeps_zip_dirs
+
+    arc = str(tmp_path / "mods.zip")
+    _write_zip(arc, {"zd_pkg/__init__.py": "", "zd_pkg/one.py": "X = 1\n"})
+    monkeypatch.syspath_prepend(arc)
+    reads = []
+    real = zipimport._read_directory
+
+    def counting(path):
+        reads.append(path)
+        return real(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    try:
+        assert importlib.import_module("zd_pkg.one").X == 1
+        # the archive root and the package directory: two importers
+        importers = [f for f in sys.path_importer_cache.values()
+                     if isinstance(f, zipimport.zipimporter)
+                     and f.archive == arc]
+        assert len(importers) == 2
+        reads.clear()
+        importlib.invalidate_caches()
+        assert reads.count(arc) == 1  # no stamp yet: one read, shared
+        reads.clear()
+        importlib.invalidate_caches()
+        assert reads.count(arc) == 0
+
+        _write_zip(arc, {"zd_pkg/__init__.py": "", "zd_pkg/one.py": "X = 1\n",
+                         "zd_pkg/two.py": "Y = 2\n"})
+        reads.clear()
+        importlib.invalidate_caches()
+        assert reads.count(arc) == 1
+        assert importlib.import_module("zd_pkg.two").Y == 2
+    finally:
+        for name in ("zd_pkg.two", "zd_pkg.one", "zd_pkg"):
+            sys.modules.pop(name, None)
+
+
+def test_reused_worker_keeps_zip_directories(spark):
+    """Inside a Python map task, a second invalidate_caches() (the call
+    PySpark's worker makes before every task) reads no zip directory."""
+    def second_call_reads(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        import parsee_pdf_reader_spark  # noqa: F401
+
+        for _ in batches:
+            pass
+        reads = []
+        real = zipimport._read_directory
+
+        def counting(path):
+            reads.append(path)
+            return real(path)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+            first = len(reads)
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        zips = sum(isinstance(f, zipimport.zipimporter)
+                   for f in sys.path_importer_cache.values())
+        yield pa.RecordBatch.from_pydict(
+            {"zips": [zips], "second": [len(reads) - first]})
+
+    rows = (spark.range(0, 4, 1, 4)
+            .mapInArrow(second_call_reads, "zips long, second long")
+            .collect())
+    assert len(rows) == 4
+    assert all(r.zips > 0 for r in rows)  # pyspark.zip is on the path
+    assert all(r.second == 0 for r in rows)
