@@ -9,6 +9,7 @@ Usage:
   python bench_extra.py <sf_dir> --sweep [reps]         # whole registry
   python bench_extra.py <sf_dir> --synth                # corpus build only
   python bench_extra.py <sf_dir> --pytask [reps]       # fixed cost per Python task
+  python bench_extra.py --kernel [reps] [seed]         # layout kernel, no Spark
 
 Each query is labelled via setJobDescription and timed against the
 noop sink (computes every column, discards the result).
@@ -71,7 +72,67 @@ def pytask(spark, cores):
               f"max {ms[-1]:.1f} ms")
 
 
+def kernel_corpus(seed):
+    """The perfbench ``extract`` corpus for ``seed``, built in-process:
+    every fourth document is Flate %PDF bytes, the rest PLD2 layout
+    docs (``perfbench.inputs.write_mixed_pages`` without Spark)."""
+    from perfbench import inputs
+    from perfbench.workloads import Extract
+    from parsee_pdf_reader_spark.sources.synth import (
+        build_document,
+        build_pdf_document,
+    )
+
+    docs = inputs.make_documents(seed, Extract.docs_n)
+    blobs = []
+    for d, text in zip(docs["doc_id"], docs["text"]):
+        d = int(d)
+        if d % 4 == 3:
+            blobs.append(build_pdf_document(f"doc{d}", seed, text,
+                                            stream_filter="flate"))
+        else:
+            blobs.append(build_document(f"doc{d}", seed, text)[0])
+    return blobs
+
+
+def kernel(reps, seed):
+    """Whole-kernel seconds (best-of-N and median of single-thread
+    loops over the ``extract`` corpus), per-stage self ms from one
+    traced loop, and a digest of the kernel's output."""
+    import hashlib
+    import json
+
+    from perfbench.layers import BLOB_SPANS, Tracer, self_times
+    from parsee_pdf_reader_spark.kernel.engine import extract_document
+
+    blobs = kernel_corpus(seed)
+    n_pdf = sum(b[:5] == b"%PDF-" for b in blobs)
+    print(f"corpus seed {seed}: {len(blobs)} docs ({n_pdf} %PDF)")
+    ts = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        out = [extract_document(b) for b in blobs]
+        ts.append(time.perf_counter() - t0)
+    print(f"kernel s: best {min(ts):.3f}  median {statistics.median(ts):.3f}"
+          f"  all {' '.join(f'{t:.3f}' for t in ts)}")
+    with Tracer(BLOB_SPANS) as tr:
+        for b in blobs:
+            extract_document(b)
+        st = self_times(tr.take())
+    total = sum(st.values())
+    for name, s in sorted(st.items(), key=lambda kv: -kv[1]):
+        print(f"  {name:48s} {1e3 * s:9.1f} ms  {100 * s / total:5.1f}%")
+    digest = hashlib.sha256(
+        json.dumps(out, sort_keys=True).encode()).hexdigest()
+    print(f"output digest {digest[:16]}")
+
+
 def main():
+    if sys.argv[1:2] == ["--kernel"]:
+        kernel(int(sys.argv[2]) if len(sys.argv) > 2 else 5,
+               int(sys.argv[3]) if len(sys.argv) > 3 else 2)
+        return
+
     from parsee_pdf_reader_spark.session import get_spark
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")

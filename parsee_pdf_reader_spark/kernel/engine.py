@@ -29,9 +29,12 @@ Everything here is per-page pure computation on small collections
 
 from __future__ import annotations
 
+import bisect
 import math
-import re
+from operator import ge, le, lt
 from typing import Dict, List, Optional, Tuple
+
+import numpy as np
 
 from parsee_pdf_reader_spark.kernel.model import (
     Cell,
@@ -77,20 +80,171 @@ class KernelTableError(Exception):
 # ---------------------------------------------------------------------------
 
 _FLUSH_CHARS = (" ", "\t", ")")
-#: a token on a drift-free line = one run of non-flush chars
-_RUN_RE = re.compile(r"[^ \t)]+")
+
+#: code points ``str.strip()`` removes; all lie below U+3001, and the
+#: last entry stands for every code point above (not whitespace)
+_WS_TABLE = np.zeros(0x3002, dtype=bool)
+_WS_TABLE[[c for c in range(0x3001) if chr(c).isspace()]] = True
+
+#: line classes of the G1 pass: skipped, planar fast path, per-char
+#: drift-free path (a cell that is not exactly one char), reference
+#: per-line loop (y or size drift)
+_BLANK, _FAST, _CHARS, _SLOW = 0, 1, 2, 3
+
+
+class _G1:
+    """G1 over one :class:`codec.Planes`: each line's class and every
+    fast line's tokens, unscaled.
+
+    ``tok_at[i]`` is the first token of line ``i`` (tokens are ordered
+    by cell, so line ``i`` owns ``tok_at[i]:tok_at[i + 1]``);
+    ``py_at`` counts the lines before ``i`` that need Python, so a box
+    whose count does not move takes its tokens as one slice. ``xy`` is
+    (4, K) float64: min x0, x1 (the ``)``-terminator's when one follows
+    the run, else max x1), and the first char's y0 and y1."""
+
+    __slots__ = ("cls", "tok_at", "py_at", "xy", "text_a", "text_b", "bold")
+
+
+def _g1(p) -> _G1:
+    """Classify every line of ``p`` and tokenize all fast lines in a
+    fixed number of numpy passes (cached on the planes, so a document
+    decoded into one Planes pays them once for all its pages).
+
+    A line is blank when its joined text is empty under ``str.strip``.
+    It is fast when its y0 and y1 spread <= 1 and its size spread <= 3
+    (strictly tighter than the per-segment harsh-break test, so no
+    break can fire) and every cell is exactly one char. Then token
+    boundaries depend only on flush chars: a token is a maximal run of
+    non-flush cells, its text the run plus a following ``)`` (whose x1
+    then replaces the run's max, pdf_page.py:168-171), bold if any run
+    cell is, and y from the run's first char."""
+    g = p.g1
+    if g is not None:
+        return g
+    g = p.g1 = _G1()
+    ls = p.line_starts
+    n = len(p.lens)
+    nl = len(ls) - 1
+    cls = np.zeros(nl, dtype=np.int8)
+    g.xy = np.empty((4, 0))
+    g.text_a = g.text_b = g.bold = []
+    if n == 0:
+        g.cls = cls.tolist()
+        g.tok_at = g.py_at = [0] * (nl + 1)
+        return g
+    offs = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(p.lens, out=offs[1:])
+    # one code point per blob char, plus a NUL so empty trailing cells
+    # index inside the array
+    cps = np.frombuffer((p.blob + "\0").encode("utf-32-le", "surrogatepass"),
+                        dtype="<u4")
+    nonws = np.zeros(len(cps) + 1, dtype=np.int64)
+    np.cumsum(~_WS_TABLE[np.minimum(cps, 0x3001)], out=nonws[1:])
+    co = offs[ls]
+    nonblank = nonws[co[1:]] > nonws[co[:-1]]
+    filled = ls[1:] > ls[:-1]
+    st = ls[:-1][filled]
+
+    def spread(a):
+        return np.maximum.reduceat(a, st) - np.minimum.reduceat(a, st)
+
+    steady = np.zeros(nl, dtype=bool)
+    steady[filled] = ((spread(p.y0) <= 1) & (spread(p.y1) <= 1)
+                      & (spread(p.size) <= 3))
+    multi = np.zeros(nl, dtype=bool)
+    multi[filled] = np.maximum.reduceat(p.lens != 1, st)
+    fast = nonblank & steady & ~multi
+    cls[nonblank] = _SLOW
+    cls[nonblank & steady] = _CHARS
+    cls[fast] = _FAST
+    py_at = np.zeros(nl + 1, dtype=np.int64)
+    np.cumsum(cls >= _CHARS, out=py_at[1:])
+    g.cls = cls.tolist()
+    g.py_at = py_at.tolist()
+
+    cp = cps[offs[:-1]]  # each cell's first char
+    starts = np.zeros(n + 1, dtype=bool)
+    starts[ls] = True
+    run = np.repeat(fast, np.diff(ls))
+    run &= (cp != 32) & (cp != 9) & (cp != 41)
+    edge = np.zeros(n + 1, dtype=bool)
+    edge[1:] = run
+    s = np.flatnonzero(run & (starts[:-1] | ~edge[:-1]))
+    edge[:-1] = run
+    edge[-1] = False
+    e = np.flatnonzero(run & (starts[1:] | ~edge[1:])) + 1
+    g.tok_at = np.searchsorted(s, ls).tolist()
+    if not len(s):
+        return g
+    idx = np.empty(2 * len(s), dtype=np.int64)
+    idx[0::2] = s
+    idx[1::2] = e
+    if e[-1] == n:
+        idx = idx[:-1]
+    after = np.minimum(e, n - 1)
+    paren = (e < n) & (cp[after] == 41) & ~starts[e]
+    g.xy = np.stack((
+        np.minimum.reduceat(p.x0, idx)[0::2],
+        np.where(paren, p.x1[after], np.maximum.reduceat(p.x1, idx)[0::2]),
+        p.y0[s], p.y1[s]))
+    g.bold = np.maximum.reduceat(p.bold, idx)[0::2].tolist()
+    g.text_a = offs[s].tolist()
+    g.text_b = (offs[e] + paren).tolist()
+    return g
+
+
+def _fast_toks(g: _G1, lo: int, hi: int, mult: float,
+               blob: str) -> Optional[List[Tok]]:
+    """Tokens ``lo:hi`` of ``g`` scaled by ``mult``: ``astype(int64)``
+    truncates the same doubles ``int(v * mult)`` does. None when a
+    coordinate is not finite or too large for int64; the caller then
+    runs those lines through the per-char path, which converts (or
+    raises) exactly as the reference does."""
+    if hi <= lo:
+        return []
+    f = g.xy[:, lo:hi] * mult
+    if not np.abs(f).max() < 2.0 ** 62:
+        return None
+    x0, x1, y0, y1 = f.astype(np.int64).tolist()
+    texts = [blob[a:b] for a, b in zip(g.text_a[lo:hi], g.text_b[lo:hi])]
+    return list(map(Tok, x0, x1, y0, y1, texts, g.bold[lo:hi]))
+
+
+def _item_end(item) -> tuple:
+    """(x1, y1) of a stream item: the raw-char path's distance breaks
+    compare against the preceding stream element (pdf_page.py:221-227)."""
+    kind, obj = item
+    if kind == "boxcols":
+        p = obj.planes
+        c0 = int(p.line_starts[obj.l0])
+        c1 = int(p.line_starts[obj.l1])
+        if c1 <= c0:
+            return 0, 0
+        return max(p.x1[c0:c1].tolist()), max(p.y1[c0:c1].tolist())
+    if kind == "char":
+        return obj.x1, obj.y1
+    return obj[1], obj[3]
 
 
 def tokenize(stream: List[tuple], mult: float) -> Tuple[List[Tok], List[Tok]]:
-    """stream items: ('box', lines), ('char', Char), ('rect', (x0,x1,y0,y1)).
+    """stream items: ('boxcols', ColumnarBox), ('box', lines),
+    ('char', Char), ('rect', (x0,x1,y0,y1)).
 
     Reproduces both reference tokenizer paths including the quirks:
     flush chars, the ``)``-append (pdf_page.py:168-171), harsh breaks on
     y/size drift, token y from its first char, raw-char-path distance
     breaks against the previous *stream element* (pdf_page.py:221-227).
+    Text boxes go through :func:`_g1`; its fast tokens for the whole
+    page are scaled in one pass and sliced per box or line, and the
+    other lines take the per-char loops below, in stream order.
     """
     toks: List[Tok] = []
     nontext: List[Tok] = []
+    if any(item[0] == "box" for item in stream):
+        stream = [("boxcols", codec.ColumnarBox.from_lines(
+                      codec.KIND_TEXTBOX, item[1]))
+                  if item[0] == "box" else item for item in stream]
 
     # stream-level accumulator (shared by the raw-char path)
     a_text = ""
@@ -107,49 +261,11 @@ def tokenize(stream: List[tuple], mult: float) -> Tuple[List[Tok], List[Tok]]:
                     int(a_y1 * mult), a_text, a_bold)
             )
 
-    def fast_line(lt, lx0, lx1, ly0, ly1, lb, text):
-        """Drift-free line tokenization over COLUMN slices: no break
-        bookkeeping, no per-char objects. Semantics identical to the
-        slow path when no harsh break can fire (see caller's guard).
-
-        Token boundaries depend only on flush chars here, so the scan
-        is a C-speed regex over the joined line text (already built by
-        the caller's blank-line check): each run of non-flush chars is
-        one token (min/max over the coordinate slices), with the
-        ``)``-append quirk applied when the run's terminator is ``)``
-        (x1 OVERRIDDEN by the paren's, matching pdf_page.py:168-171).
-        A stray ``)`` with no preceding run emits nothing, exactly
-        like the reference's empty-accumulator flush. Falls back to
-        the per-char loop unless EVERY cell text is exactly one char:
-        a total-length match alone can hold coincidentally when cell
-        lengths differ but sum to the cell count (e.g. one empty cell
-        plus one 2-char cell), which would map regex run indices onto
-        the wrong coordinate slices (ADVICE r3). The check is
-        ``total-length match AND no empty cell``: with non-negative
-        cell lengths summing to the cell count, a >=2-char cell forces
-        a 0-char cell to balance — so ``"" in lt`` (one C-level list
-        scan) is exactly equivalent to ``any(len(t) != 1 ...)``, which
-        profiled at ~9% of the whole PLD path."""
-        n = len(text)
-        if n != len(lt) or "" in lt:
-            _fast_line_chars(lt, lx0, lx1, ly0, ly1, lb)
-            return
-        for m in _RUN_RE.finditer(text):
-            i = m.start()
-            j = m.end()
-            seg = m.group()
-            f_x0 = min(lx0[i:j])
-            if j < n and text[j] == ")":
-                seg += ")"
-                f_x1 = lx1[j]
-            else:
-                f_x1 = max(lx1[i:j])
-            toks.append(Tok(
-                int(f_x0 * mult), int(f_x1 * mult),
-                int(ly0[i] * mult), int(ly1[i] * mult),
-                seg, any(lb[i:j])))
-
-    def _fast_line_chars(lt, lx0, lx1, ly0, ly1, lb):
+    def chars_line(lt, lx0, lx1, ly0, ly1, lb):
+        """A drift-free line cell by cell: a cell that is not exactly
+        one char is one atomic unit (``'a '`` is not a flush char,
+        pdf_page.py:135-151). Same tokens as the planar path on
+        one-char lines."""
         parts: List[str] = []
         f_x0 = f_x1 = f_y0 = f_y1 = None
         f_bold = False
@@ -243,78 +359,58 @@ def tokenize(stream: List[tuple], mult: float) -> Tuple[List[Tok], List[Tok]]:
                 s_text = ""
                 s_x0 = s_x1 = s_y0 = s_y1 = None
 
-    # per-item (x1, y1) of the preceding stream element, for the
-    # raw-char path's distance breaks
-    bounds = []
-    for item in stream:
-        if item[0] == "box":
-            xs = [c.x1 for ln in item[1] for c in ln]
-            ys = [c.y1 for ln in item[1] for c in ln]
-            bounds.append((max(xs, default=0), max(ys, default=0)))
-        elif item[0] == "boxcols":
-            b = item[1]
-            _t, _x0, bx1, _y0, by1, _s, _f = b.cols
-            bounds.append((
-                max((max(bx1[s:e]) for s, e in b.spans if e > s),
-                    default=0),
-                max((max(by1[s:e]) for s, e in b.spans if e > s),
-                    default=0)))
-        elif item[0] == "char":
-            bounds.append((item[1].x1, item[1].y1))
-        else:
-            r = item[1]
-            bounds.append((r[1], r[3]))
+    # the page's fast tokens, scaled once per Planes
+    fast: Dict[int, tuple] = {}
+    for kind, box in stream:
+        if kind == "boxcols":
+            p = box.planes
+            g = _g1(p)
+            lo = g.tok_at[box.l0]
+            hi = g.tok_at[box.l1]
+            f = fast.get(id(p))
+            if f is None:
+                fast[id(p)] = [p, g, lo, hi]
+            else:
+                f[2] = min(f[2], lo)
+                f[3] = max(f[3], hi)
+    for key, (p, g, lo, hi) in fast.items():
+        fast[key] = (g, lo, _fast_toks(g, lo, hi, mult, p.blob))
 
     n_items = len(stream)
     for idx, item in enumerate(stream):
         kind = item[0]
         if kind == "boxcols":
             box = item[1]
-            texts, bx0, bx1, by0, by1, bsz, bfl = box.cols
-            for s, e in box.spans:
-                lt = texts[s:e]
-                joined = "".join(lt)
-                if not joined.strip():
+            p = box.planes
+            g, base, ftoks = fast[id(p)]
+            l0 = box.l0
+            l1 = box.l1
+            tok_at = g.tok_at
+            if ftoks is not None and g.py_at[l0] == g.py_at[l1]:
+                toks.extend(ftoks[tok_at[l0] - base:tok_at[l1] - base])
+                continue
+            cls = g.cls
+            ls = p.line_starts
+            for li in range(l0, l1):
+                c = cls[li]
+                if c == _BLANK:
                     continue
-                ly0 = by0[s:e]
-                if max(ly0) - min(ly0) <= 1:
-                    ly1 = by1[s:e]
-                    lsz = bsz[s:e]
-                    if (max(ly1) - min(ly1) <= 1
-                            and max(lsz) - min(lsz) <= 3):
-                        fast_line(lt, bx0[s:e], bx1[s:e], ly0, ly1,
-                                  bfl[s:e], joined)
-                        continue
-                # drift in the line: materialize chars, slow path
-                line = [codec.Char(bx0[i], bx1[i], by0[i], by1[i],
-                                   bsz[i], bool(bfl[i]), texts[i])
-                        for i in range(s, e)]
-                slow_line(line)
+                if c == _FAST and ftoks is not None:
+                    toks.extend(
+                        ftoks[tok_at[li] - base:tok_at[li + 1] - base])
+                    continue
+                s = int(ls[li])
+                e = int(ls[li + 1])
+                cols = [a[s:e].tolist()
+                        for a in (p.x0, p.x1, p.y0, p.y1, p.size, p.bold)]
+                lt = p.cell_texts(s, e)
+                if c == _SLOW:
+                    slow_line([codec.Char(*v) for v in zip(*cols, lt)])
+                else:
+                    chars_line(lt, cols[0], cols[1], cols[2], cols[3],
+                               cols[5])
             continue
-        if kind == "box":
-            # FAST PATH guard: when the whole line is drift-free (y0/y1
-            # spread <= 1, size spread <= 3 — strictly tighter than the
-            # per-segment harsh-break test, so no break can fire),
-            # token boundaries depend only on flush chars. Quirk lines
-            # (size_drift/y_drift) take slow_line; the fuzz/identity
-            # suite pins both.
-            for line in item[1]:
-                lt = [c.text for c in line]
-                joined = "".join(lt)
-                if not joined.strip():
-                    continue
-                ly0 = [c.y0 for c in line]
-                if max(ly0) - min(ly0) <= 1:
-                    ly1 = [c.y1 for c in line]
-                    lsz = [c.size for c in line]
-                    if (max(ly1) - min(ly1) <= 1
-                            and max(lsz) - min(lsz) <= 3):
-                        fast_line(lt, [c.x0 for c in line],
-                                  [c.x1 for c in line], ly0, ly1,
-                                  [c.bold for c in line], joined)
-                        continue
-                slow_line(line)
-        elif kind == "char":
+        if kind == "char":
             c = item[1]
             t = c.text
             if t not in _FLUSH_CHARS:
@@ -324,14 +420,15 @@ def tokenize(stream: List[tuple], mult: float) -> Tuple[List[Tok], List[Tok]]:
                       or abs(ref_char.y1 - c.y1) > 1
                       or abs(ref_char.size - c.size) > 3):
                     brk = True
-                if idx > 0 and abs(c.y1 - bounds[idx - 1][1]) > 1:
-                    brk = True
-                if idx > 0 and (
-                    abs(c.x0 - bounds[idx - 1][0]) > CHAR_DIST_MAX
-                    or (last_char is not None
-                        and abs(c.x0 - last_char.x1) > CHAR_DIST_MAX)
-                ):
-                    brk = True
+                if idx > 0:
+                    px1, py1 = _item_end(stream[idx - 1])
+                    if abs(c.y1 - py1) > 1:
+                        brk = True
+                    if (abs(c.x0 - px1) > CHAR_DIST_MAX
+                            or (last_char is not None
+                                and abs(c.x0 - last_char.x1)
+                                > CHAR_DIST_MAX)):
+                        brk = True
                 if not brk:
                     if a_x0 is None or a_x0 > c.x0:
                         a_x0 = c.x0
@@ -476,26 +573,40 @@ def find_rows(toks: List[Tok]) -> List[Dict]:
     return rows
 
 
-def grow_cell(cell: Cell, row_toks: List[Tok], exclude_keys: frozenset,
-              handled: List, space_max: int,
-              xs: Optional[tuple] = None) -> List:
-    """Bidirectional x-gap fusion with restart-on-add
-    (pdf_page.py:356-374); membership tests are value-identity
-    (key sets — equivalent to the reference's in_list scans).
+def _row_index(toks: List[Tok]) -> tuple:
+    """(x0s, x1s, keys, links) of one row's tokens (find_rows sorts
+    them by x0; coords are read-only until the run stage). ``keys`` is
+    None on a clean row, which needs none.
 
-    ``xs`` = precomputed ``([t.x0...], [t.x1...])`` of row_toks —
-    callers that grow many cells over the same row build it once
-    (coords are read-only during this stage), turning each rescan
-    into list-index reads inside precomputed adjacency windows."""
-    skip = {t.key() for t in cell.members} | {t.key() for t in handled}
-    if xs is None:
-        xs0 = [t.x0 for t in row_toks]
-        xs1 = [t.x1 for t in row_toks]
-    else:
-        xs0, xs1 = xs
+    ``links[i]`` says tokens i and i+1 are within SPACE_MAX_DISTANCE,
+    and is given only for a *clean* row: every token has x1 >= x0, ends
+    before the next one starts, and ends more than SPACE_MAX_DISTANCE
+    before the one after next starts. On a clean row the only tokens
+    :func:`grow_cell` can add to a cell are its immediate neighbours
+    (the first match of the full scan is the left neighbour, else the
+    right one), so growth walks the links, and x0 order is strict, so
+    keys are distinct. Otherwise ``links`` is None."""
+    xs0 = [t.x0 for t in toks]
+    xs1 = [t.x1 for t in toks]
+    reach = [x + SPACE_MAX_DISTANCE for x in xs1]
+    if all(map(le, xs0, xs1)) and all(map(lt, xs1, xs0[1:])) and \
+            all(map(lt, reach, xs0[2:])):
+        return xs0, xs1, None, list(map(ge, reach, xs0[1:]))
+    return xs0, xs1, [t.key() for t in toks], None
+
+
+def grow_cell(cell: Cell, row_toks: List[Tok], row: tuple, skip: set,
+              exclude_keys: frozenset, space_max: int) -> List[Tok]:
+    """Bidirectional x-gap fusion with restart-on-add
+    (pdf_page.py:356-374); membership tests are value-identity (key
+    sets, equivalent to the reference's in_list scans). ``row`` is the
+    row's :func:`_row_index`; ``skip`` holds the keys of the cell's
+    members and grows with each add. Returns the added tokens."""
+    xs0, xs1, keys, _links = row
     cx0 = cell.x0
     cx1 = cell.x1
     n = len(row_toks)
+    added: List[Tok] = []
     restart = True
     while restart:
         restart = False
@@ -509,54 +620,83 @@ def grow_cell(cell: Cell, row_toks: List[Tok], exclude_keys: frozenset,
             # first-match order is unchanged
             x0 = xs0[i]
             x1 = xs1[i]
-            if lo1 <= x0 <= hi1 and x1 > cx1:
-                cand = row_toks[i]
-                k = cand.key()
+            if (lo1 <= x0 <= hi1 and x1 > cx1) or \
+                    (lo0 <= x1 <= hi0 and x0 < cx0):
+                k = keys[i]
                 if k in skip or k in exclude_keys:
                     continue
+                cand = row_toks[i]
                 cell.add(cand)
                 cx0 = cell.x0
                 cx1 = cell.x1
-                handled.append(cand)
+                added.append(cand)
                 skip.add(k)
                 restart = True
                 break
-            if lo0 <= x1 <= hi0 and x0 < cx0:
-                cand = row_toks[i]
-                k = cand.key()
-                if k in skip or k in exclude_keys:
-                    continue
-                cell.add(cand)
-                cx0 = cell.x0
-                cx1 = cell.x1
-                handled.append(cand)
-                skip.add(k)
-                restart = True
-                break
-    return handled
+    return added
 
 
 def build_cells(rows: List[Dict]):
     """Per-row base elements; the reference threads the *previous*
     group's handled list in as the exclusion set (pdf_page.py:411-420
-    quirk) — reproduced."""
+    quirk) — reproduced. On a clean row (see :func:`_row_index`) each
+    cell is one maximal linked run: it starts at the first token the
+    previous cell did not take, takes no left neighbour (the link to
+    it is broken) and walks right while linked."""
     for r in rows:
+        toks = r["toks"]
+        row = r["index"] = _row_index(toks)
+        links = row[3]
         cells = []
-        handled: List = []
+        if links is not None:
+            start = 0
+            for i, linked in enumerate(links):
+                if not linked:
+                    cells.append(Cell(toks[start:i + 1]))
+                    start = i + 1
+            if toks:
+                cells.append(Cell(toks[start:]))
+            r["cells"] = cells
+            continue
         handled_ids: set = set()
         exclude_keys: frozenset = frozenset()
-        toks = r["toks"]
-        xs = ([t.x0 for t in toks], [t.x1 for t in toks])
         for t in toks:
             if id(t) in handled_ids:  # object identity, like `t is h`
                 continue
             cell = Cell([t])
-            handled = grow_cell(cell, toks, exclude_keys, [t],
-                                SPACE_MAX_DISTANCE, xs)
-            handled_ids = {id(h) for h in handled}
-            exclude_keys = frozenset(h.key() for h in handled)
+            skip = {t.key()}
+            added = grow_cell(cell, toks, row, skip, exclude_keys,
+                              SPACE_MAX_DISTANCE)
+            handled_ids = {id(t)}
+            handled_ids.update(map(id, added))
+            exclude_keys = skip  # the handled keys; not mutated again
             cells.append(cell)
         r["cells"] = cells
+
+
+def _grown_text(r: Dict, i: int, exclude_keys: frozenset) -> str:
+    """Text of the cell :func:`grow_cell` grows from token ``i`` of row
+    ``r`` with ``exclude_keys`` excluded. On a clean row it walks the
+    links left, then right, stopping at an excluded token."""
+    toks = r["toks"]
+    row = r["index"]
+    links = row[3]
+    if links is None:
+        cell = Cell([toks[i]])
+        grow_cell(cell, toks, row, {row[2][i]}, exclude_keys,
+                  SPACE_MAX_DISTANCE)
+        return cell.text
+    lo = i
+    while lo > 0 and links[lo - 1] and \
+            toks[lo - 1].key() not in exclude_keys:
+        lo -= 1
+    hi = i
+    while hi < len(links) and links[hi] and \
+            toks[hi + 1].key() not in exclude_keys:
+        hi += 1
+    if lo == hi:
+        return toks[i].text
+    return " ".join([t.text for t in toks[lo:hi + 1]])
 
 
 # ---------------------------------------------------------------------------
@@ -620,24 +760,22 @@ class _Probe:
 
 
 def find_runs(cols: List[Dict], rows: List[Dict]):
-    all_col_toks: List[Tok] = []
-    for col in cols:
-        all_col_toks += col["toks"]
-    all_col_keys = frozenset(t.key() for t in all_col_toks)
-    row_xs: Dict[int, tuple] = {}
+    all_col_keys = frozenset(t.key() for col in cols for t in col["toks"])
+    # rows are sorted by descending y0; a row can meet a probe band
+    # [lo, hi] by its y0 or y1, so its y0 lies in the band widened by
+    # the row heights' extremes: a bisected window of rows, scanned in
+    # order (whether any row breaks a run is order-independent)
+    neg_y0 = [-r["y0"] for r in rows]
+    heights = [r["y1"] - r["y0"] for r in rows]
+    up = max(max(heights, default=0), 0)
+    down = max(-min(heights, default=0), 0)
     for col in cols:
         filtered: List[Tok] = []
         for t in col["toks"]:
-            cell = Cell([t])
-            xs = row_xs.get(t.row)
-            if xs is None:
-                rt = rows[t.row]["toks"]
-                xs = row_xs[t.row] = ([x.x0 for x in rt],
-                                      [x.x1 for x in rt])
-            grow_cell(cell, rows[t.row]["toks"], all_col_keys, [t],
-                      SPACE_MAX_DISTANCE, xs)
-            if sc.is_number_cell(cell.text) or \
-                    len(cell.text) <= TEXT_MAX_NUMBER_COL:
+            r = rows[t.row]
+            text = _grown_text(r, r["toks"].index(t), all_col_keys)
+            if sc.is_number_cell(text) or \
+                    len(text) <= TEXT_MAX_NUMBER_COL:
                 filtered.append(t)
         runs: List[Zone] = []
         els = sorted(filtered, key=lambda t: -t.y1)
@@ -666,27 +804,25 @@ def find_runs(cols: List[Dict], rows: List[Dict]):
                 start_y = prev.y1
             if start_y is not None and prev is not None:
                 gap = _Probe(col["x0"], col["x1"], t.y1, prev.y0)
-                broke = False
-                for r in rows:
-                    if (gap.y1 + TOLERANCE_GEN >= r["y0"]
-                            >= gap.y0 - TOLERANCE_GEN) or (
-                            gap.y1 + TOLERANCE_GEN >= r["y1"]
-                            >= gap.y0 - TOLERANCE_GEN):
-                        for cell in r["cells"]:
-                            if cell_usable(cell) and \
-                                    box_collides(gap, cell, 3) and \
-                                    not box_inside(gap, cell, 3):
-                                if count > 2:
-                                    ua = Zone(col["x0"], col["x1"],
-                                              prev.y0, start_y)
-                                    ua.members = run_list[:-1]
-                                    runs.append(ua)
-                                start_y = t.y1
-                                count = 1
-                                run_list = [t]
-                                broke = True
-                                break
-                    if broke:
+                lo = gap.y0 - TOLERANCE_GEN
+                hi = gap.y1 + TOLERANCE_GEN
+                for ri in range(bisect.bisect_left(neg_y0, -(hi + down)),
+                                bisect.bisect_right(neg_y0, up - lo)):
+                    r = rows[ri]
+                    if not (hi >= r["y0"] >= lo or hi >= r["y1"] >= lo):
+                        continue
+                    if any(cell_usable(cell)
+                           and box_collides(gap, cell, 3)
+                           and not box_inside(gap, cell, 3)
+                           for cell in r["cells"]):
+                        if count > 2:
+                            ua = Zone(col["x0"], col["x1"],
+                                      prev.y0, start_y)
+                            ua.members = run_list[:-1]
+                            runs.append(ua)
+                        start_y = t.y1
+                        count = 1
+                        run_list = [t]
                         break
                 if i == last_i and count >= 2 and prev is not None \
                         and start_y is not None:
@@ -814,7 +950,11 @@ class Grp:
 
 def collect_relevant_areas(cols_cand: List[Dict],
                            toks: List[Tok]) -> List[Zone]:
-    pool = [t.copy() for t in toks]
+    """Each run takes, from the page's tokens no earlier run took, those
+    inside its grown box or value-equal to one of its members; a taken
+    token is copied then, so later stages can merge it freely."""
+    pool = list(toks)
+    keys = [t.key() for t in pool]
     relevant = []
     is_number_cell = sc.is_number_cell
     letter_len = sc.letter_len
@@ -833,13 +973,14 @@ def collect_relevant_areas(cols_cand: List[Dict],
             for i in range(len(pool) - 1, -1, -1):
                 el = pool[i]
                 if (el.x0 >= rx0 and el.x1 <= rx1 and el.y0 >= ry0
-                        and el.y1 <= ry1) or el.key() in must_keys:
-                    run.put(el)
+                        and el.y1 <= ry1) or keys[i] in must_keys:
+                    run.put(el.copy())
                     if is_number_cell(el.text):
                         nn += 1
                     elif letter_len(el.text) > 0:
                         nt += 1
                     del pool[i]
+                    del keys[i]
             if run.members and nn > 0 and nn >= nt:
                 relevant.append(run)
     return relevant
@@ -1685,22 +1826,26 @@ def needs_ocr(page: codec.Page) -> bool:
     layout items at all, or any ``(cid:`` glyph in a non-empty line."""
     if not page.boxes:
         return True
+    screened: Dict[int, bool] = {}
     for box in page.boxes:
         if box.kind == codec.KIND_TEXTBOX:
             if isinstance(box, codec.ColumnarBox):
                 # a "(cid:" glyph implies a non-whitespace line, so the
                 # non-empty-line guard is subsumed by the prefix test.
-                # C-speed substring screen first; the per-CELL
-                # startswith runs only on a hit ("(cid:" spelled out
-                # across single-char cells must NOT trigger, matching
-                # the reference's per-LTChar test)
-                texts = box.cols[0]
-                if "(cid:" not in "".join(texts):
+                # The planes' blob is screened once per page; the
+                # per-CELL startswith runs only on a hit ("(cid:"
+                # spelled out across single-char cells must NOT
+                # trigger, matching the reference's per-LTChar test)
+                p = box.planes
+                hit = screened.get(id(p))
+                if hit is None:
+                    hit = screened[id(p)] = "(cid:" in p.blob
+                if not hit:
                     continue
-                for s, e in box.spans:
-                    for i in range(s, e):
-                        if texts[i].startswith("(cid:"):
-                            return True
+                ls = p.line_starts
+                for t in p.cell_texts(int(ls[box.l0]), int(ls[box.l1])):
+                    if t.startswith("(cid:"):
+                        return True
                 continue
             for line in box.lines:
                 if "".join(c.text for c in line).strip():

@@ -17,7 +17,11 @@ surface.
 from __future__ import annotations
 
 import bisect
+from operator import attrgetter
 from typing import List, Optional, Set, Tuple
+
+#: the (row, x0) order of a cell's members
+_ROW_X0 = attrgetter("row", "x0")
 
 
 def h_overlap(ax0, ax1, bx0, bx1, tol) -> bool:
@@ -164,14 +168,21 @@ class Cell:
             self.bold = t.bold
             self.row = t.row  # min over one element, even if None
             return
-        self.x0 = min((t.x0 for t in ms), default=None)
-        self.x1 = max((t.x1 for t in ms), default=None)
-        self.y0 = min((t.y0 for t in ms), default=None)
-        self.y1 = max((t.y1 for t in ms), default=None)
-        self._ordered = sorted(ms, key=lambda t: (t.row, t.x0))
+        if not ms:
+            self.x0 = self.x1 = self.y0 = self.y1 = None
+            self._ordered = []
+            self._text = None
+            self.bold = False
+            self.row = 0
+            return
+        self.x0 = min([t.x0 for t in ms])
+        self.x1 = max([t.x1 for t in ms])
+        self.y0 = min([t.y0 for t in ms])
+        self.y1 = max([t.y1 for t in ms])
+        self._ordered = sorted(ms, key=_ROW_X0)
         self._text = None
-        self.bold = any(t.bold for t in ms)
-        self.row = min((t.row for t in ms), default=0)
+        self.bold = any([t.bold for t in ms])
+        self.row = min([t.row for t in ms])
 
     def add(self, tok: Tok):
         self.members.append(tok)
@@ -186,8 +197,7 @@ class Cell:
             self.y0 = tok.y0
         if tok.y1 > self.y1:
             self.y1 = tok.y1
-        bisect.insort_right(self._ordered, tok,
-                            key=lambda t: (t.row, t.x0))
+        bisect.insort_right(self._ordered, tok, key=_ROW_X0)
         self._text = None
         if tok.bold:
             self.bold = True

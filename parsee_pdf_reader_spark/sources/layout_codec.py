@@ -80,32 +80,97 @@ class Page:
         self.boxes = boxes
 
 
+class Planes:
+    """Text cells of a page or a whole document as planar columns.
+
+    ``x0 x1 y0 y1 size`` are float64 ndarrays (f32 sources widen
+    exactly, so every value is the same double a per-char decode
+    gives), ``bold`` a bool ndarray, ``blob`` every cell text
+    concatenated, ``lens`` each cell's text length in characters, and
+    ``line_starts`` the first cell of each line plus a final ``N``:
+    lines are consecutive and cover all cells. :meth:`cell_texts`
+    cuts per-cell strings out of the blob. ``g1`` is the tokenizer's
+    cache of per-line results (see ``kernel.engine``)."""
+
+    __slots__ = ("x0", "x1", "y0", "y1", "size", "bold", "blob", "lens",
+                 "line_starts", "_texts", "g1")
+
+    def __init__(self, xy, bold, blob, lens, line_starts, texts=None):
+        # xy: (5, N) float64 rows x0, x1, y0, y1, size
+        self.x0, self.x1, self.y0, self.y1, self.size = xy
+        self.bold = bold
+        self.blob = blob
+        self.lens = lens
+        self.line_starts = line_starts
+        self._texts = texts
+        self.g1 = None
+
+    def cell_texts(self, c0: int, c1: int) -> List[str]:
+        """The texts of cells ``c0 .. c1``."""
+        if self._texts is not None:
+            return self._texts[c0:c1]
+        ends = self.lens[:c1].cumsum().tolist()
+        blob = self.blob
+        return [blob[a:b] for a, b in zip(([0] + ends)[c0:c1], ends[c0:])]
+
+    @classmethod
+    def from_lines(cls, lines) -> "Planes":
+        """Planes over lists of ``Char`` (one list per line)."""
+        import numpy as np
+
+        chars = [c for ln in lines for c in ln]
+        texts = [c.text for c in chars]
+        xy = np.array([[c.x0 for c in chars], [c.x1 for c in chars],
+                       [c.y0 for c in chars], [c.y1 for c in chars],
+                       [c.size for c in chars]],
+                      dtype=np.float64).reshape(5, len(chars))
+        starts = np.zeros(len(lines) + 1, dtype=np.int64)
+        np.cumsum([len(ln) for ln in lines], out=starts[1:])
+        return cls(xy, np.array([bool(c.bold) for c in chars], dtype=bool),
+                   "".join(texts),
+                   np.array([len(t) for t in texts], dtype=np.int64),
+                   starts, texts)
+
+
 class ColumnarBox(Box):
-    """A Box whose chars live in page-level COLUMN lists (PLD2 decode):
-    ``cols`` = (texts, x0s, x1s, y0s, y1s, sizes, bolds) shared across
-    the page, ``spans`` = [(start, end)] one per line. The kernel's
-    tokenizer consumes the columns directly (no per-char objects on the
-    hot path); ``.lines`` materializes Char objects lazily for the
-    consumers that need them (raw-char path, OCR, the reference shim,
-    re-encoding)."""
+    """A text box whose chars are lines ``l0 .. l1`` of a shared
+    :class:`Planes`. The kernel's tokenizer reads the planes directly;
+    ``.lines`` materializes ``Char`` objects with Python floats on
+    first use for the consumers that need them (raw-char path, OCR,
+    the reference shim, re-encoding), or returns the ``Char`` lists the
+    box was built from."""
 
-    __slots__ = ("cols", "spans", "_lines")
+    __slots__ = ("planes", "l0", "l1", "_lines")
 
-    def __init__(self, kind, cols, spans):
+    def __init__(self, kind, planes, l0, l1, lines=None):
         self.kind = kind
         self.rect = None
-        self.cols = cols
-        self.spans = spans
-        self._lines = None
+        self.planes = planes
+        self.l0 = l0
+        self.l1 = l1
+        self._lines = lines
+
+    @classmethod
+    def from_lines(cls, kind, lines) -> "ColumnarBox":
+        lines = [list(ln) for ln in lines]
+        return cls(kind, Planes.from_lines(lines), 0, len(lines), lines)
 
     @property
     def lines(self):  # shadows the parent slot descriptor
         if self._lines is None:
-            texts, x0s, x1s, y0s, y1s, sizes, bolds = self.cols
+            p = self.planes
+            ls = p.line_starts[self.l0:self.l1 + 1].tolist()
+            c0 = ls[0]
+            c1 = ls[-1]
+            cols = [a[c0:c1].tolist()
+                    for a in (p.x0, p.x1, p.y0, p.y1, p.size, p.bold)]
+            x0s, x1s, y0s, y1s, sizes, bolds = cols
+            texts = p.cell_texts(c0, c1)
             self._lines = [
                 [Char(x0s[i], x1s[i], y0s[i], y1s[i], sizes[i],
-                      bool(bolds[i]), texts[i]) for i in range(s, e)]
-                for s, e in self.spans
+                      bolds[i], texts[i]) for i in range(s, e)]
+                for s, e in zip([x - c0 for x in ls[:-1]],
+                                [x - c0 for x in ls[1:]])
             ]
         return self._lines
 
@@ -138,22 +203,12 @@ class CharRun:
                 for i, ch in enumerate(self.text)]
 
 
-class _EndChar:
-    """Minimal tail proxy: the only attribute quirk callers read off
-    ``chars[-1]`` is ``x1``."""
-
-    __slots__ = ("x1",)
-
-    def __init__(self, x1):
-        self.x1 = x1
-
-
 class RunSeq:
     """An ordered sequence of CharRuns standing in for a list of Chars
     (one encoded line). Supports exactly the operations the generator
     performs on line char-lists: truthiness/len, ``+`` concatenation,
-    ``[-1].x1`` tail reads, and iteration (which materializes Chars —
-    only the stress duplicate-tokens variant iterates)."""
+    :meth:`end_x1`, and iteration (which materializes Chars — only the
+    stress duplicate-tokens variant iterates)."""
 
     __slots__ = ("runs",)
 
@@ -171,11 +226,10 @@ class RunSeq:
     def __radd__(self, other):  # list[Char] + RunSeq (quirk fallback)
         return list(other) + self.chars()
 
-    def __getitem__(self, i):
-        if i == -1:
-            r = self.runs[-1]
-            return _EndChar(r.cents[-1] / 100.0)
-        return self.chars()[i]
+    def end_x1(self) -> float:
+        """x1 of the last char (the same double ``chars()[-1].x1``
+        holds)."""
+        return self.runs[-1].cents[-1] / 100.0
 
     def __iter__(self):
         return iter(self.chars())
@@ -392,7 +446,12 @@ def _decode_document_v2(buf: bytes) -> List[Page]:
     pos = 4
     (n_pages,) = _U16.unpack_from(buf, pos)
     pos += 2
-    pages = []
+    # one Planes for the whole document: each page's planar block is
+    # read as a (5, n) f4 view, and the pages are joined and widened
+    # to float64 once
+    xy_parts, flag_parts, len_parts, count_parts, blobs = [], [], [], [], []
+    page_specs = []  # (mediabox, natural_text, [Box or (kind, l0, l1)])
+    n_lines_seen = 0
     for _ in range(n_pages):
         mediabox = _MB.unpack_from(buf, pos)
         pos += 32
@@ -415,46 +474,52 @@ def _decode_document_v2(buf: bytes) -> List[Page]:
         pos += 2 * n_textish
         (total_lines,) = _U32.unpack_from(buf, pos)
         pos += 4
-        line_counts = np.frombuffer(buf, "<u2", total_lines, pos).tolist()
+        count_parts.append(np.frombuffer(buf, "<u2", total_lines, pos))
         pos += 2 * total_lines
         (n,) = _U32.unpack_from(buf, pos)
         pos += 4
-        colarrs = []
-        for _c in range(5):
-            colarrs.append(np.frombuffer(buf, "<f4", n, pos).tolist())
-            pos += 4 * n
-        x0s, x1s, y0s, y1s, sizes = colarrs
-        flags = np.frombuffer(buf, "u1", n, pos).tolist()
+        xy_parts.append(np.frombuffer(buf, "<f4", 5 * n, pos).reshape(5, n))
+        pos += 20 * n
+        flag_parts.append(np.frombuffer(buf, "u1", n, pos))
         pos += n
-        ends = np.frombuffer(buf, "<u2", n, pos).astype("i8").cumsum()
+        len_parts.append(np.frombuffer(buf, "<u2", n, pos))
         pos += 2 * n
         (blen,) = _U32.unpack_from(buf, pos)
         pos += 4
-        blob = buf[pos:pos + blen].decode("utf-8")
+        blobs.append(buf[pos:pos + blen].decode("utf-8"))
         pos += blen
-        e_list = ends.tolist()
-        texts = [blob[a:b] for a, b in zip([0] + e_list[:-1], e_list)]
 
-        page_cols = (texts, x0s, x1s, y0s, y1s, sizes, flags)
-        boxes: List[Box] = []
+        boxes: List = []
         ri = 0
         li = 0
-        ci = 0
-        chi = 0
         for kind in kinds:
             if kind == KIND_NONTEXT:
                 boxes.append(Box(kind, rect=tuple(rects[ri:ri + 4])))
                 ri += 4
                 continue
-            spans = []
-            for _l in range(n_lines[li]):
-                cnt = line_counts[ci]
-                ci += 1
-                spans.append((chi, chi + cnt))
-                chi += cnt
+            boxes.append((kind, n_lines_seen, n_lines_seen + n_lines[li]))
+            n_lines_seen += n_lines[li]
             li += 1
-            boxes.append(ColumnarBox(kind, page_cols, spans))
-        pages.append(Page(mediabox, natural_text, boxes))
+        page_specs.append((mediabox, natural_text, boxes))
+
+    if n_pages:
+        one = n_pages == 1
+        xy = (xy_parts[0] if one else np.concatenate(xy_parts, axis=1)
+              ).astype(np.float64)
+        flags = flag_parts[0] if one else np.concatenate(flag_parts)
+        lens = (len_parts[0] if one else np.concatenate(len_parts)
+                ).astype(np.int64)
+        counts = count_parts[0] if one else np.concatenate(count_parts)
+        starts = np.zeros(len(counts) + 1, dtype=np.int64)
+        np.cumsum(counts, out=starts[1:])
+        planes = Planes(xy, flags.astype(bool), "".join(blobs), lens,
+                        starts)
+    pages = []
+    for mediabox, natural_text, boxes in page_specs:
+        pages.append(Page(mediabox, natural_text, [
+            b if isinstance(b, Box) else ColumnarBox(b[0], planes, b[1],
+                                                     b[2])
+            for b in boxes]))
     return pages
 
 
@@ -463,10 +528,18 @@ def decode_document(buf: bytes) -> List[Page]:
         return _decode_document_v2(buf)
     if buf[:4] != MAGIC:
         raise ValueError("not a PLD1/PLD2 document")
+    import numpy as np
+
     pos = 4
     (n_pages,) = _U16.unpack_from(buf, pos)
     pos += 2
-    pages = []
+    # text boxes of every page share one document-level Planes, built
+    # from per-char column lists once all pages are read
+    cols: List[list] = [[], [], [], [], [], [], []]
+    x0s, x1s, y0s, y1s, sizes, bolds, texts = cols
+    counts: List[int] = []
+    page_specs = []
+    unpack_char = _CHAR.unpack_from
     for _ in range(n_pages):
         mediabox = _MB.unpack_from(buf, pos)
         pos += 32
@@ -479,7 +552,7 @@ def decode_document(buf: bytes) -> List[Page]:
             pos += tlen
         (n_boxes,) = _U16.unpack_from(buf, pos)
         pos += 2
-        boxes = []
+        boxes: List = []
         for _ in range(n_boxes):
             kind = buf[pos]
             pos += 1
@@ -490,20 +563,31 @@ def decode_document(buf: bytes) -> List[Page]:
                 continue
             (n_lines,) = _U16.unpack_from(buf, pos)
             pos += 2
-            lines = []
-            unpack_char = _CHAR.unpack_from
+            l0 = len(counts)
             for _ in range(n_lines):
                 (n_chars,) = _U16.unpack_from(buf, pos)
                 pos += 2
-                chars = []
-                append = chars.append
+                counts.append(n_chars)
                 for _ in range(n_chars):
                     x0, x1, y0, y1, size, flags, ln = unpack_char(buf, pos)
                     pos += 22
-                    text = buf[pos:pos + ln].decode("utf-8")
+                    x0s.append(x0)
+                    x1s.append(x1)
+                    y0s.append(y0)
+                    y1s.append(y1)
+                    sizes.append(size)
+                    bolds.append(flags & 1)
+                    texts.append(buf[pos:pos + ln].decode("utf-8"))
                     pos += ln
-                    append(Char(x0, x1, y0, y1, size, flags & 1, text))
-                lines.append(chars)
-            boxes.append(Box(kind, lines=lines))
-        pages.append(Page(mediabox, natural_text, boxes))
-    return pages
+            boxes.append((kind, l0, len(counts)))
+        page_specs.append((mediabox, natural_text, boxes))
+    starts = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=starts[1:])
+    planes = Planes(
+        np.array([x0s, x1s, y0s, y1s, sizes],
+                 dtype=np.float64).reshape(5, len(x0s)),
+        np.array(bolds, dtype=bool), "".join(texts),
+        np.array([len(t) for t in texts], dtype=np.int64), starts, texts)
+    return [Page(mediabox, natural_text, [
+        b if isinstance(b, Box) else ColumnarBox(b[0], planes, b[1], b[2])
+        for b in boxes]) for mediabox, natural_text, boxes in page_specs]

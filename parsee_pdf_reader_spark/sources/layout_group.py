@@ -38,8 +38,10 @@ from typing import Dict, Iterable, List, Optional, Tuple
 from parsee_pdf_reader_spark.sources.layout_codec import (
     Box,
     Char,
+    ColumnarBox,
     KIND_CHARS,
     KIND_TEXTBOX,
+    Planes,
 )
 
 LINE_OVERLAP = 0.5
@@ -429,10 +431,11 @@ def order_boxes(boxes: List[_BoxG], page_bbox) -> List[_BoxG]:
 def analyze_chars(chars: List[Char], mediabox) -> List[Box]:
     """Raw positioned chars -> codec boxes, pdfminer-analysis order:
     KIND_TEXTBOX boxes (lines sorted top-down within each box, boxes in
-    boxes_flow traversal order), then one KIND_CHARS box holding the
-    chars of degenerate (empty-bbox) lines — pdfminer appends empties
-    after the textboxes and the reference's parse_layout flattens them
-    to bare chars (converter.py:130-131)."""
+    boxes_flow traversal order) over one page-level ``Planes``, then
+    one KIND_CHARS box holding the chars of degenerate (empty-bbox)
+    lines — pdfminer appends empties after the textboxes and the
+    reference's parse_layout flattens them to bare chars
+    (converter.py:130-131)."""
     if not chars:
         return []
     page_bbox = (float(mediabox[0]), float(mediabox[1]),
@@ -442,11 +445,17 @@ def analyze_chars(chars: List[Char], mediabox) -> List[Box]:
     lines = [ln for ln in lines if not ln.is_empty()]
     boxes = group_lines_to_boxes(lines, page_bbox)
     boxes = order_boxes(boxes, page_bbox)
-    out: List[Box] = []
+    box_lines = []
     for b in boxes:
         # LTTextBoxHorizontal.analyze: lines top-down by -y1
         b.lines.sort(key=lambda ln: -ln.y1)
-        out.append(Box(KIND_TEXTBOX, lines=[ln.chars for ln in b.lines]))
+        box_lines.append([ln.chars for ln in b.lines])
+    planes = Planes.from_lines([ln for bl in box_lines for ln in bl])
+    out: List[Box] = []
+    l0 = 0
+    for bl in box_lines:
+        out.append(ColumnarBox(KIND_TEXTBOX, planes, l0, l0 + len(bl), bl))
+        l0 += len(bl)
     tail = [c for ln in empties for c in ln.chars]
     if tail:
         out.append(Box(KIND_CHARS, lines=[tail]))

@@ -93,7 +93,49 @@ class Stream:
 
 
 _WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
+
+
+def _name(raw: bytes) -> "Name":
+    """A name token's bytes after the ``/``, ``#xx`` escapes decoded."""
+    if b"#" in raw:
+        raw = re.sub(rb"#([0-9A-Fa-f]{2})",
+                     lambda m: bytes([int(m.group(1), 16)]), raw)
+    return Name(raw.decode("latin-1"))
+
+
+def _number(raw: bytes):
+    try:
+        if b"." in raw or b"e" in raw or b"E" in raw:
+            return float(raw)
+        return int(raw)
+    except ValueError:
+        return 0
+
+
+_SKIP = rb"(?:[\x00\t\n\x0c\r ]|%[^\r\n]*)*"
+_SKIP_WS = re.compile(_SKIP)
+
+#: one token after whitespace and comments, dispatched the way the
+#: byte-at-a-time lexer did; the group that matched names the kind,
+#: and no group matches only at the end of the data. Integers and
+#: plain decimals get their own groups so they skip ``_number``'s
+#: tests (a longer run of number chars falls to the general group).
+_TOKEN = re.compile(
+    _SKIP
+    + rb"(?:([+\-]?[0-9]+)(?![+\-.0-9eE])"           # 1 integer
+    rb"|([+\-]?[0-9]*\.[0-9]+)(?![+\-.0-9eE])"       # 2 decimal
+    rb"|([+\-.0-9][+\-.0-9eE]*)"                     # 3 other number
+    rb"|/([^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"          # 4 name
+    rb"|([^\x00\t\n\x0c\r ()<>\[\]{}/%]+)"           # 5 keyword
+    rb"|(<<|\[)"                                     # 6 dict/array open
+    rb"|(\(|<)"                                      # 7 string or hex
+    rb"|(>>|\]|[>{})]))?")                           # 8 other delimiter
+_INT, _DEC, _NUM, _NAME, _WORD, _OPEN, _STRING = range(1, 8)
+_KEYWORDS = {b"true": (True, "bool"), b"false": (False, "bool"),
+             b"null": (None, "null")}
+_CLOSERS = {b">>": (">>", "dict_close"), b"]": ("]", "arr_close")}
+#: bytes a string literal copies verbatim
+_PLAIN = re.compile(rb"[^\\()]+")
 
 
 class Lexer:
@@ -106,16 +148,8 @@ class Lexer:
         self.n = len(data)
 
     def _skip_ws(self):
-        d, n = self.data, self.n
-        while self.pos < n:
-            c = d[self.pos]
-            if c in _WS:
-                self.pos += 1
-            elif c == 0x25:  # % comment
-                while self.pos < n and d[self.pos] not in b"\r\n":
-                    self.pos += 1
-            else:
-                return
+        if self.pos < self.n:  # an unterminated string can leave n + 1
+            self.pos = _SKIP_WS.match(self.data, self.pos).end()
 
     def at_end(self) -> bool:
         self._skip_ws()
@@ -124,84 +158,51 @@ class Lexer:
     def next_token(self):
         """Returns one of: Name, bytes (string literal), int, float,
         bool, None, '[' ']' '<<' '>>' markers (as str), operator str."""
-        self._skip_ws()
-        d, n = self.data, self.n
-        if self.pos >= n:
+        if self.pos >= self.n:
             return None, "eof"
-        c = d[self.pos]
-        if c == 0x2F:  # /name
-            self.pos += 1
-            start = self.pos
-            while self.pos < n and d[self.pos] not in _WS \
-                    and d[self.pos] not in _DELIM:
-                self.pos += 1
-            raw = d[start:self.pos]
-            # #xx escapes
-            if b"#" in raw:
-                raw = re.sub(
-                    rb"#([0-9A-Fa-f]{2})",
-                    lambda m: bytes([int(m.group(1), 16)]), raw)
-            return Name(raw.decode("latin-1")), "name"
-        if c == 0x28:  # ( string
-            return self._string_literal(), "str"
-        if c == 0x3C:  # < or <<
-            if self.pos + 1 < n and d[self.pos + 1] == 0x3C:
-                self.pos += 2
-                return "<<", "dict_open"
+        m = _TOKEN.match(self.data, self.pos)
+        g = m.lastindex
+        self.pos = m.end()
+        if g is None:
+            return None, "eof"
+        raw = m.group(g)
+        if g == _INT:
+            return int(raw), "num"
+        if g == _DEC:
+            return float(raw), "num"
+        if g == _NUM:
+            return _number(raw), "num"
+        if g == _NAME:
+            return _name(raw), "name"
+        if g == _STRING:
+            self.pos = m.start(g)
+            if raw == b"(":
+                return self._string_literal(), "str"
             return self._hex_string(), "str"
-        if c == 0x3E:  # >>
-            if self.pos + 1 < n and d[self.pos + 1] == 0x3E:
-                self.pos += 2
-                return ">>", "dict_close"
-            self.pos += 1  # stray '>'
-            return ">", "op"
-        if c == 0x5B:
-            self.pos += 1
-            return "[", "arr_open"
-        if c == 0x5D:
-            self.pos += 1
-            return "]", "arr_close"
-        if c == 0x7B:
-            self.pos += 1
-            return "{", "op"
-        if c == 0x7D:
-            self.pos += 1
-            return "}", "op"
-        if c in b"+-.0123456789":
-            start = self.pos
-            self.pos += 1
-            while self.pos < n and d[self.pos] in b"+-.0123456789eE":
-                self.pos += 1
-            raw = d[start:self.pos]
-            try:
-                if b"." in raw or b"e" in raw or b"E" in raw:
-                    return float(raw), "num"
-                return int(raw), "num"
-            except ValueError:
-                return 0, "num"
-        # operator / keyword
-        start = self.pos
-        while self.pos < n and d[self.pos] not in _WS \
-                and d[self.pos] not in _DELIM:
-            self.pos += 1
-        if self.pos == start:  # lone delimiter we don't handle
-            self.pos += 1
-            return chr(c), "op"
-        kw = d[start:self.pos]
-        if kw == b"true":
-            return True, "bool"
-        if kw == b"false":
-            return False, "bool"
-        if kw == b"null":
-            return None, "null"
-        return kw.decode("latin-1"), "op"
+        if g == _OPEN:
+            return (("<<", "dict_open") if raw == b"<<"
+                    else ("[", "arr_open"))
+        if g == _WORD:
+            kw = _KEYWORDS.get(raw)
+            if kw is not None:
+                return kw
+        elif raw in _CLOSERS:
+            return _CLOSERS[raw]
+        return raw.decode("latin-1"), "op"
 
     def _string_literal(self) -> bytes:
         d, n = self.data, self.n
         self.pos += 1
         out = bytearray()
         depth = 1
+        plain = _PLAIN.match
         while self.pos < n:
+            m = plain(d, self.pos)
+            if m is not None:
+                out += m.group()
+                self.pos = m.end()
+                if self.pos >= n:
+                    break
             c = d[self.pos]
             if c == 0x5C:  # backslash
                 self.pos += 1
@@ -232,15 +233,12 @@ class Lexer:
                 depth += 1
                 out.append(c)
                 self.pos += 1
-            elif c == 0x29:
+            else:  # ')'
                 depth -= 1
                 self.pos += 1
                 if depth == 0:
                     break
                 out.append(c)
-            else:
-                out.append(c)
-                self.pos += 1
         return bytes(out)
 
     def _hex_string(self) -> bytes:
@@ -1327,6 +1325,7 @@ class Font:
         self.pdf = pdf
         self.d = fdict
         self._decode_cache: Dict[bytes, list] = {}
+        self._glyphs: Dict[int, tuple] = {}
         self.subtype = fdict.get("Subtype")
         self.composite = self.subtype == "Type0"
         base = pdf.resolve(fdict.get("BaseFont")) or ""
@@ -1456,57 +1455,69 @@ class Font:
 
     def decode(self, raw: bytes) -> List[Tuple[int, str, float]]:
         # memo per show-string: real pages repeat strings (captions,
-        # digits, header years) across Tj calls; the cache dies with
-        # the Font (i.e. with the document) so memory stays bounded
+        # digits, header years) across Tj calls; the caches die with
+        # the Font (i.e. with the document) so memory stays bounded.
+        # Below it, each code's glyph is computed once per font.
         cache = self._decode_cache
         hit = cache.get(raw)
         if hit is not None:
             return hit
-        out = []
         if self.composite:
             # 2-byte Identity codes (the overwhelming real-world case)
-            for k in range(0, len(raw) - len(raw) % 2, 2):
-                code = (raw[k] << 8) | raw[k + 1]
-                uni = self.tounicode.get(code)
-                if uni is None:
-                    uni = f"(cid:{code})"
-                w = self.widths.get(code, self.default_width) / 1000.0
-                out.append((code, uni, w))
+            codes = [(raw[k] << 8) | raw[k + 1]
+                     for k in range(0, len(raw) - len(raw) % 2, 2)]
         else:
-            for b in raw:
-                uni = self.tounicode.get(b)
-                if uni is None:
-                    uni = self.diff_map.get(b)
-                if uni is None and self.builtin_map is not None:
-                    uni = self.builtin_map.get(b)
-                if uni is None:
-                    try:
-                        uni = bytes([b]).decode(self.byte_codec)
-                    except UnicodeDecodeError:
-                        uni = bytes([b]).decode("latin-1", "replace")
-                if self.std14 is not None:
-                    # AFM lookup is by decoded char (pdfminer keys its
-                    # generated metrics by unicode char); glyphs beyond
-                    # the ASCII table fall back to MissingWidth — a
-                    # documented divergence from pdfminer's full table
-                    sw = (self.std14.get(uni) if uni is not None
-                          and len(uni) == 1 else None)
-                    if sw is None:
-                        sw = self.missing_width
-                else:
-                    idx = b - self.first_char
-                    if 0 <= idx < len(self.simple_widths) \
-                            and self.simple_widths[idx]:
-                        sw = self.simple_widths[idx]
-                    else:
-                        sw = self.missing_width
-                if self.simple_scale is None:
-                    w = sw / 1000.0
-                else:
-                    w = sw * self.simple_scale
-                out.append((b, uni, w))
+            codes = raw
+        glyphs = self._glyphs
+        out = []
+        for code in codes:
+            g = glyphs.get(code)
+            if g is None:
+                g = glyphs[code] = self._glyph(code)
+            out.append(g)
         cache[raw] = out
         return out
+
+    def _glyph(self, code: int) -> Tuple[int, str, float]:
+        """(code, unicode, width / 1000) of one character code."""
+        if self.composite:
+            uni = self.tounicode.get(code)
+            if uni is None:
+                uni = f"(cid:{code})"
+            return code, uni, self.widths.get(code,
+                                              self.default_width) / 1000.0
+        b = code
+        uni = self.tounicode.get(b)
+        if uni is None:
+            uni = self.diff_map.get(b)
+        if uni is None and self.builtin_map is not None:
+            uni = self.builtin_map.get(b)
+        if uni is None:
+            try:
+                uni = bytes([b]).decode(self.byte_codec)
+            except UnicodeDecodeError:
+                uni = bytes([b]).decode("latin-1", "replace")
+        if self.std14 is not None:
+            # AFM lookup is by decoded char (pdfminer keys its
+            # generated metrics by unicode char); glyphs beyond the
+            # ASCII table fall back to MissingWidth — a documented
+            # divergence from pdfminer's full table
+            sw = (self.std14.get(uni) if uni is not None
+                  and len(uni) == 1 else None)
+            if sw is None:
+                sw = self.missing_width
+        else:
+            idx = b - self.first_char
+            if 0 <= idx < len(self.simple_widths) \
+                    and self.simple_widths[idx]:
+                sw = self.simple_widths[idx]
+            else:
+                sw = self.missing_width
+        if self.simple_scale is None:
+            w = sw / 1000.0
+        else:
+            w = sw * self.simple_scale
+        return b, uni, w
 
 
 # ---------------------------------------------------------------------------
@@ -1622,25 +1633,48 @@ class TextInterpreter:
             tm = (t0_, t1_, t2_, t3_,
                   total * t0_ + t4_, total * t1_ + t5_)
 
+        data = content
+        scan = _TOKEN.match
+        pos = 0
         while True:
-            save = lex.pos
-            tok, kind = lex.next_token()
-            if kind == "eof":
+            # the Lexer's dispatch inlined (its hot path in parsing)
+            m = scan(data, pos)
+            g = m.lastindex
+            if g is None:
                 break
-            if kind in ("num", "str", "bool", "null", "name"):
-                stack.append(tok)
+            pos = m.end()
+            word = m.group(g)
+            if g == _INT:
+                stack.append(int(word))
                 continue
-            if kind == "dict_open":
-                lex.pos = save
-                stack.append(lex.parse_object())
+            if g == _DEC:
+                stack.append(float(word))
                 continue
-            if kind == "arr_open":
-                lex.pos = save
-                stack.append(lex.parse_object())
+            if g == _NUM:
+                stack.append(_number(word))
                 continue
-            if kind != "op":
+            if g == _NAME:
+                stack.append(_name(word))
                 continue
-            op = tok
+            if g == _STRING or g == _OPEN:
+                # strings, hex strings, arrays and dicts keep the
+                # Lexer's exact handling
+                lex.pos = m.start(g)
+                if g == _OPEN:
+                    stack.append(lex.parse_object())
+                elif word == b"(":
+                    stack.append(lex._string_literal())
+                else:
+                    stack.append(lex._hex_string())
+                pos = lex.pos
+                continue
+            if g == _WORD:
+                if word in _KEYWORDS:
+                    stack.append(_KEYWORDS[word][0])
+                    continue
+            elif word in _CLOSERS:
+                continue  # closers outside an object: ignored
+            op = word.decode("latin-1")
             try:
                 if op == "BT":
                     tm = tlm = _ID
@@ -1710,13 +1744,12 @@ class TextInterpreter:
                     # up to a whitespace-delimited EI — it would
                     # otherwise be tokenized as garbage (an unbalanced
                     # '(' swallows the rest of the stream). Skip it.
-                    data = lex.data
-                    pos = data.find(b"ID", lex.pos)
-                    pos = lex.pos if pos < 0 else pos + 3
+                    at = data.find(b"ID", pos)
+                    at = pos if at < 0 else at + 3
                     while True:
-                        e = data.find(b"EI", pos)
+                        e = data.find(b"EI", at)
                         if e < 0:
-                            lex.pos = lex.n
+                            pos = len(data)
                             break
                         before_ws = e == 0 or data[e - 1] in _WS
                         after = data[e + 2:e + 3]
@@ -1724,9 +1757,9 @@ class TextInterpreter:
                                           (b" ", b"\n", b"\r", b"\t",
                                            b"\x00", b"\x0c", b"/",
                                            b"[", b"<", b"(")):
-                            lex.pos = e + 2
+                            pos = e + 2
                             break
-                        pos = e + 2
+                        at = e + 2
                 elif op == "Do" and stack and depth < 8:
                     xo = self.pdf.resolve(
                         (self.pdf.resolve(self.xobjects) or {})

@@ -131,6 +131,12 @@ def _line_chars(text: str, x: float, baseline: float, size: float,
 
 
 @lru_cache(maxsize=65536)
+def _end_x1(chars) -> float:
+    """x1 of a line's last char: a :class:`RunSeq` (the fast path) or
+    a ``Char`` list (the off-grid path and mixed concatenations)."""
+    return chars.end_x1() if isinstance(chars, RunSeq) else chars[-1].x1
+
+
 def _text_width(text: str, size: float) -> float:
     return sum(char_width(ch, size) for ch in text)
 
@@ -203,18 +209,18 @@ class _PageBuilder:
                 # one oversized char mid-line: harsh-break tokenization path
                 mid = len(ln) // 2
                 chars = _line_chars(ln[:mid], x, baseline, size, bold)
-                xc = chars[-1].x1 if chars else x
+                xc = _end_x1(chars) if chars else x
                 big = _line_chars(ln[mid], xc, baseline, size + 4.0, bold)
-                rest = _line_chars(ln[mid + 1:], big[-1].x1, baseline, size,
+                rest = _line_chars(ln[mid + 1:], _end_x1(big), baseline, size,
                                    bold)
                 box_lines.append(chars + big + rest)
             elif quirk == "y_drift" and i == 0 and len(ln) > 12:
                 mid = len(ln) // 2
                 chars = _line_chars(ln[:mid], x, baseline, size, bold)
-                xc = chars[-1].x1 if chars else x
+                xc = _end_x1(chars) if chars else x
                 sup = _line_chars(ln[mid], xc, baseline, size, bold,
                                   y_jitter=3.0)
-                rest = _line_chars(ln[mid + 1:], sup[-1].x1, baseline, size,
+                rest = _line_chars(ln[mid + 1:], _end_x1(sup), baseline, size,
                                    bold)
                 box_lines.append(chars + sup + rest)
             else:
@@ -258,7 +264,7 @@ class _PageBuilder:
                 cap = cap.capitalize()
             bold = rng.random() < 0.2
             chars = _line_chars(cap, x_caption, baseline, size, bold)
-            chars += _line_chars(" ", chars[-1].x1, baseline, size)
+            chars += _line_chars(" ", _end_x1(chars), baseline, size)
             parts = [cap]
             for cr in col_rights:
                 if rng.random() < 0.12:

@@ -229,3 +229,110 @@ def test_golden_table_shapes(reference):
     assert shapes["doc3"] == [(0, 12, 3)], shapes["doc3"]
     assert shapes["doc7"] == [(0, 12, 4)], shapes["doc7"]
     assert shapes["s272"] == [(0, 6, 2)], shapes["s272"]
+
+
+#: sha256 of the kernel's output over ``_pin_corpus`` (JSON, sorted
+#: keys). Any change to what G1-G12 or the %PDF front end emit for
+#: these inputs changes it; recompute it only for an intended output
+#: change, never to absorb a refactor.
+KERNEL_OUTPUT_PIN = (
+    "16ec3bc8e4bff362ef740cb7151746f31b927189cdfef47dd3caa83e8cc0b9ae")
+
+_NON_ASCII_WORDS = ("Größe façade naïve Übersicht coût año 价格 表格 "
+                    "наличие итого ½ € — Ωmega").split()
+
+
+def _multichar_page():
+    """Hand-built page mixing one-char cells with multi-char, empty
+    and ``(cid:`` cells, flush chars inside cells and a y-drift line."""
+    from parsee_pdf_reader_spark.sources import layout_codec as codec
+
+    def line(texts, y, x=40.0, w=6.0, size=10.0, dy=None):
+        out = []
+        for i, t in enumerate(texts):
+            yy = y + (dy[i] if dy else 0.0)
+            out.append(codec.Char(x + w * i, x + w * (i + 1), yy,
+                                  yy + size, size, i % 4 == 1, t))
+        return out
+
+    lines = [
+        line(list("Revenue 1,234 (56)"), 700.0),
+        line(["a ", "", "c", " ", "(cid:3)", "x", ")", "y"], 686.0),
+        line(list("Net ") + ["inc", "ome"] + list(" 12 34"), 672.0),
+        line(list("Total 99 100"), 658.0, dy=[0, 0, 0, 3, 3, 0, 0,
+                                               0, 0, 0, 0, 0]),
+        line(list("  \t "), 644.0),
+    ]
+    boxes = [codec.Box(codec.KIND_TEXTBOX, lines=lines),
+             codec.Box(codec.KIND_NONTEXT, rect=(30.0, 500.0, 600.0, 640.0)),
+             codec.Box(codec.KIND_CHARS,
+                       lines=[line(list("loose 7 8"), 600.0)])]
+    return codec.Page((0.0, 0.0, 612.0, 792.0),
+                      "Revenue 1,234 (56)\nTotal 99 100", boxes)
+
+
+def _pin_corpus():
+    """(key, blob, areas_by_page) over every input flavour the kernel
+    dispatches on: PLD2 and PLD1 layout docs, stress and chaos
+    layouts, hand-built multi-char cells, non-ASCII text, every %PDF
+    content-stream filter, xref streams and area predictions."""
+    from parsee_pdf_reader_spark.sources import layout_codec as codec
+    from parsee_pdf_reader_spark.sources import synth
+
+    for seed in (42, 7):
+        for i in range(30):
+            blob, _ = build_document(f"doc{i}", seed)
+            yield f"doc{i}@{seed}", blob, None
+            if i % 3 == 0:
+                yield (f"pld1:doc{i}@{seed}",
+                       codec.encode_document(codec.decode_document(blob)),
+                       None)
+    for i in range(30):
+        yield f"s{i}", synth.build_stress_document(f"s{i}", 42), None
+        yield f"c{i}", synth.build_chaos_document(f"c{i}", 42), None
+    page = _multichar_page()
+    yield "multichar:pld1", codec.encode_document([page]), None
+    yield "multichar:pld2", codec.encode_document_v2([page]), None
+    for i in range(4):
+        text = " ".join(_NON_ASCII_WORDS[(i + k) % len(_NON_ASCII_WORDS)]
+                        for k in range(120))
+        yield f"utf8:{i}", build_document(f"u{i}", 42, text)[0], None
+    for filt in (None, *synth.PDF_STREAM_FILTERS):
+        for i in range(3):
+            yield (f"pdf:{filt}:{i}",
+                   synth.build_pdf_document(f"p{i}", 42,
+                                            stream_filter=filt), None)
+    for i in range(3):
+        yield (f"pdf:xref:{i}",
+               synth.build_pdf_document(f"x{i}", 7, xref_kind="stream"),
+               None)
+    yield ("pdf:latin1",
+           synth.build_pdf_document("l0", 42, " ".join(
+               _NON_ASCII_WORDS[:5] * 12), stream_filter="flate"), None)
+    for i in range(12):
+        blob, _ = build_document(f"doc{i}", 42)
+        n_pages = len(codec.decode_document(blob))
+        yield (f"areas:doc{i}", blob,
+               synth.build_area_predictions(f"doc{i}", n_pages, 42))
+
+
+def _kernel_output_digest():
+    import hashlib
+    import json
+
+    out = []
+    for key, blob, areas in _pin_corpus():
+        try:
+            res = extract_document(blob, areas_by_page=areas)
+        except Exception as e:  # error class is part of the output
+            res = type(e).__name__
+        out.append([key, res])
+    return hashlib.sha256(
+        json.dumps(out, sort_keys=True).encode()).hexdigest()
+
+
+def test_kernel_output_pinned():
+    """Pins G1-G12 output without the reference checkout: a hash of
+    ``extract_document`` over a fixed corpus, computed before the
+    kernel's columnar front end replaced the per-char one."""
+    assert _kernel_output_digest() == KERNEL_OUTPUT_PIN
