@@ -90,6 +90,8 @@ _WS_TABLE[[c for c in range(0x3001) if chr(c).isspace()]] = True
 #: drift-free path (a cell that is not exactly one char), reference
 #: per-line loop (y or size drift)
 _BLANK, _FAST, _CHARS, _SLOW = 0, 1, 2, 3
+#: the largest y0, y1 and size spread of a drift-free line
+_SPREAD_MAX = np.array([[1], [1], [3]])
 
 
 class _G1:
@@ -146,12 +148,11 @@ def _g1(p) -> _G1:
     filled = ls[1:] > ls[:-1]
     st = ls[:-1][filled]
 
-    def spread(a):
-        return np.maximum.reduceat(a, st) - np.minimum.reduceat(a, st)
-
+    yy = p.xy[2:]  # y0, y1, size
+    spread = np.maximum.reduceat(yy, st, axis=1)
+    spread -= np.minimum.reduceat(yy, st, axis=1)
     steady = np.zeros(nl, dtype=bool)
-    steady[filled] = ((spread(p.y0) <= 1) & (spread(p.y1) <= 1)
-                      & (spread(p.size) <= 3))
+    steady[filled] = (spread <= _SPREAD_MAX).all(axis=0)
     multi = np.zeros(nl, dtype=bool)
     multi[filled] = np.maximum.reduceat(p.lens != 1, st)
     fast = nonblank & steady & ~multi
@@ -652,10 +653,10 @@ def build_cells(rows: List[Dict]):
             start = 0
             for i, linked in enumerate(links):
                 if not linked:
-                    cells.append(Cell(toks[start:i + 1]))
+                    cells.append(Cell.from_run(toks[start:i + 1]))
                     start = i + 1
             if toks:
-                cells.append(Cell(toks[start:]))
+                cells.append(Cell.from_run(toks[start:]))
             r["cells"] = cells
             continue
         handled_ids: set = set()
@@ -759,6 +760,13 @@ class _Probe:
         self.y1 = y1
 
 
+def _rows_near(neg_y0: List[int], lo: int, hi: int) -> range:
+    """Indices of the rows whose y0 lies in [lo, hi] (``neg_y0`` is
+    ascending: rows are sorted by descending y0)."""
+    return range(bisect.bisect_left(neg_y0, -hi),
+                 bisect.bisect_right(neg_y0, -lo))
+
+
 def find_runs(cols: List[Dict], rows: List[Dict]):
     all_col_keys = frozenset(t.key() for col in cols for t in col["toks"])
     # rows are sorted by descending y0; a row can meet a probe band
@@ -806,8 +814,7 @@ def find_runs(cols: List[Dict], rows: List[Dict]):
                 gap = _Probe(col["x0"], col["x1"], t.y1, prev.y0)
                 lo = gap.y0 - TOLERANCE_GEN
                 hi = gap.y1 + TOLERANCE_GEN
-                for ri in range(bisect.bisect_left(neg_y0, -(hi + down)),
-                                bisect.bisect_right(neg_y0, up - lo)):
+                for ri in _rows_near(neg_y0, lo - up, hi + down):
                     r = rows[ri]
                     if not (hi >= r["y0"] >= lo or hi >= r["y1"] >= lo):
                         continue

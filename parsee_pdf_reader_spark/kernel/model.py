@@ -184,6 +184,25 @@ class Cell:
         self.bold = any([t.bold for t in ms])
         self.row = min([t.row for t in ms])
 
+    @classmethod
+    def from_run(cls, toks: List[Tok]) -> "Cell":
+        """The cell ``Cell(toks)`` makes, for tokens of one row whose x0
+        and x1 both ascend (so the (row, x0) order is ``toks`` and the
+        bounds are its ends)."""
+        if len(toks) == 1:
+            return cls(toks)
+        c = cls.__new__(cls)
+        c.members = list(toks)
+        c._ordered = list(toks)
+        c.x0 = toks[0].x0
+        c.x1 = toks[-1].x1
+        c.y0 = min([t.y0 for t in toks])
+        c.y1 = max([t.y1 for t in toks])
+        c._text = None
+        c.bold = any([t.bold for t in toks])
+        c.row = toks[0].row
+        return c
+
     def add(self, tok: Tok):
         self.members.append(tok)
         if len(self.members) == 1:

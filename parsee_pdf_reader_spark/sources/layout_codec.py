@@ -83,20 +83,21 @@ class Page:
 class Planes:
     """Text cells of a page or a whole document as planar columns.
 
-    ``x0 x1 y0 y1 size`` are float64 ndarrays (f32 sources widen
-    exactly, so every value is the same double a per-char decode
-    gives), ``bold`` a bool ndarray, ``blob`` every cell text
-    concatenated, ``lens`` each cell's text length in characters, and
-    ``line_starts`` the first cell of each line plus a final ``N``:
+    ``x0 x1 y0 y1 size`` are the rows of the (5, N) float64 ``xy``
+    (f32 sources widen exactly, so every value is the same double a
+    per-char decode gives), ``bold`` a bool ndarray, ``blob`` every
+    cell text concatenated, ``lens`` each cell's text length in
+    characters, and ``line_starts`` the first cell of each line plus
+    a final ``N``:
     lines are consecutive and cover all cells. :meth:`cell_texts`
     cuts per-cell strings out of the blob. ``g1`` is the tokenizer's
     cache of per-line results (see ``kernel.engine``)."""
 
-    __slots__ = ("x0", "x1", "y0", "y1", "size", "bold", "blob", "lens",
-                 "line_starts", "_texts", "g1")
+    __slots__ = ("xy", "x0", "x1", "y0", "y1", "size", "bold", "blob",
+                 "lens", "line_starts", "_texts", "g1")
 
     def __init__(self, xy, bold, blob, lens, line_starts, texts=None):
-        # xy: (5, N) float64 rows x0, x1, y0, y1, size
+        self.xy = xy
         self.x0, self.x1, self.y0, self.y1, self.size = xy
         self.bold = bold
         self.blob = blob

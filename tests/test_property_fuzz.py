@@ -6,6 +6,7 @@ must terminate with a value or a clean exception, and every
 encoder/decoder pair must round-trip arbitrary payloads.
 """
 
+import random
 import sys
 
 sys.path.insert(0, "tests")
@@ -106,3 +107,21 @@ def test_layout_grouping_conserves_chars(raw):
     assert len({id(c) for c in kept}) == len(chars)
     # synthetic members are exactly the word-margin spaces
     assert all(c.text == " " for c in seen if id(c) not in ids_in)
+
+
+def test_lzw_roundtrip_past_12bit_boundary():
+    """High-entropy payloads mint a fresh dictionary entry almost every
+    step; past ~3.8K entries the encoder used to pack 13-bit codes into
+    12-bit fields (silent corruption, 'bad LZW code' on decode). With
+    the CLEAR(256)/reset at next_code=4096, arbitrarily large payloads
+    round-trip. 30 KB of seeded random bytes crosses the boundary
+    several times over."""
+    from parsee_pdf_reader_spark.sources.pdf_mini import _lzw_decode
+    from parsee_pdf_reader_spark.sources.synth import _lzw_encode
+
+    rng = random.Random(7)
+    data = bytes(rng.randrange(256) for _ in range(30000))
+    assert _lzw_decode(_lzw_encode(data)) == data
+    # compressible payload that still overflows the dictionary
+    data2 = b"".join(bytes([i % 251, (i * 7) % 253]) for i in range(20000))
+    assert _lzw_decode(_lzw_encode(data2)) == data2

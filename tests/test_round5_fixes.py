@@ -538,78 +538,3 @@ def test_decontam_flags_planted_benchmark_copy(spark, tmp_path):
     # 8-gram shingles keep the false-trip rate low on templated text
     n_contam = sum(1 for r in rows.values() if r.contaminated)
     assert n_contam <= len(rows) * 0.05, n_contam
-
-
-def _font_pdf(content: str, font_body: bytes) -> bytes:
-    """Minimal 1-page PDF with a single parameterized /F1 font."""
-    objs = [
-        b"<</Type/Catalog/Pages 2 0 R>>",
-        b"<</Type/Pages/Kids[3 0 R]/Count 1>>",
-        (b"<</Type/Page/Parent 2 0 R/MediaBox[0 0 612 792]"
-         b"/Resources<</Font<</F1 5 0 R>>>>/Contents 4 0 R>>"),
-        (f"<</Length {len(content)}>>\nstream\n{content}\nendstream"
-         ).encode(),
-        font_body,
-    ]
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = []
-    for i, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += f"{i} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += f"xref\n0 {len(objs) + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for off in offsets:
-        out += f"{off:010d} 00000 n \n".encode()
-    out += (f"trailer\n<</Size {len(objs) + 1}/Root 1 0 R>>\n"
-            f"startxref\n{xref_at}\n%%EOF\n").encode()
-    return bytes(out)
-
-
-def test_symbol_afm_advances_and_builtin_encoding():
-    """VERDICT r4 item 3 'done' criterion: a Symbol font with NO
-    /Widths must (a) decode bytes through the font's BUILT-IN encoding
-    (0x61 is alpha, not 'a'; 0xB9 is notequal) and (b) advance every
-    glyph by the published Symbol AFM metric."""
-    from test_pdf_mini_units import _pdf_chars
-
-    from parsee_pdf_reader_spark.sources.afm14 import STD14_WIDTHS
-
-    # 'a' 'b' 'g' -> alpha beta gamma; \271 (0xB9) -> notequal
-    pdf = _font_pdf(
-        "BT /F1 10 Tf 1 0 0 1 72 700 Tm (abg\\271) Tj ET",
-        b"<</Type/Font/Subtype/Type1/BaseFont/Symbol>>")
-    chars = _pdf_chars(pdf)
-    assert [c.text for c in chars] == ["α", "β", "γ", "≠"]
-    afm = STD14_WIDTHS["Symbol"]
-    assert [afm[c.text] for c in chars] == [631, 549, 411, 549]
-    x = 72.0
-    for c in chars:
-        adv = afm[c.text] * 10 / 1000.0
-        assert abs(c.x0 - x) < 5e-3, (c.text, c.x0, x)
-        assert abs(c.x1 - (x + adv)) < 5e-3, (c.text, c.x1, x + adv)
-        x += adv
-
-
-def test_latin1_extras_afm_advances():
-    """VERDICT r4 item 3 (full-Latin AFM): WinAnsi bytes beyond ASCII
-    (emdash 0x97, germandbls 0xDF, questiondown 0xBF, onehalf 0xBD)
-    must advance by their published AFM widths, not the 500
-    MissingWidth fallback round 4 applied."""
-    from test_pdf_mini_units import _pdf_chars
-
-    from parsee_pdf_reader_spark.sources.afm14 import STD14_WIDTHS
-
-    pdf = _font_pdf(
-        "BT /F1 10 Tf 1 0 0 1 72 700 Tm (\\227\\337\\277\\275) Tj ET",
-        b"<</Type/Font/Subtype/Type1/BaseFont/Helvetica"
-        b"/Encoding/WinAnsiEncoding>>")
-    chars = _pdf_chars(pdf)
-    assert [c.text for c in chars] == ["—", "ß", "¿", "½"]
-    afm = STD14_WIDTHS["Helvetica"]
-    assert ([afm[c.text] for c in chars] == [1000, 611, 611, 834])
-    x = 72.0
-    for c in chars:
-        adv = afm[c.text] * 10 / 1000.0
-        assert abs(c.x1 - (x + adv)) < 5e-3, (c.text, c.x1, x + adv)
-        x += adv

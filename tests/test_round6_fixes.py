@@ -15,7 +15,6 @@ Covered:
   payload rejoin recovers winner text.
 - item 7: the two table-gate rows share one extraction (cells cache).
 - ADVICE medium: run_extraction readback goes through read_pages.
-- ADVICE low: SYMBOL_SPEC is injective (PUA construction glyphs).
 """
 
 import os
@@ -279,36 +278,6 @@ def test_run_extraction_readback_uses_read_pages(spark, tmp_path,
 
 
 # ---------------------------------------------------------------------------
-# ADVICE low: Symbol construction glyphs are injective PUA codepoints
-# ---------------------------------------------------------------------------
-
-def test_symbol_spec_injective_pua_construction_glyphs():
-    from parsee_pdf_reader_spark.sources.afm14 import (
-        _SYMBOL_WIDTHS, SYMBOL_SPEC,
-    )
-
-    chars = [ch for _c, _w, ch in SYMBOL_SPEC]
-    assert all(ch for ch in chars), "no empty decode targets"
-    assert len(set(chars)) == len(chars), "width map must be injective"
-    # the AGL Private-Use block for Symbol's construction glyphs
-    spec = {c: (w, ch) for c, w, ch in SYMBOL_SPEC}
-    expect = {
-        96: (500, ""),    # radicalex
-        189: (603, ""),   # arrowvertex
-        190: (1000, ""),  # arrowhorizex
-        230: (384, ""),   # parenlefttp
-        239: (494, ""),   # braceex
-        244: (686, ""),   # integralex
-        254: (494, ""),   # bracerightbt
-    }
-    for code, (w, ch) in expect.items():
-        assert spec[code] == (w, ch), (code, spec[code])
-        # the width lookup resolves to the AFM advance, not
-        # MissingWidth 500 (except radicalex whose advance IS 500)
-        assert _SYMBOL_WIDTHS[ch] == w
-
-
-# ---------------------------------------------------------------------------
 # round-6 new operators: behavior on planted phenomena (the gate corpus
 # has no boilerplate sentences and no Gopher-rule violators, so hash
 # parity alone would be vacuous — the r5 PII lesson)
@@ -382,67 +351,6 @@ def test_gopher_rules_flag_planted_violators(spark, tmp_path):
         for f in ("mean_word_len", "symbol_ratio", "bullet_frac",
                   "ellipsis_frac", "alpha_word_frac", "stop_hits"):
             assert getattr(r, f) is not None
-
-
-# ---------------------------------------------------------------------------
-# round 6: runtime AFM ingestion (the honest ZapfDingbats path — no
-# fabricated width tables in source; deployments ship the published
-# AFM file and register it at session start)
-# ---------------------------------------------------------------------------
-
-_TEST_AFM = """\
-StartFontMetrics 4.1
-FontName ZapfDingbats
-Comment synthetic TEST metrics authored for this test, NOT Adobe's
-StartCharMetrics 5
-C 32 ; WX 278 ; N space ;
-C 97 ; WX 974 ; N a1 ;
-C 98 ; WX 961 ; N a2 ;
-C 99 ; WX 500 ; N uni2701 ;
-C -1 ; WX 600 ; N orphanglyph ;
-EndCharMetrics
-EndFontMetrics
-"""
-
-
-def test_register_afm_end_to_end_font_metrics():
-    """register_afm-installed metrics flow through the whole simple-
-    font path: built-in encoding decode (no /Widths, no /Encoding)
-    and per-glyph AFM advances, exactly like the embedded Symbol
-    face. Uses self-authored TEST metrics (this repo ships no
-    reconstructed ZapfDingbats table — see COVERAGE.md)."""
-    from test_pdf_mini_units import _pdf_chars
-    from test_round5_fixes import _font_pdf
-
-    from parsee_pdf_reader_spark.sources.afm14 import (
-        BUILTIN_ENCODINGS, STD14_WIDTHS, register_afm,
-    )
-
-    assert "ZapfDingbats" not in STD14_WIDTHS  # documented omission
-    register_afm("ZapfDingbats", _TEST_AFM)
-    try:
-        pdf = _font_pdf(
-            "BT /F1 10 Tf 1 0 0 1 72 700 Tm (abc) Tj ET",
-            b"<</Type/Font/Subtype/Type1/BaseFont/ZapfDingbats>>")
-        chars = _pdf_chars(pdf)
-        # a/b resolve to synthetic PUA (no AGL mapping for a1/a2);
-        # c resolves through its uniXXXX name
-        assert [c.text for c in chars] == [chr(0xF700 + 97),
-                                           chr(0xF700 + 98),
-                                           "✁"]
-        x = 72.0
-        for c, w in zip(chars, (974, 961, 500)):
-            adv = w * 10 / 1000.0
-            assert abs(c.x0 - x) < 5e-3, (c.text, c.x0, x)
-            assert abs(c.x1 - (x + adv)) < 5e-3
-            x += adv
-        # unencoded glyphs with unresolvable names are skipped; the
-        # width map stays injective
-        ws = STD14_WIDTHS["ZapfDingbats"]
-        assert len(ws) == 4 and 600 not in ws.values()
-    finally:
-        STD14_WIDTHS.pop("ZapfDingbats", None)
-        BUILTIN_ENCODINGS.pop("ZapfDingbats", None)
 
 
 def test_semdedup_drops_planted_semantic_duplicates(spark, tmp_path):
