@@ -514,14 +514,25 @@ def merge_aligned(buckets: Dict, tol: int, agg: str,
     secondary statistic merges by min or max per ``agg``; optional
     collision veto leaves both buckets alive."""
     keys = list(buckets.keys())
-    if len(keys) <= 1:
+    n = len(keys)
+    if n <= 1:
         return buckets
+    # the index pairs (a < b) within tol, found in key order and listed
+    # in (a, b) order, as the all-pairs scan lists them
+    order = sorted(range(n), key=keys.__getitem__)
+    near = []
+    for p, i in enumerate(order):
+        ki = keys[i]
+        for q in range(p + 1, n):
+            j = order[q]
+            if keys[j] - ki > tol:
+                break
+            near.append((i, j) if i < j else (j, i))
+    near.sort()
     by_dist: Dict[int, List[Tuple]] = {}
-    for a in range(len(keys)):
-        for b in range(a + 1, len(keys)):
-            d = abs(keys[a] - keys[b])
-            if d <= tol:
-                by_dist.setdefault(d, []).append((keys[a], keys[b]))
+    for a, b in near:
+        by_dist.setdefault(abs(keys[a] - keys[b]), []).append(
+            (keys[a], keys[b]))
     dead = set()
     for d in sorted(by_dist):
         for ka, kb in by_dist[d]:
@@ -800,6 +811,8 @@ def find_runs(cols: List[Dict], rows: List[Dict]):
                     id(m) in filtered_ids for m in cell.members)
             return u
 
+        gx0 = col["x0"]
+        gx1 = col["x1"]
         start_y = None
         count = 0
         run_list: List[Tok] = []
@@ -811,17 +824,25 @@ def find_runs(cols: List[Dict], rows: List[Dict]):
             if count >= 2 and start_y is None and prev is not None:
                 start_y = prev.y1
             if start_y is not None and prev is not None:
-                gap = _Probe(col["x0"], col["x1"], t.y1, prev.y0)
-                lo = gap.y0 - TOLERANCE_GEN
-                hi = gap.y1 + TOLERANCE_GEN
+                # the probe box (col x0, col x1, t.y1, prev.y0): a row
+                # breaks the run when one of its usable cells collides
+                # with it but is not inside it (box_collides and
+                # box_inside, tolerance 3, inlined)
+                gy0 = t.y1
+                gy1 = prev.y0
+                lo = gy0 - TOLERANCE_GEN
+                hi = gy1 + TOLERANCE_GEN
                 for ri in _rows_near(neg_y0, lo - up, hi + down):
                     r = rows[ri]
                     if not (hi >= r["y0"] >= lo or hi >= r["y1"] >= lo):
                         continue
-                    if any(cell_usable(cell)
-                           and box_collides(gap, cell, 3)
-                           and not box_inside(gap, cell, 3)
-                           for cell in r["cells"]):
+                    if any(not (gx0 + 3 > c.x1 or gx1 - 3 < c.x0
+                                or gy1 - 3 < c.y0 or gy0 + 3 > c.y1)
+                           and not (c.x0 >= gx0 - 3 and c.x1 <= gx1 + 3
+                                    and c.y0 >= gy0 - 3
+                                    and c.y1 <= gy1 + 3)
+                           and cell_usable(c)
+                           for c in r["cells"]):
                         if count > 2:
                             ua = Zone(col["x0"], col["x1"],
                                       prev.y0, start_y)
@@ -1472,7 +1493,7 @@ def extract_tables(groups: List[Grp], rows: List[Dict], min_rows: int,
                 bounding = None
                 ek = el.key()
                 for cell in rows[el.row]["cells"]:
-                    if cell.key() == ek or value_in(el, cell.members):
+                    if cell.key_is(ek) or value_in(el, cell.members):
                         bounding = cell
                         break
                 if bounding is None:

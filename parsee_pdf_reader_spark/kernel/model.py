@@ -227,6 +227,13 @@ class Cell:
         return (round(self.x0), round(self.x1), round(self.y0),
                 round(self.y1), self.text)
 
+    def key_is(self, k) -> bool:
+        """``self.key() == k``, stopping at the first differing field
+        (the text is joined only when the bounds match)."""
+        return (round(self.x0) == k[0] and round(self.x1) == k[1]
+                and round(self.y0) == k[2] and round(self.y1) == k[3]
+                and self.text == k[4])
+
     def __repr__(self):
         return f"Cell({self.text!r},{self.x0},{self.x1},{self.y0},{self.y1})"
 

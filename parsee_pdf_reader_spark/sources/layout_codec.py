@@ -285,10 +285,11 @@ _CHAR = struct.Struct("<5fBB")
 #
 # PLD1 costs one struct.unpack per char (~19% of kernel wall time at
 # bench scale). PLD2 stores each page's chars as PLANAR blocks (all
-# x0s, then all x1s, ...) so decode is six np.frombuffer slices + one
-# utf-8 blob decode; values are f32 exactly like PLD1 and are widened
-# to float64 via ndarray.tolist(), so the kernel sees BIT-IDENTICAL
-# numbers to a PLD1 roundtrip of the same pages (byte-identity of
+# x0s, then all x1s, ...) so decode is a few np.frombuffer views + one
+# utf-8 blob decode per page. The pages' planes are joined into one
+# document-level ``Planes`` and widened from f32 to float64 with one
+# ``astype``: the same doubles a PLD1 decode of the same pages yields,
+# so the kernel sees BIT-IDENTICAL numbers (byte-identity of
 # extraction is codec-independent; asserted in tests/test_codec_v2.py).
 #
 # Layout (little-endian), after b"PLD2" | u16 n_pages, per page:

@@ -630,8 +630,15 @@ class MiniPdf:
         self._scan_objects()
         self._load_xref_chain()
         self._apply_xref()
+        #: objects the trailer search parsed without decryption; they
+        #: are the parsed objects themselves when nothing is encrypted
+        self._scanned: Dict[int, object] = {}
         self._load_trailer()
         self._setup_encryption()
+        if self._enc_key is None:
+            for num, obj in self._scanned.items():
+                self._cache.setdefault(num, obj)
+        self._scanned = {}
         self._expand_object_streams()
 
     # -- object discovery --
@@ -803,7 +810,7 @@ class MiniPdf:
             for num, (off, inner) in list(self.objects.items()):
                 if inner is not None:
                     continue
-                obj = self._parse_at(off, decrypt=False)
+                obj = self._scanned[num] = self._parse_at(off, decrypt=False)
                 if isinstance(obj, Stream) and \
                         obj.dict.get("Type") == "XRef":
                     for k in ("Root", "Encrypt", "ID", "Info"):
@@ -1681,7 +1688,7 @@ class TextInterpreter:
                         show(stack[-1])
                 elif op == "Tm":
                     if len(stack) >= 6:
-                        tlm = tuple(float(v) for v in stack[-6:])
+                        tlm = tuple(map(float, stack[-6:]))
                         tm = tlm
                 elif op == "BT":
                     tm = tlm = _ID
@@ -1735,7 +1742,7 @@ class TextInterpreter:
                                  -item / 1000.0 * fsize * th, 0.0), tm)
                 elif op == "cm" and len(stack) >= 6:
                     ctm = _mat_mul(
-                        tuple(float(v) for v in stack[-6:]), ctm)
+                        tuple(map(float, stack[-6:])), ctm)
                 elif op == "q":
                     gs_stack.append((ctm,))
                 elif op == "Q":
