@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import bisect
 import math
-from operator import ge, le, lt
+from operator import attrgetter, ge, le, lt
 from typing import Dict, List, Optional, Tuple
 
 import numpy as np
@@ -561,23 +561,29 @@ def merge_aligned(buckets: Dict, tol: int, agg: str,
 # G3/G4 — rows + cell fusion (pdf_page.py:356-420)
 # ---------------------------------------------------------------------------
 
+_X0 = attrgetter("x0")
+
+
 def find_rows(toks: List[Tok]) -> List[Dict]:
     buckets: Dict[int, Dict] = {}
+    floor = math.floor
+    ceil = math.ceil
     for t in toks:
-        k = math.floor(t.y0)
+        k = floor(t.y0)
+        y1c = ceil(t.y1)
         b = buckets.get(k)
         if b is None:
-            b = buckets[k] = {"c": 0, "agg": None, "list": []}
-        b["c"] += 1
-        y1c = math.ceil(t.y1)
-        if b["agg"] is None or b["agg"] < y1c:
-            b["agg"] = y1c
-        b["list"].append(t)
+            buckets[k] = {"c": 1, "agg": y1c, "list": [t]}
+        else:
+            b["c"] += 1
+            if b["agg"] < y1c:
+                b["agg"] = y1c
+            b["list"].append(t)
     merged = merge_aligned(buckets, TOLERANCE_GEN, "max", "y0")
     rows = []
     for k, b in merged.items():
         rows.append({"y0": k, "y1": b["agg"],
-                     "toks": sorted(b["list"], key=lambda t: t.x0)})
+                     "toks": sorted(b["list"], key=_X0)})
     rows.sort(key=lambda r: -r["y0"])
     for i, r in enumerate(rows):
         for t in r["toks"]:
