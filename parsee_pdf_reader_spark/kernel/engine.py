@@ -360,22 +360,18 @@ def tokenize(stream: List[tuple], mult: float) -> Tuple[List[Tok], List[Tok]]:
                 s_text = ""
                 s_x0 = s_x1 = s_y0 = s_y1 = None
 
-    # the page's fast tokens, scaled once per Planes
-    fast: Dict[int, tuple] = {}
+    # the token range the page's boxes span in each Planes, scaled once
+    spans: Dict[int, list] = {}
     for kind, box in stream:
         if kind == "boxcols":
-            p = box.planes
-            g = _g1(p)
+            g = _g1(box.planes)
             lo = g.tok_at[box.l0]
             hi = g.tok_at[box.l1]
-            f = fast.get(id(p))
-            if f is None:
-                fast[id(p)] = [p, g, lo, hi]
-            else:
-                f[2] = min(f[2], lo)
-                f[3] = max(f[3], hi)
-    for key, (p, g, lo, hi) in fast.items():
-        fast[key] = (g, lo, _fast_toks(g, lo, hi, mult, p.blob))
+            r = spans.setdefault(id(box.planes), [box.planes, g, lo, hi])
+            r[2] = min(r[2], lo)
+            r[3] = max(r[3], hi)
+    fast = {key: (g, lo, _fast_toks(g, lo, hi, mult, p.blob))
+            for key, (p, g, lo, hi) in spans.items()}
 
     n_items = len(stream)
     for idx, item in enumerate(stream):
@@ -1551,12 +1547,15 @@ def _zone_contains_cell(zone: Zone, cell) -> bool:
     """Area.contains (custom_dataclasses.py:597-605)."""
     ck = cell.key()
     for el in zone.members:
-        if el.key() == ck:
+        if isinstance(el, Cell):
+            if el.key_is(ck):
+                return True
+            if not isinstance(cell, Cell):
+                for m in el.members:
+                    if m.key() == ck:
+                        return True
+        elif el.key() == ck:
             return True
-        if isinstance(el, Cell) and not isinstance(cell, Cell):
-            for m in el.members:
-                if m.key() == ck:
-                    return True
     return False
 
 

@@ -1476,16 +1476,12 @@ class Font:
         else:
             codes = raw
         glyphs = self._glyphs
-        out = cache[raw] = [glyphs.get(c) or self._glyph(c) for c in codes]
+        out = cache[raw] = [glyphs.get(c) or glyphs.setdefault(
+            c, self._glyph(c)) for c in codes]
         return out
 
     def _glyph(self, code: int) -> Tuple[int, str, float]:
-        """(code, unicode, width / 1000) of one character code, kept in
-        the font's glyph memo."""
-        g = self._glyphs[code] = self._glyph_of(code)
-        return g
-
-    def _glyph_of(self, code: int) -> Tuple[int, str, float]:
+        """(code, unicode, width / 1000) of one character code."""
         if self.composite:
             uni = self.tounicode.get(code)
             if uni is None:

@@ -130,13 +130,13 @@ def _line_chars(text: str, x: float, baseline: float, size: float,
     return RunSeq([CharRun(text, cents, y0, y1, size, bold)])
 
 
-@lru_cache(maxsize=65536)
 def _end_x1(chars) -> float:
     """x1 of a line's last char: a :class:`RunSeq` (the fast path) or
     a ``Char`` list (the off-grid path and mixed concatenations)."""
     return chars.end_x1() if isinstance(chars, RunSeq) else chars[-1].x1
 
 
+@lru_cache(maxsize=65536)
 def _text_width(text: str, size: float) -> float:
     return sum(char_width(ch, size) for ch in text)
 

@@ -80,3 +80,16 @@ def test_build_document_text_and_bytes_deterministic():
     b1, t1 = synth.build_document("fastpath-doc", 42, "alpha beta " * 60)
     b2, t2 = synth.build_document("fastpath-doc", 42, "alpha beta " * 60)
     assert b1 == b2 and t1 == t2
+
+
+def test_end_x1_reads_both_line_forms():
+    # the generator reads a line's end from a RunSeq (cent-grid start)
+    # and from a Char list (off-grid start) alike
+    on_grid = synth._line_chars("total 12", 45.0, 700.0, 10.0)
+    off_grid = synth._line_chars("total 12", 45.001234, 700.0, 10.0)
+    assert isinstance(on_grid, synth.RunSeq)
+    assert isinstance(off_grid, list)
+    assert synth._end_x1(on_grid) == on_grid.chars()[-1].x1
+    assert synth._end_x1(off_grid) == off_grid[-1].x1
+    joined = on_grid + synth._line_chars(" ", 99.0, 700.0, 10.0)
+    assert synth._end_x1(joined) == joined.chars()[-1].x1
