@@ -87,11 +87,10 @@ class Planes:
     (f32 sources widen exactly, so every value is the same double a
     per-char decode gives), ``bold`` a bool ndarray, ``blob`` every
     cell text concatenated, ``lens`` each cell's text length in
-    characters, and ``line_starts`` the first cell of each line plus
-    a final ``N``:
-    lines are consecutive and cover all cells. :meth:`cell_texts`
-    cuts per-cell strings out of the blob. ``g1`` is the tokenizer's
-    cache of per-line results (see ``kernel.engine``)."""
+    characters, and ``line_starts`` the first cell of each line plus a
+    final ``N`` (lines are consecutive and cover all cells).
+    :meth:`cell_texts` cuts per-cell strings out of the blob. ``g1`` is
+    the tokenizer's cache of per-line results (see ``kernel.engine``)."""
 
     __slots__ = ("xy", "x0", "x1", "y0", "y1", "size", "bold", "blob",
                  "lens", "line_starts", "_texts", "g1")
@@ -127,7 +126,7 @@ class Planes:
                       dtype=np.float64).reshape(5, len(chars))
         starts = np.zeros(len(lines) + 1, dtype=np.int64)
         np.cumsum([len(ln) for ln in lines], out=starts[1:])
-        return cls(xy, np.array([bool(c.bold) for c in chars], dtype=bool),
+        return cls(xy, np.array([c.bold for c in chars], dtype=bool),
                    "".join(texts),
                    np.array([len(t) for t in texts], dtype=np.int64),
                    starts, texts)
