@@ -95,10 +95,50 @@ def kernel_corpus(seed):
     return blobs
 
 
+def kernel_paths(blobs):
+    """How much of ``blobs`` each kernel path serves: G1 lines per class
+    (blank, planar fast pass, reference loop) and rows whose cells are
+    linked runs (clean) against rows that take the full scan."""
+    from collections import Counter
+
+    from parsee_pdf_reader_spark.kernel import engine
+
+    lines = Counter()
+    rows = Counter()
+    g1, row_index = engine._g1, engine._row_index
+
+    def count_g1(p):
+        fresh = p.g1 is None  # G1 runs once per Planes
+        g = g1(p)
+        if fresh:
+            lines.update(g.cls)
+        return g
+
+    def count_rows(toks):
+        r = row_index(toks)
+        rows[r[3] is not None] += 1
+        return r
+
+    engine._g1, engine._row_index = count_g1, count_rows
+    try:
+        for b in blobs:
+            engine.extract_document(b)
+    finally:
+        engine._g1, engine._row_index = g1, row_index
+    print("G1 lines: " + "  ".join(
+        f"{name} {lines[c]}" for name, c in (
+            ("blank", engine._BLANK), ("fast", engine._FAST),
+            ("slow", engine._SLOW))))
+    n_rows = rows[True] + rows[False]
+    print(f"rows: clean {rows[True]}  other {rows[False]}  clean share "
+          f"{rows[True] / max(n_rows, 1):.4f}")
+
+
 def kernel(reps, seed):
     """Whole-kernel seconds (best-of-N and median of single-thread
     loops over the ``extract`` corpus), per-stage self ms from one
-    traced loop, and a digest of the kernel's output."""
+    traced loop, each kernel path's traffic (:func:`kernel_paths`) and
+    a digest of the kernel's output."""
     import hashlib
     import json
 
@@ -122,6 +162,7 @@ def kernel(reps, seed):
     total = sum(st.values())
     for name, s in sorted(st.items(), key=lambda kv: -kv[1]):
         print(f"  {name:48s} {1e3 * s:9.1f} ms  {100 * s / total:5.1f}%")
+    kernel_paths(blobs)
     digest = hashlib.sha256(
         json.dumps(out, sort_keys=True).encode()).hexdigest()
     print(f"output digest {digest[:16]}")

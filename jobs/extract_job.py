@@ -4,7 +4,10 @@
         jobs/extract_job.py \
         --input  s3://bucket/pages/            \
         --output s3://bucket/extracted/        \
-        --lang en --partitions 4096 --run-id r1 [--resume]
+        --lang en --partitions 4096 --run-id r1
+
+    (or ``--run-id r1 --resume``, which takes none of ``--lang``,
+    ``--partitions``, ``--min-rows`` and ``--min-cols``)
 
 At cluster scale:
 - build the zip with ``python jobs/package.py`` (pure-Python package,
@@ -34,6 +37,14 @@ def main():
     ap.add_argument("--resume", action="store_true",
                     help="checkpointed per-partition mode")
     args = ap.parse_args()
+    if args.resume:
+        # the checkpointed run extracts every language with the
+        # kernel's defaults, so these flags would have no effect
+        ignored = [f"--{d.replace('_', '-')}"
+                   for d in ("lang", "partitions", "min_rows", "min_cols")
+                   if getattr(args, d) != ap.get_default(d)]
+        if ignored:
+            ap.error(f"--resume ignores {', '.join(ignored)}")
 
     from parsee_pdf_reader_spark.session import get_spark
 

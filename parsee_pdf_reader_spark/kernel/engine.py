@@ -86,10 +86,10 @@ _FLUSH_CHARS = (" ", "\t", ")")
 _WS_TABLE = np.zeros(0x3002, dtype=bool)
 _WS_TABLE[[c for c in range(0x3001) if chr(c).isspace()]] = True
 
-#: line classes of the G1 pass: skipped, planar fast path, per-char
-#: drift-free path (a cell that is not exactly one char), reference
-#: per-line loop (y or size drift)
-_BLANK, _FAST, _CHARS, _SLOW = 0, 1, 2, 3
+#: line classes of the G1 pass: skipped, planar fast path, reference
+#: per-line loop (y or size drift, or a cell that is not exactly one
+#: char)
+_BLANK, _FAST, _SLOW = 0, 1, 2
 #: the largest y0, y1 and size spread of a drift-free line
 _SPREAD_MAX = np.array([[1], [1], [3]])
 
@@ -157,10 +157,9 @@ def _g1(p) -> _G1:
     multi[filled] = np.maximum.reduceat(p.lens != 1, st)
     fast = nonblank & steady & ~multi
     cls[nonblank] = _SLOW
-    cls[nonblank & steady] = _CHARS
     cls[fast] = _FAST
     py_at = np.zeros(nl + 1, dtype=np.int64)
-    np.cumsum(cls >= _CHARS, out=py_at[1:])
+    np.cumsum(cls == _SLOW, out=py_at[1:])
     g.cls = cls.tolist()
     g.py_at = py_at.tolist()
 
@@ -200,7 +199,7 @@ def _fast_toks(g: _G1, lo: int, hi: int, mult: float,
     """Tokens ``lo:hi`` of ``g`` scaled by ``mult``: ``astype(int64)``
     truncates the same doubles ``int(v * mult)`` does. None when a
     coordinate is not finite or too large for int64; the caller then
-    runs those lines through the per-char path, which converts (or
+    runs those lines through the reference loop, which converts (or
     raises) exactly as the reference does."""
     if hi <= lo:
         return []
@@ -229,23 +228,19 @@ def _item_end(item) -> tuple:
 
 
 def tokenize(stream: List[tuple], mult: float) -> Tuple[List[Tok], List[Tok]]:
-    """stream items: ('boxcols', ColumnarBox), ('box', lines),
-    ('char', Char), ('rect', (x0,x1,y0,y1)).
+    """stream items: ('boxcols', ColumnarBox), ('char', Char),
+    ('rect', (x0,x1,y0,y1)).
 
     Reproduces both reference tokenizer paths including the quirks:
     flush chars, the ``)``-append (pdf_page.py:168-171), harsh breaks on
     y/size drift, token y from its first char, raw-char-path distance
     breaks against the previous *stream element* (pdf_page.py:221-227).
     Text boxes go through :func:`_g1`; its fast tokens for the whole
-    page are scaled in one pass and sliced per box or line, and the
-    other lines take the per-char loops below, in stream order.
+    page are scaled in one pass and sliced per box or line, and every
+    other line takes the reference loop ``slow_line``, in stream order.
     """
     toks: List[Tok] = []
     nontext: List[Tok] = []
-    if any(item[0] == "box" for item in stream):
-        stream = [("boxcols", codec.ColumnarBox.from_lines(
-                      codec.KIND_TEXTBOX, item[1]))
-                  if item[0] == "box" else item for item in stream]
 
     # stream-level accumulator (shared by the raw-char path)
     a_text = ""
@@ -261,45 +256,6 @@ def tokenize(stream: List[tuple], mult: float) -> Tuple[List[Tok], List[Tok]]:
                 Tok(int(a_x0 * mult), int(a_x1 * mult), int(a_y0 * mult),
                     int(a_y1 * mult), a_text, a_bold)
             )
-
-    def chars_line(lt, lx0, lx1, ly0, ly1, lb):
-        """A drift-free line cell by cell: a cell that is not exactly
-        one char is one atomic unit (``'a '`` is not a flush char,
-        pdf_page.py:135-151). Same tokens as the planar path on
-        one-char lines."""
-        parts: List[str] = []
-        f_x0 = f_x1 = f_y0 = f_y1 = None
-        f_bold = False
-        for k, t in enumerate(lt):
-            if t not in _FLUSH_CHARS:
-                x0 = lx0[k]
-                x1 = lx1[k]
-                if f_x0 is None or f_x0 > x0:
-                    f_x0 = x0
-                if f_x1 is None or f_x1 < x1:
-                    f_x1 = x1
-                if f_y0 is None:
-                    f_y0 = ly0[k]
-                    f_y1 = ly1[k]
-                parts.append(t)
-                if lb[k]:
-                    f_bold = True
-            else:
-                if t == ")":
-                    parts.append(")")
-                    f_x1 = lx1[k]
-                if parts and f_x0 is not None and f_x1 is not None:
-                    toks.append(Tok(
-                        int(f_x0 * mult), int(f_x1 * mult),
-                        int(f_y0 * mult), int(f_y1 * mult),
-                        "".join(parts), f_bold))
-                f_bold = False
-                parts = []
-                f_x0 = f_x1 = f_y0 = f_y1 = None
-        if parts and f_x0 is not None and f_x1 is not None:
-            toks.append(Tok(
-                int(f_x0 * mult), int(f_x1 * mult), int(f_y0 * mult),
-                int(f_y1 * mult), "".join(parts), f_bold))
 
     def slow_line(line):
         """The exact reference per-line loop (pdf_page.py:135-207):
@@ -400,12 +356,8 @@ def tokenize(stream: List[tuple], mult: float) -> Tuple[List[Tok], List[Tok]]:
                 e = int(ls[li + 1])
                 cols = [a[s:e].tolist()
                         for a in (p.x0, p.x1, p.y0, p.y1, p.size, p.bold)]
-                lt = p.cell_texts(s, e)
-                if c == _SLOW:
-                    slow_line([codec.Char(*v) for v in zip(*cols, lt)])
-                else:
-                    chars_line(lt, cols[0], cols[1], cols[2], cols[3],
-                               cols[5])
+                slow_line([codec.Char(*v)
+                           for v in zip(*cols, p.cell_texts(s, e))])
             continue
         if kind == "char":
             c = item[1]
@@ -1692,28 +1644,28 @@ class Figure:
 
 
 class Para:
-    __slots__ = ("elements", "x0", "x1", "y0", "y1", "text", "area_ids")
+    """A paragraph of row cells; bounds and area ids grow per added
+    element, the text is joined when read."""
+
+    __slots__ = ("elements", "x0", "x1", "y0", "y1", "area_ids")
 
     def __init__(self, el):
-        self.elements = [el]
-        self._refit()
-        self._retext()
+        self.elements = []
+        self.x0, self.x1, self.y0, self.y1 = el.x0, el.x1, el.y0, el.y1
+        self.area_ids = set()
+        self.add(el)
 
     def add(self, el):
         self.elements.append(el)
-        self._refit()
-        self._retext()
+        self.x0 = min(self.x0, el.x0)
+        self.x1 = max(self.x1, el.x1)
+        self.y0 = min(self.y0, el.y0)
+        self.y1 = max(self.y1, el.y1)
+        if getattr(el, "in_area", None) is not None:
+            self.area_ids.add(el.in_area.class_id)
 
-    def _refit(self):
-        self.x0 = min(e.x0 for e in self.elements)
-        self.x1 = max(e.x1 for e in self.elements)
-        self.y0 = min(e.y0 for e in self.elements)
-        self.y1 = max(e.y1 for e in self.elements)
-        self.area_ids = set(
-            e.in_area.class_id for e in self.elements
-            if getattr(e, "in_area", None) is not None)
-
-    def _retext(self):
+    @property
+    def text(self) -> str:
         """Reference quirk preserved: line-break test compares the
         UNSORTED previous element against the sorted current one
         (custom_dataclasses.py:856)."""
@@ -1725,7 +1677,7 @@ class Para:
             elif k > 0:
                 parts.append(" ")
             parts.append(el.text_value())
-        self.text = "".join(parts)
+        return "".join(parts)
 
 
 class XText:
@@ -1814,14 +1766,24 @@ def make_paragraphs(extracted: List[tuple], page_width: int,
 # page / document drivers
 # ---------------------------------------------------------------------------
 
+def _planar(page: codec.Page) -> codec.Page:
+    """``page`` with every text box a :class:`codec.ColumnarBox`: a
+    plain ``Box(KIND_TEXTBOX, lines=...)`` (the pdfminer source,
+    hand-built pages) is converted over its lines."""
+    boxes = [codec.ColumnarBox.from_lines(b.kind, b.lines)
+             if b.kind == codec.KIND_TEXTBOX
+             and not isinstance(b, codec.ColumnarBox) else b
+             for b in page.boxes]
+    if boxes == page.boxes:  # boxes compare by identity
+        return page
+    return codec.Page(page.mediabox, page.natural_text, boxes)
+
+
 def _page_stream(page: codec.Page) -> List[tuple]:
     stream: List[tuple] = []
     for box in page.boxes:
         if box.kind == codec.KIND_TEXTBOX:
-            if isinstance(box, codec.ColumnarBox):
-                stream.append(("boxcols", box))
-            else:
-                stream.append(("box", box.lines))
+            stream.append(("boxcols", box))
         elif box.kind == codec.KIND_CHARS:
             for chars in box.lines:
                 stream.extend(("char", c) for c in chars)
@@ -1860,32 +1822,25 @@ def needs_ocr(page: codec.Page) -> bool:
     if not page.boxes:
         return True
     screened: Dict[int, bool] = {}
-    for box in page.boxes:
-        if box.kind == codec.KIND_TEXTBOX:
-            if isinstance(box, codec.ColumnarBox):
-                # a "(cid:" glyph implies a non-whitespace line, so the
-                # non-empty-line guard is subsumed by the prefix test.
-                # The planes' blob is screened once per page; the
-                # per-CELL startswith runs only on a hit ("(cid:"
-                # spelled out across single-char cells must NOT
-                # trigger, matching the reference's per-LTChar test)
-                p = box.planes
-                hit = screened.get(id(p))
-                if hit is None:
-                    hit = screened[id(p)] = "(cid:" in p.blob
-                if not hit:
-                    continue
-                ls = p.line_starts
-                for t in p.cell_texts(int(ls[box.l0]), int(ls[box.l1])):
-                    if t.startswith("(cid:"):
-                        return True
-                continue
-            for line in box.lines:
-                if "".join(c.text for c in line).strip():
-                    for c in line:
-                        if c.text is not None and \
-                                c.text.startswith("(cid:"):
-                            return True
+    for box in _planar(page).boxes:
+        if box.kind != codec.KIND_TEXTBOX:
+            continue
+        # a "(cid:" glyph implies a non-whitespace line, so the
+        # non-empty-line guard is subsumed by the prefix test. The
+        # planes' blob is screened once per page; the per-CELL
+        # startswith runs only on a hit ("(cid:" spelled out across
+        # single-char cells must NOT trigger, matching the reference's
+        # per-LTChar test)
+        p = box.planes
+        hit = screened.get(id(p))
+        if hit is None:
+            hit = screened[id(p)] = "(cid:" in p.blob
+        if not hit:
+            continue
+        ls = p.line_starts
+        for t in p.cell_texts(int(ls[box.l0]), int(ls[box.l1])):
+            if t.startswith("(cid:"):
+                return True
     return False
 
 
@@ -1895,6 +1850,7 @@ def extract_page(page: codec.Page, page_index: int, min_rows: int = 2,
     if min_cols < 1 or min_rows < 1:
         raise ValueError("a table needs at least one column and one row")
     ocr_fired = False
+    page = _planar(page)
     if ocr_engine is not None and (force_ocr or needs_ocr(page)):
         # OCR repair branch (converter.py:105-108): the engine's char
         # stream replaces the page's layout; natural text sidecar is
@@ -1990,7 +1946,7 @@ def extract_document(blob: bytes, min_rows: int = 2, min_cols: int = 1,
     branch (see sources/ocr.py).
 
     Input dispatch by content magic (upgrading the reference's
-    extension dispatch, converter.py:31-38): PLD1 layout bytes, or raw
+    extension dispatch, converter.py:31-38): PLD1/PLD2 layout bytes, or raw
     %PDF bytes via the pure-stdlib decoder (sources/pdf_mini.py —
     verified against the reference's own fixture PDFs and their
     integration-test golden counts, tests/test_real_pdf.py)."""

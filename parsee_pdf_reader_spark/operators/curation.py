@@ -95,7 +95,7 @@ def q_corpus_keep_filter(spark, sf_dir):
 
     Building the frame runs Spark jobs: the connected-components
     rounds checkpoint eagerly, and under AQE each stored relation
-    runs the shuffle stages beneath it when it is stored (26 jobs on
+    runs the shuffle stages beneath it when it is stored (15 jobs on
     the sf0.001 table, pinned by
     ``test_corpus_keep_filter_build_time_jobs``)."""
     # read once: every component's scan reads these stored rows

@@ -88,19 +88,7 @@ def _doc_to_rows(url, warc_ts, lang, blob, areas=None, min_rows=2,
                  "y0": int(p["box"][2]), "y1": int(p["box"][3])}
                 for p in pg["paragraphs"]
             ],
-            tables=[
-                {"g_index": t["g_index"], "num_rows": t["num_rows"],
-                 "num_cols": t["num_cols"], "area": t["area"],
-                 "total_value_area": t["total_value_area"],
-                 "value_areas": t["value_areas"],
-                 "items": [
-                     {"caption": it["caption"],
-                      "caption_area": it["caption_area"],
-                      "values": it["values"]}
-                     for it in t["items"]
-                 ]}
-                for t in pg["tables"]
-            ],
+            tables=pg["tables"],  # already the EXTRACT_SCHEMA struct
             n_elements=pg["n_elements"],
             ocr_needed=pg["needs_ocr"],
             error=None,

@@ -130,9 +130,31 @@ def test_fast_line_multichar_cells_fall_back():
         codec.Char(50, 60, 700, 710, 10.0, False, ""),
         codec.Char(100, 110, 700, 710, 10.0, False, "c"),
     ]
-    toks, _ = tokenize([("box", [line])], 1)
+    toks, _ = tokenize([("boxcols", codec.ColumnarBox.from_lines(
+        codec.KIND_TEXTBOX, [line]))], 1)
     assert [t.text for t in toks] == ["a c"]
     assert toks[0].x0 == 0 and toks[0].x1 == 110
+
+
+def test_drift_free_empty_cell_emits_no_token():
+    """A lone empty cell between flush chars accumulates no text, so the
+    reference loop emits nothing for it (``s_text != ""``,
+    pdf_page.py:135-207). A drift-free line gives the tokens the same
+    line gives with a trailing drifted space, which takes that loop."""
+    from parsee_pdf_reader_spark.kernel.engine import tokenize
+    from parsee_pdf_reader_spark.sources import layout_codec as codec
+
+    def toks_of(texts, drift=()):
+        line = [codec.Char(5 * i, 5 * i + 5, 700 + (i in drift) * 5,
+                           710 + (i in drift) * 5, 10.0, False, t)
+                for i, t in enumerate(texts)]
+        toks, _ = tokenize([("boxcols", codec.ColumnarBox.from_lines(
+            codec.KIND_TEXTBOX, [line]))], 1)
+        return [(t.text, t.x0, t.x1) for t in toks]
+
+    steady = toks_of(["a", " ", "", " ", "b"])
+    drifted = toks_of(["a", " ", "", " ", "b", " "], drift=(5,))
+    assert steady == drifted == [("a", 0, 5), ("b", 20, 25)]
 
 
 def test_kernel_matches_reference_stress_layouts(reference):
@@ -365,9 +387,9 @@ def _outputs_with(monkeypatch, name, replacement):
 
 
 def test_planar_tokens_match_per_char_loop(monkeypatch):
-    """The planar G1 pass and the per-char drift-free loop give the same
-    tokens: with ``_fast_toks`` declining every page, each fast line
-    takes the per-char loop."""
+    """The planar G1 pass and the reference loop give the same tokens:
+    with ``_fast_toks`` declining every page, each fast line takes the
+    reference loop ``slow_line``."""
     fast, slow = _outputs_with(monkeypatch, "_fast_toks",
                                lambda *a: None)
     assert fast == slow

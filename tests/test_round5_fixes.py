@@ -55,132 +55,6 @@ def test_simhash_near_pairs_wide_recall(spark, tmp_path):
     assert len(got) < n * (n - 1) / 2 / 16
 
 
-def test_stream_neardup_same_batch_one_survivor(spark, tmp_path):
-    """VERDICT r4 item 2 / ADVICE r4: two near-dups arriving in the
-    SAME micro-batch must leave exactly ONE survivor (the min doc_id),
-    never zero. Round 4's dropDuplicatesWithinWatermark picked an
-    arbitrary per-bucket winner, so the pair could split band
-    ownership and both drop; the min-claim windowed aggregation is
-    arrival-order-free. All three docs land in one file = one
-    micro-batch."""
-    import datetime
-
-    from parsee_pdf_reader_spark.streaming.incremental import (
-        run_stream_neardup,
-    )
-
-    inp = os.path.join(str(tmp_path), "docs_stream")
-    outp = os.path.join(str(tmp_path), "neardup")
-    ck = os.path.join(str(tmp_path), "ck")
-    os.makedirs(inp)
-    t0 = datetime.datetime(2025, 6, 1, 10, 0, 0)
-
-    base = ("the quick brown fox jumps over the lazy dog near the "
-            "river bank today")
-    near = ("the quick brown fox jumps over the lazy dog near the "
-            "river bank tonight")
-    other = ("completely different content about quarterly revenue "
-             "and operating expenses growth")
-    schema = ("doc_id long, ingest_ts timestamp, text string, "
-              "lang string")
-    b1 = [(7, t0, base, "en"),
-          (8, t0 + datetime.timedelta(minutes=1), near, "en"),
-          (9, t0 + datetime.timedelta(minutes=2), other, "en")]
-    b2 = [(99, t0 + datetime.timedelta(hours=3), "late sentinel", "en")]
-    for batch in (b1, b2):
-        spark.createDataFrame(batch, schema).coalesce(1) \
-            .write.mode("append").parquet(inp)
-
-    # sanity: the pair IS a near-dup family under the band arithmetic
-    from parsee_pdf_reader_spark.operators.dedup import (
-        minhash_band_hashes,
-    )
-    from pyspark.sql import functions as F
-    bh = spark.createDataFrame(b1, schema).select(
-        "doc_id", F.explode(minhash_band_hashes("text")).alias("x"))
-    shared = (bh.groupBy("x").count().where("count > 1").count())
-    assert shared >= 1
-
-    q = run_stream_neardup(spark, inp, outp, ck,
-                           max_files_per_trigger=1)
-    q.awaitTermination(180)
-    kept = {r.doc_id for r in spark.read.parquet(outp).collect()}
-    assert 7 in kept, kept        # min doc_id of the family survives
-    assert 8 not in kept, kept    # its same-batch near-dup drops
-    assert 9 in kept, kept        # unrelated doc untouched
-
-
-def test_stream_neardup_audit_side_output(spark, tmp_path):
-    """ADVICE r4: the audit variant routes band-losing docs to a side
-    output (survived=false) instead of silently dropping them, so a
-    false-positive band collision can be re-checked by the batch
-    verifier. Same corpus as the same-batch test: doc 8 loses >=1
-    band to doc 7 and must surface with survived=false."""
-    import datetime
-
-    from parsee_pdf_reader_spark.streaming.incremental import (
-        stream_dedup_neardup_audit,
-    )
-
-    inp = os.path.join(str(tmp_path), "docs_stream")
-    outp = os.path.join(str(tmp_path), "audit")
-    ck = os.path.join(str(tmp_path), "ck")
-    os.makedirs(inp)
-    t0 = datetime.datetime(2025, 6, 1, 10, 0, 0)
-    base = ("the quick brown fox jumps over the lazy dog near the "
-            "river bank today")
-    near = ("the quick brown fox jumps over the lazy dog near the "
-            "river bank tonight")
-    schema = ("doc_id long, ingest_ts timestamp, text string, "
-              "lang string")
-    b1 = [(7, t0, base, "en"),
-          (8, t0 + datetime.timedelta(minutes=1), near, "en")]
-    b2 = [(99, t0 + datetime.timedelta(hours=3), "late sentinel", "en")]
-    for batch in (b1, b2):
-        spark.createDataFrame(batch, schema).coalesce(1) \
-            .write.mode("append").parquet(inp)
-
-    src = (spark.readStream.schema(schema)
-           .option("maxFilesPerTrigger", "1").parquet(inp))
-    q = (stream_dedup_neardup_audit(src)
-         .writeStream.format("parquet").option("path", outp)
-         .option("checkpointLocation", ck).outputMode("append")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    rows = {r.doc_id: r for r in spark.read.parquet(outp).collect()}
-    assert rows[7].survived and rows[7].n_bands > 0
-    assert 8 in rows and not rows[8].survived, rows.get(8)
-    assert 0 < rows[8].n_bands < rows[7].n_bands
-
-
-def test_stream_extract_to_catalog_table(spark, tmp_path):
-    """r5: the streaming sink dispatches like the batch sink — a table
-    identifier streams through writeStream.toTable (the Iceberg
-    streaming-append path; session catalog in-sandbox)."""
-    from parsee_pdf_reader_spark.sources.synth import (
-        synthesize_pages_df,
-    )
-    from parsee_pdf_reader_spark.streaming.incremental import (
-        stream_extract,
-    )
-
-    inp = os.path.join(str(tmp_path), "pages_in")
-    ck = os.path.join(str(tmp_path), "ck")
-    docs = spark.read.parquet(f"{SF}/documents.parquet") \
-        .where("doc_id < 12")
-    synthesize_pages_df(spark, docs).write.parquet(inp)
-    tbl = "r5_stream_extracted"
-    spark.sql(f"drop table if exists {tbl}")
-    try:
-        q = stream_extract(spark, inp, tbl, ck)
-        q.awaitTermination(180)
-        got = spark.read.table(tbl)
-        assert got.count() > 0
-        assert "extracted_text" in got.columns or "url" in got.columns
-    finally:
-        spark.sql(f"drop table if exists {tbl}")
-
-
 def test_tfidf_builds_without_running_a_job(spark):
     """VERDICT r4 minor: round 4 ran an eager driver-side
     ``docs.count()`` while BUILDING the tfidf DataFrame — one extra
@@ -199,65 +73,6 @@ def test_tfidf_builds_without_running_a_job(spark):
     q_tfidf_top_terms(spark, SF)  # build only, no action
     time.sleep(1.0)  # the status store updates asynchronously
     assert store.executionsCount() - before == 0
-
-
-def test_sink_dispatch_iceberg_vs_parquet(spark, tmp_path):
-    """VERDICT r4 item 6: the production sink path
-    (writeTo().overwritePartitions() against a configured catalog)
-    exists in code behind an explicit, testable dispatch; the sandbox
-    exercises the parquet branch end-to-end and the decision logic for
-    all three cases."""
-    import pytest as _pytest
-
-    from parsee_pdf_reader_spark.pipeline import (
-        resolve_sink, write_partitioned,
-    )
-
-    # path -> parquet branch, real write, hive layout
-    out = os.path.join(str(tmp_path), "sink")
-    df = spark.range(4).selectExpr(
-        "id", "cast(date_add(date'2025-06-01', cast(id % 2 as int)) "
-        "as date) as ds")
-    assert resolve_sink(spark, out) == ("parquet", out)
-    assert write_partitioned(df, spark, out) == "parquet"
-    parts = {p for p in os.listdir(out) if p.startswith("ds=")}
-    assert parts == {"ds=2025-06-01", "ds=2025-06-02"}
-    assert spark.read.parquet(out).count() == 4
-
-    # table ident + configured catalog -> iceberg branch selected
-    spark.conf.set("spark.sql.catalog.lake",
-                   "org.apache.iceberg.spark.SparkCatalog")
-    try:
-        assert resolve_sink(spark, "lake.db.pages") == \
-            ("iceberg", "lake.db.pages")
-    finally:
-        spark.conf.unset("spark.sql.catalog.lake")
-
-    # table ident, NO catalog -> loud error, never a fake parquet dir
-    with _pytest.raises(ValueError, match="no catalog"):
-        resolve_sink(spark, "nocat.db.pages")
-
-
-def test_read_pages_dispatch(spark, tmp_path):
-    """read_pages mirrors the sink dispatch: a path reads parquet, a
-    bare identifier resolves through the catalog (temp view here;
-    Iceberg catalogs resolve the same way), and a bad identifier gets
-    Spark's own not-found error rather than a silent parquet guess."""
-    from pyspark.sql.utils import AnalysisException
-
-    from parsee_pdf_reader_spark.pipeline import read_pages
-
-    p = os.path.join(str(tmp_path), "pages")
-    spark.range(3).write.parquet(p)
-    assert read_pages(spark, p).count() == 3
-    spark.range(5).createOrReplaceTempView("r5_pages_tbl")
-    try:
-        assert read_pages(spark, "r5_pages_tbl").count() == 5
-    finally:
-        spark.catalog.dropTempView("r5_pages_tbl")
-    import pytest as _pytest
-    with _pytest.raises(AnalysisException):
-        read_pages(spark, "no_such_table_r5").collect()
 
 
 def test_dedup_stack_planted_recall(spark, tmp_path):
