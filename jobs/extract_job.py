@@ -37,6 +37,8 @@ def main():
     ap.add_argument("--resume", action="store_true",
                     help="checkpointed per-partition mode")
     args = ap.parse_args()
+    if args.min_rows < 1 or args.min_cols < 1:
+        ap.error("--min-rows and --min-cols must be at least 1")
     if args.resume:
         # the checkpointed run extracts every language with the
         # kernel's defaults, so these flags would have no effect

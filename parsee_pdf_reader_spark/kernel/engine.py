@@ -1766,20 +1766,10 @@ def make_paragraphs(extracted: List[tuple], page_width: int,
 # page / document drivers
 # ---------------------------------------------------------------------------
 
-def _planar(page: codec.Page) -> codec.Page:
-    """``page`` with every text box a :class:`codec.ColumnarBox`: a
-    plain ``Box(KIND_TEXTBOX, lines=...)`` (the pdfminer source,
-    hand-built pages) is converted over its lines."""
-    boxes = [codec.ColumnarBox.from_lines(b.kind, b.lines)
-             if b.kind == codec.KIND_TEXTBOX
-             and not isinstance(b, codec.ColumnarBox) else b
-             for b in page.boxes]
-    if boxes == page.boxes:  # boxes compare by identity
-        return page
-    return codec.Page(page.mediabox, page.natural_text, boxes)
-
-
 def _page_stream(page: codec.Page) -> List[tuple]:
+    """Every source emits its text boxes as :class:`codec.ColumnarBox`
+    (``decode_document``, ``layout_group``); chars and rects pass as
+    single items."""
     stream: List[tuple] = []
     for box in page.boxes:
         if box.kind == codec.KIND_TEXTBOX:
@@ -1822,7 +1812,7 @@ def needs_ocr(page: codec.Page) -> bool:
     if not page.boxes:
         return True
     screened: Dict[int, bool] = {}
-    for box in _planar(page).boxes:
+    for box in page.boxes:
         if box.kind != codec.KIND_TEXTBOX:
             continue
         # a "(cid:" glyph implies a non-whitespace line, so the
@@ -1850,7 +1840,6 @@ def extract_page(page: codec.Page, page_index: int, min_rows: int = 2,
     if min_cols < 1 or min_rows < 1:
         raise ValueError("a table needs at least one column and one row")
     ocr_fired = False
-    page = _planar(page)
     if ocr_engine is not None and (force_ocr or needs_ocr(page)):
         # OCR repair branch (converter.py:105-108): the engine's char
         # stream replaces the page's layout; natural text sidecar is

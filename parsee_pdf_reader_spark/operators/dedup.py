@@ -172,11 +172,11 @@ def minhash_sig_col(shingles):
     ))
 
 
-def text_minhash_sig(text_col: str = "text"):
-    """MinHash signature of a text column: whitespace tokens ->
+def text_minhash_sig():
+    """MinHash signature of the ``text`` column: whitespace tokens ->
     distinct 3-gram shingles -> ``minhash_sig_col``. The one text ->
     signature path of the batch LSH and its streaming twin."""
-    return minhash_sig_col(shingles_col(_toks(text_col), 3))
+    return minhash_sig_col(shingles_col(_toks(), 3))
 
 
 def _band_hash_col(sig, b):
@@ -189,15 +189,14 @@ def _band_hash_col(sig, b):
         F.concat_ws("|", F.slice(sig, b * _BAND_R + 1, _BAND_R))))
 
 
-def minhash_signatures_df(docs, id_col: str = "doc_id",
-                          text_col: str = "text"):
-    """Signature step of the LSH candidate stage: (id, text) ->
+def minhash_signatures_df(docs):
+    """Signature step of the LSH candidate stage: (doc_id, text) ->
     (doc_id, sig), a pure projection (no shuffle), stored: both sides
     of the band self-join read it (one is broadcast, so they share no
     exchange), and the signature would otherwise be evaluated once
     per side."""
-    return materialize(docs.select(F.col(id_col).alias("doc_id"),
-                                   text_minhash_sig(text_col).alias("sig")))
+    return materialize(docs.select("doc_id",
+                                   text_minhash_sig().alias("sig")))
 
 
 def minhash_pairs_df(sigs):
@@ -239,16 +238,16 @@ def minhash_pairs_df(sigs):
     ).distinct()
 
 
-def minhash_band_hashes(text_col: str = "text"):
-    """Array-of-structs column ``[(b, band_hash)] * _BANDS`` for a text
-    column — the SAME signature and band hash as
+def minhash_band_hashes():
+    """Array-of-structs column ``[(b, band_hash)] * _BANDS`` for the
+    ``text`` column — the SAME signature and band hash as
     ``minhash_signatures_df`` + ``minhash_pairs_df``, so the streaming
     twin and the batch LSH can never drift. Used by
     ``streaming.incremental.stream_dedup_neardup``."""
     # sig bound once: the r4 shape re-evaluated the signature (and its
     # 12x shingle recompute) inside every band's lambda — 36 shingle
     # evaluations per row on the streaming path
-    return bind1(text_minhash_sig(text_col), lambda sig: F.transform(
+    return bind1(text_minhash_sig(), lambda sig: F.transform(
         F.sequence(F.lit(0), F.lit(_BANDS - 1)),
         lambda b: F.struct(b.cast("int").alias("b"),
                            _band_hash_col(sig, b).alias("band_hash")),
@@ -1061,8 +1060,7 @@ def _span_union_size(ps, n: int):
         F.transform(ps, lambda p: F.sequence(p, p + n - 1)))))
 
 
-def dup_span_stats_df(docs, n: int = _SPAN_N, id_col: str = "doc_id",
-                      skew_preagg: bool = False):
+def dup_span_stats_df(docs, n: int = _SPAN_N):
     """Per-document duplicated-span coverage: the fraction of a doc's
     tokens lying inside some n-token window that occurs >= 2 times
     corpus-wide (Lee et al.'s exact-substring dedup signal, rebuilt as
@@ -1083,28 +1081,15 @@ def dup_span_stats_df(docs, n: int = _SPAN_N, id_col: str = "doc_id",
     - the final stats join is keyed on ``doc_id``, the same
       partitioning the coverage aggregation just produced.
 
-    ``skew_preagg=True`` is the hot-gram variant: a boilerplate gram
-    present in millions of docs concentrates ALL its (doc, pos, h)
-    rows on one reducer of the count window (WindowExec cannot
-    partial-aggregate — every row of the hot partition lands on, and
-    is sorted by, a single task). The variant replaces the window with
-    a combinable ``groupBy(h).count`` — each map task emits ONE row
-    per distinct gram, so the hot reducer receives at most #tasks rows
-    — followed by an inner join back on ``h`` filtered to ``count >=
-    2`` (non-duplicated grams, the vast majority, drop at the join;
-    probe-side hot keys are AQE-skew-splittable, which a window
-    partition is not). It costs one extra exchange of the gram stream.
-
-    MEASURED crossover (500k docs sharing one boilerplate span,
-    local[32]): the window path still wins at 5x10^5 copies of a
-    single gram (8.5-11.2 s vs 14.8-15.4 s) — a 10^6-row hot
-    partition is cheap for one task, the extra full-stream exchange
-    is not. Keep the default; reach for ``skew_preagg`` only when one
-    gram's occurrence count approaches single-task sort/memory
-    capacity (~10^7-10^8 rows), where the window partition would
-    spill or OOM and no setting can split it. Results are identical
-    (``test_dup_span_stats_preagg_path_identical``, plus the
-    brute-force parity test runs both paths)."""
+    Hot grams: a boilerplate gram present in millions of docs puts
+    ALL its (doc, pos, h) rows on one task of the count window
+    (WindowExec cannot partial-aggregate, and AQE cannot split a
+    window partition). MEASURED (500k docs sharing one boilerplate
+    span, local[32]): this path took 8.5-11.2 s at 5x10^5 copies of a
+    single gram, against 14.8-15.4 s for a combinable ``groupBy(h)``
+    pre-aggregate joined back on ``h`` — a 10^6-row hot partition is
+    cheap for one task, an extra exchange of the whole gram stream is
+    not. Near 10^7-10^8 copies of one gram the hot task spills."""
     from pyspark.sql import Window
 
     toks = F.filter(F.split("text", r"\s+"), lambda x: x != "")
@@ -1124,21 +1109,15 @@ def dup_span_stats_df(docs, n: int = _SPAN_N, id_col: str = "doc_id",
         ),  # short docs -> NULL array -> explode() drops the row
     )
     g = (
-        docs.select(F.col(id_col).alias("doc_id"),
-                    F.explode(gram_arr).alias("g"))
+        docs.select("doc_id", F.explode(gram_arr).alias("g"))
         .select("doc_id", "g.pos", "g.h")
     )
-    if skew_preagg:
-        cnt = (g.groupBy("h").agg(F.count(F.lit(1)).alias("c"))
-               .where(F.col("c") >= 2))
-        dupg = g.join(cnt.hint("shuffle_hash"), "h")
-    else:
-        dupg = (
-            g.select(
-                "doc_id", "pos",
-                F.count("*").over(Window.partitionBy("h")).alias("c"))
-            .where(F.col("c") >= 2)
-        )
+    dupg = (
+        g.select(
+            "doc_id", "pos",
+            F.count("*").over(Window.partitionBy("h")).alias("c"))
+        .where(F.col("c") >= 2)
+    )
     pos_lists = F.collect_list("pos")
     cov = (
         dupg.groupBy("doc_id")
@@ -1146,8 +1125,7 @@ def dup_span_stats_df(docs, n: int = _SPAN_N, id_col: str = "doc_id",
         .select("doc_id",
                 _span_union_size(F.col("ps"), n).alias("dup_tokens"))
     )
-    base = docs.select(F.col(id_col).alias("doc_id"),
-                       F.size(toks).alias("n_tokens"))
+    base = docs.select("doc_id", F.size(toks).alias("n_tokens"))
     dup_tokens = F.coalesce("dup_tokens", F.lit(0))
     return base.join(cov, "doc_id", "left").select(
         "doc_id",
@@ -1173,7 +1151,7 @@ def q_dup_span_stats(spark, sf_dir, docs=None):
 _IDX_SPLIT = 250  # gate instantiation: history = doc_id < 250
 
 
-def band_index_df(docs, id_col: str = "doc_id"):
+def band_index_df(docs):
     """The materializable LSH band index of a historical corpus: one
     row per (b, band_hash, doc_id) — exactly the claim keys the
     streaming path uses, as a durable batch table. Production writes
@@ -1181,14 +1159,13 @@ def band_index_df(docs, id_col: str = "doc_id"):
     ``band_hash``) and every incremental crawl joins against it
     without re-hashing history."""
     return (docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(minhash_band_hashes("text")).alias("bh"))
+        "doc_id", F.explode(minhash_band_hashes()).alias("bh"))
         .select(F.col("bh.b").alias("b"),
                 F.col("bh.band_hash").alias("band_hash"),
                 "doc_id"))
 
 
-def dedup_against_index(new_docs, index_df, id_col: str = "doc_id"):
+def dedup_against_index(new_docs, index_df):
     """Incremental batch dedup: flag every NEW document that shares at
     least one LSH band with the historical index (the batch twin of
     the streaming min-claim — same band arithmetic, so a doc the
@@ -1207,14 +1184,14 @@ def dedup_against_index(new_docs, index_df, id_col: str = "doc_id"):
     impossible), and a viral band bucket is then a PROBE-side hot
     key, which AQE's skew split can divide. The per-new-doc
     aggregation is combinable."""
-    nb = band_index_df(new_docs, id_col).select(
+    nb = band_index_df(new_docs).select(
         "b", "band_hash", F.col("doc_id").alias("new_id"))
     hits = (nb.hint("shuffle_hash").join(index_df,
                     ["b", "band_hash"])
             .groupBy("new_id")
             .agg(F.count_distinct("b").alias("n_hit_bands"),
                  F.min("doc_id").alias("matched_doc")))
-    base = new_docs.select(F.col(id_col).alias("doc_id"))
+    base = new_docs.select("doc_id")
     return (base.join(hits, base.doc_id == hits.new_id, "left")
             .select(
                 "doc_id",

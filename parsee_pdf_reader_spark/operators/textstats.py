@@ -1181,7 +1181,7 @@ def _lm_score_sql() -> str:
     """
 
 
-def ngram_lm_score_df(docs, id_col: str = "doc_id", train_df=None):
+def ngram_lm_score_df(docs, train_df=None):
     """Per-document mean bigram log-probability under an add-1-smoothed
     bigram model trained on the corpus itself — the deterministic
     stand-in for CCNet's KenLM perplexity filter (no model binary in
@@ -1238,8 +1238,7 @@ def ngram_lm_score_df(docs, id_col: str = "doc_id", train_df=None):
     )
 
     def bigrams(df):
-        return (df.select(F.col(id_col).alias("doc_id"),
-                          F.explode(big_arr).alias("g"))
+        return (df.select("doc_id", F.explode(big_arr).alias("g"))
                 .select("doc_id", "g.w1", "g.w2"))
 
     train = train_df if train_df is not None else docs
@@ -1263,7 +1262,7 @@ def ngram_lm_score_df(docs, id_col: str = "doc_id", train_df=None):
         F.count(F.lit(1)).alias("n_bigrams"),
         F.round(F.sum("lp").cast("double") / F.count(F.lit(1)), 6)
         .alias("avg_logprob"))
-    base = docs.select(F.col(id_col).alias("doc_id"))
+    base = docs.select("doc_id")
     return base.join(scored, "doc_id", "left").select(
         "doc_id",
         F.coalesce("n_bigrams", F.lit(0)).cast("bigint")

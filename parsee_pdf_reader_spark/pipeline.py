@@ -109,9 +109,13 @@ def extract_pages(pages_df: DataFrame, min_rows: int = 2, min_cols: int = 1,
     it on every page, otherwise only where ``needs_ocr`` fires.
 
     A shuffle-free Arrow-batched map (:func:`map_documents`); the
-    kernel is the only Python stage in the plan."""
+    kernel is the only Python stage in the plan. A threshold below 1
+    raises here, before the map is built: inside the map it would turn
+    every document into an error row."""
     from functools import partial
 
+    if min_cols < 1 or min_rows < 1:
+        raise ValueError("a table needs at least one column and one row")
     return map_documents(page_columns(pages_df), EXTRACT_SCHEMA, partial(
         _doc_to_rows, min_rows=min_rows, min_cols=min_cols,
         ocr_engine=ocr_engine, force_ocr=force_ocr))
@@ -184,8 +188,11 @@ def tables_df_format(extracted_df: DataFrame) -> DataFrame:
     )
 
 
-def rebalance_by_size(pages_df: DataFrame, partitions: int,
-                      oversized_bytes: int = 8 << 20) -> DataFrame:
+#: documents above this many bytes get their own partition key range
+OVERSIZED_BYTES = 8 << 20
+
+
+def rebalance_by_size(pages_df: DataFrame, partitions: int) -> DataFrame:
     """Explicit skew control ahead of the kernel (north_rule: 'explicit
     salting of skewed hosts').
 
@@ -195,8 +202,8 @@ def rebalance_by_size(pages_df: DataFrame, partitions: int,
 
     - normal documents spread over ``partitions`` keys via
       ``xxhash64(url)`` — uniform regardless of host skew;
-    - oversized documents (multi-hundred-page tails) get their own
-      ``partitions // 8`` key range.
+    - oversized documents (over ``OVERSIZED_BYTES``: multi-hundred-page
+      tails) get their own ``partitions // 8`` key range.
 
     Isolation of giants is PROBABILISTIC, not guaranteed (ADVICE r2):
     ``repartition(n, key)`` places rows by ``pmod(hash(key), n)``, so a
@@ -213,7 +220,7 @@ def rebalance_by_size(pages_df: DataFrame, partitions: int,
     size = F.octet_length(F.col("html"))
     giant_slots = max(1, partitions // 8)
     key = (
-        F.when(size > oversized_bytes,
+        F.when(size > OVERSIZED_BYTES,
                F.pmod(F.xxhash64("url", F.lit("g")), F.lit(giant_slots)))
         .otherwise(F.lit(giant_slots)
                    + F.pmod(F.xxhash64("url"), F.lit(partitions)))
@@ -263,9 +270,8 @@ def resolve_sink(spark, target: str):
         "the parquet sink")
 
 
-def write_partitioned(df: DataFrame, spark, target: str,
-                      partition_col: str = "ds") -> str:
-    """Write the extraction output partitioned by ``partition_col``,
+def write_partitioned(df: DataFrame, spark, target: str) -> str:
+    """Write the extraction output partitioned by its ``ds`` column,
     dispatching on :func:`resolve_sink`. Returns the branch taken.
 
     - iceberg branch: ``writeTo(ident).overwritePartitions()`` —
@@ -282,7 +288,7 @@ def write_partitioned(df: DataFrame, spark, target: str,
         df.writeTo(ident).overwritePartitions()
     else:
         (df.write.mode("overwrite")
-         .partitionBy(partition_col).parquet(ident))
+         .partitionBy("ds").parquet(ident))
     return kind
 
 

@@ -1,11 +1,11 @@
 """Minimal pure-stdlib PDF text+position decoder.
 
-The production parse path (``pdf_source.py``) uses pdfminer, which is
-absent in this container — so the reference's own fixture PDFs
-(``/root/reference/tests/files/form10k20231230.pdf``, ``bayer1.pdf``,
-pinned by ``tests/integration_tests.py:4-31``) could never be
-exercised. This module closes that gap with a from-scratch reader of
-the public PDF 1.x spec (ISO 32000), sufficient for real-world text
+The engine's only %PDF parser: ``kernel.engine.extract_document``
+hands every ``%PDF-`` blob to :func:`parse_pdf_mini`. It needs no
+pdfminer and runs the reference's own fixture PDFs
+(``form10k20231230.pdf`` and ``bayer1.pdf``, pinned by the reference's
+``tests/integration_tests.py:4-31``). A from-scratch reader of the
+public PDF 1.x spec (ISO 32000), sufficient for real-world text
 PDFs:
 
 - classic xref tables AND cross-reference streams (/XRef, PNG

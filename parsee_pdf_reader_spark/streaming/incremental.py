@@ -28,12 +28,13 @@ def stream_extract(spark: SparkSession, input_dir: str, target: str,
                    checkpoint_dir: str, available_now: bool = True):
     """Incremental extraction over a growing parquet directory.
 
-    ``target`` dispatches like the batch sink (``pipeline.
-    write_partitioned``): a path appends parquet files; a table
-    identifier streams into the catalog table via ``toTable`` — on
-    Iceberg that is the transactional streaming-append path (each
-    micro-batch commits a snapshot), in-sandbox it exercises the same
-    code against the session catalog."""
+    ``target`` is a path (``/`` or a URI scheme), which appends
+    parquet files, or else a table identifier, which streams into the
+    catalog table via ``toTable`` — on Iceberg the transactional
+    streaming-append path (each micro-batch commits a snapshot). Unlike
+    the batch sink (``pipeline.resolve_sink``) no catalog check runs
+    first: an identifier whose catalog is not configured goes to
+    ``toTable`` as is."""
     src = (
         spark.readStream.schema(PAGES_DDL)
         .option("maxFilesPerTrigger", "16")
@@ -131,8 +132,7 @@ def run_stream_dedup(spark: SparkSession, input_dir: str,
 
 def stream_dedup_neardup(docs: DataFrame,
                          watermark: str = "1 hour",
-                         window: str = "5 minutes",
-                         keep_payload: bool = False) -> DataFrame:
+                         window: str = "5 minutes") -> DataFrame:
     """Streaming MinHash near-dup filter (VERDICT r3 item 8) — the
     incremental twin of the batch ``dedup_minhash_lsh`` candidates:
 
@@ -140,7 +140,7 @@ def stream_dedup_neardup(docs: DataFrame,
        exact arithmetic of ``operators.dedup.minhash_band_hashes``);
     2. a watermarked tumbling-window aggregation resolves every band
        bucket (window, b, band_hash) to ONE winner — ``min(struct(
-       doc_id, text))``, i.e. the smallest doc_id that touched the
+       doc_id))``, i.e. the smallest doc_id that touched the
        bucket anywhere in the window, regardless of arrival order,
        batch boundaries, or shuffle-partition interleaving. State is
        O(band buckets per window), evicted as the watermark advances,
@@ -177,62 +177,48 @@ def stream_dedup_neardup(docs: DataFrame,
     - chains A<B<C where B loses a bucket to A but still out-claims C
       drop both B and C — conservative transitive behavior, same as
       the batch canonical-per-cluster policy.
-    - state (VERDICT r5 item 5 — payload-free claims are the DEFAULT):
-      with ``keep_payload=False`` a bucket claim is ``min(doc_id)``
-      alone, so claim state is O(bands × 8 bytes) per live bucket —
-      document size never enters the state store. The sink then holds
-      (window_start, doc_id) survivor keys; payloads are re-joined
-      downstream from the raw store (:func:`rejoin_payload`, a batch
-      doc_id equi-join, the shape production uses anyway because the
-      raw corpus is already durable). ``keep_payload=True`` restores
-      the r5 behavior (winner text rides the claim, O(bands × doc
-      bytes) state) for small-document streams that want a
-      single-query sink.
+    - state: a bucket claim is ``min(doc_id)`` alone, so claim state
+      is O(bands × 8 bytes) per live bucket — document size never
+      enters the state store. The output holds (window_start, doc_id)
+      survivor keys; payloads are re-joined from the raw store, in
+      batch (:func:`rejoin_payload`) or in the same query
+      (:func:`run_stream_neardup_rejoined`).
     """
-    counted = _neardup_band_counts(docs, watermark, window,
-                                   keep_payload=keep_payload)
     from parsee_pdf_reader_spark.operators.dedup import _BANDS
 
-    cols = ["window_start", "doc_id"] + (["text"] if keep_payload
-                                         else [])
+    counted = _neardup_band_counts(docs, watermark, window)
     return (counted.where(F.col("n_bands") == _BANDS)
-            .select(*cols))
+            .select("window_start", "doc_id"))
 
 
 def _neardup_band_counts(docs: DataFrame, watermark: str,
-                         window: str,
-                         keep_payload: bool = False) -> DataFrame:
-    """Shared claims core of the two near-dup stream variants:
-    explode to bands, min-claim each (window, b, band_hash) bucket,
-    count winning bands per doc -> (window_start, doc_id, [text,]
-    n_bands). ``keep_payload`` controls whether the winner's text
-    rides the claim state (see ``stream_dedup_neardup``); min() over
-    struct(doc_id, ...) orders by doc_id first either way, so the
-    SAME winner is chosen on both paths."""
+                         window: str) -> DataFrame:
+    """Shared claims core of the filter and the audit stream: explode
+    to bands, min-claim each (window, b, band_hash) bucket, count
+    winning bands per doc -> (window_start, doc_id, n_bands). The
+    claim is ``min(struct(doc_id))``, the state schema existing stream
+    checkpoints hold."""
     from parsee_pdf_reader_spark.operators.dedup import (
         minhash_band_hashes,
     )
 
-    payload_cols = ["text"] if keep_payload else []
     banded = docs.select(
-        "doc_id", "ingest_ts", *payload_cols,
-        F.explode(minhash_band_hashes("text")).alias("bh"),
-    ).select("doc_id", "ingest_ts", *payload_cols,
+        "doc_id", "ingest_ts",
+        F.explode(minhash_band_hashes()).alias("bh"),
+    ).select("doc_id", "ingest_ts",
              F.col("bh.b").alias("b"),
              F.col("bh.band_hash").alias("band_hash"))
     claims = (
         banded.withWatermark("ingest_ts", watermark)
         .groupBy(F.window("ingest_ts", window).alias("w"),
                  "b", "band_hash")
-        .agg(F.min(F.struct("doc_id", *payload_cols)).alias("winner"))
+        .agg(F.min(F.struct("doc_id")).alias("winner"))
     )
-    group_cols = [F.col(f"winner.{c}").alias(c)
-                  for c in ["doc_id", *payload_cols]]
     return (
-        claims.groupBy("w", *group_cols)
+        claims.groupBy("w", F.col("winner.doc_id").alias("doc_id"))
         .agg(F.count(F.lit(1)).alias("n_bands"))
         .select(F.col("w.start").alias("window_start"),
-                "doc_id", *payload_cols, "n_bands")
+                "doc_id", "n_bands")
     )
 
 
@@ -241,9 +227,9 @@ def rejoin_payload(survivors: DataFrame, docs: DataFrame) -> DataFrame:
     (window_start, doc_id) from the payload-free stream joined back to
     the durable raw corpus. One doc_id equi-join — docs are unique per
     doc_id upstream, and the raw store a production pipeline ingests
-    from is already durable, so this recovers exactly the winner
-    payloads the r5 payload-carrying stream emitted, without ever
-    putting document bytes in streaming state."""
+    from is already durable, so this recovers exactly the winners'
+    payloads without ever putting document bytes in streaming
+    state."""
     return survivors.join(docs.select("doc_id", "text"), "doc_id") \
         .select("window_start", "doc_id", "text")
 
@@ -317,9 +303,9 @@ def run_stream_neardup_rejoined(spark: SparkSession, input_dir: str,
                                 max_files_per_trigger: int = 4):
     """availableNow drain of the FULL slim near-dup topology: payload-
     free min-claim dedup chained into the stream-stream payload rejoin
-    (:func:`stream_rejoin_payload`) in one query. The sink gets the
-    same (window_start, doc_id, text) rows the r5 payload-carrying
-    stream produced, while claim state stays O(bands x 8 bytes) and
+    (:func:`stream_rejoin_payload`) in one query. The sink gets
+    (window_start, doc_id, text) rows, the batch
+    :func:`rejoin_payload` result, while claim state stays O(bands x 8 bytes) and
     join state is watermark-bounded raw rows."""
     schema = ("doc_id long, ingest_ts timestamp, text string, "
               "lang string")
@@ -343,8 +329,7 @@ def run_stream_neardup_rejoined(spark: SparkSession, input_dir: str,
 
 def stream_dedup_neardup_audit(docs: DataFrame,
                                watermark: str = "1 hour",
-                               window: str = "5 minutes",
-                               keep_payload: bool = False) -> DataFrame:
+                               window: str = "5 minutes") -> DataFrame:
     """Audit variant of ``stream_dedup_neardup`` (ADVICE r4): emits
     EVERY doc that won at least one bucket with its winning-band count
     and a ``survived`` verdict, instead of silently filtering losers.
@@ -358,28 +343,25 @@ def stream_dedup_neardup_audit(docs: DataFrame,
     backstop, which is how LSH dedup is deployed anyway.)"""
     from parsee_pdf_reader_spark.operators.dedup import _BANDS
 
-    counted = _neardup_band_counts(docs, watermark, window,
-                                   keep_payload=keep_payload)
-    cols = ["window_start", "doc_id"] + (["text"] if keep_payload
-                                         else [])
+    counted = _neardup_band_counts(docs, watermark, window)
     return counted.select(
-        *cols, "n_bands",
+        "window_start", "doc_id", "n_bands",
         (F.col("n_bands") == _BANDS).alias("survived"))
 
 
 def run_stream_neardup(spark: SparkSession, input_dir: str,
                        output_dir: str, checkpoint_dir: str,
-                       max_files_per_trigger: int = 4,
-                       keep_payload: bool = False):
+                       max_files_per_trigger: int = 4):
     """availableNow drain of the near-dup stream over a parquet dir.
     Append mode: a window's survivors land once the watermark passes
     its end (late data earlier than the watermark is ignored by
     design). ``max_files_per_trigger`` sets the micro-batch grain;
     batch grouping does NOT change the outcome — bucket claims are
     min(doc_id)-per-window, arrival-order-free (see
-    ``stream_dedup_neardup``). The default sink is the slim
-    (window_start, doc_id) survivor-key table; recover payloads with
-    :func:`rejoin_payload` against the raw input dir."""
+    ``stream_dedup_neardup``). The sink is the slim (window_start,
+    doc_id) survivor-key table; recover payloads with
+    :func:`rejoin_payload` against the raw input dir, or run
+    :func:`run_stream_neardup_rejoined` for a sink with the text."""
     src = (
         spark.readStream
         .schema("doc_id long, ingest_ts timestamp, text string, "
@@ -387,7 +369,7 @@ def run_stream_neardup(spark: SparkSession, input_dir: str,
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(input_dir)
     )
-    out = stream_dedup_neardup(src, keep_payload=keep_payload)
+    out = stream_dedup_neardup(src)
     return (
         out.writeStream.format("parquet")
         .option("path", output_dir)

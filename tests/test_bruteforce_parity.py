@@ -60,13 +60,10 @@ def test_dup_span_stats_matches_bruteforce(spark):
     fracs = {v[2] for v in expect.values()}
     assert any(0.0 < f < 1.0 for f in fracs), fracs
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    for preagg in (False, True):
-        got = {r.doc_id: (r.n_tokens, r.dup_tokens, r.dup_frac)
-               for r in dup_span_stats_df(
-                   df, n=n, skew_preagg=preagg).collect()}
-        assert got == expect, (preagg,
-                               {k: (got[k], expect[k]) for k in got
-                                if got[k] != expect[k]})
+    got = {r.doc_id: (r.n_tokens, r.dup_tokens, r.dup_frac)
+           for r in dup_span_stats_df(df, n=n).collect()}
+    assert got == expect, {k: (got[k], expect[k]) for k in got
+                           if got[k] != expect[k]}
 
 
 def _brute_lm(docs):

@@ -57,3 +57,34 @@ def test_v2_handles_none_natural_text_and_empty_pages():
     blob = codec.encode_document_v2([pg])
     back = codec.decode_document(blob)
     assert back[0].natural_text is None and back[0].boxes == []
+
+
+def test_sources_emit_columnar_text_boxes():
+    """The kernel reads a text box only through its planes, so every
+    source must emit ``KIND_TEXTBOX`` boxes as ``ColumnarBox``: PLD1
+    and PLD2 decodes, and the grouped %PDF parse under every content
+    stream filter and with an xref stream. The ungrouped %PDF parse
+    emits its text as ``KIND_CHARS`` only."""
+    from parsee_pdf_reader_spark.sources import synth
+    from parsee_pdf_reader_spark.sources.pdf_mini import parse_pdf_mini
+
+    def text_boxes(pages):
+        boxes = [b for p in pages for b in p.boxes
+                 if b.kind == codec.KIND_TEXTBOX]
+        assert boxes
+        return boxes
+
+    for blob in _blobs(10):
+        pld1 = codec.encode_document(codec.decode_document(blob))
+        assert (blob[:4], pld1[:4]) == (codec.MAGIC2, codec.MAGIC)
+        for b in (blob, pld1):
+            assert all(isinstance(x, codec.ColumnarBox)
+                       for x in text_boxes(codec.decode_document(b)))
+    pdfs = [synth.build_pdf_document("p0", 42, stream_filter=f)
+            for f in (None, *synth.PDF_STREAM_FILTERS)]
+    pdfs.append(synth.build_pdf_document("x0", 7, xref_kind="stream"))
+    for pdf in pdfs:
+        assert all(isinstance(x, codec.ColumnarBox)
+                   for x in text_boxes(parse_pdf_mini(pdf)))
+        raw = parse_pdf_mini(pdf, group=False)
+        assert {b.kind for p in raw for b in p.boxes} == {codec.KIND_CHARS}

@@ -103,7 +103,8 @@ def test_needs_ocr_predicate():
         chars = [codec.Char(10 + 5 * i, 14 + 5 * i, 700, 710, 10.0, False,
                             t) for i, t in enumerate(texts)]
         return codec.Page((0, 0, 612, 792), None,
-                          [codec.Box(codec.KIND_TEXTBOX, lines=[chars])])
+                          [codec.ColumnarBox.from_lines(
+                              codec.KIND_TEXTBOX, [chars])])
 
     assert needs_ocr(codec.Page((0, 0, 612, 792), None, []))
     assert not needs_ocr(page_of(list("hello")))
@@ -111,7 +112,7 @@ def test_needs_ocr_predicate():
     # whitespace-only lines don't count
     assert not needs_ocr(codec.Page(
         (0, 0, 612, 792), None,
-        [codec.Box(codec.KIND_TEXTBOX, lines=[[codec.Char(
+        [codec.ColumnarBox.from_lines(codec.KIND_TEXTBOX, [[codec.Char(
             0, 4, 700, 710, 10.0, False, " ")]])]))
 
 

@@ -198,12 +198,3 @@ def test_tesseract_engine_is_gated():
     with pytest.raises(NotImplementedError):
         TesseractOcrEngine()
 
-
-def test_pdf_source_is_gated():
-    from parsee_pdf_reader_spark.sources.pdf_source import (
-        parse_pdf_bytes,
-        pdf_available,
-    )
-
-    assert not pdf_available()  # fake shim modules must not count
-    assert parse_pdf_bytes(b"%PDF-1.4 ...") is None

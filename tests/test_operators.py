@@ -700,3 +700,122 @@ def test_media_byte_features_against_pure_python(spark, tmp_path):
         assert abs(g.mean_byte - round(sum(b) / n, 4)) < 1e-9
         assert abs(g.distinct_ratio - round(len(counts) / n, 6)) < 1e-9
         assert abs(g.entropy - ent) < 2e-6, (g.entropy, ent)
+
+
+def test_dup_span_stats_planted_spans(spark):
+    """Plant a shared 18-token span across two docs: 3 overlapping
+    duplicated 16-gram windows must union to EXACTLY 18 covered tokens
+    in each (not 3*16); an all-unique doc and a sub-window doc report
+    zero; an internally-repeated doc is fully covered."""
+    from parsee_pdf_reader_spark.operators.dedup import (
+        _SPAN_N, dup_span_stats_df,
+    )
+
+    assert _SPAN_N == 16  # planted geometry below assumes this
+    span = " ".join(f"s{i}" for i in range(18))
+    phrase = " ".join(f"p{i}" for i in range(16))
+    rows = [
+        # shared 18-token span + 4 unique -> 18/22 covered
+        (1, span + " u1 u2 u3 u4"),
+        # same span, different padding -> 18/24 covered
+        (2, "v1 v2 v3 " + span + " v4 v5 v6"),
+        # 30 unique tokens -> nothing duplicated
+        (3, " ".join(f"w{i}" for i in range(30))),
+        # shorter than one window -> no grams, zero coverage
+        (4, "x1 x2 x3 x4 x5"),
+        # one 16-token phrase repeated back-to-back: windows at pos 0
+        # and 16 collide (within a single doc), covering all 32 tokens
+        (5, phrase + " " + phrase),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    out = {r.doc_id: r for r in dup_span_stats_df(docs).collect()}
+    assert len(out) == 5
+    assert (out[1].n_tokens, out[1].dup_tokens) == (22, 18)
+    assert (out[2].n_tokens, out[2].dup_tokens) == (24, 18)
+    assert out[1].dup_frac == round(18 / 22, 6)
+    assert (out[3].dup_tokens, out[4].dup_tokens) == (0, 0)
+    assert (out[5].n_tokens, out[5].dup_tokens, out[5].dup_frac) == \
+        (32, 32, 1.0)
+
+
+def test_ngram_lm_score_ranks_ood_text_lower(spark):
+    """The corpus-trained bigram LM must rank in-distribution text
+    (bigrams the corpus repeats) above out-of-distribution gibberish
+    (every bigram unseen elsewhere), and a doc with <2 tokens gets the
+    zero-bigram sentinel row."""
+    from parsee_pdf_reader_spark.operators.textstats import (
+        ngram_lm_score_df,
+    )
+
+    common = "the quick brown fox jumps over the lazy dog"
+    rows = ([(i, common) for i in range(1, 9)]
+            + [(20, "zxq vnm plw qrt bbk jjw ooz yyx mmv ccd"),
+               (21, "single")])
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    out = {r.doc_id: r for r in ngram_lm_score_df(docs).collect()}
+    assert len(out) == 10
+    # repeated-phrase docs: every bigram has count 8 -> high logprob
+    assert out[1].avg_logprob > out[20].avg_logprob
+    assert out[1].n_bigrams == 8 and out[20].n_bigrams == 9
+    assert out[21].n_bigrams == 0 and out[21].avg_logprob == 0.0
+    # all identical docs share one score
+    assert len({out[i].avg_logprob for i in range(1, 9)}) == 1
+
+
+def test_ngram_lm_score_separate_training_corpus(spark):
+    """train_df separates training from scoring (the decontam_against
+    pattern): a doc made of reference-corpus phrases outscores a doc
+    of bigrams the reference never saw (which backs off to the add-1
+    floor), and the self-train default is unchanged by the refactor."""
+    from parsee_pdf_reader_spark.operators.textstats import (
+        ngram_lm_score_df,
+    )
+
+    ref_phrase = "the quick brown fox jumps over the lazy dog"
+    train = spark.createDataFrame(
+        [(i, ref_phrase) for i in range(100, 108)],
+        "doc_id long, text string")
+    docs = spark.createDataFrame(
+        [(1, ref_phrase), (2, "zxq vnm plw qrt bbk jjw ooz yyx")],
+        "doc_id long, text string")
+    out = {r.doc_id: r for r in
+           ngram_lm_score_df(docs, train_df=train).collect()}
+    assert out[1].avg_logprob > out[2].avg_logprob
+    # unseen bigrams hit the add-1 floor exactly: ln(1 / (0 + V))
+    import math
+    v = 8  # distinct tokens in the reference phrase
+    assert out[2].avg_logprob == round(math.log(1.0 / v), 6)
+
+
+def test_dedup_against_index_flags_history_matches(spark):
+    """Incremental cross-corpus dedup: a new doc that near-duplicates
+    a history doc (one trailing word changed — shares >=1 LSH band)
+    must be flagged with the history canonical as matched_doc; a
+    genuinely new doc passes as is_new."""
+    from parsee_pdf_reader_spark.operators.dedup import (
+        band_index_df, dedup_against_index,
+    )
+
+    base = ("the quick brown fox jumps over the lazy dog near the "
+            "river bank today")
+    near = ("the quick brown fox jumps over the lazy dog near the "
+            "river bank tonight")
+    fresh = ("annual shareholder meeting scheduled for june with "
+             "board election and audit review")
+    hist = spark.createDataFrame(
+        [(1, base), (2, "unrelated history content about mountain "
+                        "weather and snowfall records")],
+        "doc_id long, text string")
+    new = spark.createDataFrame(
+        [(10, near), (11, fresh), (12, base)],
+        "doc_id long, text string")
+    out = {r.doc_id: r for r in
+           dedup_against_index(new, band_index_df(hist)).collect()}
+    assert len(out) == 3
+    assert not out[10].is_new and out[10].matched_doc == 1
+    assert out[10].n_hit_bands >= 1
+    # exact replay hits all bands and matches its history copy
+    assert not out[12].is_new and out[12].matched_doc == 1
+    from parsee_pdf_reader_spark.operators.dedup import _BANDS
+    assert out[12].n_hit_bands == _BANDS
+    assert out[11].is_new and out[11].matched_doc is None

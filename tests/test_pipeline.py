@@ -130,7 +130,7 @@ def test_rebalance_spreads_skewed_hosts_and_giants(spark):
     for i in range(400):  # one hot host, tiny docs
         rows.append((f"https://hot.example/d{i}", None,
                      b"PLD2" + bytes(200), "t", "en"))
-    for i in range(4):    # giants (> oversized_bytes)
+    for i in range(4):    # giants (> OVERSIZED_BYTES)
         rows.append((f"https://big.example/g{i}", None,
                      b"PLD2" + bytes(9 << 20), "t", "en"))
     pdf = pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text",
@@ -369,6 +369,29 @@ def test_extract_pages_ocr_engine_through_spark(spark):
     assert len(rows) == 1
     assert rows[0].ocr_needed is False  # repaired
     assert "Rescued" in rows[0].extracted_text
+
+
+@pytest.mark.parametrize("thresholds", [{"min_rows": 0}, {"min_cols": 0}])
+def test_extract_pages_rejects_table_threshold_below_one(spark,
+                                                         thresholds):
+    """A threshold below 1 raises before the map is built and no Spark
+    job runs; inside the map every document would become an error
+    row."""
+    df = spark.createDataFrame(
+        [("u1", None, bytearray(b"PLD2"), None, "en")],
+        "url string, warc_ts timestamp, html binary, text string, "
+        "lang string")
+    sc = spark.sparkContext
+    group = "bad_table_threshold"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="at least one column"):
+            extract_pages(df, **thresholds)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_mixed_corpus_single_pipeline(spark):
@@ -947,10 +970,9 @@ def test_read_pages_dispatch(spark, tmp_path):
         read_pages(spark, "no_such_table_r5").collect()
 
 
-def test_extract_job_resume_rejects_ignored_flags(monkeypatch, capsys):
-    """``--resume`` runs the checkpointed extraction over every language
-    with the kernel's defaults, so a flag it would ignore is an
-    argument error, raised before any Spark session starts."""
+def _run_extract_job(monkeypatch, *flags):
+    """Run ``jobs/extract_job.py`` on ``flags``; starting a Spark
+    session fails the test."""
     import importlib.util
 
     from parsee_pdf_reader_spark import session
@@ -963,9 +985,56 @@ def test_extract_job_resume_rejects_ignored_flags(monkeypatch, capsys):
     monkeypatch.setattr(session, "get_spark",
                         lambda *a, **k: pytest.fail("a session started"))
     monkeypatch.setattr(sys, "argv", [
-        "extract_job.py", "--input", "in", "--output", "out",
-        "--resume", "--lang", "en"])
+        "extract_job.py", "--input", "in", "--output", "out", *flags])
+    job.main()
+
+
+def test_extract_job_resume_rejects_ignored_flags(monkeypatch, capsys):
+    """``--resume`` runs the checkpointed extraction over every language
+    with the kernel's defaults, so a flag it would ignore is an
+    argument error, raised before any Spark session starts."""
     with pytest.raises(SystemExit) as exc:
-        job.main()
+        _run_extract_job(monkeypatch, "--resume", "--lang", "en")
     assert exc.value.code == 2
     assert "--resume ignores --lang" in capsys.readouterr().err
+
+
+def test_extract_job_rejects_table_threshold_below_one(monkeypatch,
+                                                       capsys):
+    """``--min-cols 0`` is an argument error, raised before any Spark
+    session starts."""
+    with pytest.raises(SystemExit) as exc:
+        _run_extract_job(monkeypatch, "--min-cols", "0")
+    assert exc.value.code == 2
+    assert "--min-cols must be at least 1" in capsys.readouterr().err
+
+
+def test_run_extraction_readback_uses_read_pages(spark, tmp_path,
+                                                 monkeypatch):
+    import parsee_pdf_reader_spark.pipeline as pl
+    from parsee_pdf_reader_spark.sources.synth import (
+        synthesize_pages_df,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(8)
+    pages = synthesize_pages_df(spark, docs)
+    inp = os.path.join(str(tmp_path), "pages_in")
+    pages.withColumn(
+        "warc_ts",
+        F.coalesce("warc_ts",
+                   F.lit("2025-06-01 00:00:00").cast("timestamp"))) \
+        .write.parquet(inp)
+    outp = os.path.join(str(tmp_path), "pages_out")
+
+    calls = []
+    real = pl.read_pages
+
+    def spy(spark_, source):
+        calls.append(source)
+        return real(spark_, source)
+
+    monkeypatch.setattr(pl, "read_pages", spy)
+    got = pl.run_extraction(spark, inp, outp)
+    # read_pages served both the source AND the readback
+    assert calls == [inp, outp]
+    assert got.count() > 0

@@ -11,17 +11,13 @@ Covered:
   mask consistency).
 - item 4: decontam_against takes the benchmark suite as a second
   DataFrame.
-- item 5: payload-free streaming claims are the default; batch
-  payload rejoin recovers winner text.
 - item 7: the two table-gate rows share one extraction (cells cache).
-- ADVICE medium: run_extraction readback goes through read_pages.
 """
 
 import os
 import sys
 
 import pytest
-from pyspark.sql import functions as F
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO not in sys.path:
@@ -186,98 +182,6 @@ def test_decontam_against_separate_benchmark_table(spark):
 
 
 # ---------------------------------------------------------------------------
-# item 5: payload-free streaming claims + batch rejoin
-# ---------------------------------------------------------------------------
-
-def test_stream_neardup_slim_state_and_payload_rejoin(spark, tmp_path):
-    """Default near-dup stream output carries NO text column (claims
-    are min(doc_id) only); rejoin_payload recovers exactly the winner
-    payloads from the durable raw store. keep_payload=True restores
-    the r5 single-query shape with the SAME survivor set."""
-    import datetime
-
-    from parsee_pdf_reader_spark.streaming.incremental import (
-        rejoin_payload, run_stream_neardup,
-    )
-
-    inp = os.path.join(str(tmp_path), "docs_stream")
-    outp = os.path.join(str(tmp_path), "neardup")
-    ck = os.path.join(str(tmp_path), "ck")
-    outp2 = os.path.join(str(tmp_path), "neardup_fat")
-    ck2 = os.path.join(str(tmp_path), "ck_fat")
-    os.makedirs(inp)
-    t0 = datetime.datetime(2025, 6, 1, 10, 0, 0)
-    base = ("the quick brown fox jumps over the lazy dog near the "
-            "river bank today")
-    near = ("the quick brown fox jumps over the lazy dog near the "
-            "river bank tonight")
-    other = ("completely different content about quarterly revenue "
-             "and operating expenses growth")
-    schema = ("doc_id long, ingest_ts timestamp, text string, "
-              "lang string")
-    b1 = [(7, t0, base, "en"),
-          (8, t0 + datetime.timedelta(minutes=1), near, "en"),
-          (9, t0 + datetime.timedelta(minutes=2), other, "en")]
-    b2 = [(99, t0 + datetime.timedelta(hours=3), "late sentinel", "en")]
-    for batch in (b1, b2):
-        spark.createDataFrame(batch, schema).coalesce(1) \
-            .write.mode("append").parquet(inp)
-
-    q = run_stream_neardup(spark, inp, outp, ck)
-    q.awaitTermination(180)
-    slim = spark.read.parquet(outp)
-    assert set(slim.columns) == {"window_start", "doc_id"}
-    assert {r.doc_id for r in slim.collect()} == {7, 9}
-
-    docs = spark.read.parquet(inp)
-    fat = rejoin_payload(slim, docs)
-    got = {r.doc_id: r.text for r in fat.collect()}
-    assert got == {7: base, 9: other}
-
-    # the payload-carrying variant picks the same winners
-    q2 = run_stream_neardup(spark, inp, outp2, ck2, keep_payload=True)
-    q2.awaitTermination(180)
-    fat2 = spark.read.parquet(outp2)
-    assert set(fat2.columns) == {"window_start", "doc_id", "text"}
-    assert {r.doc_id: r.text for r in fat2.collect()} == got
-
-
-# ---------------------------------------------------------------------------
-# ADVICE medium: run_extraction readback mirrors the sink dispatch
-# ---------------------------------------------------------------------------
-
-def test_run_extraction_readback_uses_read_pages(spark, tmp_path,
-                                                 monkeypatch):
-    import parsee_pdf_reader_spark.pipeline as pl
-    from parsee_pdf_reader_spark.sources.synth import (
-        synthesize_pages_df,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(8)
-    pages = synthesize_pages_df(spark, docs)
-    inp = os.path.join(str(tmp_path), "pages_in")
-    pages.withColumn(
-        "warc_ts",
-        F.coalesce("warc_ts",
-                   F.lit("2025-06-01 00:00:00").cast("timestamp"))) \
-        .write.parquet(inp)
-    outp = os.path.join(str(tmp_path), "pages_out")
-
-    calls = []
-    real = pl.read_pages
-
-    def spy(spark_, source):
-        calls.append(source)
-        return real(spark_, source)
-
-    monkeypatch.setattr(pl, "read_pages", spy)
-    got = pl.run_extraction(spark, inp, outp)
-    # read_pages served both the source AND the readback
-    assert calls == [inp, outp]
-    assert got.count() > 0
-
-
-# ---------------------------------------------------------------------------
 # round-6 new operators: behavior on planted phenomena (the gate corpus
 # has no boilerplate sentences and no Gopher-rule violators, so hash
 # parity alone would be vacuous — the r5 PII lesson)
@@ -378,146 +282,6 @@ def test_semdedup_drops_planted_semantic_duplicates(spark, tmp_path):
     assert not out[12].keep  # near-duplicate also pruned
     # the distinct vector survives regardless of its cell
     assert out[13].keep, out[13]
-
-
-# ---------------------------------------------------------------------------
-# round-7 backlog item: duplicated-span statistics (Lee et al. 2022)
-# ---------------------------------------------------------------------------
-
-def test_dup_span_stats_planted_spans(spark):
-    """Plant a shared 18-token span across two docs: 3 overlapping
-    duplicated 16-gram windows must union to EXACTLY 18 covered tokens
-    in each (not 3*16); an all-unique doc and a sub-window doc report
-    zero; an internally-repeated doc is fully covered."""
-    from parsee_pdf_reader_spark.operators.dedup import (
-        _SPAN_N, dup_span_stats_df,
-    )
-
-    assert _SPAN_N == 16  # planted geometry below assumes this
-    span = " ".join(f"s{i}" for i in range(18))
-    phrase = " ".join(f"p{i}" for i in range(16))
-    rows = [
-        # shared 18-token span + 4 unique -> 18/22 covered
-        (1, span + " u1 u2 u3 u4"),
-        # same span, different padding -> 18/24 covered
-        (2, "v1 v2 v3 " + span + " v4 v5 v6"),
-        # 30 unique tokens -> nothing duplicated
-        (3, " ".join(f"w{i}" for i in range(30))),
-        # shorter than one window -> no grams, zero coverage
-        (4, "x1 x2 x3 x4 x5"),
-        # one 16-token phrase repeated back-to-back: windows at pos 0
-        # and 16 collide (within a single doc), covering all 32 tokens
-        (5, phrase + " " + phrase),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in dup_span_stats_df(docs).collect()}
-    assert len(out) == 5
-    assert (out[1].n_tokens, out[1].dup_tokens) == (22, 18)
-    assert (out[2].n_tokens, out[2].dup_tokens) == (24, 18)
-    assert out[1].dup_frac == round(18 / 22, 6)
-    assert (out[3].dup_tokens, out[4].dup_tokens) == (0, 0)
-    assert (out[5].n_tokens, out[5].dup_tokens, out[5].dup_frac) == \
-        (32, 32, 1.0)
-
-
-def test_dup_span_stats_preagg_path_identical(spark):
-    """The skew pre-agg variant (one row per (gram, doc) before the
-    count window) must be value-identical to the default single-
-    exchange path on a corpus where the signal actually fires."""
-    from parsee_pdf_reader_spark.operators.dedup import (
-        dup_span_stats_df,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    key = lambda r: (r.n_tokens, r.dup_tokens, r.dup_frac)  # noqa: E731
-    a = {r.doc_id: key(r) for r in dup_span_stats_df(docs).collect()}
-    b = {r.doc_id: key(r) for r in
-         dup_span_stats_df(docs, skew_preagg=True).collect()}
-    assert a == b
-    assert sum(1 for v in a.values() if v[1] > 0) > 20  # exercised
-
-
-def test_ngram_lm_score_ranks_ood_text_lower(spark):
-    """The corpus-trained bigram LM must rank in-distribution text
-    (bigrams the corpus repeats) above out-of-distribution gibberish
-    (every bigram unseen elsewhere), and a doc with <2 tokens gets the
-    zero-bigram sentinel row."""
-    from parsee_pdf_reader_spark.operators.textstats import (
-        ngram_lm_score_df,
-    )
-
-    common = "the quick brown fox jumps over the lazy dog"
-    rows = ([(i, common) for i in range(1, 9)]
-            + [(20, "zxq vnm plw qrt bbk jjw ooz yyx mmv ccd"),
-               (21, "single")])
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in ngram_lm_score_df(docs).collect()}
-    assert len(out) == 10
-    # repeated-phrase docs: every bigram has count 8 -> high logprob
-    assert out[1].avg_logprob > out[20].avg_logprob
-    assert out[1].n_bigrams == 8 and out[20].n_bigrams == 9
-    assert out[21].n_bigrams == 0 and out[21].avg_logprob == 0.0
-    # all identical docs share one score
-    assert len({out[i].avg_logprob for i in range(1, 9)}) == 1
-
-
-def test_dedup_against_index_flags_history_matches(spark):
-    """Incremental cross-corpus dedup: a new doc that near-duplicates
-    a history doc (one trailing word changed — shares >=1 LSH band)
-    must be flagged with the history canonical as matched_doc; a
-    genuinely new doc passes as is_new."""
-    from parsee_pdf_reader_spark.operators.dedup import (
-        band_index_df, dedup_against_index,
-    )
-
-    base = ("the quick brown fox jumps over the lazy dog near the "
-            "river bank today")
-    near = ("the quick brown fox jumps over the lazy dog near the "
-            "river bank tonight")
-    fresh = ("annual shareholder meeting scheduled for june with "
-             "board election and audit review")
-    hist = spark.createDataFrame(
-        [(1, base), (2, "unrelated history content about mountain "
-                        "weather and snowfall records")],
-        "doc_id long, text string")
-    new = spark.createDataFrame(
-        [(10, near), (11, fresh), (12, base)],
-        "doc_id long, text string")
-    out = {r.doc_id: r for r in
-           dedup_against_index(new, band_index_df(hist)).collect()}
-    assert len(out) == 3
-    assert not out[10].is_new and out[10].matched_doc == 1
-    assert out[10].n_hit_bands >= 1
-    # exact replay hits all bands and matches its history copy
-    assert not out[12].is_new and out[12].matched_doc == 1
-    from parsee_pdf_reader_spark.operators.dedup import _BANDS
-    assert out[12].n_hit_bands == _BANDS
-    assert out[11].is_new and out[11].matched_doc is None
-
-
-def test_ngram_lm_score_separate_training_corpus(spark):
-    """train_df separates training from scoring (the decontam_against
-    pattern): a doc made of reference-corpus phrases outscores a doc
-    of bigrams the reference never saw (which backs off to the add-1
-    floor), and the self-train default is unchanged by the refactor."""
-    from parsee_pdf_reader_spark.operators.textstats import (
-        ngram_lm_score_df,
-    )
-
-    ref_phrase = "the quick brown fox jumps over the lazy dog"
-    train = spark.createDataFrame(
-        [(i, ref_phrase) for i in range(100, 108)],
-        "doc_id long, text string")
-    docs = spark.createDataFrame(
-        [(1, ref_phrase), (2, "zxq vnm plw qrt bbk jjw ooz yyx")],
-        "doc_id long, text string")
-    out = {r.doc_id: r for r in
-           ngram_lm_score_df(docs, train_df=train).collect()}
-    assert out[1].avg_logprob > out[2].avg_logprob
-    # unseen bigrams hit the add-1 floor exactly: ln(1 / (0 + V))
-    import math
-    v = 8  # distinct tokens in the reference phrase
-    assert out[2].avg_logprob == round(math.log(1.0 / v), 6)
 
 
 def test_mix_rebalance_plan_caps_and_renormalizes(spark):

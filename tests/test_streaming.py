@@ -291,7 +291,7 @@ def test_stream_neardup_same_batch_one_survivor(spark, tmp_path):
     )
     from pyspark.sql import functions as F
     bh = spark.createDataFrame(b1, schema).select(
-        "doc_id", F.explode(minhash_band_hashes("text")).alias("x"))
+        "doc_id", F.explode(minhash_band_hashes()).alias("x"))
     shared = (bh.groupBy("x").count().where("count > 1").count())
     assert shared >= 1
 
@@ -373,3 +373,57 @@ def test_stream_extract_to_catalog_table(spark, tmp_path):
         assert "extracted_text" in got.columns or "url" in got.columns
     finally:
         spark.sql(f"drop table if exists {tbl}")
+
+
+def test_stream_neardup_slim_state_and_payload_rejoin(spark, tmp_path):
+    """Default near-dup stream output carries NO text column (claims
+    are min(doc_id) only); rejoin_payload recovers exactly the winner
+    payloads from the durable raw store. The single-query rejoined
+    stream gives the SAME survivors and texts."""
+    import datetime
+
+    from parsee_pdf_reader_spark.streaming.incremental import (
+        rejoin_payload, run_stream_neardup,
+        run_stream_neardup_rejoined,
+    )
+
+    inp = os.path.join(str(tmp_path), "docs_stream")
+    outp = os.path.join(str(tmp_path), "neardup")
+    ck = os.path.join(str(tmp_path), "ck")
+    outp2 = os.path.join(str(tmp_path), "neardup_rejoined")
+    ck2 = os.path.join(str(tmp_path), "ck_rejoined")
+    os.makedirs(inp)
+    t0 = datetime.datetime(2025, 6, 1, 10, 0, 0)
+    base = ("the quick brown fox jumps over the lazy dog near the "
+            "river bank today")
+    near = ("the quick brown fox jumps over the lazy dog near the "
+            "river bank tonight")
+    other = ("completely different content about quarterly revenue "
+             "and operating expenses growth")
+    schema = ("doc_id long, ingest_ts timestamp, text string, "
+              "lang string")
+    b1 = [(7, t0, base, "en"),
+          (8, t0 + datetime.timedelta(minutes=1), near, "en"),
+          (9, t0 + datetime.timedelta(minutes=2), other, "en")]
+    b2 = [(99, t0 + datetime.timedelta(hours=3), "late sentinel", "en")]
+    for batch in (b1, b2):
+        spark.createDataFrame(batch, schema).coalesce(1) \
+            .write.mode("append").parquet(inp)
+
+    q = run_stream_neardup(spark, inp, outp, ck)
+    q.awaitTermination(180)
+    slim = spark.read.parquet(outp)
+    assert set(slim.columns) == {"window_start", "doc_id"}
+    assert {r.doc_id for r in slim.collect()} == {7, 9}
+
+    docs = spark.read.parquet(inp)
+    fat = rejoin_payload(slim, docs)
+    got = {r.doc_id: r.text for r in fat.collect()}
+    assert got == {7: base, 9: other}
+
+    # the single-query rejoined stream picks the same winners
+    q2 = run_stream_neardup_rejoined(spark, inp, outp2, ck2)
+    q2.awaitTermination(180)
+    fat2 = spark.read.parquet(outp2)
+    assert set(fat2.columns) == {"window_start", "doc_id", "text"}
+    assert {r.doc_id: r.text for r in fat2.collect()} == got
