@@ -4,10 +4,7 @@
         jobs/extract_job.py \
         --input  s3://bucket/pages/            \
         --output s3://bucket/extracted/        \
-        --lang en --partitions 4096 --run-id r1
-
-    (or ``--run-id r1 --resume``, which takes none of ``--lang``,
-    ``--partitions``, ``--min-rows`` and ``--min-cols``)
+        --lang en --partitions 4096 --run-id r1 [--resume]
 
 At cluster scale:
 - build the zip with ``python jobs/package.py`` (pure-Python package,
@@ -17,7 +14,9 @@ At cluster scale:
   salting + oversized-document side path);
 - ``--resume`` drives the per-partition ``_progress`` ledger so a
   failed run restarts exactly where it stopped (idempotent overwrite
-  per partition).
+  per partition). It takes the one-shot run's flags and path, so its
+  ``part=<value>`` dirs hold the one-shot run's rows; the ledger's
+  ``rows_in`` counts the rows handed to the kernel (after ``--lang``).
 """
 
 from __future__ import annotations
@@ -39,14 +38,8 @@ def main():
     args = ap.parse_args()
     if args.min_rows < 1 or args.min_cols < 1:
         ap.error("--min-rows and --min-cols must be at least 1")
-    if args.resume:
-        # the checkpointed run extracts every language with the
-        # kernel's defaults, so these flags would have no effect
-        ignored = [f"--{d.replace('_', '-')}"
-                   for d in ("lang", "partitions", "min_rows", "min_cols")
-                   if getattr(args, d) != ap.get_default(d)]
-        if ignored:
-            ap.error(f"--resume ignores {', '.join(ignored)}")
+    options = dict(lang=args.lang, partitions=args.partitions,
+                   min_rows=args.min_rows, min_cols=args.min_cols)
 
     from parsee_pdf_reader_spark.session import get_spark
 
@@ -57,17 +50,15 @@ def main():
         )
 
         ck = CheckpointedExtraction(spark, args.input, args.output,
-                                    run_id=args.run_id)
+                                    run_id=args.run_id, **options)
         done = ck.run()
         print(f"processed partitions: {done}")
     else:
         from parsee_pdf_reader_spark.pipeline import run_extraction
 
         stats: dict = {}
-        run_extraction(spark, args.input, args.output,
-                       lang=args.lang, partitions=args.partitions,
-                       min_rows=args.min_rows,
-                       min_cols=args.min_cols, stats=stats)
+        run_extraction(spark, args.input, args.output, stats=stats,
+                       **options)
         # observed during the write — no post-write re-scan of the
         # output (VERDICT r6 item 4)
         print(f"rows written: {stats['rows_written']}")

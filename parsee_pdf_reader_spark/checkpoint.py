@@ -8,6 +8,8 @@ Iceberg ``overwritePartitions`` + a ``_progress`` table in production):
 
 - work is keyed by a partition expression over the input (default
   ``to_date(warc_ts)``), giving deterministic, idempotent splits;
+- each partition takes ``run_extraction``'s path with its options, so
+  a resumed run writes the rows a one-shot run with them writes;
 - a ``_progress`` ledger (one parquet dir) records, per (run_id,
   partition): row counts in/out, error count, a value digest of the
   output, and wall time — the lineage + metrics record;
@@ -18,7 +20,8 @@ Iceberg ``overwritePartitions`` + a ``_progress`` table in production):
 
 Scan economics: each partition costs ONE read of that partition's
 input (rows_in is an ``observe()`` metric on the extraction's own
-scan) plus one read-back of its (much smaller) output for the digest.
+pass: the rows handed to the kernel, i.e. after the ``lang`` predicate)
+plus one read-back of its (much smaller) output for the digest.
 For the per-partition input filter to PRUNE files rather than scan the
 whole input, ``partition_expr`` should be the table's physical
 partition column (``ds`` for a hive-layout dir, hidden partitioning on
@@ -33,9 +36,10 @@ import os
 import time
 from typing import List, Optional
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.errors import AnalysisException
+from pyspark.sql import Observation, SparkSession, functions as F
 
-from parsee_pdf_reader_spark.pipeline import extract_pages, read_pages
+from parsee_pdf_reader_spark.pipeline import _extract_selection, read_pages
 
 PROGRESS_SCHEMA = ("run_id string, part string, status string, "
                    "rows_in long, rows_out long, errors long, "
@@ -45,12 +49,16 @@ PROGRESS_SCHEMA = ("run_id string, part string, status string, "
 class CheckpointedExtraction:
     def __init__(self, spark: SparkSession, input_path: str,
                  output_path: str, run_id: str = "r1",
-                 partition_expr: str = "to_date(warc_ts)"):
+                 partition_expr: str = "to_date(warc_ts)",
+                 lang: Optional[str] = None, partitions: int = 0,
+                 min_rows: int = 2, min_cols: int = 1):
         self.spark = spark
         self.input_path = input_path
         self.output_path = output_path
         self.run_id = run_id
         self.partition_expr = partition_expr
+        self.options = dict(lang=lang, partitions=partitions,
+                            min_rows=min_rows, min_cols=min_cols)
         self.progress_path = os.path.join(output_path, "_progress")
 
     # -- ledger --
@@ -58,18 +66,14 @@ class CheckpointedExtraction:
     def completed_partitions(self) -> List[str]:
         try:
             df = self.spark.read.parquet(self.progress_path)
-        except Exception as e:
+        except AnalysisException as e:
             # ONLY a missing ledger means "fresh run". A corrupt or
             # transiently unreadable ledger must propagate: silently
             # reprocessing everything is idempotent but O(full job),
             # and it would mask real ledger corruption.
-            from pyspark.errors import AnalysisException
-
-            if isinstance(e, AnalysisException) and (
-                    "PATH_NOT_FOUND" in str(e)
-                    or "Path does not exist" in str(e)):
-                return []
-            raise
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+            return []
         return [
             r.part
             for r in df.where((F.col("run_id") == self.run_id)
@@ -168,24 +172,23 @@ class CheckpointedExtraction:
         return out or None
 
     def run(self, max_partitions: Optional[int] = None) -> List[str]:
-        """Process pending partitions; returns the list processed."""
+        """Process pending partitions; returns the list processed.
+        Each is written flat: unlike a ``partitionBy`` write, a flat
+        write of no rows (no ``lang`` rows) reads back with its schema."""
         import datetime
 
         pending = self.pending_partitions()
         if max_partitions is not None:
             pending = pending[:max_partitions]
-        from pyspark.sql import Observation
-
         for part in pending:
             t0 = time.time()
+            # rows_in comes from an Observation on the extraction's own
+            # pass — NO separate count() pass over the input (at 100 TB
+            # an extra count is a second full read of the partition)
+            obs = Observation()
             src = read_pages(self.spark, self.input_path).where(
                 F.expr(self.partition_expr).cast("string") == part)
-            # rows_in comes from an Observation on the extraction's own
-            # scan — NO separate count() pass over the input (at 100 TB
-            # an extra count is a second full read of the partition)
-            obs = Observation(f"in:{part}")
-            src = src.observe(obs, F.count(F.lit(1)).alias("rows_in"))
-            out = extract_pages(src)
+            out = _extract_selection(src, rows_in=obs, **self.options)
             part_dir = os.path.join(self.output_path, f"part={part}")
             out.write.mode("overwrite").parquet(part_dir)
             rows_in = int(obs.get["rows_in"])

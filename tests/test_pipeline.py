@@ -119,6 +119,81 @@ def test_checkpoint_resume(spark, tmp_path):
     assert all(r.rows_in == 20 for r in rows)
 
 
+def _two_day_pages(spark, tmp_path):
+    """Pages over two ``to_date(warc_ts)`` checkpoint partitions: the
+    first holds en and fr rows, the second only de rows."""
+    import datetime
+
+    pdf = _pages(spark, 16).toPandas()
+    pdf.loc[:5, "warc_ts"] += datetime.timedelta(days=1)
+    pdf["lang"] = ["de"] * 6 + ["fr"] * 4 + ["en"] * 6
+    inp = os.path.join(str(tmp_path), "pages")
+    spark.createDataFrame(pdf, _pages(spark, 1).schema).write.parquet(inp)
+    return inp
+
+
+def test_checkpoint_resume_equals_run_extraction(spark, tmp_path):
+    """A ledgered run stopped after one partition and resumed writes
+    the rows ``run_extraction`` writes with the same options; the
+    partition with no ``lang`` rows is ledgered done, empty."""
+    from parsee_pdf_reader_spark.checkpoint import CheckpointedExtraction
+    from parsee_pdf_reader_spark.pipeline import run_extraction
+
+    inp = _two_day_pages(spark, tmp_path)
+    outp = os.path.join(str(tmp_path), "extracted")
+    opts = dict(lang="en", partitions=4, min_cols=2)
+    ck = CheckpointedExtraction(spark, inp, outp, run_id="t1", **opts)
+    assert len(ck.pending_partitions()) == 2
+    assert len(ck.run(max_partitions=1)) == 1
+    CheckpointedExtraction(spark, inp, outp, run_id="t1", **opts).run()
+    assert ck.pending_partitions() == []
+
+    cols = ["url", "page_index", "extracted_text", "tables"]
+
+    def rows(df):
+        return sorted(df.select(*cols).collect(),
+                      key=lambda r: (r.url, r.page_index))
+
+    want = rows(run_extraction(spark, inp,
+                               os.path.join(str(tmp_path), "one_shot"),
+                               **opts))
+    assert want and {r.url for r in want} == {
+        r.url for r in spark.read.parquet(inp).where("lang = 'en'")
+        .collect()}
+    assert rows(spark.read.parquet(os.path.join(outp, "part=*"))) == want
+    ledger = spark.read.parquet(os.path.join(outp, "_progress")).collect()
+    assert sorted(r.rows_in for r in ledger) == [0, 6]
+    empty = [r for r in ledger if r.rows_in == 0]
+    assert [(r.status, r.rows_out) for r in empty] == [("done", 0)]
+
+
+def test_checkpoint_lang_predicate_reaches_the_scan(spark, tmp_path,
+                                                    monkeypatch):
+    """The ledgered run's ``lang`` predicate is a FileScan data filter:
+    the ``rows_in`` observation sits above it, not between it and the
+    scan."""
+    from parsee_pdf_reader_spark import checkpoint
+
+    frames = []
+    real = checkpoint._extract_selection
+
+    def spy(*a, **k):
+        frames.append(real(*a, **k))
+        return frames[-1]
+
+    monkeypatch.setattr(checkpoint, "_extract_selection", spy)
+    inp = _two_day_pages(spark, tmp_path)
+    checkpoint.CheckpointedExtraction(
+        spark, inp, os.path.join(str(tmp_path), "extracted"),
+        lang="en").run(max_partitions=1)
+    # the plan string abbreviates DataFilters; read the scan node's own
+    leaves = frames[0]._jdf.queryExecution().sparkPlan().collectLeaves()
+    assert leaves.size() == 1
+    data_filters = leaves.head().dataFilters().mkString(", ")
+    assert "(lang#" in data_filters and "= en)" in data_filters, (
+        data_filters)
+
+
 def test_rebalance_spreads_skewed_hosts_and_giants(spark):
     """north_rule: 'explicit salting of skewed hosts'. A corpus where
     one host dominates and a few documents are giant must spread: no
@@ -970,9 +1045,9 @@ def test_read_pages_dispatch(spark, tmp_path):
         read_pages(spark, "no_such_table_r5").collect()
 
 
-def _run_extract_job(monkeypatch, *flags):
-    """Run ``jobs/extract_job.py`` on ``flags``; starting a Spark
-    session fails the test."""
+def _run_extract_job(monkeypatch, *flags, spark=None):
+    """Run ``jobs/extract_job.py`` on ``flags`` with ``spark`` as its
+    session; with none, starting a Spark session fails the test."""
     import importlib.util
 
     from parsee_pdf_reader_spark import session
@@ -982,21 +1057,43 @@ def _run_extract_job(monkeypatch, *flags):
                                     "jobs", "extract_job.py"))
     job = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(job)
-    monkeypatch.setattr(session, "get_spark",
-                        lambda *a, **k: pytest.fail("a session started"))
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: (
+        spark or pytest.fail("a session started")))
     monkeypatch.setattr(sys, "argv", [
         "extract_job.py", "--input", "in", "--output", "out", *flags])
     job.main()
 
 
-def test_extract_job_resume_rejects_ignored_flags(monkeypatch, capsys):
-    """``--resume`` runs the checkpointed extraction over every language
-    with the kernel's defaults, so a flag it would ignore is an
-    argument error, raised before any Spark session starts."""
-    with pytest.raises(SystemExit) as exc:
-        _run_extract_job(monkeypatch, "--resume", "--lang", "en")
-    assert exc.value.code == 2
-    assert "--resume ignores --lang" in capsys.readouterr().err
+def test_extract_job_resume_takes_the_extraction_flags(monkeypatch):
+    """``--resume`` hands ``--lang``, ``--partitions``, ``--min-rows``
+    and ``--min-cols`` to the checkpointed run, as the one-shot run
+    gets them; no Spark session starts."""
+    import types
+
+    from parsee_pdf_reader_spark import checkpoint, pipeline
+
+    seen = {}
+
+    class Ledgered:
+        def __init__(self, spark, input_path, output_path, **kw):
+            seen["resume"] = kw
+
+        def run(self):
+            return []
+
+    def one_shot(spark, input_path, output_path, stats, **kw):
+        seen["one_shot"] = kw
+        stats["rows_written"] = 0
+
+    monkeypatch.setattr(checkpoint, "CheckpointedExtraction", Ledgered)
+    monkeypatch.setattr(pipeline, "run_extraction", one_shot)
+    flags = ("--lang", "en", "--partitions", "4", "--min-cols", "2")
+    fake = types.SimpleNamespace(stop=lambda: None)
+    _run_extract_job(monkeypatch, "--resume", *flags, spark=fake)
+    _run_extract_job(monkeypatch, *flags, spark=fake)
+    want = dict(lang="en", partitions=4, min_rows=2, min_cols=2)
+    assert seen["resume"] == dict(run_id="r1", **want)
+    assert seen["one_shot"] == want
 
 
 def test_extract_job_rejects_table_threshold_below_one(monkeypatch,
