@@ -200,8 +200,9 @@ class CheckpointedExtraction:
                 F.count("*").alias("n"),
                 F.sum(F.when(F.col("error").isNotNull(), 1)
                       .otherwise(0)).alias("errs"),
-                F.expr("bit_xor(xxhash64(url, page_index, extracted_text))")
-                .alias("digest"),
+                # 0 is the xor of no rows, where bit_xor gives null
+                F.expr("coalesce(bit_xor(xxhash64(url, page_index, "
+                       "extracted_text)), 0)").alias("digest"),
             ).collect()[0]
             self._append_progress({
                 "run_id": self.run_id,

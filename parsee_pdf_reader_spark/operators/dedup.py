@@ -546,31 +546,34 @@ def _cc_star_labels(pairs, stats=None):
 )
 def q_dedup_canonical(spark, sf_dir, docs=None):
     """Gate row of :func:`dedup_canonical_df`."""
-    return dedup_canonical_df(documents(spark, sf_dir, docs))
+    docs = documents(spark, sf_dir, docs)
+    return dedup_canonical_df(
+        minhash_signatures_df(docs),
+        docs.select("doc_id", F.col("n_chars").alias("n"))).select(
+        "doc_id", "cluster_id", "keep")
 
 
-def dedup_canonical_df(docs):
-    """The corpus-compaction decision over (doc_id, text, n_chars):
-    every document gets a cluster_id (its transitive near-dup
-    component, or itself when it has no candidate pair) and a
-    keep/drop verdict — keep the longest document per cluster, min
-    doc_id on ties. The output drives the actual training-set filter
-    (`where keep`); left-joining the full documents table keeps
-    singletons without ever materializing them in the (small) cluster
-    graph."""
+def dedup_canonical_df(sigs, docs):
+    """The near-duplicate keep verdict, shared by the gate row above
+    and ``training_pipeline.build_training_corpus``: given (doc_id,
+    sig) signatures and a (doc_id, n, ...) frame, every row of ``docs``
+    gets a cluster_id (its transitive near-dup component, or its own
+    doc_id when it has no candidate pair) and ``keep``: the largest
+    ``n`` per cluster, min doc_id on ties. Every column of ``docs`` is
+    carried through, so a caller filters on ``keep`` without joining
+    back. Left-joining ``docs`` keeps singletons without ever
+    materializing them in the (small) cluster graph. The
+    ``dedup_canonical`` DuckDB twin checks this code for both
+    callers."""
     from pyspark.sql import Window
 
-    clusters = connected_components_df(minhash_pairs_df(
-        minhash_signatures_df(docs))).select("doc_id", "cluster_id")
-    joined = docs.select("doc_id", "n_chars").join(
-        clusters, "doc_id", "left").select(
-        "doc_id", "n_chars",
-        F.coalesce("cluster_id", "doc_id").alias("cluster_id"))
+    clusters = connected_components_df(minhash_pairs_df(sigs)).select(
+        "doc_id", "cluster_id")
     w = Window.partitionBy("cluster_id").orderBy(
-        F.desc("n_chars"), F.asc("doc_id"))
-    return joined.select(
-        "doc_id", "cluster_id",
-        (F.row_number().over(w) == 1).alias("keep"))
+        F.desc("n"), F.asc("doc_id"))
+    return (docs.join(clusters, "doc_id", "left")
+            .withColumn("cluster_id", F.coalesce("cluster_id", "doc_id"))
+            .withColumn("keep", F.row_number().over(w) == 1))
 
 
 # ---------------------------------------------------------------------------

@@ -1181,7 +1181,7 @@ def _lm_score_sql() -> str:
     """
 
 
-def ngram_lm_score_df(docs, train_df=None):
+def ngram_lm_score_df(docs):
     """Per-document mean bigram log-probability under an add-1-smoothed
     bigram model trained on the corpus itself — the deterministic
     stand-in for CCNet's KenLM perplexity filter (no model binary in
@@ -1211,13 +1211,6 @@ def ngram_lm_score_df(docs, train_df=None):
       {R} dp and summed as decimal (exact, order-free), and the mean
       is one double division of identical operands (the kmeans
       quantize-then-decimal pattern).
-
-    ``train_df`` separates training from scoring (the decontam_against
-    pattern): counts and vocabulary come from ``train_df`` (CCNet
-    trains on a reference corpus — Wikipedia — and scores the crawl);
-    a scored bigram the reference never saw backs off to the add-1
-    floor ln(1 / (head_count + V)). Default (None) is the self-trained
-    corpus statistic the gate row pins.
     """.replace("{R}", str(_LM_ROUND))
     from parsee_pdf_reader_spark.operators.dedup import bind1
 
@@ -1237,18 +1230,11 @@ def ngram_lm_score_df(docs, train_df=None):
         ),
     )
 
-    def bigrams(df):
-        return (df.select("doc_id", F.explode(big_arr).alias("g"))
-                .select("doc_id", "g.w1", "g.w2"))
-
-    train = train_df if train_df is not None else docs
-    if train_df is None:
-        big = tbig = materialize(bigrams(docs))
-    else:
-        big, tbig = bigrams(docs), bigrams(train)
-    c12 = tbig.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
+    big = materialize(docs.select("doc_id", F.explode(big_arr).alias("g"))
+                      .select("doc_id", "g.w1", "g.w2"))
+    c12 = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
-    vocab = (train.select(F.explode(toks).alias("t"))
+    vocab = (docs.select(F.explode(toks).alias("t"))
              .agg(F.count_distinct("t").alias("v")))
     lp = F.round(
         F.log((F.coalesce("c12", F.lit(0)) + F.lit(1.0))
@@ -1273,8 +1259,8 @@ def ngram_lm_score_df(docs, train_df=None):
 @register("ngram_lm_score", _lm_score_sql())
 def q_ngram_lm_score(spark, sf_dir):
     """Gate row of :func:`ngram_lm_score_df` over the documents table
-    (self-trained corpus statistic; production would train the counts
-    on a reference corpus and score the crawl)."""
+    (self-trained: the counts and the scored documents are the same
+    table)."""
     return ngram_lm_score_df(_ts(spark, sf_dir, "documents"))
 
 

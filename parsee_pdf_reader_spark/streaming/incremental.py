@@ -22,6 +22,22 @@ from parsee_pdf_reader_spark.pipeline import extract_pages
 
 PAGES_DDL = ("url string, warc_ts timestamp, html binary, text string, "
              "lang string")
+DOCS_DDL = "doc_id long, ingest_ts timestamp, text string, lang string"
+EVENTS_DDL = ("event_id long, ts timestamp, user_id long, "
+              "event_type string, value double, props string")
+
+
+def _drain(out: DataFrame, output_dir: str, checkpoint_dir: str):
+    """Start an availableNow append of the stream ``out`` into parquet
+    files under ``output_dir``: it drains the backlog and stops."""
+    return (
+        out.writeStream.format("parquet")
+        .option("path", output_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def stream_extract(spark: SparkSession, input_dir: str, target: str,
@@ -76,19 +92,11 @@ def run_stream_event_counts(spark: SparkSession, input_dir: str,
                             output_dir: str, checkpoint_dir: str):
     src = (
         spark.readStream
-        .schema("event_id long, ts timestamp, user_id long, "
-                "event_type string, value double, props string")
+        .schema(EVENTS_DDL)
         .parquet(input_dir)
     )
     agg = stream_event_window_counts(src)
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(agg, output_dir, checkpoint_dir)
 
 
 def stream_dedup_exact(docs: DataFrame,
@@ -114,20 +122,12 @@ def run_stream_dedup(spark: SparkSession, input_dir: str,
     """availableNow drain of the dedup stream over a parquet dir."""
     src = (
         spark.readStream
-        .schema("doc_id long, ingest_ts timestamp, text string, "
-                "lang string")
+        .schema(DOCS_DDL)
         .option("maxFilesPerTrigger", "4")
         .parquet(input_dir)
     )
     out = stream_dedup_exact(src)
-    return (
-        out.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(out, output_dir, checkpoint_dir)
 
 
 def stream_dedup_neardup(docs: DataFrame,
@@ -307,24 +307,15 @@ def run_stream_neardup_rejoined(spark: SparkSession, input_dir: str,
     (window_start, doc_id, text) rows, the batch
     :func:`rejoin_payload` result, while claim state stays O(bands x 8 bytes) and
     join state is watermark-bounded raw rows."""
-    schema = ("doc_id long, ingest_ts timestamp, text string, "
-              "lang string")
     src = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(DOCS_DDL)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(input_dir)
     )
     survivors = stream_dedup_neardup(src)
-    raw = spark.readStream.schema(schema).parquet(input_dir)
+    raw = spark.readStream.schema(DOCS_DDL).parquet(input_dir)
     out = stream_rejoin_payload(survivors, raw)
-    return (
-        out.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(out, output_dir, checkpoint_dir)
 
 
 def stream_dedup_neardup_audit(docs: DataFrame,
@@ -364,17 +355,9 @@ def run_stream_neardup(spark: SparkSession, input_dir: str,
     :func:`run_stream_neardup_rejoined` for a sink with the text."""
     src = (
         spark.readStream
-        .schema("doc_id long, ingest_ts timestamp, text string, "
-                "lang string")
+        .schema(DOCS_DDL)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(input_dir)
     )
     out = stream_dedup_neardup(src)
-    return (
-        out.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(out, output_dir, checkpoint_dir)

@@ -19,6 +19,8 @@ from pyspark.sql.streaming.state import (
     GroupStateTimeout,
 )
 
+from parsee_pdf_reader_spark.streaming.incremental import EVENTS_DDL, _drain
+
 SESSION_GAP_SEC = 1800
 
 OUTPUT_SCHEMA = ("user_id long, session_start timestamp, "
@@ -108,17 +110,9 @@ def run_stream_user_sessions(spark, input_dir: str, output_dir: str,
                              checkpoint_dir: str):
     src = (
         spark.readStream
-        .schema("event_id long, ts timestamp, user_id long, "
-                "event_type string, value double, props string")
+        .schema(EVENTS_DDL)
         .option("maxFilesPerTrigger", "1")
         .parquet(input_dir)
     )
     out = stream_user_sessions(src, use_timeout=False)
-    return (
-        out.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(out, output_dir, checkpoint_dir)

@@ -10,8 +10,10 @@ corpus build actually runs.
       -> exact dedup on the EXTRACTED text (canonical url wins)
       -> document length filter
       == the per-document table, materialized here
-      -> near-dup clustering (MinHash LSH pairs -> connected
-         components) with a longest-doc-wins keep verdict
+      -> the near-dup keep verdict, ``dedup.dedup_canonical_df``
+         (MinHash LSH pairs -> connected components -> the most
+         tokens per component wins), the code the ``dedup_canonical``
+         oracle row checks
 
 The per-document table (doc_text, n_tokens, bpe_tokens, is_canonical,
 and the signature of canonical rows) is the single materialization
@@ -106,8 +108,9 @@ def build_training_corpus(pages_df: DataFrame,
     """pages -> deduplicated, quality-filtered training rows:
     (url, warc_ts, lang, source_kind, doc_text, n_tokens, bpe_tokens,
     is_canonical, near_dup_cluster, keep). The training set is
-    ``where keep``: exact-canonical AND the longest doc of its
-    near-dup component."""
+    ``where keep``: exact-canonical AND kept by
+    ``dedup.dedup_canonical_df`` (the most tokens in its near-dup
+    component, the smallest url on ties)."""
     from pyspark.sql import Window
 
     from parsee_pdf_reader_spark.operators import dedup
@@ -145,21 +148,17 @@ def build_training_corpus(pages_df: DataFrame,
     table = materialize(docs.withColumn(
         "sig", F.when(F.col("is_canonical"), F.col("sig"))))
 
-    # near-dup closure over the exact-canonical survivors: LSH pairs
-    # -> connected components -> keep the longest doc per component
-    # (each stage oracle-verified in isolation)
-    clusters = dedup.connected_components_df(dedup.minhash_pairs_df(
-        table.where("is_canonical")
-        .select(F.col("url").alias("doc_id"), "sig"))).select(
-        F.col("doc_id").alias("url"), "cluster_id")
-    out = table.drop("sig").join(clusters, "url", "left").withColumn(
-        "near_dup_cluster", F.coalesce("cluster_id", "url")).drop(
-        "cluster_id")
-    # rank canonical rows first — a non-canonical twin must not steal
-    # rank 1 and sink its whole cluster; a non-canonical row is never
-    # kept (its cluster is its own url: only canonical rows are
-    # clustered)
-    wk = Window.partitionBy("near_dup_cluster").orderBy(
-        F.desc("is_canonical"), F.desc("n_tokens"), F.asc("url"))
-    return out.withColumn(
-        "keep", F.col("is_canonical") & (F.row_number().over(wk) == 1))
+    # near-dup verdict over the exact-canonical survivors: the
+    # dedup_canonical gate row's code (LSH pairs -> connected
+    # components -> the most tokens per component), so its DuckDB twin
+    # covers this keep. A non-canonical row has no signature here, so
+    # its cluster is its own (unique) url and its keep is false
+    out = dedup.dedup_canonical_df(
+        table.where("is_canonical").select(F.col("url").alias("doc_id"),
+                                           "sig"),
+        table.drop("sig").withColumnRenamed("url", "doc_id")
+        .withColumn("n", F.col("n_tokens")))
+    return (out.withColumnsRenamed({"doc_id": "url",
+                                    "cluster_id": "near_dup_cluster"})
+            .withColumn("keep", F.col("is_canonical") & F.col("keep"))
+            .drop("n"))

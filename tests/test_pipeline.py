@@ -164,7 +164,8 @@ def test_checkpoint_resume_equals_run_extraction(spark, tmp_path):
     ledger = spark.read.parquet(os.path.join(outp, "_progress")).collect()
     assert sorted(r.rows_in for r in ledger) == [0, 6]
     empty = [r for r in ledger if r.rows_in == 0]
-    assert [(r.status, r.rows_out) for r in empty] == [("done", 0)]
+    assert [(r.status, r.rows_out, r.digest) for r in empty] == [
+        ("done", 0, "0")]
 
 
 def test_checkpoint_lang_predicate_reaches_the_scan(spark, tmp_path,
@@ -550,22 +551,23 @@ def test_training_corpus_composition(spark):
     # a duplicated web page (same bytes, different url) for the dedup leg
     blob, golden = build_html_document("web0", 42)
     web_rows.append(("https://w.example/dup0", None, blob, golden, "en"))
-    # a NEAR-duplicate pair for the clustering leg: 400 distinct
-    # words, ONE changed — and the changed word must sit in a block
-    # the boilerplate stripper KEEPS, so probe the builder's golden
-    # main text for a surviving token to mutate
+    # a NEAR-duplicate pair for the clustering leg: b is a 400-word
+    # page and a is b with ONE word added — in a block the boilerplate
+    # stripper KEEPS, so probe the builder's golden main text for a
+    # surviving token to extend — so a is the longer doc, though its
+    # url is the larger. Plus c, an exact copy of a under a still
+    # larger url: not canonical, so it is clustered alone and never
+    # kept, whatever its length
     base_txt = " ".join(f"w{i}token" for i in range(400))
-    _blob, golden_main = build_html_document("neardup", 42, base_txt)
+    blob_b, golden_main = build_html_document("neardup", 42, base_txt)
     kept_tokens = golden_main.split()
-    victim = kept_tokens[len(kept_tokens) // 2]
-    near_txt = base_txt.replace(victim, "changedtok", 1)
-    assert near_txt != base_txt
-    for url, txt in (("https://n.example/a", base_txt),
-                     ("https://n.example/b", near_txt)):
-        # SAME builder key: identical page structure, so the extracted
-        # texts differ only where the input texts do
-        blob, _g = build_html_document("neardup", 42, txt)
-        web_rows.append((url, None, blob, txt, "en"))
+    victim = kept_tokens[len(kept_tokens) // 2].encode()
+    blob_a = blob_b.replace(victim, victim + b" extratok", 1)
+    assert blob_a != blob_b
+    for url, blob in (("https://n.example/2a", blob_a),
+                      ("https://n.example/1b", blob_b),
+                      ("https://n.example/3c", blob_a)):
+        web_rows.append((url, None, blob, base_txt, "en"))
     web = spark.createDataFrame(
         web_rows, "url string, warc_ts timestamp, html binary, "
                   "text string, lang string")
@@ -581,10 +583,14 @@ def test_training_corpus_composition(spark):
     assert not by_url["https://w.example/dup0"].is_canonical
     assert not by_url["https://w.example/dup0"].keep
     # near-dup pair: one cluster, exactly one kept (the longer doc)
-    a = by_url["https://n.example/a"]
-    b = by_url["https://n.example/b"]
+    a = by_url["https://n.example/2a"]
+    b = by_url["https://n.example/1b"]
+    c = by_url["https://n.example/3c"]
+    assert a.n_tokens > b.n_tokens
     assert a.near_dup_cluster == b.near_dup_cluster
-    assert a.keep and not b.keep
+    assert a.is_canonical and not c.is_canonical
+    assert c.near_dup_cluster == c.url
+    assert [r.url for r in (a, b, c) if r.keep] == [a.url]
     # untouched docs keep themselves
     assert by_url["https://w.example/1"].keep
 
@@ -1135,3 +1141,33 @@ def test_run_extraction_readback_uses_read_pages(spark, tmp_path,
     # read_pages served both the source AND the readback
     assert calls == [inp, outp]
     assert got.count() > 0
+
+
+def test_latest_snapshot_tiebreak_total_order(spark):
+    """Review fix: same warc_ts AND same payload length must still
+    pick one deterministic winner (content-digest tie-break), under
+    any input order."""
+    import datetime
+
+    from parsee_pdf_reader_spark.training_pipeline import (
+        latest_snapshot_per_url,
+    )
+
+    t = datetime.datetime(2025, 3, 1)
+    a, b = b"payload-aaaa", b"payload-bbbb"  # same length
+    url = "https://t.example/x"
+    schema = ("url string, warc_ts timestamp, html binary, "
+              "text string, lang string")
+    w1 = latest_snapshot_per_url(spark.createDataFrame(
+        [(url, t, a, "a", "en"), (url, t, b, "b", "en")],
+        schema)).collect()
+    w2 = latest_snapshot_per_url(spark.createDataFrame(
+        [(url, t, b, "b", "en"), (url, t, a, "a", "en")],
+        schema)).collect()
+    assert len(w1) == 1 and len(w2) == 1
+    assert w1[0].html == w2[0].html  # order-independent winner
+    # null html never beats a real payload
+    w3 = latest_snapshot_per_url(spark.createDataFrame(
+        [(url, t, None, "n", "en"), (url, t, a, "a", "en")],
+        schema)).collect()
+    assert w3[0].html == a

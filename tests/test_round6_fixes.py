@@ -7,17 +7,11 @@ Covered:
   flagships and every must-check row (queries() ordering).
 - item 2: corpus_keep_filter carries the r5 signals (boiler/contam/
   sample) with per-criterion explainability.
-- item 3: seq_pack_materialize invariants (budget, order, boundary
-  mask consistency).
-- item 4: decontam_against takes the benchmark suite as a second
-  DataFrame.
 - item 7: the two table-gate rows share one extraction (cells cache).
 """
 
 import os
 import sys
-
-import pytest
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO not in sys.path:
@@ -117,68 +111,6 @@ def test_keep_filter_carries_r5_signals(spark):
     # sampling actually rejects part of the corpus (rates < 1)
     assert any(not r.sampled for r in rows.values())
     assert any(r.keep for r in rows.values())
-
-
-# ---------------------------------------------------------------------------
-# item 3: pack materialization invariants
-# ---------------------------------------------------------------------------
-
-def test_seq_pack_materialize_invariants(spark):
-    from parsee_pdf_reader_spark.operators.textstats import (
-        _PACK_BUDGET, q_seq_pack_plan, seq_pack_materialize,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = q_seq_pack_plan(spark, SF)
-    packed = seq_pack_materialize(plan, docs).collect()
-    assert packed
-    plan_rows = plan.collect()
-    n_docs_total = sum(p.n_docs for p in packed)
-    assert n_docs_total == len(plan_rows)  # every doc in exactly 1 pack
-    for p in packed:
-        # the token stream is exactly the boundary mask's docs, in
-        # offset (= doc_id within shard) order, concatenated
-        assert p.pack_tokens == sum(b.n_tokens for b in p.boundaries)
-        assert len(p.tokens) == p.pack_tokens
-        offs = [b.offset_in_pack for b in p.boundaries]
-        assert offs == sorted(offs)
-        ids = [b.doc_id for b in p.boundaries]
-        assert ids == sorted(ids)  # greedy order is doc_id order
-        assert p.first_doc == ids[0] and p.last_doc == ids[-1]
-        # budget: a pack exceeds the budget by less than one doc
-        if p.pack_tokens > _PACK_BUDGET:
-            assert (p.pack_tokens - p.boundaries[-1].n_tokens
-                    < _PACK_BUDGET)
-        # boundary offsets are the running token sum
-        run = offs[0]
-        for b in p.boundaries:
-            assert b.offset_in_pack == run
-            run += b.n_tokens
-
-
-# ---------------------------------------------------------------------------
-# item 4: decontam with a genuinely separate benchmark table
-# ---------------------------------------------------------------------------
-
-def test_decontam_against_separate_benchmark_table(spark):
-    from parsee_pdf_reader_spark.operators.curation import (
-        decontam_against,
-    )
-
-    leak = ("the committee reviewed the annual budget allocation for "
-            "infrastructure spending priorities next year")
-    clean = ("a completely unrelated story about mountain weather "
-             "patterns and seasonal snowfall depth records")
-    train = spark.createDataFrame(
-        [(1, leak + " plus trailing context tokens here"),
-         (2, clean)], "doc_id long, text string")
-    bench = spark.createDataFrame(
-        [(900, "held out question: " + leak)],
-        "doc_id long, text string")
-    out = {r.doc_id: r for r in
-           decontam_against(train, bench, min_hits=3).collect()}
-    assert out[1].contaminated and out[1].n_overlap >= 3
-    assert not out[2].contaminated and out[2].n_overlap == 0
 
 
 # ---------------------------------------------------------------------------
@@ -284,57 +216,6 @@ def test_semdedup_drops_planted_semantic_duplicates(spark, tmp_path):
     assert out[13].keep, out[13]
 
 
-def test_mix_rebalance_plan_caps_and_renormalizes(spark):
-    """Mixture planning: rate = min(1, weight*budget/stratum); an
-    undersupplied stratum caps at 1.0 and the realized shares
-    renormalize over planned tokens (summing to 1), exposing the gap
-    to the target mix."""
-    from parsee_pdf_reader_spark.operators.curation import (
-        _MIX_BUDGET_FRAC, _MIX_TARGET, q_mix_rebalance_plan,
-    )
-
-    rows = {r.lang: r for r in
-            q_mix_rebalance_plan(spark, SF).collect()}
-    assert set(rows) == set(_MIX_TARGET)
-    total = sum(r.lang_tokens for r in rows.values())
-    budget = total * _MIX_BUDGET_FRAC
-    for lang, r in rows.items():
-        want = min(1.0, _MIX_TARGET[lang] * budget / r.lang_tokens)
-        assert abs(r.rate - want) < 1e-6, (lang, r.rate, want)
-        assert r.expected_tokens <= r.lang_tokens
-    capped = [r for r in rows.values() if r.rate == 1.0]
-    uncapped = [r for r in rows.values() if r.rate < 1.0]
-    assert uncapped, "budget must actually bind somewhere"
-    shares = sum(r.realized_share for r in rows.values())
-    assert abs(shares - 1.0) < 1e-4, shares
-    # a capped stratum's realized share falls below its target
-    for r in capped:
-        assert r.realized_share <= _MIX_TARGET[r.lang] + 1e-6
-
-
-def test_lm_zero_bigram_docs_forced_to_tail(spark, tmp_path):
-    """Review fix: a doc with <2 tokens carries the 0.0 sentinel — the
-    MAXIMUM possible score — and must not ride it into 'head' (and
-    through corpus_keep_filter's lm_ok): no bigrams = no evidence =
-    tail."""
-    from parsee_pdf_reader_spark.operators.textstats import (
-        q_lm_ppl_buckets,
-    )
-
-    phrase = "the quick brown fox jumps over the lazy dog again"
-    # repetition count varies per doc -> distinct scores -> all three
-    # buckets populated among the scored docs
-    rows = ([(i, " ".join([phrase] * (i + 1))) for i in range(9)]
-            + [(90, "singletoken")])
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sf = str(tmp_path)
-    docs.write.parquet(f"{sf}/documents.parquet")
-    out = {r.doc_id: r for r in q_lm_ppl_buckets(spark, sf).collect()}
-    assert out[90].avg_logprob == 0.0  # sentinel, max of all scores
-    assert out[90].ppl_bucket == "tail"  # ...but never 'head'
-    assert any(r.ppl_bucket == "head" for r in out.values())
-
-
 def test_lm_buckets_share_one_checkpointed_score_table(spark):
     """Review fix: the bucket query reads the scores three times
     (histogram, corpus count and join-back) and the keep filter embeds
@@ -362,31 +243,3 @@ def test_lm_buckets_share_one_checkpointed_score_table(spark):
     assert stored_tables(q_lm_ppl_buckets(spark, SF)).isdisjoint(first)
 
 
-def test_latest_snapshot_tiebreak_total_order(spark):
-    """Review fix: same warc_ts AND same payload length must still
-    pick one deterministic winner (content-digest tie-break), under
-    any input order."""
-    import datetime
-
-    from parsee_pdf_reader_spark.training_pipeline import (
-        latest_snapshot_per_url,
-    )
-
-    t = datetime.datetime(2025, 3, 1)
-    a, b = b"payload-aaaa", b"payload-bbbb"  # same length
-    url = "https://t.example/x"
-    schema = ("url string, warc_ts timestamp, html binary, "
-              "text string, lang string")
-    w1 = latest_snapshot_per_url(spark.createDataFrame(
-        [(url, t, a, "a", "en"), (url, t, b, "b", "en")],
-        schema)).collect()
-    w2 = latest_snapshot_per_url(spark.createDataFrame(
-        [(url, t, b, "b", "en"), (url, t, a, "a", "en")],
-        schema)).collect()
-    assert len(w1) == 1 and len(w2) == 1
-    assert w1[0].html == w2[0].html  # order-independent winner
-    # null html never beats a real payload
-    w3 = latest_snapshot_per_url(spark.createDataFrame(
-        [(url, t, None, "n", "en"), (url, t, a, "a", "en")],
-        schema)).collect()
-    assert w3[0].html == a
