@@ -9,11 +9,13 @@ The composition REUSES the registered operators — the Spark side calls
 embeds their registered SQL as subqueries — so the curation verdict
 can never drift from the operators it is built on.
 
-Scale: the documents table is read once per call into ONE stored
-DataFrame that every component receives (each ``q_*`` wrapper takes
-it as ``docs``), and per-document work runs once per call — the
-MinHash signatures, the LSH pair table and the LM bigram and score
-tables are each stored once and read by all their consumers.
+Scale: the documents table is read and tokenized once per call into
+ONE stored DataFrame that every component receives (each ``q_*``
+wrapper takes it as ``docs``): its ``toks`` column is the one
+whitespace tokenization every component reads. Per-document work runs
+once per call — the MinHash signatures, the LSH pair table and the LM
+bigram and score tables are each stored once and read by all their
+consumers.
 quality/lang/length/sample are pure projections; the shuffles are the
 components' own (band join, connected-components rounds,
 sentence/gram/bigram counts) plus doc_id equi-joins that share
@@ -34,8 +36,8 @@ from parsee_pdf_reader_spark.operators.textstats import (
     q_sentence_boilerplate,
 )
 from parsee_pdf_reader_spark.plans.queries import (
+    LOWER_TOKENS_SQL,
     REGISTRY,
-    _ts,
     documents,
     materialize,
     register,
@@ -86,6 +88,10 @@ def q_corpus_keep_filter(spark, sf_dir):
       so its missing row coalesces to False.
     - ``sampled``: the deterministic per-language downsampling draw.
 
+    The documents are read and split into whitespace tokens once, into
+    one stored frame with a ``toks`` column that every component reads
+    (pinned by ``test_hof_expressions_evaluated_once_per_row``).
+
     Scale: doc_id equi-joins over operators whose shapes are already
     scale-audited (boilerplate: agg + shuffle_hash join-back; span
     coverage: one gram-hash count window; LM bucket: the per-call
@@ -98,9 +104,9 @@ def q_corpus_keep_filter(spark, sf_dir):
     runs the shuffle stages beneath it when it is stored (15 jobs on
     the sf0.001 table, pinned by
     ``test_corpus_keep_filter_build_time_jobs``)."""
-    # read once: every component's scan reads these stored rows
+    # read and tokenized once: every component reads these stored rows
     docs = materialize(documents(spark, sf_dir).select(
-        "doc_id", "text", "lang", "n_chars"))
+        "doc_id", "text", "toks", "lang", "n_chars"))
     canon = q_dedup_canonical(spark, sf_dir, docs).select(
         "doc_id", F.col("keep").alias("dedup_keep"))
     qual = q_doc_quality_scores(spark, sf_dir, docs).select(
@@ -262,9 +268,9 @@ def decontam_against(train_df, bench_df, n: int = _DECON_N,
     """Production decontamination API (VERDICT r5 item 4): flag every
     training document whose word-``n``-gram shingles overlap the
     held-out benchmark suite. ``train_df`` and ``bench_df`` are any
-    two DataFrames with (doc_id, text) columns — the benchmark side is
-    a genuinely separate table in production, not a doc_id slice of
-    the corpus.
+    two DataFrames with (doc_id, toks) columns (``toks`` as
+    ``documents`` returns it) — the benchmark side is a genuinely
+    separate table in production, not a doc_id slice of the corpus.
 
     Scale: the benchmark side is a FIXED small suite (thousands of
     docs, ~10^5 distinct shingles at 100 TB too) -> distinct then
@@ -272,11 +278,9 @@ def decontam_against(train_df, bench_df, n: int = _DECON_N,
     broadcast-hash semi-count + one groupBy(doc_id) (combinable,
     high-cardinality key). No self-join, no shuffle of the corpus
     shingle explosion beyond the doc_id agg."""
-    from parsee_pdf_reader_spark.operators.dedup import (
-        _toks, shingles_col,
-    )
+    from parsee_pdf_reader_spark.operators.dedup import shingles_col
 
-    sh = shingles_col(_toks(), n)
+    sh = shingles_col(F.col("toks"), n)
     bench = bench_df.select(F.explode(sh).alias("sh")).distinct()
     cand = train_df.select("doc_id", F.explode(sh).alias("sh"))
     hits = (cand.join(F.broadcast(bench), "sh")
@@ -398,9 +402,7 @@ _MIX_W_SQL = "case " + " ".join(
            round(expected_tokens
                  / sum(expected_tokens) over (), 6) as realized_share
     from planned
-    """.replace("{TOKS}",
-                "list_filter(string_split_regex(lower(text), "
-                "'\\s+'), x -> x <> '')"),
+    """.replace("{TOKS}", LOWER_TOKENS_SQL),
 )
 def q_mix_rebalance_plan(spark, sf_dir):
     """Derive per-language sampling rates from a target mix + token
@@ -417,10 +419,8 @@ def q_mix_rebalance_plan(spark, sf_dir):
     corpus_token_budget shape, never the corpus."""
     from pyspark.sql import Window
 
-    docs = _ts(spark, sf_dir, "documents")
-    from parsee_pdf_reader_spark.operators.textstats import _toks_lower
-
-    n_toks = F.size(_toks_lower())
+    docs = documents(spark, sf_dir)
+    n_toks = F.size("toks")
     agg = (docs.groupBy("lang")
            .agg(F.sum(n_toks).cast("long").alias("lang_tokens")))
     tot = docs.agg(F.sum(n_toks).cast("double").alias("total"))

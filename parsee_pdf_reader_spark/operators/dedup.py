@@ -21,19 +21,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from parsee_pdf_reader_spark.plans.queries import (
+    TOKENS_SQL,
     _t,
     _ts,
     documents,
     materialize,
     register,
+    tokens,
 )
-
-# whitespace tokens, both engines
-_TOKS_SQL = "list_filter(string_split_regex(text, '\\s+'), x -> x <> '')"
-
-
-def _toks(text_col: str = "text"):
-    return F.filter(F.split(text_col, r"\s+"), lambda x: x != "")
 
 
 # ---------------------------------------------------------------------------
@@ -73,11 +68,11 @@ _BAND_R = 4
 def _shingles_sql(n: int = 3) -> str:
     """DuckDB twin of ``shingles_col`` at any shingle width."""
     return f"""
-    (case when len({_TOKS_SQL}) < {n}
-          then [array_to_string({_TOKS_SQL}, ' ')]
+    (case when len({TOKENS_SQL}) < {n}
+          then [array_to_string({TOKENS_SQL}, ' ')]
           else list_distinct(list_transform(
-                 range(len({_TOKS_SQL}) - {n - 1}),
-                 i -> array_to_string(list_slice({_TOKS_SQL},
+                 range(len({TOKENS_SQL}) - {n - 1}),
+                 i -> array_to_string(list_slice({TOKENS_SQL},
                                                  i + 1, i + {n}), ' ')))
      end)
 """
@@ -172,11 +167,11 @@ def minhash_sig_col(shingles):
     ))
 
 
-def text_minhash_sig():
-    """MinHash signature of the ``text`` column: whitespace tokens ->
-    distinct 3-gram shingles -> ``minhash_sig_col``. The one text ->
-    signature path of the batch LSH and its streaming twin."""
-    return minhash_sig_col(shingles_col(_toks(), 3))
+def minhash_sig(toks):
+    """MinHash signature of a whitespace-token array: distinct 3-gram
+    shingles -> ``minhash_sig_col``. The one tokens -> signature path
+    of the batch LSH, its streaming twin and the training pipeline."""
+    return minhash_sig_col(shingles_col(toks, 3))
 
 
 def _band_hash_col(sig, b):
@@ -190,13 +185,13 @@ def _band_hash_col(sig, b):
 
 
 def minhash_signatures_df(docs):
-    """Signature step of the LSH candidate stage: (doc_id, text) ->
+    """Signature step of the LSH candidate stage: (doc_id, toks) ->
     (doc_id, sig), a pure projection (no shuffle), stored: both sides
     of the band self-join read it (one is broadcast, so they share no
     exchange), and the signature would otherwise be evaluated once
-    per side."""
-    return materialize(docs.select("doc_id",
-                                   text_minhash_sig().alias("sig")))
+    per side. ``docs`` carries ``toks``, as ``documents`` returns."""
+    return materialize(docs.select(
+        "doc_id", minhash_sig(F.col("toks")).alias("sig")))
 
 
 def minhash_pairs_df(sigs):
@@ -247,7 +242,7 @@ def minhash_band_hashes():
     # sig bound once: the r4 shape re-evaluated the signature (and its
     # 12x shingle recompute) inside every band's lambda — 36 shingle
     # evaluations per row on the streaming path
-    return bind1(text_minhash_sig(), lambda sig: F.transform(
+    return bind1(minhash_sig(tokens("text")), lambda sig: F.transform(
         F.sequence(F.lit(0), F.lit(_BANDS - 1)),
         lambda b: F.struct(b.cast("int").alias("b"),
                            _band_hash_col(sig, b).alias("band_hash")),
@@ -259,8 +254,7 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     """Shingle -> minhash -> band -> bucket-join near-dup candidates.
     Signature stage is a pure projection (no shuffle); candidate pairs
     come from the band-bucket equi-join only."""
-    return minhash_pairs_df(
-        minhash_signatures_df(_ts(spark, sf_dir, "documents")))
+    return minhash_pairs_df(minhash_signatures_df(documents(spark, sf_dir)))
 
 
 # ---------------------------------------------------------------------------
@@ -311,7 +305,7 @@ def q_dedup_clusters(spark, sf_dir):
     Output: (doc_id, cluster_id = min doc_id in component,
     cluster_size), for every doc that appears in at least one pair."""
     return connected_components_df(minhash_pairs_df(
-        minhash_signatures_df(_ts(spark, sf_dir, "documents"))))
+        minhash_signatures_df(documents(spark, sf_dir))))
 
 
 @register("dedup_clusters_star", _CC_SQL)
@@ -322,7 +316,7 @@ def q_dedup_clusters_star(spark, sf_dir):
     ``_CC_LOCAL_MAX_EDGES`` edges, which no registered input reaches,
     so this row calls them directly."""
     return _with_cluster_size(_cc_star_labels(minhash_pairs_df(
-        minhash_signatures_df(_ts(spark, sf_dir, "documents")))))
+        minhash_signatures_df(documents(spark, sf_dir)))))
 
 
 def connected_components_df(pairs, stats=None):
@@ -590,7 +584,7 @@ def _simhash_sql(nbits: int = 16) -> str:
     assert 1 <= nbits <= 63
     return f"""
     cast(list_sum(list_transform(range({nbits}), i ->
-      (case when list_sum(list_transform({_TOKS_SQL}, t ->
+      (case when list_sum(list_transform({TOKENS_SQL}, t ->
          case when cast(floor(
                  (instr('{_HEXDIGITS}',
                         substr(md5(t), (i // 4) + 1, 1)) - 1)
@@ -701,8 +695,9 @@ def q_dedup_simhash(spark, sf_dir):
     rows — at 63 bits, ~#distinct-hashes rows, still << corpus) joined
     back on the hash key; AQE elects a broadcast for the tiny size
     table, and the big side is never range-sorted into hash buckets."""
-    docs = _ts(spark, sf_dir, "documents")
-    base = docs.select("doc_id", simhash_col(_toks()).alias("simhash16"))
+    docs = documents(spark, sf_dir)
+    base = docs.select("doc_id",
+                       simhash_col(F.col("toks")).alias("simhash16"))
     # r7: the signature projection feeds both the size aggregation and
     # the join-back — materialize it once per invocation (the
     # interpreted 16-bit fold was the whole cost of this row, and it
@@ -779,8 +774,8 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
     (VERDICT r2 item 3; r7 replaced the shingle self-join — two
     shuffles of the exploded stream — with a per-shingle ordered-pair
     expansion, safe because df is capped)."""
-    docs = _ts(spark, sf_dir, "documents")
-    sh = docs.select("doc_id", shingles_col(_toks(), 3).alias("sh"))
+    docs = documents(spark, sf_dir)
+    sh = docs.select("doc_id", shingles_col(F.col("toks"), 3).alias("sh"))
     exploded = sh.select("doc_id", F.explode("sh").alias("shingle"))
     freq = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     # 2 consumers (sizes + the pair expansion); stored per call so the
@@ -865,8 +860,8 @@ def q_dedup_verify_pipeline(spark, sf_dir):
     followed by EXACT Jaccard verification — candidates only, so the
     expensive set-intersection runs on ~O(dups) pairs, never O(n^2).
     This is the production dedup shape at 10^12 docs."""
-    docs = _ts(spark, sf_dir, "documents")
-    shingles = shingles_col(_toks(), 3)
+    docs = documents(spark, sf_dir)
+    shingles = shingles_col(F.col("toks"), 3)
     # minhash_sig_col binds its input once; referencing the carried
     # "sh" column costs one more shingle evaluation (2 total per row
     # vs 13 in the r4 shape, which inlined shingles per slot)
@@ -942,7 +937,7 @@ def simhash_near_pairs(docs, nbits=16, band_bits=4, max_ham=None):
     # -> 33 s (bound sign-vec) -> 19 s (this); the 16-bit row 10.7 s
     # -> 7.8 s. The remaining cost is the inherent interpreted-HOF
     # arithmetic (~tokens x nbits sign updates per doc).
-    sh_expr = simhash_col(_toks(), nbits)
+    sh_expr = simhash_col(tokens("text"), nbits)
     band_arr = F.element_at(
         F.transform(
             F.array(sh_expr),
@@ -1034,7 +1029,7 @@ def _dup_span_sql(n: int = _SPAN_N) -> str:
     scale)."""
     return f"""
     with toks as (
-      select doc_id, {_TOKS_SQL} as tk from documents
+      select doc_id, {TOKENS_SQL} as tk from documents
     ), grams as (
       select doc_id, i as pos, array_to_string(tk[i+1:i+{n}], ' ') as g
       from toks, unnest(range(greatest(len(tk) - {n} + 1, 0))) as t(i)
@@ -1067,12 +1062,13 @@ def dup_span_stats_df(docs, n: int = _SPAN_N):
     """Per-document duplicated-span coverage: the fraction of a doc's
     tokens lying inside some n-token window that occurs >= 2 times
     corpus-wide (Lee et al.'s exact-substring dedup signal, rebuilt as
-    a dataframe plan instead of a suffix array).
+    a dataframe plan instead of a suffix array). ``docs`` carries
+    ``toks``, as ``documents`` returns.
 
     Plan shape (the 100 TB rationale):
 
-    - grams are a single codegen'd projection per doc (``bind1`` binds
-      the token split once; ~len(tk) structs of (pos, xxhash64)), then
+    - grams are a single codegen'd projection per doc (~len(toks)
+      structs of (pos, xxhash64)), then
       one explode — no shuffle yet;
     - corpus-wide repetition uses ONE hash exchange: a count window
       partitioned by the 8-byte gram hash (a groupBy+self-join would
@@ -1095,22 +1091,19 @@ def dup_span_stats_df(docs, n: int = _SPAN_N):
     not. Near 10^7-10^8 copies of one gram the hot task spills."""
     from pyspark.sql import Window
 
-    toks = F.filter(F.split("text", r"\s+"), lambda x: x != "")
-    gram_arr = bind1(
-        toks,
-        lambda tk: F.when(
-            F.size(tk) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(tk) - n),
-                lambda i: F.struct(
-                    i.cast("int").alias("pos"),
-                    F.xxhash64(
-                        F.concat_ws(" ", F.slice(tk, i + 1, n))
-                    ).alias("h"),
-                ),
+    tk = F.col("toks")
+    gram_arr = F.when(
+        F.size(tk) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(tk) - n),
+            lambda i: F.struct(
+                i.cast("int").alias("pos"),
+                F.xxhash64(
+                    F.concat_ws(" ", F.slice(tk, i + 1, n))
+                ).alias("h"),
             ),
-        ),  # short docs -> NULL array -> explode() drops the row
-    )
+        ),
+    )  # short docs -> NULL array -> explode() drops the row
     g = (
         docs.select("doc_id", F.explode(gram_arr).alias("g"))
         .select("doc_id", "g.pos", "g.h")
@@ -1128,7 +1121,7 @@ def dup_span_stats_df(docs, n: int = _SPAN_N):
         .select("doc_id",
                 _span_union_size(F.col("ps"), n).alias("dup_tokens"))
     )
-    base = docs.select("doc_id", F.size(toks).alias("n_tokens"))
+    base = docs.select("doc_id", F.size("toks").alias("n_tokens"))
     dup_tokens = F.coalesce("dup_tokens", F.lit(0))
     return base.join(cov, "doc_id", "left").select(
         "doc_id",

@@ -25,7 +25,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from parsee_pdf_reader_spark.plans.queries import _t, _ts
+from parsee_pdf_reader_spark.plans.queries import documents, tokens
 
 
 def plant_near_dup_corpus(spark: SparkSession, docs: DataFrame,
@@ -85,7 +85,7 @@ def dedup_recall_report(spark: SparkSession, sf_dir: str,
     near-dups); the verify stage's extras carry exact Jaccard evidence
     by construction."""
     from parsee_pdf_reader_spark.operators.dedup import (
-        _toks, q_dedup_minhash_lsh, q_dedup_verify_pipeline,
+        q_dedup_minhash_lsh, q_dedup_verify_pipeline,
         q_simhash_near_pairs_wide, simhash_col,
     )
 
@@ -95,7 +95,7 @@ def dedup_recall_report(spark: SparkSession, sf_dir: str,
     # simhash envelope: planted pairs within hamming <= 3 at 63 bits
     hashes = (spark.read.parquet(
         os.path.join(sf_dir, "documents.parquet"))
-        .select("doc_id", simhash_col(_toks(), 63).alias("sh")))
+        .select("doc_id", simhash_col(tokens("text"), 63).alias("sh")))
     ha = hashes.select(F.col("doc_id").alias("lo"),
                        F.col("sh").alias("sh_a"))
     hb = hashes.select(F.col("doc_id").alias("hi"),
@@ -212,10 +212,11 @@ def q_dedup_recall_exact_dups(spark, sf_dir):
         minhash_pairs_df, minhash_signatures_df, simhash_near_pairs,
     )
 
-    docs = _ts(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = documents(spark, sf_dir).select("doc_id", "text", "toks")
     planted_src = docs.where(F.col("doc_id") < _PLANT_N)
     aug = docs.unionByName(planted_src.select(
-        (F.col("doc_id") + _PLANT_OFFSET).alias("doc_id"), "text"))
+        (F.col("doc_id") + _PLANT_OFFSET).alias("doc_id"), "text",
+        "toks"))
     truth = planted_src.select(
         F.col("doc_id").alias("doc_a"),
         (F.col("doc_id") + _PLANT_OFFSET).alias("doc_b"))

@@ -11,14 +11,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from parsee_pdf_reader_spark.plans.queries import (
+    LOWER_TOKENS_SQL,
     _t,
     _ts,
     documents,
     materialize,
     register,
+    tokens,
 )
-
-_TOKS_SQL = "list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')"
 
 _STOPWORDS = {
     "en": ["the", "of", "and", "to", "in", "is", "that", "for", "it", "as"],
@@ -32,13 +32,9 @@ _STOPWORDS = {
 _LANG_ORDER = ["en", "de", "fr", "es"]
 
 
-def _toks_lower():
-    return F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-
-
 def _sw_sql(lang: str) -> str:
     lst = ", ".join(f"'{w}'" for w in _STOPWORDS[lang])
-    return f"len(list_filter({_TOKS_SQL}, x -> x in ({lst})))"
+    return f"len(list_filter({LOWER_TOKENS_SQL}, x -> x in ({lst})))"
 
 
 _LANG_CASE = f"""
@@ -68,8 +64,8 @@ _LANG_CASE = f"""
 def q_lang_id_heuristic(spark, sf_dir):
     """Stopword-count language ID with a fixed priority tie-break
     (en > de > fr > es)."""
-    docs = _ts(spark, sf_dir, "documents")
-    toks = _toks_lower()
+    docs = documents(spark, sf_dir)
+    toks = F.transform("toks", F.lower)
 
     # r7: bind the token array ONCE and emit the four per-language hit
     # counts through one inline(array(struct)) Generate boundary —
@@ -108,19 +104,19 @@ def q_lang_id_heuristic(spark, sf_dir):
     "doc_quality_scores",
     f"""
     select doc_id,
-           len({_TOKS_SQL}) as n_tokens,
+           len({LOWER_TOKENS_SQL}) as n_tokens,
            round(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
                  / greatest(length(text), 1), 6) as alpha_ratio,
            round(length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g'))
                  / greatest(length(text), 1), 6) as punct_ratio,
-           round({_sw_sql('en')} / greatest(len({_TOKS_SQL}), 1), 6)
+           round({_sw_sql('en')} / greatest(len({LOWER_TOKENS_SQL}), 1), 6)
                as stopword_ratio,
            round(length(replace(text, ' ', ''))
-                 / greatest(len({_TOKS_SQL}), 1), 4) as mean_token_len,
-           case when len({_TOKS_SQL}) >= 50
-                 and {_sw_sql('en')} / greatest(len({_TOKS_SQL}), 1) > 0.02
+                 / greatest(len({LOWER_TOKENS_SQL}), 1), 4) as mean_token_len,
+           case when len({LOWER_TOKENS_SQL}) >= 50
+                 and {_sw_sql('en')} / greatest(len({LOWER_TOKENS_SQL}), 1) > 0.02
                 then 'high'
-                when len({_TOKS_SQL}) >= 20 then 'medium'
+                when len({LOWER_TOKENS_SQL}) >= 20 then 'medium'
                 else 'low' end as quality_bucket
     from documents
     """,
@@ -132,8 +128,9 @@ def q_doc_quality_scores(spark, sf_dir, docs=None):
 
 def doc_quality_scores_df(docs):
     """Length/punctuation/stopword quality features (the usual pretrain
-    filtering signals) as one pure projection."""
-    toks = _toks_lower()
+    filtering signals) as one pure projection. ``docs`` carries
+    ``text`` and ``toks``, as ``documents`` returns."""
+    toks = F.transform("toks", F.lower)
     # r7: one tokenization per row — (n_tokens, stopword hits) emitted
     # through an inline(array(struct)) boundary; the old shape
     # re-inlined the split+filter at every n_tokens/sw reference
@@ -175,10 +172,10 @@ _BPE_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"
     "token_counts",
     f"""
     select doc_id,
-           len({_TOKS_SQL}) as ws_tokens,
+           len({LOWER_TOKENS_SQL}) as ws_tokens,
            len(regexp_extract_all(text, '{_BPE_PATTERN}')) as bpe_tokens,
            round(len(regexp_extract_all(text, '{_BPE_PATTERN}'))
-                 / greatest(len({_TOKS_SQL}), 1), 4) as bpe_per_word
+                 / greatest(len({LOWER_TOKENS_SQL}), 1), 4) as bpe_per_word
     from documents
     """,
 )
@@ -187,10 +184,10 @@ def q_token_counts(spark, sf_dir):
     estimation surface). Each count is projected once and the ratio
     reads the projected columns: written inline, it would split and
     regex-scan the text a second time."""
-    docs = _ts(spark, sf_dir, "documents")
+    docs = documents(spark, sf_dir)
     counts = docs.select(
         "doc_id",
-        F.size(_toks_lower()).alias("ws_tokens"),
+        F.size("toks").alias("ws_tokens"),
         F.size(F.regexp_extract_all("text", F.lit(_BPE_PATTERN), 0))
         .alias("bpe_tokens"),
     )
@@ -390,7 +387,7 @@ _TFIDF_K = 3
     f"""
     with tf as (
       select doc_id, tok, count(*) as tf
-      from (select doc_id, unnest({_TOKS_SQL}) as tok from documents) t
+      from (select doc_id, unnest({LOWER_TOKENS_SQL}) as tok from documents) t
       group by doc_id, tok
     ),
     df as (select tok, count(*) as df from tf group by tok),
@@ -433,8 +430,8 @@ def q_tfidf_top_terms(spark, sf_dir):
     so only the tf side adds a shuffle."""
     from pyspark.sql import Window
 
-    docs = _ts(spark, sf_dir, "documents")
-    toks = _toks_lower()
+    docs = documents(spark, sf_dir)
+    toks = F.transform("toks", F.lower)
     tf = (docs.select("doc_id", F.explode(toks).alias("tok"))
           .groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf")))
     df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
@@ -464,8 +461,8 @@ def q_tfidf_top_terms(spark, sf_dir):
                    rows unbounded preceding) / total, 6) as cum_share
     from (
       select lang,
-             cast(sum(len({_TOKS_SQL})) as bigint) as lang_tokens,
-             cast(sum(sum(len({_TOKS_SQL}))) over () as double) as total
+             cast(sum(len({LOWER_TOKENS_SQL})) as bigint) as lang_tokens,
+             cast(sum(sum(len({LOWER_TOKENS_SQL}))) over () as double) as total
       from documents group by lang) t
     """,
 )
@@ -479,9 +476,9 @@ def q_corpus_token_budget(spark, sf_dir):
     start)."""
     from pyspark.sql import Window
 
-    docs = _ts(spark, sf_dir, "documents")
+    docs = documents(spark, sf_dir)
     agg = docs.groupBy("lang").agg(
-        F.sum(F.size(_toks_lower())).cast("long").alias("lang_tokens"))
+        F.sum(F.size("toks")).cast("long").alias("lang_tokens"))
     wtot = Window.partitionBy()
     wcum = (Window.orderBy(F.desc("lang_tokens"), F.asc("lang"))
             .rowsBetween(Window.unboundedPreceding, 0))
@@ -494,8 +491,8 @@ def q_corpus_token_budget(spark, sf_dir):
 
 
 _2GRAM_SQL = f"""
-    list_transform(range(len({_TOKS_SQL}) - 1),
-        i -> {_TOKS_SQL}[i+1] || ' ' || {_TOKS_SQL}[i+2])
+    list_transform(range(len({LOWER_TOKENS_SQL}) - 1),
+        i -> {LOWER_TOKENS_SQL}[i+1] || ' ' || {LOWER_TOKENS_SQL}[i+2])
 """
 
 
@@ -515,7 +512,7 @@ _2GRAM_SQL = f"""
              cast(sum(c) as double) as n_tokens
       from (
         select doc_id, tok, count(*) as c
-        from (select doc_id, unnest({_TOKS_SQL}) as tok
+        from (select doc_id, unnest({LOWER_TOKENS_SQL}) as tok
               from documents) u
         group by doc_id, tok) pc
       group by doc_id) m on m.doc_id = t.doc_id
@@ -528,8 +525,8 @@ def q_doc_repetition_stats(spark, sf_dir):
     computed entirely inside array expressions (zero shuffle); the
     top-word share explodes to (doc, token) counts — two map-side-
     combinable exchanges on doc_id, no hot keys."""
-    docs = _ts(spark, sf_dir, "documents")
-    toks = _toks_lower()
+    docs = documents(spark, sf_dir)
+    toks = F.transform("toks", F.lower)
     # r7: token array bound once (lambda variable) — the old shape
     # captured the split+filter expression inside the per-gram lambda,
     # where each element_at reference re-evaluates it (the r5 HOF
@@ -754,7 +751,7 @@ _PACK_SHARDS = 64    # parallel packing shards
       from (
         select doc_id,
                doc_id % {_PACK_SHARDS} as shard,
-               cast(len({_TOKS_SQL}) as bigint) as n_tokens
+               cast(len({LOWER_TOKENS_SQL}) as bigint) as n_tokens
         from documents) t) w
     """,
 )
@@ -778,12 +775,11 @@ def q_seq_pack_plan(spark, sf_dir):
     production hashes for id-skew immunity, same plan.)"""
     from pyspark.sql import Window
 
-    docs = _ts(spark, sf_dir, "documents")
-    toks = _toks_lower()
+    docs = documents(spark, sf_dir)
     base = docs.select(
         "doc_id",
         (F.col("doc_id") % _PACK_SHARDS).alias("shard"),
-        F.size(toks).cast("long").alias("n_tokens"))
+        F.size("toks").cast("long").alias("n_tokens"))
     w = (Window.partitionBy("shard").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, -1))
     cum_before = F.coalesce(F.sum("n_tokens").over(w),
@@ -814,7 +810,8 @@ def seq_pack_materialize(plan_df, docs_df):
     (tokens travel as per-doc arrays, flattened after collect_list).
     The in-group sort is a sort_array over ~budget/mean-doc-len
     elements, not a partition sort."""
-    toks = docs_df.select("doc_id", _toks_lower().alias("toks"))
+    toks = docs_df.select(
+        "doc_id", F.transform(tokens("text"), F.lower).alias("toks"))
     j = plan_df.join(toks, "doc_id")
     parts = F.sort_array(F.collect_list(F.struct(
         "offset_in_pack", "doc_id", "n_tokens", "toks")))
@@ -862,7 +859,7 @@ def _seq_pack_mat_sql() -> str:
     plan_sql = REGISTRY["seq_pack_plan"][1]
     return f"""
     with plan as ({plan_sql}),
-    tok as (select doc_id, {_TOKS_SQL} as toks from documents)
+    tok as (select doc_id, {LOWER_TOKENS_SQL} as toks from documents)
     select p.shard, p.pack_id,
            count(*) as n_docs,
            cast(sum(p.n_tokens) as bigint) as pack_tokens,
@@ -911,7 +908,7 @@ _G_LINES_SQL = ("list_filter(string_split(text, chr(10)), "
     "gopher_quality_rules",
     f"""
     with base as (
-      select doc_id, {_TOKS_SQL} as toks, {_G_LINES_SQL} as lines,
+      select doc_id, {LOWER_TOKENS_SQL} as toks, {_G_LINES_SQL} as lines,
              length(text) - length(replace(text, '#', '')) as n_hash,
              len(regexp_extract_all(text, '\\.\\.\\.|…')) as n_ell
       from documents)
@@ -969,8 +966,8 @@ def q_gopher_quality_rules(spark, sf_dir):
     lookaround) so the DuckDB twin is byte-identical."""
     from parsee_pdf_reader_spark.operators.dedup import bind1
 
-    docs = _ts(spark, sf_dir, "documents")
-    toks = _toks_lower()
+    docs = documents(spark, sf_dir)
+    toks = F.transform("toks", F.lower)
     lines = F.filter(F.split("text", r"\n"),
                      lambda x: F.trim(x) != "")
     n_hash = (F.length("text")
@@ -1100,10 +1097,10 @@ _REG6["c4_clean_text"] = (q_c4_clean_text, _c4_clean_sql())
     f"""
     select d.source, d.lang,
            count(*) as n_docs,
-           cast(sum(len({_TOKS_SQL})) as bigint) as n_tokens,
-           round(sum(len({_TOKS_SQL})) / t.total, 6) as token_share
+           cast(sum(len({LOWER_TOKENS_SQL})) as bigint) as n_tokens,
+           round(sum(len({LOWER_TOKENS_SQL})) / t.total, 6) as token_share
     from documents d
-    cross join (select cast(sum(len({_TOKS_SQL})) as double) as total
+    cross join (select cast(sum(len({LOWER_TOKENS_SQL})) as double) as total
                 from documents) t
     group by d.source, d.lang, t.total
     """,
@@ -1119,8 +1116,8 @@ def q_source_mix_stats(spark, sf_dir):
     corpus total enters the PLAN as a one-row broadcast cross join
     (the r5 tfidf pattern — no eager driver job, no window over a
     single partition)."""
-    docs = _ts(spark, sf_dir, "documents")
-    n_toks = F.size(_toks_lower())
+    docs = documents(spark, sf_dir)
+    n_toks = F.size("toks")
     total = (docs.agg(F.sum(n_toks).cast("double").alias("total")))
     agg = (docs.select("source", "lang", n_toks.alias("nt"))
            .groupBy("source", "lang")
@@ -1148,7 +1145,7 @@ _LM_DEC = f"decimal(22,{_LM_ROUND})"
 
 def _lm_score_sql() -> str:
     return f"""
-    with toks as (select doc_id, {_TOKS_SQL} as tk from documents),
+    with toks as (select doc_id, {LOWER_TOKENS_SQL} as tk from documents),
     big as (
       select doc_id, tk[i+1] as w1, tk[i+2] as w2
       from toks, unnest(range(greatest(len(tk) - 1, 0))) as t(i)
@@ -1189,6 +1186,7 @@ def ngram_lm_score_df(docs):
     same way: templated/common text scores high, out-of-distribution
     gibberish scores low). ``avg_logprob`` is monotone in perplexity
     (ppl = exp(-avg_logprob)), so thresholds transfer directly.
+    ``docs`` carries ``toks``, as ``documents`` returns.
 
     Scale story:
 
@@ -1214,10 +1212,8 @@ def ngram_lm_score_df(docs):
     """.replace("{R}", str(_LM_ROUND))
     from parsee_pdf_reader_spark.operators.dedup import bind1
 
-    toks = F.filter(F.split(F.lower("text"), r"\s+"),
-                    lambda x: x != "")
     big_arr = bind1(
-        toks,
+        F.transform("toks", F.lower),
         lambda tk: F.when(
             F.size(tk) >= 2,
             F.transform(
@@ -1234,8 +1230,8 @@ def ngram_lm_score_df(docs):
                       .select("doc_id", "g.w1", "g.w2"))
     c12 = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
-    vocab = (docs.select(F.explode(toks).alias("t"))
-             .agg(F.count_distinct("t").alias("v")))
+    vocab = (docs.select(F.explode("toks").alias("t"))
+             .agg(F.count_distinct(F.lower("t")).alias("v")))
     lp = F.round(
         F.log((F.coalesce("c12", F.lit(0)) + F.lit(1.0))
               / (F.coalesce("c1", F.lit(0)) + F.col("v"))), _LM_ROUND
@@ -1261,7 +1257,7 @@ def q_ngram_lm_score(spark, sf_dir):
     """Gate row of :func:`ngram_lm_score_df` over the documents table
     (self-trained: the counts and the scored documents are the same
     table)."""
-    return ngram_lm_score_df(_ts(spark, sf_dir, "documents"))
+    return ngram_lm_score_df(documents(spark, sf_dir))
 
 
 def _lm_buckets_sql() -> str:
@@ -1314,7 +1310,8 @@ def lm_ppl_buckets_df(docs):
     log-probabilities) — so without the override a single-token spam
     doc would outrank every genuine document. No bigrams = no
     evidence of quality: forced to 'tail' (and thus rejected by
-    ``corpus_keep_filter``'s lm_ok).
+    ``corpus_keep_filter``'s lm_ok). ``docs`` carries ``toks``, as
+    ``documents`` returns.
 
     The score table is read three times (histogram, corpus count and
     join-back; it has one row per document), so it is materialized

@@ -73,13 +73,31 @@ def _ts(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df.repartition(p) if need else df
 
 
+#: whitespace tokens in DuckDB, the twin of ``tokens``: of ``text``
+#: and of ``lower(text)`` (the Spark side lower-cases per token, which
+#: gives the same tokens: no whitespace character changes case)
+TOKENS_SQL = "list_filter(string_split_regex(text, '\\s+'), x -> x <> '')"
+LOWER_TOKENS_SQL = ("list_filter(string_split_regex(lower(text), "
+                    "'\\s+'), x -> x <> '')")
+
+
+def tokens(col):
+    """Whitespace tokens of ``col`` (split on ``\\s+``, empty strings
+    dropped): the package's one tokenizer."""
+    return F.filter(F.split(col, r"\s+"), lambda x: x != "")
+
+
 def documents(spark: SparkSession, sf_dir: str,
               docs: DataFrame | None = None) -> DataFrame:
-    """``docs`` if given, else the spread ``documents`` scan. A
-    component's ``q_*`` wrapper takes an optional pre-read frame, so a
-    composed query reads the table once and hands that one frame to
-    every component it joins."""
-    return _ts(spark, sf_dir, "documents") if docs is None else docs
+    """``docs`` if given, else the spread ``documents`` scan with its
+    ``tokens`` as a ``toks`` column. A component's ``q_*`` wrapper takes
+    an optional pre-read frame, which must carry ``toks`` too, so a
+    composed query reads and tokenizes the table once and hands that
+    one frame to every component it joins."""
+    if docs is None:
+        docs = _ts(spark, sf_dir, "documents").withColumn(
+            "toks", tokens("text"))
+    return docs
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -310,9 +328,6 @@ def q_rank_events_per_user(spark, sf_dir):
 # scalar-function surface over documents
 # ---------------------------------------------------------------------------
 
-_TOKENS_SQL = "list_filter(string_split_regex(text, '\\s+'), x -> x <> '')"
-
-
 @register(
     "doc_numeric_token_stats",
     f"""
@@ -327,7 +342,7 @@ _TOKENS_SQL = "list_filter(string_split_regex(text, '\\s+'), x -> x <> '')"
                                          * 10000) as bigint), 0))), 0)
                 as bigint)
                as sum_scaled
-    from (select doc_id, {_TOKENS_SQL} as toks from documents) t
+    from (select doc_id, {TOKENS_SQL} as toks from documents) t
     """,
 )
 def q_doc_numeric_token_stats(spark, sf_dir):
@@ -342,8 +357,7 @@ def q_doc_numeric_token_stats(spark, sf_dir):
     expressions each re-inlined the split+filter (4x per row, HOFs run
     interpreted with no cross-expression CSE). Value-identical, same
     column names/types."""
-    docs = _ts(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", r"\s+"), lambda x: x != "")
+    docs = documents(spark, sf_dir)
     scaled = lambda x: F.coalesce(  # noqa: E731
         F.round(S.clean_numeric_value(x) * 10000).cast("long"), F.lit(0))
 
@@ -359,7 +373,7 @@ def q_doc_numeric_token_stats(spark, sf_dir):
             ).alias("sum_scaled"),
         )
 
-    bound = F.element_at(F.transform(F.array(toks), stats), 1)
+    bound = F.element_at(F.transform(F.array("toks"), stats), 1)
     return docs.select("doc_id", F.inline(F.array(bound)))
 
 
@@ -372,7 +386,7 @@ def q_doc_numeric_token_stats(spark, sf_dir):
            round({O.clean_numeric_value('tok')}, 6) as val,
            {O.letter_len('tok')} as n_letters,
            {O.word_count('tok')} as n_words
-    from (select distinct unnest({_TOKENS_SQL}) as tok from documents) t
+    from (select distinct unnest({TOKENS_SQL}) as tok from documents) t
     """,
 )
 def q_clean_numeric_tokens(spark, sf_dir):
@@ -381,10 +395,7 @@ def q_clean_numeric_tokens(spark, sf_dir):
     scan is not spread (``_ts``): the distinct's shuffle already spreads
     the per-token work, and a spread would add a second shuffle."""
     docs = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", r"\s+"), lambda x: x != "")
-    tok = (
-        docs.select(F.explode(toks).alias("tok")).distinct()
-    )
+    tok = docs.select(F.explode(tokens("text")).alias("tok")).distinct()
     return tok.select(
         "tok",
         S.is_number_cell(F.col("tok")).alias("is_num"),

@@ -41,8 +41,9 @@ def _drain(out: DataFrame, output_dir: str, checkpoint_dir: str):
 
 
 def stream_extract(spark: SparkSession, input_dir: str, target: str,
-                   checkpoint_dir: str, available_now: bool = True):
-    """Incremental extraction over a growing parquet directory.
+                   checkpoint_dir: str):
+    """Incremental extraction over a growing parquet directory, as an
+    ``availableNow`` drain: it processes the backlog and stops.
 
     ``target`` is a path (``/`` or a URI scheme), which appends
     parquet files, or else a table identifier, which streams into the
@@ -61,9 +62,8 @@ def stream_extract(spark: SparkSession, input_dir: str, target: str,
         out.writeStream.format("parquet")
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
     if "/" in target or "://" in target:
         return writer.option("path", target).start()
     return writer.toTable(target)

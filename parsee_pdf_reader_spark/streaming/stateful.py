@@ -3,9 +3,9 @@
 
 The batch engine's gap-sessionization (G1/T4 skeleton) as a streaming
 operator: state carries (open-session start, last-seen ts, event count)
-per user; a session closes when the gap exceeds the timeout or the
-state times out between micro-batches. Emits one row per CLOSED
-session — the standard shape for incremental training-data telemetry.
+per user; a session closes when the user's next event comes more than
+the gap later. Emits one row per CLOSED session — the standard shape
+for incremental training-data telemetry.
 """
 
 from __future__ import annotations
@@ -28,47 +28,31 @@ OUTPUT_SCHEMA = ("user_id long, session_start timestamp, "
 STATE_SCHEMA = "start long, last long, cnt long"
 
 
-def make_track_sessions(use_timeout: bool):
-    def track_sessions(key, batches, state):
-        return _track_sessions(key, batches, state, use_timeout)
-
-    return track_sessions
-
-
 def _track_sessions(key: Tuple[Any], batches: Iterable[pd.DataFrame],
-                    state: GroupState, use_timeout: bool = True):
+                    state: GroupState):
     """Grouped-map-with-state function (one call per user per batch)."""
     user_id = key[0]
     closed = []
-
-    if state.hasTimedOut:
-        if state.exists:
-            start, last, cnt = state.get
-            closed.append((user_id, start, last, cnt))
-        state.remove()
+    ts_list = []
+    for pdf in batches:
+        ts_list.extend(
+            int(t.value // 10**9) for t in pd.to_datetime(pdf["ts"]))
+    ts_list.sort()
+    if state.exists:
+        start, last, cnt = state.get
     else:
-        ts_list = []
-        for pdf in batches:
-            ts_list.extend(
-                int(t.value // 10**9) for t in pd.to_datetime(pdf["ts"]))
-        ts_list.sort()
-        if state.exists:
-            start, last, cnt = state.get
+        start = last = cnt = None
+    for t in ts_list:
+        if start is None:
+            start, last, cnt = t, t, 1
+        elif t - last > SESSION_GAP_SEC:
+            closed.append((user_id, start, last, cnt))
+            start, last, cnt = t, t, 1
         else:
-            start = last = cnt = None
-        for t in ts_list:
-            if start is None:
-                start, last, cnt = t, t, 1
-            elif t - last > SESSION_GAP_SEC:
-                closed.append((user_id, start, last, cnt))
-                start, last, cnt = t, t, 1
-            else:
-                last = t
-                cnt += 1
-        if start is not None:
-            state.update((start, last, cnt))
-            if use_timeout:
-                state.setTimeoutDuration(SESSION_GAP_SEC * 1000)
+            last = t
+            cnt += 1
+    if start is not None:
+        state.update((start, last, cnt))
 
     if closed:
         yield pd.DataFrame(
@@ -83,25 +67,22 @@ def _track_sessions(key: Tuple[Any], batches: Iterable[pd.DataFrame],
         )
 
 
-def stream_user_sessions(events_stream, use_timeout: bool = True):
+def stream_user_sessions(events_stream):
     """events stream -> closed-session stream.
 
-    ``use_timeout=True`` (production, continuous triggers) also closes
-    sessions when a user goes quiet between micro-batches. With
-    ``availableNow`` drains, pass False: processing-time timeouts keep
-    the query alive waiting for a timeout batch that never comes, so
-    the drain would not self-terminate."""
-    timeout_conf = (GroupStateTimeout.ProcessingTimeTimeout if use_timeout
-                    else GroupStateTimeout.NoTimeout)
+    A user's open session stays in state until a later event closes
+    it. There is no state timeout: under an ``availableNow`` drain a
+    processing-time timeout keeps the query waiting for a timeout
+    batch that never comes, so the drain would not stop."""
     return (
         events_stream
         .groupBy("user_id")
         .applyInPandasWithState(
-            make_track_sessions(use_timeout),
+            _track_sessions,
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=timeout_conf,
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 
@@ -114,5 +95,5 @@ def run_stream_user_sessions(spark, input_dir: str, output_dir: str,
         .option("maxFilesPerTrigger", "1")
         .parquet(input_dir)
     )
-    out = stream_user_sessions(src, use_timeout=False)
+    out = stream_user_sessions(src)
     return _drain(out, output_dir, checkpoint_dir)

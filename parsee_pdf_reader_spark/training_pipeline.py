@@ -114,7 +114,7 @@ def build_training_corpus(pages_df: DataFrame,
     from pyspark.sql import Window
 
     from parsee_pdf_reader_spark.operators import dedup
-    from parsee_pdf_reader_spark.plans.queries import materialize
+    from parsee_pdf_reader_spark.plans.queries import materialize, tokens
 
     # mandatory, not optional: url is the document identity of every
     # downstream stage (canonical window, cluster join, keep rank), so
@@ -127,8 +127,8 @@ def build_training_corpus(pages_df: DataFrame,
     # token array (an exact duplicate's signature is dropped below;
     # carrying the tokens through the window shuffle instead would
     # double its bytes)
-    docs = docs.withColumn("_toks", dedup._toks("doc_text"))
-    sig = dedup.minhash_sig_col(dedup.shingles_col(F.col("_toks"), 3))
+    docs = docs.withColumn("_toks", tokens("doc_text"))
+    sig = dedup.minhash_sig(F.col("_toks"))
     docs = docs.select("url", "warc_ts", "lang", "doc_text", "source_kind",
                        F.size("_toks").alias("n_tokens"),
                        _bpe_count(F.col("_toks")).alias("bpe_tokens"),

@@ -52,6 +52,7 @@ def test_dup_span_stats_matches_bruteforce(spark):
     from parsee_pdf_reader_spark.operators.dedup import (
         dup_span_stats_df,
     )
+    from parsee_pdf_reader_spark.plans.queries import tokens
 
     n = 4  # small window + tiny vocab: dense collision regime
     docs = _random_docs(20250817)
@@ -61,7 +62,8 @@ def test_dup_span_stats_matches_bruteforce(spark):
     assert any(0.0 < f < 1.0 for f in fracs), fracs
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {r.doc_id: (r.n_tokens, r.dup_tokens, r.dup_frac)
-           for r in dup_span_stats_df(df, n=n).collect()}
+           for r in dup_span_stats_df(
+               df.withColumn("toks", tokens("text")), n=n).collect()}
     assert got == expect, {k: (got[k], expect[k]) for k in got
                            if got[k] != expect[k]}
 
@@ -97,12 +99,14 @@ def test_ngram_lm_score_matches_bruteforce(spark):
     from parsee_pdf_reader_spark.operators.textstats import (
         ngram_lm_score_df,
     )
+    from parsee_pdf_reader_spark.plans.queries import tokens
 
     docs = _random_docs(42424242, n_docs=50, max_len=30)
     expect = _brute_lm(docs)
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {r.doc_id: (r.n_bigrams, r.avg_logprob)
-           for r in ngram_lm_score_df(df).collect()}
+           for r in ngram_lm_score_df(
+               df.withColumn("toks", tokens("text"))).collect()}
     assert set(got) == set(expect)
     for d in expect:
         assert got[d][0] == expect[d][0], d

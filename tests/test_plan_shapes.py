@@ -108,7 +108,7 @@ def test_hof_expressions_evaluated_once_per_row(spark, monkeypatch):
     operator cost 5-60x before the bind1 fixes (BENCH/BASELINE.md
     'operator-perf wave'). Occurrence counts of expression-unique
     markers are a stable structural proxy."""
-    from parsee_pdf_reader_spark.operators import dedup, textstats
+    from parsee_pdf_reader_spark.operators import curation, dedup, textstats
     from parsee_pdf_reader_spark.operators.dedup import (
         q_dedup_minhash_lsh, q_simhash_near_pairs_wide,
     )
@@ -128,7 +128,7 @@ def test_hof_expressions_evaluated_once_per_row(spark, monkeypatch):
     # the returned one)
     stored = []
     store = dedup.materialize
-    for mod in (dedup, textstats):
+    for mod in (curation, dedup, textstats):
         monkeypatch.setattr(mod, "materialize",
                             lambda df: stored.append(opt(df)) or store(df))
 
@@ -151,6 +151,14 @@ def test_hof_expressions_evaluated_once_per_row(spark, monkeypatch):
     # stored bigram stream
     plans = call_plans(textstats.q_ngram_lm_score(spark, SF))
     assert sum(p.count("struct(w1") for p in plans) == 1, plans
+    # the keep filter stores the documents with their tokens once and
+    # every component reads that toks column: one whitespace split,
+    # and the sentence split (split(text, [.!?]+\s+, -1)) at most twice
+    plans = call_plans(curation.q_corpus_keep_filter(spark, SF))
+    ws = sum(p.count(", \\s+, -1)") for p in plans)
+    sent = sum(p.count(", [.!?]+\\s+, -1)") for p in plans)
+    assert ws == 1 and sent <= 2, (ws, sent)
+    assert sum(p.count("split(") for p in plans) == ws + sent, plans
     # the byte-feature chain sorts the byte array exactly once
     p = opt(q_media_byte_features(spark, SF))
     assert p.count("array_sort") == 1, p.count("array_sort")
@@ -291,9 +299,8 @@ def test_simhash_width_parameterized(spark):
     import pyspark.sql.functions as F
     import pytest
 
-    from parsee_pdf_reader_spark.operators.dedup import (
-        _toks, simhash_col,
-    )
+    from parsee_pdf_reader_spark.operators.dedup import simhash_col
+    from parsee_pdf_reader_spark.plans.queries import tokens
 
     docs = spark.createDataFrame(
         [(0, "alpha beta gamma delta"), (1, "alpha beta gamma delta"),
@@ -301,8 +308,8 @@ def test_simhash_width_parameterized(spark):
         "doc_id long, text string")
     rows = docs.select(
         "doc_id",
-        simhash_col(_toks(), 16).alias("h16"),
-        simhash_col(_toks(), 63).alias("h63")).collect()
+        simhash_col(tokens("text"), 16).alias("h16"),
+        simhash_col(tokens("text"), 63).alias("h63")).collect()
     by_id = {r.doc_id: r for r in rows}
     assert by_id[0].h63 == by_id[1].h63
     assert by_id[0].h63 != by_id[2].h63
@@ -310,9 +317,9 @@ def test_simhash_width_parameterized(spark):
         assert 0 <= r.h63 < (1 << 63)
         assert r.h63 & 0xFFFF == r.h16  # shared low-bit stream
     with pytest.raises(ValueError):
-        simhash_col(_toks(), 64)
+        simhash_col(tokens("text"), 64)
     with pytest.raises(ValueError):
-        simhash_col(_toks(), 0)
+        simhash_col(tokens("text"), 0)
 
 
 def test_lsh_planes_parameterized(spark):

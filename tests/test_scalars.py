@@ -88,3 +88,35 @@ def test_clean_text_for_matching(spark, reference, corpus):
     expected = [helper.clean_text_for_matching(c) for c in corpus]
     assert got_spark == expected
     assert got_duck == expected
+
+
+#: strings where lower-casing the text and lower-casing each token could
+#: differ: context-dependent and length-changing case maps, a titlecase
+#: letter, every whitespace kind (and U+00A0, which ``\s`` excludes),
+#: the empty string and whitespace only
+LOWER_EDGES = ["ΟΔΟΣ ΟΔΟΣ.", "Σ Σ", "İstanbul", "ǅ", "A\tB", "A\x0bB",
+               "A\fB", "A\r\nB", "A\u00a0B", "", " \t\n "]
+
+
+def test_lowered_tokens_equal_tokens_of_lowered_text(spark):
+    """``transform(tokens(text), lower)`` (the Spark quality and LM
+    scores) equals the whitespace tokens of ``lower(text)`` (their
+    DuckDB twins): no case map turns whitespace into a letter or a
+    letter into whitespace, and final sigma looks no further than its
+    own word."""
+    from parsee_pdf_reader_spark.plans.queries import tokens
+
+    df = spark.createDataFrame(list(enumerate(LOWER_EDGES)),
+                               "i int, text string")
+    rows = df.select(
+        "i",
+        F.transform(tokens("text"), F.lower).alias("per_token"),
+        F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
+        .alias("of_text")).collect()
+    assert len(rows) == len(LOWER_EDGES)
+    for r in rows:
+        assert r.per_token == r.of_text, (LOWER_EDGES[r.i], r)
+    got = {LOWER_EDGES[r.i]: r.per_token for r in rows}
+    assert got["ΟΔΟΣ ΟΔΟΣ."] == ["οδος", "οδος."]
+    assert got["A\u00a0B"] == ["a\u00a0b"]
+    assert got[""] == [] and got[" \t\n "] == []

@@ -62,8 +62,9 @@ CHECKS = {
                             "localCheckpoint-truncated each round"],
     "kmeans_assign": ["broadcast-K distance folds; per-vec argmin "
                       "windows; map-side-combinable centroid update"],
-    "corpus_keep_filter": ["documents read once into one stored "
-                           "frame handed to every component; one "
+    "corpus_keep_filter": ["documents read and tokenized once into "
+                           "one stored frame (a toks column) handed "
+                           "to every component; one "
                            "signature projection and one bigram "
                            "explode per call, each stored once and "
                            "read by all its consumers (counts below "
@@ -140,7 +141,8 @@ CHECKS = {
 #: ``materialize`` (a stored relation's plan is not in the returned one)
 MARKERS = {
     "corpus_keep_filter": {"signature projections": "array_min",
-                           "bigram explodes": "struct(w1"},
+                           "bigram explodes": "struct(w1",
+                           "whitespace tokenizations": ", \\s+, -1)"},
 }
 
 
